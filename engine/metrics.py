@@ -3,36 +3,74 @@ per-partition row/byte/cell metrics")."""
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def _transfer_key(df: DataFrame, key_col: str):
+    """The key as a column the driver can dedupe exactly: integers stay int64
+    with nulls zeroed (a nullable integer column would reach pandas as
+    float64 and merge ids above 2^53); binary values travel as hex and nested
+    ones as JSON text (bytearrays, lists and dicts are unhashable). The
+    separate null flag keeps null one key of its own."""
+    k = F.col(key_col)
+    dt = df.schema[key_col].dataType
+    if isinstance(dt, T.IntegralType):
+        return F.coalesce(k.cast("long"), F.lit(0))
+    if isinstance(dt, T.BinaryType):
+        return F.hex(k)
+    if isinstance(dt, (T.ArrayType, T.MapType, T.StructType)):
+        return F.to_json(k)
+    return k
 
 
 def partition_metrics(df: DataFrame, key_col: str | None = None) -> dict:
-    """Cheap single-pass metrics: rows, distinct keys, and rows-per-Spark-partition
-    distribution (max/median skew indicator)."""
-    per_part = (
-        df.select(F.spark_partition_id().alias("pid"))
-        .groupBy("pid")
-        .agg(F.count("*").alias("n"))
+    """Rows, distinct keys, and the rows-per-Spark-partition distribution
+    (max/median skew indicator) of `df`.
+
+    One Spark action executes `df`'s plan once: `df` is grouped by (Spark
+    partition id, key) — by partition id alone without a key — and the driver
+    receives one row per distinct (partition, key) pair, from which it derives
+    every figure in numpy. The median is the lower median of the per-partition
+    counts (what `percentile_approx(n, 0.5)` returns), and a null key counts as
+    one distinct key (as `distinct().count()` does).
+
+    The per-partition figures describe this execution's partitioning. For a
+    `repartitionByRange` input they can differ from the partitioning that a
+    previous action over the same frame (e.g. `Table.append`) wrote, because
+    Spark re-samples the range bounds on every execution; the manifest's
+    per-file rows describe the committed layout."""
+    pid = F.spark_partition_id().alias("pid")
+    if key_col is not None and key_col in df.columns:
+        # grouped on the key column itself: an input already clustered by it
+        # (range or hash repartitioned on the key) needs no second shuffle
+        groups = (
+            df.select(pid, key_col).groupBy("pid", key_col)
+            .agg(F.count("*").alias("n"))
+            .select("pid", F.col(key_col).isNull().alias("null"),
+                    _transfer_key(df, key_col).alias("key"), "n")
+        )
+    else:
+        groups = df.select(pid).groupBy("pid").agg(F.count("*").alias("n"))
+    groups = groups.toPandas()
+    per_part = np.sort(
+        groups.groupby("pid")["n"].sum().to_numpy(dtype=np.int64)
     )
-    stats = per_part.agg(
-        F.sum("n").alias("rows"),
-        F.count("*").alias("partitions"),
-        F.max("n").alias("max_rows"),
-        F.expr("percentile_approx(n, 0.5)").alias("median_rows"),
-    ).first()
+    p = len(per_part)
     out = {
-        "rows": int(stats["rows"] or 0),
-        "partitions": int(stats["partitions"] or 0),
-        "max_partition_rows": int(stats["max_rows"] or 0),
-        "median_partition_rows": int(stats["median_rows"] or 0),
+        "rows": int(per_part.sum()),
+        "partitions": p,
+        "max_partition_rows": int(per_part[-1]) if p else 0,
+        "median_partition_rows": int(per_part[(p + 1) // 2 - 1]) if p else 0,
     }
     if out["median_partition_rows"]:
         out["skew_ratio"] = round(
             out["max_partition_rows"] / out["median_partition_rows"], 2
         )
-    if key_col is not None and key_col in df.columns:
-        out["distinct_keys"] = df.select(key_col).distinct().count()
+    if "key" in groups.columns:
+        out["distinct_keys"] = len(groups[["null", "key"]].drop_duplicates())
     return out
 
 
@@ -41,8 +79,6 @@ def _row_size_expr(df: DataFrame):
     strings/binary, fixed widths for numerics/timestamps, recursive-ish
     flat treatment for everything else (arrays/maps/structs estimated via
     their JSON length — still a single Column expression, no extra pass)."""
-    from pyspark.sql import types as T
-
     parts = []
     for f in df.schema.fields:
         c = F.col(f.name)

@@ -8,7 +8,10 @@ local mode (SURVEY.md §4).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -65,12 +68,21 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if spark.sparkContext.getCheckpointDir() is None:
-        import tempfile
-
-        spark.sparkContext.setCheckpointDir(
-            tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-        )
+        _own_checkpoint_dir(spark.sparkContext)
     return spark
+
+
+def _own_checkpoint_dir(sc) -> str:
+    """Give `sc` a fresh checkpoint directory that is removed when the
+    process exits (a directory the caller configured is never touched)."""
+    path = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
+    sc.setCheckpointDir(path)
+    atexit.register(_remove_checkpoint_dir, path)
+    return path
+
+
+def _remove_checkpoint_dir(path: str) -> None:
+    shutil.rmtree(path, ignore_errors=True)
 
 
 def optimize_parallelism(

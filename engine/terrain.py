@@ -689,7 +689,7 @@ def flow_edges(flow: DataFrame, res: int) -> DataFrame:
     (parity pinned in tests/test_terrain.py)."""
     drv = getattr(flow, "_driver_pdf", None)
     if drv is not None:
-        import pandas as pd
+        import pyarrow as pa
 
         offs = np.asarray(_D8_OFFSETS, dtype=np.int64)
         gxs, gys, dirs, keys = [], [], [], []
@@ -711,16 +711,14 @@ def flow_edges(flow: DataFrame, res: int) -> DataFrame:
         pack_np = lambda x, y: (x + off_i) * np.int64(1 << 32) + (y + off_i)  # noqa: E731
         di = np.clip(d8, 0, 7)
         dst = pack_np(gx + offs[di, 0], gy + offs[di, 1])
-        out = pd.DataFrame(
-            {
-                "gx": gx, "gy": gy, "d8_dir": d8, "d8_key": dk,
-                "src": pack_np(gx, gy),
-                "dst": pd.array(
-                    np.where(d8 >= 0, dst, 0), dtype="Int64"
-                ),
-            }
-        )
-        out.loc[d8 < 0, "dst"] = pd.NA
+        # an Arrow table keeps int64 and the sinks' nulls (validity mask)
+        # whether or not the session has Arrow conversion on; a nullable
+        # pandas column reaches createDataFrame as float64 when it is off
+        out = pa.table({
+            "gx": gx, "gy": gy, "d8_dir": d8, "d8_key": dk,
+            "src": pack_np(gx, gy),
+            "dst": pa.array(dst, type=pa.int64(), mask=d8 < 0),
+        })
         return flow.sparkSession.createDataFrame(
             out,
             "gx long, gy long, d8_dir long, d8_key long, src long, dst long",

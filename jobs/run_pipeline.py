@@ -84,6 +84,46 @@ def run_changes(spark, args) -> None:
                       "output_rows": table.row_count(sid)}))
 
 
+def run_unit(out, pts, polys, cover, run_id, unit, lo, hi, cluster="cell"):
+    """One cell-range work unit: PIP join -> per-(cell, poly) rollup -> range
+    partition -> snapshot append -> partition metrics -> manifest bytes ->
+    checkpoint. `pts` carries the `unit_ix` stripe key; returns the unit's
+    snapshot id and the metrics recorded in the checkpoint."""
+    t0 = time.time()
+    part = pts.filter((F.col("unit_ix") >= lo) & (F.col("unit_ix") < hi)).drop(
+        "unit_ix"
+    )
+    joined = joins.pip_join(part, polys, cover=cover)
+    result = joined.groupBy("cell", "poly_id").agg(
+        F.count("*").alias("n_images"),
+        F.min("lon").alias("min_lon"),
+        F.max("lon").alias("max_lon"),
+        F.min("lat").alias("min_lat"),
+        F.max("lat").alias("max_lat"),
+    )
+    # range-partition the output (north_rule): data files carry tight
+    # non-overlapping key ranges in their manifests, so later reads prune
+    # from metadata alone. 'morton' keys make quadtree-aligned spatial
+    # blocks single contiguous ranges (cells.morton_block_range).
+    if cluster == "morton":
+        result = result.withColumn("morton", cells.grid_morton(F.col("cell")))
+        result = result.repartitionByRange(8, "morton")
+        sid = out.append(result, range_cols=["cell", "morton"])
+    else:
+        result = result.repartitionByRange(8, "cell")
+        sid = out.append(result, range_cols=["cell"])
+    m = metrics.partition_metrics(result, "cell")
+    # at-rest bytes for this unit from the manifest (no scan): the files
+    # added by snapshot `sid` relative to its parent
+    prev_files = {f["path"] for f in out.snapshot(sid - 1)["files"]} if sid > 0 else set()
+    new_files = [f for f in out.snapshot(sid)["files"] if f["path"] not in prev_files]
+    m["output_bytes"] = sum(f["bytes"] for f in new_files)
+    m["output_files"] = len(new_files)
+    m = {"elapsed_sec": round(time.time() - t0, 2), **m}
+    out.checkpoint_unit_done(run_id, unit, sid, metrics=m)
+    return sid, m
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--job", choices=["pipeline", "changes"], default="pipeline")
@@ -174,41 +214,9 @@ def main() -> None:
     for unit, (lo, hi) in zip(units, stripes):
         if unit not in pending:
             continue
-        t0 = time.time()
-        part = pts.filter((F.col("unit_ix") >= lo) & (F.col("unit_ix") < hi)).drop(
-            "unit_ix"
-        )
-        joined = joins.pip_join(part, polys, cover=cover)
-        result = joined.groupBy("cell", "poly_id").agg(
-            F.count("*").alias("n_images"),
-            F.min("lon").alias("min_lon"),
-            F.max("lon").alias("max_lon"),
-            F.min("lat").alias("min_lat"),
-            F.max("lat").alias("max_lat"),
-        )
-        # range-partition the output (north_rule): data files carry tight
-        # non-overlapping key ranges in their manifests, so later reads prune
-        # from metadata alone. 'morton' keys make quadtree-aligned spatial
-        # blocks single contiguous ranges (cells.morton_block_range).
-        if args.cluster == "morton":
-            result = result.withColumn("morton", cells.grid_morton(F.col("cell")))
-            result = result.repartitionByRange(8, "morton")
-            sid = out.append(result, range_cols=["cell", "morton"])
-        else:
-            result = result.repartitionByRange(8, "cell")
-            sid = out.append(result, range_cols=["cell"])
-        m = metrics.partition_metrics(result, "cell")
-        # at-rest bytes for this unit from the manifest (no scan): the files
-        # added by snapshot `sid` relative to its parent
-        prev_files = {f["path"] for f in out.snapshot(sid - 1)["files"]} if sid > 0 else set()
-        new_files = [f for f in out.snapshot(sid)["files"] if f["path"] not in prev_files]
-        m["output_bytes"] = sum(f["bytes"] for f in new_files)
-        m["output_files"] = len(new_files)
-        out.checkpoint_unit_done(
-            args.run_id, unit, sid,
-            metrics={"elapsed_sec": round(time.time() - t0, 2), **m},
-        )
-        print(f"unit {unit} -> snapshot {sid} ({time.time()-t0:.1f}s)", file=sys.stderr)
+        sid, m = run_unit(out, pts, polys, cover, args.run_id, unit, lo, hi,
+                          args.cluster)
+        print(f"unit {unit} -> snapshot {sid} ({m['elapsed_sec']:.1f}s)", file=sys.stderr)
 
     print(json.dumps({
         "run_id": args.run_id,

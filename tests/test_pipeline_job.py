@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from engine import cells, iceberg_lite, joins, synth  # noqa: E402
+from jobs.run_pipeline import run_unit  # noqa: E402
 
 
 @pytest.fixture()
@@ -18,14 +19,14 @@ def out_table(tmp_path):
 
 
 def _run_units(spark, out, run_id, units_to_run=None, n=3000, res=6, splits=4):
-    """Mirror of jobs/run_pipeline.py's unit loop, small scale."""
+    """jobs/run_pipeline.py's unit loop at small scale, through its run_unit."""
     images = synth.images_df(spark, n, hot_frac=0.2)
     pts = images.select(
         "image_id",
         cells.anchor_lon(F.col("phash")).alias("lon"),
         cells.anchor_lat(F.col("phash")).alias("lat"),
         cells.grid_encode_phash(F.col("phash"), res).alias("cell"),
-    )
+    ).withColumn("unit_ix", cells.grid_ix(F.col("cell")))
     polys = synth.polygons_df(spark, p=30, hot_frac=0.2, radius_scale=2.0)
     ncells = 2**res
     stripes = [
@@ -33,20 +34,21 @@ def _run_units(spark, out, run_id, units_to_run=None, n=3000, res=6, splits=4):
     ]
     units = [f"ix:{lo}-{hi}" for lo, hi in stripes]
     pending = out.pending_units(run_id, units)
-    ran = []
+    ran, cover = [], None
     for unit, (lo, hi) in zip(units, stripes):
         if unit not in pending:
             continue
         if units_to_run is not None and unit not in units_to_run:
             continue
-        part = pts.filter(
-            (cells.grid_ix(F.col("cell")) >= lo) & (cells.grid_ix(F.col("cell")) < hi)
-        )
-        result = joins.pip_join(part, polys, res_min=4, res_max=9).groupBy(
-            "cell", "poly_id"
-        ).agg(F.count("*").alias("n_images"))
-        sid = out.append(result, range_cols=["cell"])
-        out.checkpoint_unit_done(run_id, unit, sid)
+        if cover is None:
+            cover = joins.build_pip_cover(polys, res_min=4, res_max=9)
+        sid, m = run_unit(out, pts, polys, cover, run_id, unit, lo, hi)
+        prev = {f["path"] for f in out.snapshot(sid - 1)["files"]}
+        added = [f for f in out.snapshot(sid)["files"] if f["path"] not in prev]
+        assert out.checkpoint_load(run_id)["units"][unit]["metrics"] == m
+        assert m["rows"] == sum(f["rows"] for f in added)
+        assert m["output_files"] == len(added)
+        assert m["distinct_keys"] <= m["rows"]
         ran.append(unit)
     return units, ran
 
@@ -106,7 +108,7 @@ def test_changes_job_end_to_end(spark, tmp_path):
 
 
 def test_units_equal_unpartitioned_result(spark, out_table):
-    _run_units(spark, out_table, "r2")
+    _run_units(spark, out_table, "r2", splits=2)
     got = (
         out_table.read(spark)
         .groupBy("poly_id")

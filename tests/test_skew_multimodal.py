@@ -1,5 +1,7 @@
 """Skew handling (hot-cell salting, adaptive split) + multimodal kernel plumbing."""
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -58,12 +60,105 @@ def test_split_hot_cells_bounds_key_size(spark):
     assert after_max < before_max / 4  # hot cell actually split
 
 
+def _pandas_metrics(df, key_col=None):
+    """partition_metrics' figures from a plain collect, counted in pandas:
+    integer keys arrive as Python ints, so ids above 2^53 stay distinct."""
+    cols = [F.spark_partition_id().alias("pid")]
+    if key_col in df.columns:
+        cols.append(F.col(key_col))
+    rows = df.select(*cols).collect()
+    per_part = np.sort(
+        pd.Series([r[0] for r in rows], dtype="int64").value_counts().to_numpy()
+    )
+    want = {
+        "rows": len(rows),
+        "partitions": len(per_part),
+        "max_partition_rows": int(per_part.max()) if len(rows) else 0,
+        # percentile_approx(n, 0.5): the lower median
+        "median_partition_rows": int(np.percentile(per_part, 50, method="lower"))
+        if len(rows) else 0,
+    }
+    if len(rows):
+        want["skew_ratio"] = round(
+            want["max_partition_rows"] / want["median_partition_rows"], 2
+        )
+    if key_col in df.columns:
+        want["distinct_keys"] = pd.Series(
+            [r[1] for r in rows], dtype=object
+        ).nunique(dropna=False)
+    return want
+
+
+def _keyed(spark, n=3000):
+    """Deterministic hash-partitioned frame; cell ids sit above 2^53 (a float
+    round trip would merge them) and every 50th cell is null."""
+    return (
+        spark.range(n)
+        .select(
+            "id",
+            F.when(F.col("id") % 50 == 0, None)
+            .otherwise(F.lit(1 << 60) + (F.col("id") * 7919) % 613)
+            .alias("cell"),
+        )
+        .repartition(4, "cell")
+    )
+
+
 def test_partition_metrics(spark):
     pts = _hot_points(spark, 5000).repartition(4, "cell")
     m = metrics.partition_metrics(pts, "cell")
     assert m["rows"] == 5000 and m["partitions"] >= 1
-    assert m["max_partition_rows"] >= m["median_partition_rows"]
-    assert "distinct_keys" in m
+    assert m == _pandas_metrics(pts, "cell")
+
+
+@pytest.mark.parametrize("shape", ["hash", "coalesce", "empty"])
+def test_partition_metrics_matches_pandas(spark, shape):
+    df = _keyed(spark)
+    if shape == "coalesce":
+        df = df.coalesce(3)
+    elif shape == "empty":
+        df = df.filter(F.col("id") < 0)
+    m = metrics.partition_metrics(df, "cell")
+    assert m == _pandas_metrics(df, "cell")
+    if shape == "empty":
+        assert m == {"rows": 0, "partitions": 0, "max_partition_rows": 0,
+                     "median_partition_rows": 0, "distinct_keys": 0}
+    else:
+        assert m["distinct_keys"] == 614  # 613 cells + the null key
+
+
+def test_partition_metrics_without_key(spark):
+    df = _keyed(spark)
+    want = _pandas_metrics(df)
+    assert "distinct_keys" not in want
+    assert metrics.partition_metrics(df) == want
+    assert metrics.partition_metrics(df, "no_such_column") == want
+
+
+def test_partition_metrics_arrow_off(spark):
+    bare = spark.newSession()
+    bare.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
+    df = _keyed(bare)
+    assert metrics.partition_metrics(df, "cell") == _pandas_metrics(df, "cell")
+    assert metrics.partition_metrics(df.filter(F.col("id") < 0), "cell")[
+        "rows"] == 0
+
+
+def test_partition_metrics_executes_input_once(spark):
+    n = 2000
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def tick(x):
+        seen.add(1)
+        return x
+
+    df = spark.range(n).select(tick("id").alias("id")).withColumn(
+        "cell", F.col("id") % 97
+    ).repartition(4, "cell")
+    m = metrics.partition_metrics(df, "cell")
+    assert m["rows"] == n and m["distinct_keys"] == 97
+    assert seen.value == n
 
 
 # ---------------------------------------------------------------------------

@@ -3215,3 +3215,31 @@ def test_halo_apply_driver_parity(spark):
     tiles._halo_driver_pdf = tiles.toPandas()
     drv = run(tiles)
     assert drv == dist
+
+
+def test_flow_edges_driver_path_arrow_off(spark):
+    """flow_edges' driver twin builds the same bigint relation, sinks' null
+    `dst` included, in a session with Arrow conversion off."""
+    import random as _r
+
+    bare = spark.newSession()
+    bare.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
+    res = 8
+    rng = _r.Random(11)
+    rows = [
+        (tx, ty, [rng.randint(0, 9) for _ in range(res * res)])
+        for tx, ty in [(0, 0), (1, 0), (0, 1), (2, 2)]
+    ]
+    tiles = bare.createDataFrame(rows, "tx long, ty long, counts array<long>")
+
+    def edges(df):
+        out = terrain.flow_edges(terrain.d8_flow(df, res), res)
+        assert [f.dataType.simpleString() for f in out.schema.fields] == [
+            "bigint"] * 6
+        return sorted(tuple(r) for r in out.collect())
+
+    dist = edges(tiles)
+    tiles._halo_driver_pdf = tiles.toPandas()
+    drv = edges(tiles)
+    assert drv == dist
+    assert any(r[5] is None for r in drv)  # sinks
