@@ -9,14 +9,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def _transfer_key(df: DataFrame, key_col: str):
+def _transfer_key(k, dt: T.DataType):
     """The key as a column the driver can dedupe exactly: integers stay int64
     with nulls zeroed (a nullable integer column would reach pandas as
     float64 and merge ids above 2^53); binary values travel as hex and nested
     ones as JSON text (bytearrays, lists and dicts are unhashable). The
     separate null flag keeps null one key of its own."""
-    k = F.col(key_col)
-    dt = df.schema[key_col].dataType
     if isinstance(dt, T.IntegralType):
         return F.coalesce(k.cast("long"), F.lit(0))
     if isinstance(dt, T.BinaryType):
@@ -33,9 +31,11 @@ def partition_metrics(df: DataFrame, key_col: str | None = None) -> dict:
     One Spark action executes `df`'s plan once: `df` is grouped by (Spark
     partition id, key) — by partition id alone without a key — and the driver
     receives one row per distinct (partition, key) pair, from which it derives
-    every figure in numpy. The median is the lower median of the per-partition
-    counts (what `percentile_approx(n, 0.5)` returns), and a null key counts as
-    one distinct key (as `distinct().count()` does).
+    every figure in numpy. A `repartitionByRange` input also runs Spark's
+    bounds-sampling job inside that action, which executes the plan below the
+    range exchange once more. The median is the lower median of the
+    per-partition counts (what `percentile_approx(n, 0.5)` returns), and a
+    null key counts as one distinct key (as `distinct().count()` does).
 
     The per-partition figures describe this execution's partitioning. For a
     `repartitionByRange` input they can differ from the partitioning that a
@@ -44,13 +44,17 @@ def partition_metrics(df: DataFrame, key_col: str | None = None) -> dict:
     per-file rows describe the committed layout."""
     pid = F.spark_partition_id().alias("pid")
     if key_col is not None and key_col in df.columns:
-        # grouped on the key column itself: an input already clustered by it
-        # (range or hash repartitioned on the key) needs no second shuffle
+        # grouped on the key column itself (under a private name, so a key
+        # called `pid` or `n` stays unambiguous): an input already clustered
+        # by it (range or hash repartitioned on the key) needs no second
+        # shuffle
+        dt = df.schema[key_col].dataType
+        k = F.col("__key")
         groups = (
-            df.select(pid, key_col).groupBy("pid", key_col)
-            .agg(F.count("*").alias("n"))
-            .select("pid", F.col(key_col).isNull().alias("null"),
-                    _transfer_key(df, key_col).alias("key"), "n")
+            df.select(pid, F.col(key_col).alias("__key"))
+            .groupBy("pid", "__key").agg(F.count("*").alias("n"))
+            .select("pid", k.isNull().alias("null"),
+                    _transfer_key(k, dt).alias("key"), "n")
         )
     else:
         groups = df.select(pid).groupBy("pid").agg(F.count("*").alias("n"))

@@ -77,12 +77,8 @@ def _own_checkpoint_dir(sc) -> str:
     process exits (a directory the caller configured is never touched)."""
     path = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
     sc.setCheckpointDir(path)
-    atexit.register(_remove_checkpoint_dir, path)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
     return path
-
-
-def _remove_checkpoint_dir(path: str) -> None:
-    shutil.rmtree(path, ignore_errors=True)
 
 
 def optimize_parallelism(

@@ -108,7 +108,7 @@ def test_changes_job_end_to_end(spark, tmp_path):
 
 
 def test_units_equal_unpartitioned_result(spark, out_table):
-    _run_units(spark, out_table, "r2", splits=2)
+    _run_units(spark, out_table, "r2")
     got = (
         out_table.read(spark)
         .groupBy("poly_id")

@@ -1,5 +1,5 @@
 """engine.session: the checkpoint directory get_spark creates is removed at
-process exit; one the caller configured is left alone."""
+process exit."""
 
 import os
 
@@ -21,7 +21,8 @@ def test_owned_checkpoint_dir_is_removed_at_exit(monkeypatch, tmp_path):
     registered = []
     monkeypatch.setattr(session.tempfile, "tempdir", str(tmp_path))
     monkeypatch.setattr(
-        session.atexit, "register", lambda fn, *a: registered.append((fn, a))
+        session.atexit, "register",
+        lambda fn, *a, **kw: registered.append((fn, a, kw)),
     )
     sc = _Context()
     path = session._own_checkpoint_dir(sc)
@@ -30,12 +31,8 @@ def test_owned_checkpoint_dir_is_removed_at_exit(monkeypatch, tmp_path):
     # Spark writes checkpoints into a per-context subdirectory
     os.makedirs(os.path.join(path, "ctx", "rdd-1"))
     open(os.path.join(path, "ctx", "rdd-1", "part-0"), "w").close()
-    [(fn, args)] = registered
-    fn(*args)
+    [(fn, args, kw)] = registered
+    fn(*args, **kw)
     assert not os.path.exists(path)
-    fn(*args)  # already gone: no error
+    fn(*args, **kw)  # already gone: no error
 
-
-def test_shared_session_checkpoint_dir_is_owned(spark):
-    ckpt = spark.sparkContext.getCheckpointDir()
-    assert ckpt is not None and "spark_graft_ckpt_" in ckpt

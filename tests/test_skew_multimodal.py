@@ -84,23 +84,41 @@ def _pandas_metrics(df, key_col=None):
         )
     if key_col in df.columns:
         want["distinct_keys"] = pd.Series(
-            [r[1] for r in rows], dtype=object
+            [_hashable(r[1]) for r in rows], dtype=object
         ).nunique(dropna=False)
     return want
 
 
-def _keyed(spark, n=3000):
-    """Deterministic hash-partitioned frame; cell ids sit above 2^53 (a float
-    round trip would merge them) and every 50th cell is null."""
+def _hashable(v):
+    if isinstance(v, bytearray):
+        return bytes(v)
+    if isinstance(v, list):
+        return tuple(v)
+    return v
+
+
+_KEYS = {
+    "long": lambda c: c,
+    "string": lambda c: c.cast("string"),
+    "binary": lambda c: c.cast("string").cast("binary"),
+    "array": lambda c: F.array(c, c % 3),
+}
+
+
+def _keyed(spark, n=3000, kind="long", name="cell"):
+    """Deterministic hash-partitioned frame; long cell ids sit above 2^53 (a
+    float round trip would merge them), the other key kinds are functions of
+    them, and every 50th key is null."""
+    cell = F.lit(1 << 60) + (F.col("id") * 7919) % 613
     return (
         spark.range(n)
         .select(
             "id",
             F.when(F.col("id") % 50 == 0, None)
-            .otherwise(F.lit(1 << 60) + (F.col("id") * 7919) % 613)
-            .alias("cell"),
+            .otherwise(_KEYS[kind](cell))
+            .alias(name),
         )
-        .repartition(4, "cell")
+        .repartition(4, name)
     )
 
 
@@ -111,15 +129,21 @@ def test_partition_metrics(spark):
     assert m == _pandas_metrics(pts, "cell")
 
 
-@pytest.mark.parametrize("shape", ["hash", "coalesce", "empty"])
-def test_partition_metrics_matches_pandas(spark, shape):
-    df = _keyed(spark)
+@pytest.mark.parametrize("shape,kind,name", [
+    ("hash", "long", "cell"), ("coalesce", "long", "cell"),
+    ("empty", "long", "cell"), ("hash", "string", "cell"),
+    ("hash", "binary", "cell"), ("hash", "array", "cell"),
+    # key columns named like partition_metrics' own helper columns
+    ("hash", "long", "n"), ("hash", "long", "pid"),
+])
+def test_partition_metrics_matches_pandas(spark, shape, kind, name):
+    df = _keyed(spark, kind=kind, name=name)
     if shape == "coalesce":
         df = df.coalesce(3)
     elif shape == "empty":
         df = df.filter(F.col("id") < 0)
-    m = metrics.partition_metrics(df, "cell")
-    assert m == _pandas_metrics(df, "cell")
+    m = metrics.partition_metrics(df, name)
+    assert m == _pandas_metrics(df, name)
     if shape == "empty":
         assert m == {"rows": 0, "partitions": 0, "max_partition_rows": 0,
                      "median_partition_rows": 0, "distinct_keys": 0}
@@ -144,7 +168,8 @@ def test_partition_metrics_arrow_off(spark):
         "rows"] == 0
 
 
-def test_partition_metrics_executes_input_once(spark):
+@pytest.mark.parametrize("by_range", [False, True])
+def test_partition_metrics_executes_input_once(spark, by_range):
     n = 2000
     seen = spark.sparkContext.accumulator(0)
 
@@ -155,10 +180,13 @@ def test_partition_metrics_executes_input_once(spark):
 
     df = spark.range(n).select(tick("id").alias("id")).withColumn(
         "cell", F.col("id") % 97
-    ).repartition(4, "cell")
+    )
+    df = df.repartitionByRange(4, "cell") if by_range else df.repartition(
+        4, "cell")
     m = metrics.partition_metrics(df, "cell")
     assert m["rows"] == n and m["distinct_keys"] == 97
-    assert seen.value == n
+    # a range exchange's bounds-sampling job runs the plan below it once more
+    assert seen.value == (2 * n if by_range else n)
 
 
 # ---------------------------------------------------------------------------
