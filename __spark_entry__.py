@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine import cells, joins, synth
+from engine import cells, joins, raster, synth
 
 
 # ---------------------------------------------------------------------------
@@ -803,8 +803,6 @@ def _hotspot_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared raster input for hotspot_cells / tile_pyramid: document anchor
     points binned onto a 90-degree tile grid at res=8 (engine.raster.
     heatmap_tiles — half-open cells, dense int64 counts per nonempty tile)."""
-    from engine import raster
-
     pts = _docs_points(spark, sf_dir)
     return raster.heatmap_tiles(
         pts, tile_size=_HOTSPOT_TILE, res=_HOTSPOT_RES, x_col="lon", y_col="lat"
@@ -824,6 +822,7 @@ def q_hotspot_cells(
     from engine import focal
 
     res = _HOTSPOT_RES
+    gx, gy = raster.pixel_xy(res)
     # persisted: the raster feeds gi_star's three consumers + the join below
     # (q_raster_field passes its own shared persisted raster instead)
     if tiles is None:
@@ -835,8 +834,7 @@ def q_hotspot_cells(
         F.posexplode(F.arrays_zip("counts", "fs", "z")).alias("pix", "v"),
     )
     return ex.select(
-        (F.col("tx") * res + F.pmod(F.col("pix"), res)).cast("long").alias("gx"),
-        (F.col("ty") * res + F.floor(F.col("pix") / res)).cast("long").alias("gy"),
+        gx.alias("gx"), gy.alias("gy"),
         F.col("v.counts").cast("long").alias("n"),
         F.col("v.fs").cast("long").alias("fs"),
         F.floor(F.col("v.z") * 1000000.0).cast("long").alias("z_e6"),
@@ -855,6 +853,7 @@ def q_tile_pyramid(
     from engine import pyramid
 
     res = _HOTSPOT_RES
+    gx, gy = raster.pixel_xy(res)
     if tiles is None:
         tiles = _hotspot_tiles(spark, sf_dir)
     base = tiles.select(
@@ -868,8 +867,7 @@ def q_tile_pyramid(
     ).filter(F.col("n") != 0)
     return ex.select(
         "level",
-        (F.col("tx") * res + F.pmod(F.col("pix"), res)).cast("long").alias("gx"),
-        (F.col("ty") * res + F.floor(F.col("pix") / res)).cast("long").alias("gy"),
+        gx.alias("gx"), gy.alias("gy"),
         F.col("n").cast("long").alias("n"),
     )
 
@@ -1019,6 +1017,7 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
     from engine.graph import connected_components
 
     res = _HOTSPOT_RES
+    gx, gy = raster.pixel_xy(res)
     # ONE raster build + persist feeds all four halves (hot, pyr, ter, d8)
     # — previously each half re-rasterized the document anchors (4 scans)
     tiles_r = _hotspot_tiles(spark, sf_dir).persist()
@@ -1048,8 +1047,7 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("g.dzdx8") != 0) | (F.col("g.dzdy8") != 0))
         .select(
             F.lit("ter").alias("tag"),
-            (F.col("tx") * res + F.pmod(F.col("pix"), res)).alias("a"),
-            (F.col("ty") * res + F.floor(F.col("pix") / res)).cast("long").alias("b"),
+            gx.alias("a"), gy.alias("b"),
             F.col("g.dzdx8").alias("c"),
             F.col("g.dzdy8").alias("d"),
             F.lit(0).cast("long").alias("e"),
@@ -1074,10 +1072,7 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs_df = (
         tiles_r.select("tx", "ty", F.posexplode("counts").alias("pix", "z"))
         .select(
-            (F.col("tx") * res + F.pmod(F.col("pix"), res))
-            .cast("long").alias("gx"),
-            (F.col("ty") * res + F.floor(F.col("pix") / res))
-            .cast("long").alias("gy"),
+            gx.alias("gx"), gy.alias("gy"),
             F.col("z").cast("long").alias("z"),
         )
         .orderBy(F.col("z").desc(), "gx", "gy")
@@ -1122,10 +1117,7 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("tx", "ty", F.posexplode("vis").alias("pix", "v"))
         .select(
             F.lit("vis").alias("tag"),
-            (F.col("tx") * res + F.pmod(F.col("pix"), res))
-            .cast("long").alias("a"),
-            (F.col("ty") * res + F.floor(F.col("pix") / res))
-            .cast("long").alias("b"),
+            gx.alias("a"), gy.alias("b"),
             F.col("v").cast("long").alias("c"),
             F.lit(-1).cast("long").alias("d"),
             F.lit(-1).cast("long").alias("e"),
@@ -1166,26 +1158,19 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             F.lit("edt").alias("tag"),
-            (F.col("tx") * res + F.pmod(F.col("pix"), res))
-            .cast("long").alias("a"),
-            (F.col("ty") * res + F.floor(F.col("pix") / res))
-            .cast("long").alias("b"),
+            gx.alias("a"), gy.alias("b"),
             F.col("v.dist2").cast("long").alias("c"),
             F.col("v.alloc").cast("long").alias("d"),
             F.lit(-1).cast("long").alias("e"),
         )
     )
-    from engine import raster as _raster
     from pyspark.sql import Window as _W
 
     pitch = _HOTSPOT_TILE / res
     bbase = (
         tiles_r.select("tx", "ty", F.posexplode("counts").alias("pix", "z"))
         .select(
-            (F.col("tx") * res + F.pmod(F.col("pix"), res))
-            .cast("long").alias("gx"),
-            (F.col("ty") * res + F.floor(F.col("pix") / res))
-            .cast("long").alias("gy"),
+            gx.alias("gx"), gy.alias("gy"),
             F.col("z").cast("long").alias("z"),
         )
         .orderBy(F.col("z").desc(), "gx", "gy")
@@ -1220,7 +1205,7 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(100) + F.col("i0")).cast("long").alias("v"),
         F.col("i0").cast("long").alias("pri"),
     )
-    burn = _raster.rasterize_polygons(
+    burn = raster.rasterize_polygons(
         bpolys, _HOTSPOT_TILE, res, rings_col="rings",
         value_col="v", priority_col="pri",
     ).select(
@@ -1276,10 +1261,7 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             F.lit("lisa").alias("tag"),
-            (F.col("tx") * res + F.pmod(F.col("pix"), res))
-            .cast("long").alias("a"),
-            (F.col("ty") * res + F.floor(F.col("pix") / res))
-            .cast("long").alias("b"),
+            gx.alias("a"), gy.alias("b"),
             F.floor(F.col("v.local") * F.lit(1000000000.0))
             .cast("long").alias("c"),
             F.col("v.quad").cast("long").alias("d"),
@@ -1300,10 +1282,7 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             F.lit("curv").alias("tag"),
-            (F.col("tx") * res + F.pmod(F.col("pix"), res))
-            .cast("long").alias("a"),
-            (F.col("ty") * res + F.floor(F.col("pix") / res))
-            .cast("long").alias("b"),
+            gx.alias("a"), gy.alias("b"),
             F.col("v.zt_d").cast("long").alias("c"),
             F.col("v.zt_e").cast("long").alias("d"),
             F.col("v.zt_f").cast("long").alias("e"),
@@ -1317,10 +1296,7 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("tx", "ty", F.posexplode("landform").alias("pix", "v"))
         .select(
             F.lit("lf").alias("tag"),
-            (F.col("tx") * res + F.pmod(F.col("pix"), res))
-            .cast("long").alias("a"),
-            (F.col("ty") * res + F.floor(F.col("pix") / res))
-            .cast("long").alias("b"),
+            gx.alias("a"), gy.alias("b"),
             F.col("v").cast("long").alias("c"),
             F.lit(-1).cast("long").alias("d"),
             F.lit(-1).cast("long").alias("e"),
@@ -1334,10 +1310,7 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.posexplode(F.arrays_zip(*_hz16)).alias("pix", "v"),
         )
         .select(
-            (F.col("tx") * res + F.pmod(F.col("pix"), res))
-            .cast("long").alias("a"),
-            (F.col("ty") * res + F.floor(F.col("pix") / res))
-            .cast("long").alias("b"),
+            gx.alias("a"), gy.alias("b"),
             F.explode(
                 F.array(
                     *[
@@ -1368,10 +1341,7 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             F.lit("gdal").alias("tag"),
-            (F.col("tx") * res + F.pmod(F.col("pix"), res))
-            .cast("long").alias("a"),
-            (F.col("ty") * res + F.floor(F.col("pix") / res))
-            .cast("long").alias("b"),
+            gx.alias("a"), gy.alias("b"),
             F.col("v.tri").cast("long").alias("c"),
             (F.col("v.tpi_num") * 16 + F.col("v.tpi_den"))
             .cast("long").alias("d"),
@@ -1405,10 +1375,7 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             F.lit("flats").alias("tag"),
-            (F.col("tx") * res + F.pmod(F.col("pix"), res))
-            .cast("long").alias("a"),
-            (F.col("ty") * res + F.floor(F.col("pix") / res))
-            .cast("long").alias("b"),
+            gx.alias("a"), gy.alias("b"),
             F.col("v.d8_dir").cast("long").alias("c"),
             F.col("v.d8_key").cast("long").alias("d"),
             F.col("v.flat_d").cast("long").alias("e"),
@@ -1423,10 +1390,7 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             F.lit("fill").alias("tag"),
-            (F.col("tx") * res + F.pmod(F.col("pix"), res))
-            .cast("long").alias("a"),
-            (F.col("ty") * res + F.floor(F.col("pix") / res))
-            .cast("long").alias("b"),
+            gx.alias("a"), gy.alias("b"),
             F.col("v.filled").cast("long").alias("c"),
             (F.col("v.filled") - F.col("v.counts")).cast("long").alias("d"),
             F.lit(-1).cast("long").alias("e"),
@@ -1437,10 +1401,7 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("tx", "ty", F.posexplode("strahler").alias("pix", "v"))
         .select(
             F.lit("strahler").alias("tag"),
-            (F.col("tx") * res + F.pmod(F.col("pix"), res))
-            .cast("long").alias("a"),
-            (F.col("ty") * res + F.floor(F.col("pix") / res))
-            .cast("long").alias("b"),
+            gx.alias("a"), gy.alias("b"),
             F.col("v").cast("long").alias("c"),
             F.lit(-1).cast("long").alias("d"),
             F.lit(-1).cast("long").alias("e"),
@@ -1451,10 +1412,7 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("tx", "ty", F.posexplode("acc").alias("pix", "v"))
         .select(
             F.lit("flowacc").alias("tag"),
-            (F.col("tx") * res + F.pmod(F.col("pix"), res))
-            .cast("long").alias("a"),
-            (F.col("ty") * res + F.floor(F.col("pix") / res))
-            .cast("long").alias("b"),
+            gx.alias("a"), gy.alias("b"),
             F.col("v").cast("long").alias("c"),
             F.lit(-1).cast("long").alias("d"),
             F.lit(-1).cast("long").alias("e"),
@@ -1475,10 +1433,7 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("tx", "ty", F.posexplode("cost_dist").alias("pix", "v"))
         .select(
             F.lit("cost").alias("tag"),
-            (F.col("tx") * res + F.pmod(F.col("pix"), res))
-            .cast("long").alias("a"),
-            (F.col("ty") * res + F.floor(F.col("pix") / res))
-            .cast("long").alias("b"),
+            gx.alias("a"), gy.alias("b"),
             F.col("v").cast("long").alias("c"),
             F.lit(-1).cast("long").alias("d"),
             F.lit(-1).cast("long").alias("e"),
@@ -1505,13 +1460,13 @@ def q_contours(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the identical corner-scatter + case-table algebra in SQL
     (contour_segments_sql), so rows hash-match bit for bit."""
     res = _HOTSPOT_RES
+    gx, gy = raster.pixel_xy(res)
     tiles = _hotspot_tiles(spark, sf_dir)
     cells = (
         tiles.select("tx", "ty", F.posexplode("counts").alias("pix", "n"))
         .filter(F.col("n") != 0)
         .select(
-            (F.col("tx") * res + F.pmod(F.col("pix"), res)).alias("gx"),
-            (F.col("ty") * res + F.floor(F.col("pix") / res)).alias("gy"),
+            gx.alias("gx"), gy.alias("gy"),
             F.col("n").alias("z"),
         )
     )

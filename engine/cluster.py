@@ -25,6 +25,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .session import truncate_lineage
+
 
 def _init_centroids(
     corpus: DataFrame, k: int, corpus_id: str, vec_col: str, seed: int
@@ -257,10 +259,7 @@ def dbscan(
     # exactly there. Disk blocks cost one extra scan per consumer and are
     # released by the ContextCleaner when the frame is GC'd (same pattern
     # and rationale as textops' inverted-index checkpoint).
-    if pairs.sparkSession.sparkContext.getCheckpointDir() is not None:
-        pairs = pairs.checkpoint(eager=True)
-    else:
-        pairs = pairs.localCheckpoint(eager=True)
+    pairs = truncate_lineage(pairs)
 
     from engine.graph import connected_components
 

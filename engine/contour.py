@@ -50,6 +50,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .session import truncate_lineage
+
 # Edges of a block (bx, by): 0 = bottom (SW-SE), 1 = right (SE-NE),
 # 2 = top (NW-NE), 3 = left (SW-NW). Corner bits of the case index:
 # 1 = SW inside, 2 = SE, 4 = NE, 8 = NW ("inside" = z > level).
@@ -296,11 +298,6 @@ def _ring_components(edges: DataFrame, max_iters: int = 40) -> DataFrame:
         F.col("p"),
     )
 
-    def _truncate(df: DataFrame) -> DataFrame:
-        if df.sparkSession.sparkContext.getCheckpointDir() is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
     # Convergence protocol: the JUMP pointer never stabilizes on a cycle
     # (2^k mod L oscillates), so the digest covers lbl ONLY — and because
     # label windows can admit no new minimum for several rounds and then
@@ -338,7 +335,7 @@ def _ring_components(edges: DataFrame, max_iters: int = 40) -> DataFrame:
     n_arcs = state.count()
     small = n_arcs <= 4_000_000
     if not small:
-        state = _truncate(state)
+        state = truncate_lineage(state)
     cap = min(max_iters, max(2, int(math.ceil(math.log2(max(2, 2 * n_arcs)))) + 1))
     prev = _digest(state)
     done = n_arcs == 0
@@ -359,7 +356,7 @@ def _ring_components(edges: DataFrame, max_iters: int = 40) -> DataFrame:
                 "p",
             )
         )
-        nxt = nxt.localCheckpoint(eager=False) if small else _truncate(nxt)
+        nxt = nxt.localCheckpoint(eager=False) if small else truncate_lineage(nxt)
         cur = _digest(nxt)
         state = nxt
         if cur == prev and _consistent(state):

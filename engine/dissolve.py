@@ -46,6 +46,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .raster import floor_div
+
 
 def np_rect_union_area(
     x0: np.ndarray, y0: np.ndarray, x1: np.ndarray, y1: np.ndarray
@@ -82,13 +84,6 @@ def np_rect_union_area(
     covered_to = np.where(prev >= 0, np.maximum(a, prev + base), a)
     seg = np.maximum(b - covered_to, 0)
     return int(np.sum(seg * (hi - lo)[s]))
-
-
-def _fdiv(c, d: int):
-    """Exact floor division of an int64 Column by a positive int literal:
-    (c - pmod(c, d)) is exactly divisible, so the double division is exact
-    for |c| < 2^53."""
-    return ((c - F.pmod(c, F.lit(d))) / F.lit(d)).cast("long")
 
 
 def _validated(rects: DataFrame, group_col: str, cols) -> DataFrame:
@@ -131,8 +126,12 @@ def rect_union_area(
         raise ValueError(f"cell must be >= 1, got {cell}")
     valid = _validated(rects, group_col, cols)
 
-    cxs = F.sequence(_fdiv(F.col("x0"), cell), _fdiv(F.col("x1") - 1, cell))
-    cys = F.sequence(_fdiv(F.col("y0"), cell), _fdiv(F.col("y1") - 1, cell))
+    cxs = F.sequence(
+        floor_div(F.col("x0"), cell), floor_div(F.col("x1") - 1, cell)
+    )
+    cys = F.sequence(
+        floor_div(F.col("y0"), cell), floor_div(F.col("y1") - 1, cell)
+    )
     pieces = (
         valid.withColumn("cx", F.explode(cxs))
         .withColumn("cy", F.explode(cys))

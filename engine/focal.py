@@ -47,6 +47,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .raster import pixel_xy, tile_pixel
+
 
 def _focal_sum_scatter(tiles: DataFrame, res: int, radius: int) -> DataFrame:
     """Column-only scatter plan: explode nonzero cells to global coords,
@@ -56,11 +58,8 @@ def _focal_sum_scatter(tiles: DataFrame, res: int, radius: int) -> DataFrame:
     cells = tiles.select(
         "tx", "ty", F.posexplode("counts").alias("pix", "n")
     ).filter(F.col("n") != 0)
-    cells = cells.select(
-        (F.col("tx") * res + F.pmod(F.col("pix"), res)).alias("gx"),
-        (F.col("ty") * res + (F.col("pix") / res).cast("int")).alias("gy"),
-        "n",
-    )
+    gx, gy = pixel_xy(res)
+    cells = cells.select(gx.alias("gx"), gy.alias("gy"), "n")
     offs = F.explode(F.sequence(F.lit(-r), F.lit(r)))
     scattered = (
         cells.select("gx", "gy", "n", offs.alias("dx"))
@@ -72,14 +71,9 @@ def _focal_sum_scatter(tiles: DataFrame, res: int, radius: int) -> DataFrame:
         .agg(F.sum("n").alias("fs"))
     )
     # re-densify per input tile via the shared sorted-struct assembly
+    tx, ty, pix = tile_pixel(res)
     target = scattered.select(
-        (F.floor(F.col("gx") / res)).cast("long").alias("tx"),
-        (F.floor(F.col("gy") / res)).cast("long").alias("ty"),
-        (
-            F.pmod(F.col("gy"), res).cast("int") * res
-            + F.pmod(F.col("gx"), res).cast("int")
-        ).alias("pix"),
-        "fs",
+        tx.alias("tx"), ty.alias("ty"), pix.alias("pix"), "fs"
     )
     return _densify(target, tiles, res)
 
@@ -690,11 +684,8 @@ def _focal_stencil_scatter(
     cells = tiles.select(
         "tx", "ty", F.posexplode("counts").alias("pix", "n")
     ).filter(F.col("n") != 0)
-    cells = cells.select(
-        (F.col("tx") * res + F.pmod(F.col("pix"), res)).alias("gx"),
-        (F.col("ty") * res + (F.col("pix") / res).cast("int")).alias("gy"),
-        "n",
-    )
+    gx, gy = pixel_xy(res)
+    cells = cells.select(gx.alias("gx"), gy.alias("gy"), "n")
     offs = F.explode(
         F.array(
             *[
@@ -715,14 +706,9 @@ def _focal_stencil_scatter(
         )
         .agg(F.sum(F.col("n") * F.col("o.wt")).alias("fs"))
     )
+    tx, ty, pix = tile_pixel(res)
     target = scattered.select(
-        (F.floor(F.col("gx") / res)).cast("long").alias("tx"),
-        (F.floor(F.col("gy") / res)).cast("long").alias("ty"),
-        (
-            F.pmod(F.col("gy"), res).cast("int") * res
-            + F.pmod(F.col("gx"), res).cast("int")
-        ).alias("pix"),
-        "fs",
+        tx.alias("tx"), ty.alias("ty"), pix.alias("pix"), "fs"
     )
     return _densify(target, tiles, res)
 
@@ -875,14 +861,11 @@ def hot_cells(
     (gx, gy, z) — the operator a screening pipeline actually materializes,
     bounded by the true hotspot count rather than raster size."""
     zs = gi_star(tiles, res, radius=radius, kernel=kernel)
+    gx, gy = pixel_xy(res)
     return (
         zs.select("tx", "ty", F.posexplode("z").alias("pix", "z"))
         .filter(F.col("z") >= z_min)
-        .select(
-            (F.col("tx") * res + F.pmod(F.col("pix"), res)).alias("gx"),
-            (F.col("ty") * res + (F.col("pix") / res).cast("int")).alias("gy"),
-            "z",
-        )
+        .select(gx.alias("gx"), gy.alias("gy"), "z")
     )
 
 

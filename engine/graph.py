@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .session import truncate_lineage
+
 # diagnostics only: rounds the last connected_components call needed to
 # converge (read by tools/bench_kernels.py part_graph; not part of the API)
 LAST_ROUNDS = 0
@@ -137,11 +139,6 @@ def connected_components(
     (worst-case need is ~log^2 of the largest component size; 30 covers any
     practical graph)."""
 
-    def _truncate(df: DataFrame) -> DataFrame:
-        if df.sparkSession.sparkContext.getCheckpointDir() is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
     # r6 round discipline (guide §1/§5): ONE driver action per round. The
     # digest job materializes a LAZY localCheckpoint of the round's edge
     # frame when the graph is small (the common registry/bench case), so a
@@ -203,7 +200,7 @@ def connected_components(
     else:
         if not small:
             # big graph: re-anchor the loop on the reliable-checkpoint path
-            e = _truncate(e)
+            e = truncate_lineage(e)
         converged = prev[0] == 0
         LAST_ROUNDS = 0
         for _ in range(max_iters):
@@ -213,7 +210,7 @@ def connected_components(
             e_next = (
                 e_next.localCheckpoint(eager=False)
                 if small
-                else _truncate(e_next)
+                else truncate_lineage(e_next)
             )
             cur = _digest(e_next)
             e = e_next
@@ -560,11 +557,6 @@ def pagerank(
     teleport = ((1000 - d_e3) * s_total // 1000) // n
     ranks = base.select("id", F.lit(int(scale)).cast("long").alias("rank"))
 
-    def _truncate(df: DataFrame) -> DataFrame:
-        if df.sparkSession.sparkContext.getCheckpointDir() is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
     for it in range(n_iters):
         r = ranks.join(base, "id")
         dangling = r.filter(F.col("deg") == 0).agg(
@@ -602,5 +594,5 @@ def pagerank(
             )
         )
         if (it + 1) % 6 == 0 and it + 1 < n_iters:
-            ranks = _truncate(ranks)
+            ranks = truncate_lineage(ranks)
     return ranks

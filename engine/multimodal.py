@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from . import image_codec
+from .raster import pixel_xy
 
 FEATURES_SCHEMA = (
     "image_id string, w int, h int, fmt string, "
@@ -1227,13 +1228,12 @@ def tiles_to_image(
 
     img = (F.col("ty") / stride_tiles).cast("long")
     tyl = F.pmod(F.col("ty"), stride_tiles)
+    gx, gyf = pixel_xy(res, ty="tyl")
     ex = tiles.select(
         img.alias("image_id"), "tx", tyl.alias("tyl"),
         F.posexplode("counts").alias("pix", "v"),
     ).select(
-        "image_id", "v",
-        (F.col("tx") * res + F.pmod(F.col("pix"), res)).alias("gx"),
-        (F.col("tyl") * res + F.floor(F.col("pix") / res)).alias("gyf"),
+        "image_id", "v", gx.alias("gx"), gyf.alias("gyf")
     ).filter((F.col("gx") < w) & (F.col("gyf") < h))
     # un-flip: image row = h - 1 - gyf
     slot = (F.lit(h - 1) - F.col("gyf")) * w + F.col("gx")

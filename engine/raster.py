@@ -32,6 +32,42 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def pixel_xy(
+    res: int, tx: str = "tx", ty: str = "ty", pix: str = "pix"
+) -> tuple[Column, Column]:
+    """Global pixel (gx, gy) of in-tile pixel `pix` of tile (tx, ty): the
+    raster family's one tile-pixel layout — heatmap_tiles' row-major
+    pix = py*res + px in [0, res^2), tile (tx, ty) covering global pixels
+    [tx*res, (tx+1)*res) x [ty*res, (ty+1)*res). gy is bigint; gx has the
+    type of tx*res + pix. Inverse: tile_pixel."""
+    p = F.col(pix)
+    return F.col(tx) * res + F.pmod(p, res), F.col(ty) * res + F.floor(p / res)
+
+
+def tile_pixel(
+    res: int, gx: Column | str = "gx", gy: Column | str = "gy"
+) -> tuple[Column, Column, Column]:
+    """Inverse of pixel_xy: global pixel (gx, gy) -> (tx, ty, pix), tx/ty
+    bigint floored toward -inf (so negative pixels land in negative tiles),
+    pix int. The double division floors exactly for |gx|, |gy| < 2^45."""
+    gx = F.col(gx) if isinstance(gx, str) else gx
+    gy = F.col(gy) if isinstance(gy, str) else gy
+    return (
+        F.floor(gx / res),
+        F.floor(gy / res),
+        (F.pmod(gy, res) * res + F.pmod(gx, res)).cast("int"),
+    )
+
+
+def floor_div(num: Column, den: Column | int) -> Column:
+    """floor(num / den) as int64 for an int64 num of any sign and a POSITIVE
+    den: pmod is the nonnegative remainder, so num - pmod(num, den) is an
+    exact multiple of den, and the double division is exact for
+    |num| < 2^53 (not for every int64)."""
+    d = den if isinstance(den, Column) else F.lit(den)
+    return ((num - F.pmod(num, d)) / d).cast("long")
+
+
 def heatmap_tiles(
     points: DataFrame,
     tile_size: float,
@@ -340,15 +376,12 @@ def sparse_to_tiles(
     raster family consumes: (tx, ty, counts array<long> row-major res*res),
     unmentioned pixels 0. Same bounded assembly as heatmap_tiles (explode the
     pixel range per nonempty tile, left join, one array_sort(collect_list)
-    fold); negative coordinates handled by pmod."""
+    fold); negative coordinates floor into negative tiles (tile_pixel)."""
     if not (1 <= res <= 256):
         raise ValueError("res must be in [1, 256]")
-    px = F.pmod(F.col("gx"), F.lit(res)).cast("int")
-    py = F.pmod(F.col("gy"), F.lit(res)).cast("int")
+    tx, ty, pix = tile_pixel(res)
     sparse = cells.select(
-        ((F.col("gx") - px) / res).cast("long").alias("tx"),
-        ((F.col("gy") - py) / res).cast("long").alias("ty"),
-        (py * res + px).alias("pix"),
+        tx.alias("tx"), ty.alias("ty"), pix.alias("pix"),
         F.col(value_col).cast("long").alias("n"),
     )
     keys = sparse.select("tx", "ty").distinct()
@@ -522,11 +555,10 @@ def raster_regions(
     cells = tiles.select(
         "tx", "ty", F.posexplode("counts").alias("pix", "n")
     ).filter(F.col("n") != 0)
-    cells = cells.select(
-        (F.col("tx") * res + F.pmod(F.col("pix"), res)).alias("gx"),
-        (F.col("ty") * res + (F.col("pix") / res).cast("int")).alias("gy"),
-        "n",
-    )
+    gx, gy = pixel_xy(res)
+    if dict(tiles.dtypes)["ty"] != "bigint":
+        gy = gy.cast("int")  # int tile keys keep int bounds, as gx does
+    cells = cells.select(gx.alias("gx"), gy.alias("gy"), "n")
     cls = (
         classify(F.col("n")) if classify is not None else F.lit(1)
     ).cast("long")
@@ -753,22 +785,19 @@ def zonal_crosstab(
     map-side-combined hash agg on (zone, value). Output cardinality is
     bounded by distinct zone x value classes — tiny next to the cell count.
     DuckDB twin: zonal_crosstab_sql (hash-exact, all int64)."""
+    gx, gy = pixel_xy(res)
     z = (
         zones.select("tx", "ty", F.posexplode("counts").alias("pix", "zone"))
         .filter(F.col("zone") != 0)
         .select(
-            (F.col("tx") * res + F.pmod(F.col("pix"), res)).alias("gx"),
-            (F.col("ty") * res + F.floor(F.col("pix") / res)).cast("long")
-            .alias("gy"),
+            gx.alias("gx"), gy.alias("gy"),
             F.col("zone").cast("long").alias("zone"),
         )
     )
     v = values.select(
         "tx", "ty", F.posexplode("counts").alias("pix", "value")
     ).select(
-        (F.col("tx") * res + F.pmod(F.col("pix"), res)).alias("gx"),
-        (F.col("ty") * res + F.floor(F.col("pix") / res)).cast("long")
-        .alias("gy"),
+        gx.alias("gx"), gy.alias("gy"),
         F.col("value").cast("long").alias("value"),
     )
     return (
@@ -797,22 +826,19 @@ def zonal_stats_tiles(
     equi-join, one map-side-combined hash agg keyed by zone — output
     cardinality = distinct zones. Returns (zone, n_cells, vsum, vmin,
     vmax)."""
+    gx, gy = pixel_xy(res)
     z = (
         zones.select("tx", "ty", F.posexplode("counts").alias("pix", "zone"))
         .filter(F.col("zone") != 0)
         .select(
-            (F.col("tx") * res + F.pmod(F.col("pix"), res)).alias("gx"),
-            (F.col("ty") * res + F.floor(F.col("pix") / res)).cast("long")
-            .alias("gy"),
+            gx.alias("gx"), gy.alias("gy"),
             F.col("zone").cast("long").alias("zone"),
         )
     )
     v = values.select(
         "tx", "ty", F.posexplode("counts").alias("pix", "value")
     ).select(
-        (F.col("tx") * res + F.pmod(F.col("pix"), res)).alias("gx"),
-        (F.col("ty") * res + F.floor(F.col("pix") / res)).cast("long")
-        .alias("gy"),
+        gx.alias("gx"), gy.alias("gy"),
         F.col("value").cast("long").alias("value"),
     )
     return (
@@ -843,22 +869,19 @@ def zonal_categorical(
     zone x class pairs, then a zone-keyed argmin/argmax — never touches
     raw cells twice. Returns (zone, variety, majority, majority_n,
     minority, minority_n)."""
+    gx, gy = pixel_xy(res)
     z = (
         zones.select("tx", "ty", F.posexplode("counts").alias("pix", "zone"))
         .filter(F.col("zone") != 0)
         .select(
-            (F.col("tx") * res + F.pmod(F.col("pix"), res)).alias("gx"),
-            (F.col("ty") * res + F.floor(F.col("pix") / res)).cast("long")
-            .alias("gy"),
+            gx.alias("gx"), gy.alias("gy"),
             F.col("zone").cast("long").alias("zone"),
         )
     )
     v = values.select(
         "tx", "ty", F.posexplode("counts").alias("pix", "value")
     ).select(
-        (F.col("tx") * res + F.pmod(F.col("pix"), res)).alias("gx"),
-        (F.col("ty") * res + F.floor(F.col("pix") / res)).cast("long")
-        .alias("gy"),
+        gx.alias("gx"), gy.alias("gy"),
         F.col("value").cast("long").alias("value"),
     )
     zv = (

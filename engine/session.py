@@ -13,7 +13,7 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -79,6 +79,16 @@ def _own_checkpoint_dir(sc) -> str:
     sc.setCheckpointDir(path)
     atexit.register(shutil.rmtree, path, ignore_errors=True)
     return path
+
+
+def truncate_lineage(df: DataFrame) -> DataFrame:
+    """Materialize `df` and cut its lineage: a reliable checkpoint when the
+    session has a checkpoint dir (get_spark always sets one; its blocks
+    survive executor loss), an eager localCheckpoint otherwise — the
+    engine-wide iteration discipline."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
 
 
 def optimize_parallelism(

@@ -55,6 +55,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .raster import floor_div, pixel_xy, tile_pixel
+from .session import truncate_lineage
+
 # Horn stencils as focal_stencil weight maps ((dx, dy) -> weight, y up).
 HORN_DZDX = {
     (1, -1): 1, (1, 0): 2, (1, 1): 1,
@@ -432,13 +435,6 @@ def tpi_at(
     )
 
 
-def _fdiv(a: Column, b: Column) -> Column:
-    """Exact int64 FLOOR division (pmod keeps the remainder nonnegative, so
-    the quotient floors toward -inf for negative numerators — the engine's
-    standard no-raw-double division, engine.trajectory.kinematics)."""
-    return ((a - F.pmod(a, b)) / b).cast("long")
-
-
 def landform_classes(
     tiles: DataFrame,
     res: int,
@@ -484,8 +480,8 @@ def landform_classes(
     j = small.join(large, ["tx", "ty"]).join(grads, ["tx", "ty"])
 
     def cls(s):
-        ts = _fdiv(F.lit(1000) * s["sn"], s["sd"])
-        tl = _fdiv(F.lit(1000) * s["ln"], s["ld"])
+        ts = floor_div(F.lit(1000) * s["sn"], s["sd"])
+        tl = floor_div(F.lit(1000) * s["ln"], s["ld"])
         lo_s = ts <= -thresh_small_e3
         hi_s = ts >= thresh_small_e3
         lo_l = tl <= -thresh_large_e3
@@ -707,32 +703,29 @@ def flow_edges(flow: DataFrame, res: int) -> DataFrame:
         gy = np.concatenate(gys) if gys else np.empty(0, dtype=np.int64)
         d8 = np.concatenate(dirs) if dirs else np.empty(0, dtype=np.int64)
         dk = np.concatenate(keys) if keys else np.empty(0, dtype=np.int64)
-        off_i = np.int64(1 << 20)
-        pack_np = lambda x, y: (x + off_i) * np.int64(1 << 32) + (y + off_i)  # noqa: E731
         di = np.clip(d8, 0, 7)
-        dst = pack_np(gx + offs[di, 0], gy + offs[di, 1])
+        dst = _pack_np(gx + offs[di, 0], gy + offs[di, 1])
         # an Arrow table keeps int64 and the sinks' nulls (validity mask)
         # whether or not the session has Arrow conversion on; a nullable
         # pandas column reaches createDataFrame as float64 when it is off
         out = pa.table({
             "gx": gx, "gy": gy, "d8_dir": d8, "d8_key": dk,
-            "src": pack_np(gx, gy),
+            "src": _pack_np(gx, gy),
             "dst": pa.array(dst, type=pa.int64(), mask=d8 < 0),
         })
         return flow.sparkSession.createDataFrame(
             out,
             "gx long, gy long, d8_dir long, d8_key long, src long, dst long",
         )
+    gx, gy = pixel_xy(res)
     cells = flow.select(
         "tx", "ty",
         F.posexplode(F.arrays_zip("d8_dir", "d8_key")).alias("pix", "g"),
     ).select(
-        (F.col("tx") * res + F.pmod(F.col("pix"), res)).alias("gx"),
-        (F.col("ty") * res + F.floor(F.col("pix") / res)).cast("long").alias("gy"),
+        gx.alias("gx"), gy.alias("gy"),
         F.col("g.d8_dir").alias("d8_dir"),
         F.col("g.d8_key").alias("d8_key"),
     )
-    off = F.lit(1 << 20)
     dir_col = F.col("d8_dir")
     dx = F.element_at(
         F.array(*[F.lit(d[0]) for d in _D8_OFFSETS]), dir_col.cast("int") + 1
@@ -740,11 +733,10 @@ def flow_edges(flow: DataFrame, res: int) -> DataFrame:
     dy = F.element_at(
         F.array(*[F.lit(d[1]) for d in _D8_OFFSETS]), dir_col.cast("int") + 1
     )
-    pack = lambda x, y: (x + off) * F.lit(1 << 32) + (y + off)  # noqa: E731
     return cells.select(
         "gx", "gy", "d8_dir", "d8_key",
-        pack(F.col("gx"), F.col("gy")).alias("src"),
-        F.when(dir_col >= 0, pack(F.col("gx") + dx, F.col("gy") + dy)).alias(
+        _pack(F.col("gx"), F.col("gy")).alias("src"),
+        F.when(dir_col >= 0, _pack(F.col("gx") + dx, F.col("gy") + dy)).alias(
             "dst"
         ),
     )
@@ -789,7 +781,7 @@ def basins(
         raise ValueError(f"method must be 'cc' or 'jump', got {method!r}")
 
     # parent pointer: sinks point at themselves (fixpoints of the doubling)
-    p = _truncate_lineage(
+    p = truncate_lineage(
         ed.select(
             "src", F.coalesce(F.col("dst"), F.col("src")).alias("parent")
         )
@@ -841,7 +833,7 @@ def _jump_fixpoint(p: DataFrame, max_iters: int, op: str) -> DataFrame:
         nxt = (
             nxt.localCheckpoint(eager=False)
             if small
-            else _truncate_lineage(nxt)
+            else truncate_lineage(nxt)
         )
         cur = _digest(nxt)
         p = nxt
@@ -882,11 +874,9 @@ def catchments(
         outlets = spark.createDataFrame(
             [(int(x), int(y)) for x, y in outlets], "gx long, gy long"
         )
-    off = F.lit(1 << 20)
     opack = (
         outlets.select(
-            ((F.col("gx") + off) * F.lit(1 << 32) + (F.col("gy") + off))
-            .alias("o_id"),
+            _pack(F.col("gx"), F.col("gy")).alias("o_id"),
             F.col("gx").alias("outlet_gx"),
             F.col("gy").alias("outlet_gy"),
         )
@@ -906,22 +896,13 @@ def catchments(
             .alias("parent"),
         )
     )
-    p = _jump_fixpoint(_truncate_lineage(seed), max_iters, "catchments")
+    p = _jump_fixpoint(truncate_lineage(seed), max_iters, "catchments")
     return (
         ed.select("gx", "gy", "src")
         .join(p, "src")
         .join(F.broadcast(opack), F.col("parent") == F.col("o_id"))
         .select("gx", "gy", "outlet_gx", "outlet_gy")
     )
-
-
-def _truncate_lineage(df: DataFrame) -> DataFrame:
-    """Reliable checkpoint when a dir is configured (engine.session always
-    sets one), localCheckpoint otherwise — the engine-wide iteration
-    discipline (graph.connected_components, cluster.dbscan, basins)."""
-    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
 
 
 # Iterative-state size gate for the single-action round discipline: states
@@ -981,10 +962,27 @@ def _tile_flow_arrays(dirs: np.ndarray, res: int):
 _FLOW_OFF = 1 << 20
 
 
-def _pack_np(gx: np.ndarray, gy: np.ndarray) -> np.ndarray:
-    """numpy twin of flow_edges' cell packing: (gx+2^20)*2^32 + (gy+2^20)."""
-    return (gx.astype(np.int64) + _FLOW_OFF) * np.int64(1 << 32) + (
-        gy.astype(np.int64) + _FLOW_OFF
+def _pack_np(gx, gy) -> np.ndarray:
+    """The engine's pixel node id (flow_edges, cost_cells and the cost
+    walks): (gx+2^20)*2^32 + (gy+2^20), an int64 that stays positive and
+    unique for |gx|, |gy| < 2^20. numpy twin of _pack."""
+    return (np.asarray(gx, dtype=np.int64) + _FLOW_OFF) * np.int64(1 << 32) + (
+        np.asarray(gy, dtype=np.int64) + _FLOW_OFF
+    )
+
+
+def _pack(gx: Column, gy: Column) -> Column:
+    """Column pixel node id (see _pack_np); inverse: _unpack."""
+    off = F.lit(_FLOW_OFF)
+    return (gx + off) * F.lit(1 << 32) + (gy + off)
+
+
+def _unpack(node: Column) -> tuple[Column, Column]:
+    """Pixel node id -> bigint (gx, gy): the arithmetic shift and the low-32
+    mask are the exact floor and pmod by 2^32."""
+    return (
+        F.shiftright(node, 32) - F.lit(_FLOW_OFF),
+        node.bitwiseAND(F.lit((1 << 32) - 1)) - F.lit(_FLOW_OFF),
     )
 
 
@@ -1249,13 +1247,13 @@ def flow_accumulation(
         # Every edge's dst is a border pixel of an existing tile (d8_flow's
         # presence mask never points flow at absent cells), so the inner
         # joins lose nothing.
-        hops = _truncate_lineage(
+        hops = truncate_lineage(
             routes.filter(F.col("term_exit") == 1)
             .join(edges.select(F.col("src").alias("term"), "dst"), "term")
             .select("entry", F.col("dst").alias("next_entry"))
         )
         # initial inflow per entry: tile-internal mass of every edge into it
-        delta = _truncate_lineage(
+        delta = truncate_lineage(
             edges.groupBy(F.col("dst").alias("entry")).agg(
                 F.sum("m0").alias("d")
             )
@@ -1274,7 +1272,7 @@ def flow_accumulation(
                 .agg(F.sum("d").alias("d"))
             )
             delta = (
-                _truncate_lineage(delta)
+                truncate_lineage(delta)
                 if (i + 1) % 8 == 0
                 else delta.persist()
             )
@@ -1286,7 +1284,7 @@ def flow_accumulation(
             )
         from functools import reduce
 
-        inflow = _truncate_lineage(
+        inflow = truncate_lineage(
             reduce(DataFrame.unionByName, rounds)
             .groupBy("entry")
             .agg(F.sum("d").alias("mass"))
@@ -1303,17 +1301,9 @@ def _flowacc_finish(spark, flow, inflow, res, base_mass):
     distributed stage-1/2 paths)."""
     import pandas as pd
 
-    gx = F.shiftright(F.col("entry"), 32) - F.lit(_FLOW_OFF)
-    gy = F.col("entry").bitwiseAND(F.lit((1 << 32) - 1)) - F.lit(_FLOW_OFF)
+    tx, ty, pix = tile_pixel(res, *_unpack(F.col("entry")))
     seeds = (
-        inflow.select(
-            F.floor(gx / res).alias("tx"),
-            F.floor(gy / res).alias("ty"),
-            (F.pmod(gy, F.lit(res)) * res + F.pmod(gx, F.lit(res))).alias(
-                "pix"
-            ),
-            "mass",
-        )
+        inflow.select(tx.alias("tx"), ty.alias("ty"), pix.alias("pix"), "mass")
         .groupBy("tx", "ty")
         .agg(
             F.collect_list("pix").alias("seed_pix"),
@@ -1371,14 +1361,10 @@ def hypsometry(
     frame serves both products. DuckDB twin: hypsometry_sql."""
     if n_bins < 1:
         raise ValueError("n_bins must be >= 1")
+    gx, gy = pixel_xy(res)
     z = tiles.select(
         "tx", "ty", F.posexplode("counts").alias("pix", "z")
-    ).select(
-        (F.col("tx") * res + F.pmod(F.col("pix"), res)).alias("gx"),
-        (F.col("ty") * res + F.floor(F.col("pix") / res))
-        .cast("long").alias("gy"),
-        "z",
-    )
+    ).select(gx.alias("gx"), gy.alias("gy"), "z")
     j = basin_cells.join(z, ["gx", "gy"])
     mom = j.groupBy("basin").agg(
         F.count("*").alias("_n"),
@@ -1455,14 +1441,10 @@ def stream_links(
     a chain). DuckDB twin: none — pytest pins a python replay (the
     component kernels are registry/twin-checked individually)."""
     ed = flow_edges(flow, res).persist()
+    gx, gy = pixel_xy(res)
     accx = acc.select(
         "tx", "ty", F.posexplode("acc").alias("pix", "accv")
-    ).select(
-        (F.col("tx") * res + F.pmod(F.col("pix"), res)).alias("gx"),
-        (F.col("ty") * res + F.floor(F.col("pix") / res))
-        .cast("long").alias("gy"),
-        "accv",
-    )
+    ).select(gx.alias("gx"), gy.alias("gy"), "accv")
     cells = (
         ed.join(accx, ["gx", "gy"])
         .filter(F.col("accv") >= F.lit(int(threshold)))
@@ -1489,7 +1471,7 @@ def stream_links(
             F.coalesce(F.col("_n"), F.lit(0)) == 1, F.col("_only_in")
         ).otherwise(cells["src"]).alias("parent"),
     )
-    roots = _jump_fixpoint(_truncate_lineage(lab), max_iters, "stream_links")
+    roots = _jump_fixpoint(truncate_lineage(lab), max_iters, "stream_links")
     fl = flow_length(flow, res).select(
         "gx", "gy", F.col("length").alias("_fl")
     )
@@ -1567,7 +1549,7 @@ def flow_length(
             F.col("d8_dir").cast("int") + 1,
         )
     )
-    p = _truncate_lineage(
+    p = truncate_lineage(
         ed.select(
             "src",
             F.coalesce("dst", "src").alias("parent"),
@@ -1586,7 +1568,7 @@ def flow_length(
 
     prev = _digest(p)
     for _ in range(max_iters):
-        nxt = _truncate_lineage(
+        nxt = truncate_lineage(
             p.alias("a")
             .join(
                 p.select(
@@ -1719,18 +1701,13 @@ def stream_cells(acc: DataFrame, res: int, threshold: int) -> DataFrame:
     """flow_accumulation frame -> sparse (gx, gy, acc) rows with
     acc >= threshold: the classic stream-network extraction (output is
     O(stream cells), never O(raster))."""
+    gx, gy = pixel_xy(res)
     return (
         acc.select(
             "tx", "ty", F.posexplode("acc").alias("pix", "acc")
         )
         .filter(F.col("acc") >= threshold)
-        .select(
-            (F.col("tx") * res + F.pmod(F.col("pix"), res)).alias("gx"),
-            (F.col("ty") * res + F.floor(F.col("pix") / res))
-            .cast("long")
-            .alias("gy"),
-            "acc",
-        )
+        .select(gx.alias("gx"), gy.alias("gy"), "acc")
     )
 
 
@@ -1767,22 +1744,17 @@ def cost_cells(tiles: DataFrame, res: int, cost_col: str = "cost") -> DataFrame:
     (gx, gy, id, c) with id the engine's packed cell key (flow_edges layout)
     and c the per-cell traversal cost. Cells with null or non-positive cost
     are BARRIERS — dropped here, so no edge can cross them."""
-    off = F.lit(1 << 20)
+    gx, gy = pixel_xy(res)
     return (
         tiles.select(
             "tx", "ty", F.posexplode(cost_col).alias("pix", "c")
         )
         .filter(F.col("c").isNotNull() & (F.col("c") > 0))
         .select(
-            (F.col("tx") * res + F.pmod(F.col("pix"), res)).alias("gx"),
-            (F.col("ty") * res + F.floor(F.col("pix") / res))
-            .cast("long").alias("gy"),
-            F.col("c").cast("long").alias("c"),
+            gx.alias("gx"), gy.alias("gy"), F.col("c").cast("long").alias("c")
         )
         .select(
-            "gx", "gy", "c",
-            ((F.col("gx") + off) * F.lit(1 << 32) + (F.col("gy") + off))
-            .alias("id"),
+            "gx", "gy", "c", _pack(F.col("gx"), F.col("gy")).alias("id")
         )
     )
 
@@ -1801,7 +1773,6 @@ def cost_edges(tiles: DataFrame, res: int, cost_col: str = "cost") -> DataFrame:
     + one cell-id equi-join to attach the destination cost; barriers never
     appear on either side (cost_cells drops them)."""
     cells = cost_cells(tiles, res, cost_col)
-    off = F.lit(1 << 20)
     fwd = [(1, 0, 5), (1, 1, 7), (0, 1, 5), (-1, 1, 7)]
     cand = cells.select(
         F.col("id").alias("src"),
@@ -1809,8 +1780,7 @@ def cost_edges(tiles: DataFrame, res: int, cost_col: str = "cost") -> DataFrame:
         F.explode(
             F.array(*[
                 F.struct(
-                    ((F.col("gx") + dx + off) * F.lit(1 << 32)
-                     + (F.col("gy") + dy + off)).alias("dst"),
+                    _pack(F.col("gx") + dx, F.col("gy") + dy).alias("dst"),
                     F.lit(k).alias("k"),
                 )
                 for dx, dy, k in fwd
@@ -1851,10 +1821,7 @@ def cost_distance(
         sources = spark.createDataFrame(
             [(int(x), int(y)) for x, y in sources], "gx long, gy long"
         )
-    off = 1 << 20
-    pack = (
-        (F.col("gx") + F.lit(off)) * F.lit(1 << 32) + (F.col("gy") + F.lit(off))
-    )
+    pack = _pack(F.col("gx"), F.col("gy"))
     src_df = sources.select(
         pack.alias("source_id"), pack.alias("node")
     )
@@ -1864,14 +1831,11 @@ def cost_distance(
         max_dist=max_cost,
         max_rounds=max_rounds,
     )
-    def _unpack(col, out_x, out_y):
-        x = (F.floor(F.col(col) / F.lit(1 << 32)) - off).cast("long")
-        y = (F.pmod(F.col(col), F.lit(1 << 32)) - off).cast("long")
-        return [x.alias(out_x), y.alias(out_y)]
-
+    sx, sy = _unpack(F.col("source_id"))
+    gx, gy = _unpack(F.col("node"))
     return d.select(
-        *_unpack("source_id", "source_gx", "source_gy"),
-        *_unpack("node", "gx", "gy"),
+        sx.alias("source_gx"), sy.alias("source_gy"),
+        gx.alias("gx"), gy.alias("gy"),
         "dist", "hops",
     )
 
@@ -1909,15 +1873,12 @@ def least_cost_paths(
         dests = spark.createDataFrame(
             [(int(x), int(y)) for x, y in dests], "gx long, gy long"
         )
-    off = 1 << 20
-    pack = (
-        (F.col("gx") + F.lit(off)) * F.lit(1 << 32) + (F.col("gy") + F.lit(off))
-    )
+    pack = _pack(F.col("gx"), F.col("gy"))
     d = cost_distance(
         tiles, res, [source], cost_col, max_cost=max_cost,
         max_rounds=max_rounds,
     )
-    labels = _truncate_lineage(
+    labels = truncate_lineage(
         d.select(pack.alias("id"), "dist", "hops")
     )
     edges = cost_edges(tiles, res, cost_col)
@@ -1932,7 +1893,7 @@ def least_cost_paths(
         F.col("id").alias("_v"), F.col("dist").alias("_dv"),
         F.col("hops").alias("_hv"),
     )
-    pred = _truncate_lineage(
+    pred = truncate_lineage(
         sym.join(lu, sym["dst"] == F.col("_u"))
         .join(lv, sym["src"] == F.col("_v"))
         .filter(
@@ -1942,8 +1903,8 @@ def least_cost_paths(
         .groupBy(F.col("_u").alias("id"))
         .agg(F.min("_v").alias("pred"))
     )
-    src_id = (source[0] + off) * (1 << 32) + (source[1] + off)
-    frontier = _truncate_lineage(
+    src_id = int(_pack_np(*source))
+    frontier = truncate_lineage(
         dests.select(
             F.col("gx").alias("dest_gx"), F.col("gy").alias("dest_gy"),
             pack.alias("cur"),
@@ -1969,15 +1930,14 @@ def least_cost_paths(
             )
         )
         if step % 8 == 0:  # lineage grows one join per step; cut periodically
-            frontier = _truncate_lineage(frontier)
+            frontier = truncate_lineage(frontier)
         out.append(frontier)
     from functools import reduce
 
     path = reduce(DataFrame.unionByName, out)
+    gx, gy = _unpack(F.col("cur"))
     return path.select(
-        "dest_gx", "dest_gy", "step",
-        (F.floor(F.col("cur") / F.lit(1 << 32)) - off).cast("long").alias("gx"),
-        (F.pmod(F.col("cur"), F.lit(1 << 32)) - off).cast("long").alias("gy"),
+        "dest_gx", "dest_gy", "step", gx.alias("gx"), gy.alias("gy")
     )
 
 
@@ -2430,7 +2390,7 @@ def _halo_fixpoint(
         nxt = (
             nxt.localCheckpoint(eager=False)
             if small
-            else _truncate_lineage(nxt)
+            else truncate_lineage(nxt)
         )
         cur = _digest(nxt)
         state = nxt
@@ -3341,13 +3301,9 @@ def _cost_init(
         sources = spark.createDataFrame(
             [(int(x), int(y)) for x, y in sources], "gx long, gy long"
         )
+    tx, ty, pix = tile_pixel(res)
     spt = (
-        sources.select(
-            F.floor(F.col("gx") / res).cast("long").alias("tx"),
-            F.floor(F.col("gy") / res).cast("long").alias("ty"),
-            (F.pmod(F.col("gy"), res) * res + F.pmod(F.col("gx"), res))
-            .cast("int").alias("pix"),
-        )
+        sources.select(tx.alias("tx"), ty.alias("ty"), pix.alias("pix"))
         .groupBy("tx", "ty")
         .agg(F.collect_set("pix").alias("_spix"))
     )
@@ -3515,7 +3471,6 @@ def cost_allocation(
     state = _cost_state(tiles, res, sources, connectivity, max_iters)
     conn = connectivity
     offs, mults = _cost_mults(conn)
-    off_lit = 1 << 20
 
     def pred_finish(halo: np.ndarray, mask: np.ndarray, key) -> dict:
         tx, ty = key
@@ -3530,7 +3485,7 @@ def cost_allocation(
         yy, xx = np.mgrid[0:pad, 0:pad]
         ggx = tx * res + (xx - 1)
         ggy = ty * res + (yy - 1)
-        pid = (ggx + off_lit) * (1 << 32) + (ggy + off_lit)
+        pid = _pack_np(ggx, ggy)
         cc = cost[1 : res + 1, 1 : res + 1]
         dc = g[1 : res + 1, 1 : res + 1]
         best = np.full((res, res), np.iinfo(np.int64).max, dtype=np.int64)
@@ -3559,23 +3514,17 @@ def cost_allocation(
     ]
     ptr = _halo_apply(state, res, 1, pred_finish, fields=fields,
                       pass_key=True)
+    gx, gy = pixel_xy(res)
     cells = ptr.select(
         "tx", "ty",
         F.posexplode(F.arrays_zip("parent", "dist")).alias("pix", "v"),
     ).select(
-        (F.col("tx") * res + F.pmod(F.col("pix"), res)).alias("gx"),
-        (F.col("ty") * res + F.floor(F.col("pix") / res))
-        .cast("long").alias("gy"),
+        gx.alias("gx"), gy.alias("gy"),
         F.col("v.parent").alias("parent"),
         F.col("v.dist").alias("cost_dist"),
     ).filter(F.col("parent") >= 0)
-    pack = lambda x, y: (  # noqa: E731
-        (x + F.lit(off_lit)) * F.lit(1 << 32) + (y + F.lit(off_lit))
-    )
-    edges = cells.select(
-        pack(F.col("gx"), F.col("gy")).alias("src"), "parent"
-    )
-    p = _jump_fixpoint(_truncate_lineage(edges), max_iters,
+    edges = cells.select(_pack(F.col("gx"), F.col("gy")).alias("src"), "parent")
+    p = _jump_fixpoint(truncate_lineage(edges), max_iters,
                        "cost_allocation")
     spark = tiles.sparkSession
     if not isinstance(sources, DataFrame):
@@ -3583,13 +3532,13 @@ def cost_allocation(
             [(int(x), int(y)) for x, y in sources], "gx long, gy long"
         )
     spack = sources.select(
-        pack(F.col("gx"), F.col("gy")).alias("s_id"),
+        _pack(F.col("gx"), F.col("gy")).alias("s_id"),
         F.col("gx").alias("src_gx"),
         F.col("gy").alias("src_gy"),
     ).dropDuplicates(["s_id"])
     return (
         cells.select("gx", "gy", "cost_dist",
-                     pack(F.col("gx"), F.col("gy")).alias("src"))
+                     _pack(F.col("gx"), F.col("gy")).alias("src"))
         .join(p, "src")
         .join(F.broadcast(spack), F.col("parent") == F.col("s_id"))
         .select("gx", "gy", "cost_dist", "src_gx", "src_gy")
@@ -3795,12 +3744,11 @@ def intervisibility(
         raise ValueError(f"height out of range: {height}")
     R = int(max_range)
     h = int(height)
+    gx, gy = pixel_xy(res)
     cells = tiles.select(
         "tx", "ty", F.posexplode("counts").alias("pix", "z")
     ).select(
-        (F.col("tx") * res + F.pmod(F.col("pix"), res)).alias("gx"),
-        (F.col("ty") * res + F.floor(F.col("pix") / res)).cast("long")
-        .alias("gy"),
+        gx.alias("gx"), gy.alias("gy"),
         F.when(
             F.abs(F.col("z")) < F.lit(1 << 18), F.col("z").cast("long")
         ).otherwise(

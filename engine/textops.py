@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .session import truncate_lineage
+
 _MERSENNE = 2147483647  # 2^31 - 1
 
 
@@ -263,14 +265,13 @@ def ngram_jaccard_pairs_indexed(
     # the 3x recompute of a bare projection is avoided. A RELIABLE checkpoint
     # (configured dir — engine.session sets one) survives executor loss, which
     # localCheckpoint does not; localCheckpoint is the dir-less fallback only.
-    sh = df.select(
-        F.col(id_col).alias("_id"),
-        F.array_distinct(word_ngrams(tokens(F.col(text_col)), ngram)).alias("_sh"),
+    sh = truncate_lineage(
+        df.select(
+            F.col(id_col).alias("_id"),
+            F.array_distinct(word_ngrams(tokens(F.col(text_col)), ngram))
+            .alias("_sh"),
+        )
     )
-    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
-        sh = sh.checkpoint(eager=True)
-    else:
-        sh = sh.localCheckpoint(eager=True)
     sizes = sh.select("_id", F.size("_sh").alias("_n"))
     posts = sh.select("_id", F.explode("_sh").alias("_g")).select(
         "_id", F.xxhash64("_g").alias("_gh")

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .joins import haversine_m
+from .raster import floor_div
 
 
 def _with_legs(
@@ -229,13 +230,6 @@ def _sector8(dlon: Column, dlat: Column) -> Column:
     )
 
 
-def _fdiv_col(num: Column, den: Column) -> Column:
-    """floor(num / den) exactly for int64 num of any sign, POSITIVE int64 den
-    (pmod is the nonnegative remainder). Column-denominator twin of
-    warp._floor_div."""
-    return ((num - F.pmod(num, den)) / den).cast("long")
-
-
 def kinematics(
     df: DataFrame,
     id_col: str = "entity_id",
@@ -290,7 +284,7 @@ def kinematics(
         "speed_mmps",
         F.when(
             F.col("dt_us").isNotNull() & (F.col("dt_us") > 0),
-            _fdiv_col(F.col("leg_mm") * F.lit(1_000_000), F.col("dt_us")),
+            floor_div(F.col("leg_mm") * F.lit(1_000_000), F.col("dt_us")),
         ),
     )
     w = Window.partitionBy("_id").orderBy("_ts", "_lon", "_lat")
@@ -301,7 +295,7 @@ def kinematics(
             F.col("speed_mmps").isNotNull()
             & prev_speed.isNotNull()
             & (F.col("dt_us") > 0),
-            _fdiv_col(
+            floor_div(
                 (F.col("speed_mmps") - prev_speed) * F.lit(1_000_000),
                 F.col("dt_us"),
             ),
@@ -817,15 +811,12 @@ def resample_fixes(
         raise ValueError(f"interval_us must be positive, got {interval_us}")
     pts = _with_legs(df, id_col, ts_col, lon_col, lat_col)
 
-    def _fdiv(x, d):  # floor(x / d) for int64 x (exact: see docstring)
-        return ((x - F.pmod(x, F.lit(d))) / F.lit(d)).cast("long")
-
     first = F.col("_pts").isNull()
     # first fix: a tick only at its own ts when epoch-aligned
-    k_lo = F.when(first, _fdiv(F.col("_ts") + (iv - 1), iv)).otherwise(
-        _fdiv(F.col("_pts"), iv) + 1
+    k_lo = F.when(first, floor_div(F.col("_ts") + (iv - 1), iv)).otherwise(
+        floor_div(F.col("_pts"), iv) + 1
     )
-    k_hi = _fdiv(F.col("_ts"), iv)
+    k_hi = floor_div(F.col("_ts"), iv)
     gap_ok = (
         F.lit(True)
         if max_gap_us is None

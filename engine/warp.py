@@ -43,25 +43,19 @@ pyramid alignment, datum shifts).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _floor_div(num: Column, den: int) -> Column:
-    """Exact integer floor division for any-sign numerators (pmod is the
-    nonnegative remainder, so (num - pmod) / den is the floor)."""
-    return ((num - F.pmod(num, F.lit(den))) / F.lit(den)).cast("long")
+from .raster import floor_div, pixel_xy
 
 
 def _sparse_cells(tiles: DataFrame, res: int) -> DataFrame:
+    gx, gy = pixel_xy(res)
     return (
         tiles.select("tx", "ty", F.posexplode("counts").alias("pix", "z"))
         .filter(F.col("z") != 0)
         .select(
-            (F.col("tx") * res + F.pmod(F.col("pix"), res)).alias("sgx"),
-            (F.col("ty") * res + F.floor(F.col("pix") / res)).cast("long")
-            .alias("sgy"),
-            F.col("z").cast("long").alias("z"),
+            gx.alias("sgx"), gy.alias("sgy"), F.col("z").cast("long").alias("z")
         )
     )
 
@@ -86,29 +80,25 @@ def affine_resample(
 
     if out_tiles is None:
         out_tiles = tiles.select("tx", "ty")
+    gx, gy = pixel_xy(res)
     tgt = out_tiles.select(
         F.col("tx").cast("long").alias("tx"),
         F.col("ty").cast("long").alias("ty"),
         F.explode(F.sequence(F.lit(0), F.lit(res * res - 1))).alias("pix"),
-    ).select(
-        "tx", "ty", "pix",
-        (F.col("tx") * res + F.pmod(F.col("pix"), res)).alias("X"),
-        (F.col("ty") * res + F.floor(F.col("pix") / res)).cast("long")
-        .alias("Y"),
-    )
+    ).select("tx", "ty", "pix", gx.alias("X"), gy.alias("Y"))
     sxn = a * F.col("X") + b * F.col("Y") + F.lit(c)
     syn = d * F.col("X") + e * F.col("Y") + F.lit(f)
 
     if method == "nearest":
         probes = tgt.select(
             "tx", "ty", "pix",
-            _floor_div(2 * sxn + den, 2 * den).alias("sgx"),
-            _floor_div(2 * syn + den, 2 * den).alias("sgy"),
+            floor_div(2 * sxn + den, 2 * den).alias("sgx"),
+            floor_div(2 * syn + den, 2 * den).alias("sgy"),
             F.lit(1).cast("long").alias("w"),
         )
     else:
-        gx0 = _floor_div(sxn, den)
-        gy0 = _floor_div(syn, den)
+        gx0 = floor_div(sxn, den)
+        gy0 = floor_div(syn, den)
         fx = F.pmod(sxn, F.lit(den))
         fy = F.pmod(syn, F.lit(den))
         quad = F.array(
@@ -300,13 +290,13 @@ def sample_at_points(
     if method == "nearest":
         probes = pts.select(
             "_pid",
-            _floor_div(2 * F.col("_xn") + den, 2 * den).alias("sgx"),
-            _floor_div(2 * F.col("_yn") + den, 2 * den).alias("sgy"),
+            floor_div(2 * F.col("_xn") + den, 2 * den).alias("sgx"),
+            floor_div(2 * F.col("_yn") + den, 2 * den).alias("sgy"),
             F.lit(1).cast("long").alias("w"),
         )
     else:
-        gx0 = _floor_div(F.col("_xn"), den)
-        gy0 = _floor_div(F.col("_yn"), den)
+        gx0 = floor_div(F.col("_xn"), den)
+        gy0 = floor_div(F.col("_yn"), den)
         fx = F.pmod(F.col("_xn"), F.lit(den))
         fy = F.pmod(F.col("_yn"), F.lit(den))
         quad = F.array(

@@ -5,7 +5,11 @@ matching oracle_sql() in DuckDB over the same parquet, canonicalize (columns sor
 by name, rows sorted by all columns, values stringified), and compare row count +
 schema + value hash.
 
-Usage: python tools/check_oracle.py [--sf /root/testdata/sf0.01] [names...]
+Usage: python tools/check_oracle.py [--sf SF_DIR] [--bare-session] [names...]
+
+--bare-session turns Arrow conversion off (spark.sql.execution.arrow.pyspark.
+enabled=false, a plain SparkSession's default; get_spark turns it on), so every
+relation the engine builds on the driver is checked without Arrow too.
 
 Per-half attribution for tagged-union mega-queries (raster_field & co):
   python tools/check_oracle.py raster_field --half hor   # just that half
@@ -21,6 +25,7 @@ from __future__ import annotations
 
 import argparse
 import hashlib
+import os
 import sys
 import time
 from pathlib import Path
@@ -28,7 +33,8 @@ from pathlib import Path
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = str(Path(__file__).resolve().parent.parent)
+sys.path.insert(0, ROOT)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -63,13 +69,25 @@ def main() -> int:
     ap.add_argument("--halves", action="store_true",
                     help="compare each tag value separately (one verdict "
                          "per half) for queries with a `tag` column")
+    ap.add_argument("--bare-session", action="store_true",
+                    help="build the session with Arrow conversion off")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
+    # pandas-UDF workers import `engine` as well: give them the repo root
+    # whatever directory the tool was started from
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
 
     import __spark_entry__ as entry_mod
     from engine.session import get_spark
 
-    spark = get_spark("oracle-check", cores=8, shuffle_partitions=8, driver_mem="16g")
+    conf = (
+        {"spark.sql.execution.arrow.pyspark.enabled": "false"}
+        if args.bare_session else None
+    )
+    spark = get_spark("oracle-check", cores=8, shuffle_partitions=8,
+                      driver_mem="16g", extra_conf=conf)
     con = duckdb.connect()
     for t in TABLES:
         p = f"{args.sf}/{t}.parquet"
