@@ -1228,9 +1228,9 @@ def tiles_to_image(
 
     img = (F.col("ty") / stride_tiles).cast("long")
     tyl = F.pmod(F.col("ty"), stride_tiles)
-    gx, gyf = pixel_xy(res, ty="tyl")
+    gx, gyf = pixel_xy(res)
     ex = tiles.select(
-        img.alias("image_id"), "tx", tyl.alias("tyl"),
+        img.alias("image_id"), "tx", tyl.alias("ty"),
         F.posexplode("counts").alias("pix", "v"),
     ).select(
         "image_id", "v", gx.alias("gx"), gyf.alias("gyf")

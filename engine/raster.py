@@ -32,16 +32,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def pixel_xy(
-    res: int, tx: str = "tx", ty: str = "ty", pix: str = "pix"
-) -> tuple[Column, Column]:
-    """Global pixel (gx, gy) of in-tile pixel `pix` of tile (tx, ty): the
+def pixel_xy(res: int) -> tuple[Column, Column]:
+    """Global pixel (gx, gy) of in-tile pixel "pix" of tile ("tx", "ty"): the
     raster family's one tile-pixel layout — heatmap_tiles' row-major
     pix = py*res + px in [0, res^2), tile (tx, ty) covering global pixels
     [tx*res, (tx+1)*res) x [ty*res, (ty+1)*res). gy is bigint; gx has the
     type of tx*res + pix. Inverse: tile_pixel."""
-    p = F.col(pix)
-    return F.col(tx) * res + F.pmod(p, res), F.col(ty) * res + F.floor(p / res)
+    p = F.col("pix")
+    return (
+        F.col("tx") * res + F.pmod(p, res),
+        F.col("ty") * res + F.floor(p / res),
+    )
 
 
 def tile_pixel(
@@ -556,8 +557,6 @@ def raster_regions(
         "tx", "ty", F.posexplode("counts").alias("pix", "n")
     ).filter(F.col("n") != 0)
     gx, gy = pixel_xy(res)
-    if dict(tiles.dtypes)["ty"] != "bigint":
-        gy = gy.cast("int")  # int tile keys keep int bounds, as gx does
     cells = cells.select(gx.alias("gx"), gy.alias("gy"), "n")
     cls = (
         classify(F.col("n")) if classify is not None else F.lit(1)
