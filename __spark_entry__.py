@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from engine import cells, joins, raster, synth
+from engine.session import local_relation
 
 
 # ---------------------------------------------------------------------------
@@ -442,7 +443,8 @@ def q_multiway_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dim_decode_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5 — broadcast decode join against a literal dim table (README.md:101-124)."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    dim = spark.createDataFrame(
+    dim = local_relation(
+        spark,
         [("click", "Click"), ("view", "View"), ("login", "Login"),
          ("purchase", "Purchase"), ("error", "Error")],
         ["event_type", "label"],
@@ -458,7 +460,8 @@ def q_pip_rect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 graft — PIP join against rectangular regions (broadcast dim + containment);
     rectangle variant is the SQL-expressible twin of the ray-cast PIP."""
     pts = _docs_points(spark, sf_dir)
-    rects = spark.createDataFrame(
+    rects = local_relation(
+        spark,
         [(i, -180.0 + i * 45.0, -90.0 + i * 20.0, -180.0 + i * 45.0 + 60.0,
           -90.0 + i * 20.0 + 50.0) for i in range(8)],
         ["rect_id", "lon0", "lat0", "lon1", "lat1"],
@@ -500,8 +503,8 @@ def q_pip_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "rings": [outer, hole],
             }
         )
-    pdf = spark.createDataFrame(
-        polys,
+    pdf = local_relation(
+        spark, polys,
         schema="poly_id long, bbox struct<min:struct<lon:double,lat:double>,"
                "max:struct<lon:double,lat:double>>, "
                "rings array<array<struct<lon:double,lat:double>>>",
@@ -599,7 +602,8 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _docs_points(spark, sf_dir)
     # deterministic per-point metric from the phash (int math)
     metric = (F.col("phash") % 1000).cast("long")
-    rects = spark.createDataFrame(
+    rects = local_relation(
+        spark,
         [(i, -180.0 + i * 45.0, -90.0 + i * 20.0, -180.0 + i * 45.0 + 60.0,
           -90.0 + i * 20.0 + 50.0) for i in range(8)],
         ["rect_id", "lon0", "lat0", "lon1", "lat1"],
@@ -824,7 +828,7 @@ def q_hotspot_cells(
     res = _HOTSPOT_RES
     gx, gy = raster.pixel_xy(res)
     # persisted: the raster feeds gi_star's three consumers + the join below
-    # (q_raster_field passes its own shared persisted raster instead)
+    # (q_raster_field passes its own shared local raster instead)
     if tiles is None:
         tiles = _hotspot_tiles(spark, sf_dir).persist()
     zs = focal.gi_star(tiles, res, radius=1, kernel="halo", keep_fs=True)
@@ -1018,17 +1022,16 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     res = _HOTSPOT_RES
     gx, gy = raster.pixel_xy(res)
-    # ONE raster build + persist feeds all four halves (hot, pyr, ter, d8)
-    # — previously each half re-rasterized the document anchors (4 scans)
-    tiles_r = _hotspot_tiles(spark, sf_dir).persist()
-    # warm the shared cache with ONE action so the concurrent chains below
-    # don't race to materialize it; the Arrow fetch of the (tiny, registry-
-    # fixed 512-px) raster lets every one-shot halo pass over tiles_r run
-    # driver-side with identical output (focal._halo_apply_driver — r6)
-    tiles_r.count()
-    tiles_r._halo_driver_pdf = tiles_r.toPandas()
+    # ONE raster build feeds every half, taken with ONE Arrow collect of
+    # the (tiny, registry-fixed 512-px) raster: the halves plan over a
+    # local leaf, and its pandas twin lets every one-shot halo pass over
+    # tiles_r run driver-side with identical output
+    # (focal._halo_apply_driver — r6)
+    _tiles_tbl = _hotspot_tiles(spark, sf_dir).toArrow()
+    tiles_r = local_relation(spark, _tiles_tbl, _tiles_tbl.column_names)
+    tiles_r._halo_driver_pdf = _tiles_tbl.to_pandas()
     grads = terrain.terrain_gradients(tiles_r, res)
-    ed = terrain.flow_edges(terrain.d8_flow(tiles_r, res), res).persist()
+    ed = terrain.flow_edges(terrain.d8_flow(tiles_r, res), res)
     # the CC loop (iterative, driver actions) overlaps the terrain fixpoint
     # chains further down; its future is resolved after they launch
     from concurrent.futures import ThreadPoolExecutor
@@ -1086,8 +1089,8 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
     # {strahler || flowacc} is its own chain; CC was submitted above.
     # Results are deterministic regardless of interleaving (every op is a
     # fixpoint / exact solve on its own input).
-    fullt = spark.createDataFrame(
-        [(tx, ty) for tx in range(-2, 2) for ty in range(-1, 1)],
+    fullt = local_relation(
+        spark, [(tx, ty) for tx in range(-2, 2) for ty in range(-1, 1)],
         "tx long, ty long",
     )
     ones_cost = fullt.select(
@@ -1497,7 +1500,8 @@ def q_snap_route(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.pmod(hx, F.lit(100000)) / F.lit(1000.0)).alias("x"),
         (F.pmod(hy, F.lit(60000)) / F.lit(1000.0)).alias("y"),
     )
-    roads = spark.createDataFrame(
+    roads = local_relation(
+        spark,
         [(lid, [{"x": x, "y": y} for x, y in pts]) for lid, pts in _ROADS],
         "line_id long, pts array<struct<x:double,y:double>>",
     )
@@ -2655,8 +2659,8 @@ def q_streaming_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 for i in range(60)
             ]
-            spark.createDataFrame(
-                rows, schema=streaming.STREAM_IMAGES_SCHEMA
+            local_relation(
+                spark, rows, schema=streaming.STREAM_IMAGES_SCHEMA
             ).coalesce(1).write.mode("append").parquet(d1)
             sess_rows = [
                 (
@@ -2667,8 +2671,8 @@ def q_streaming_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 for i in range(35)
             ]
-            spark.createDataFrame(
-                sess_rows, schema=streaming.STREAM_IMAGES_SCHEMA
+            local_relation(
+                spark, sess_rows, schema=streaming.STREAM_IMAGES_SCHEMA
             ).coalesce(1).write.mode("append").parquet(d2)
             # trailing labels: lag = i%20 minutes -> joined iff lag <= 15
             # (max_lag); label lN with N = i%4. The golden values are
@@ -2683,8 +2687,8 @@ def q_streaming_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 for i in range(60)
             ]
-            spark.createDataFrame(
-                lbl_rows, schema=streaming.STREAM_LABELS_SCHEMA
+            local_relation(
+                spark, lbl_rows, schema=streaming.STREAM_LABELS_SCHEMA
             ).coalesce(1).write.mode("append").parquet(d3)
 
         agg = streaming.streaming_cell_counts(
@@ -2746,8 +2750,8 @@ def q_streaming_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
                           "sum_end_us"]]
         out += [("join_" + c, int(join_pdf[c].iloc[0]))
                 for c in ["n_joined", "checksum"]]
-        return spark.createDataFrame(
-            sorted(out), schema="metric string, value long"
+        return local_relation(
+            spark, sorted(out), schema="metric string, value long"
         )
     finally:
         shutil.rmtree(d1, ignore_errors=True)
@@ -2948,7 +2952,8 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_shipdate"),
         F.lit(0).alias("k"),
     )
-    years = spark.createDataFrame(
+    years = local_relation(
+        spark,
         [(0, y, dt.datetime(y, 1, 1), dt.datetime(y + 1, 1, 1)) for y in
          range(1992, 2000)],
         ["k", "year", "t_from", "t_to"],
@@ -3626,8 +3631,8 @@ def q_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from engine import routing
 
-    sources = spark.createDataFrame(
-        [(0, 7), (1, 42)], ["source_id", "node"]
+    sources = local_relation(
+        spark, [(0, 7), (1, 42)], ["source_id", "node"]
     )
     # r6: the two halves are independent iterative loops whose wall is
     # driver-action rounds, not compute — run them from concurrent driver

@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .session import local_relation
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -229,7 +231,8 @@ def _gemm_topk_scan(
     that holds at a 10^12-row corpus. q_rows comes from _collect_query_rows
     (the bound is enforced by the caller — see GEMM_MAX_QUERY_ROWS)."""
     if not q_rows:
-        return queries.sparkSession.createDataFrame(
+        return local_relation(
+            queries.sparkSession,
             [], schema=f"{query_id} long, {corpus_id} long, rank long"
         )
     qids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
@@ -530,7 +533,8 @@ def _rerank_pairs_gemm(
     The per-pair attach joins it replaces moved ~1 KB/candidate through the
     shuffle — 60 GB at 20k queries x 3k candidates — for ~4 GFLOP of math."""
     if not q_rows:
-        return queries.sparkSession.createDataFrame(
+        return local_relation(
+            queries.sparkSession,
             [], schema=f"{query_id} long, {corpus_id} long, rank long"
         )
     qids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
@@ -828,7 +832,7 @@ def ivf_ann_topk(
 
     def centroid_frame(cent_list):
         return F.broadcast(
-            spark.createDataFrame(cent_list, ["centroid_id", "centroid"])
+            local_relation(spark, cent_list, ["centroid_id", "centroid"])
         )
 
     def nearest(df, id_col, n, cdf_, cents_mat):
@@ -1203,8 +1207,8 @@ def ivf_sq8_topk(
     # exact stage: broadcast the shortlist into the corpus (the only rows
     # that ever carry full-precision vectors), attach query vectors from the
     # already-collected driver copy, exact rerank
-    qdf = spark.createDataFrame(
-        [(int(qids[i]), [float(x) for x in Q[i]]) for i in range(nq)],
+    qdf = local_relation(
+        spark, [(int(qids[i]), [float(x) for x in Q[i]]) for i in range(nq)],
         schema=T.StructType(
             [
                 T.StructField("_qid", T.LongType()),

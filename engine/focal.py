@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .raster import pixel_xy, tile_pixel
+from .session import local_relation
 
 
 def _focal_sum_scatter(tiles: DataFrame, res: int, radius: int) -> DataFrame:
@@ -152,6 +153,46 @@ def _box_sums(grid: np.ndarray, res: int, r: int) -> np.ndarray:
     return ii[w:, w:] - ii[:-w, w:] - ii[w:, :-w] + ii[:-w, :-w]
 
 
+def _tile_grids(pdf, res: int):
+    """A collected (tx, ty, counts) frame -> (tile keys in row order,
+    {key: res x res int64 grid})."""
+    keys = [(int(t), int(y)) for t, y in zip(pdf["tx"], pdf["ty"])]
+    grids = {
+        k: np.asarray(c, dtype=np.int64).reshape(res, res)
+        for k, c in zip(keys, pdf["counts"])
+    }
+    return keys, grids
+
+
+def _strip(d: int, res: int, r: int) -> tuple[slice, slice]:
+    """Along one axis, for the neighbor at offset d: (its rows/cols that
+    border this tile, where they land in the (res+2r) halo)."""
+    if d == 1:
+        return slice(0, r), slice(r + res, res + 2 * r)
+    if d == -1:
+        return slice(res - r, res), slice(0, r)
+    return slice(0, res), slice(r, r + res)
+
+
+def _driver_halo(grids: dict, tx: int, ty: int, res: int, r: int):
+    """numpy twin of _halo_apply's strip scatter for tile (tx, ty): the
+    zero-padded (res+2r)^2 halo from the tile and its 8 neighbor grids,
+    plus the same-shape 0/1 presence mask."""
+    pad = res + 2 * r
+    halo = np.zeros((pad, pad), dtype=np.int64)
+    mask = np.zeros((pad, pad), dtype=np.int64)
+    for dx in (-1, 0, 1):
+        for dy in (-1, 0, 1):
+            nb = grids.get((tx + dx, ty + dy))
+            if nb is None:
+                continue
+            ys, hy = _strip(dy, res, r)
+            xs, hx = _strip(dx, res, r)
+            halo[hy, hx] = nb[ys, xs]
+            mask[hy, hx] = 1
+    return halo, mask
+
+
 def _halo_apply_driver(
     spark, pdf, res: int, r: int, finish, fields=None,
     pass_key: bool = False,
@@ -163,51 +204,14 @@ def _halo_apply_driver(
     when the caller attaches a pandas frame of (tx, ty, counts) as
     `df._halo_driver_pdf` (the cover `_pip_used_res` attribute idiom); the
     distributed path keeps parity coverage in tests/test_terrain.py."""
-    keys = [(int(t), int(y)) for t, y in zip(pdf["tx"], pdf["ty"])]
-    grids = {
-        k: np.asarray(c, dtype=np.int64).reshape(res, res)
-        for k, c in zip(keys, pdf["counts"])
-    }
-    pad = res + 2 * r
+    keys, grids = _tile_grids(pdf, res)
     out_fields = (
         [("focal", T.ArrayType(T.LongType()))] if fields is None else fields
     )
     names = [n for n, _ in out_fields]
     rows = {"tx": [], "ty": [], **{n: [] for n in names}}
     for (tx, ty) in keys:
-        halo = np.zeros((pad, pad), dtype=np.int64)
-        mask = np.zeros((pad, pad), dtype=np.int64)
-        halo[r : r + res, r : r + res] = grids[(tx, ty)]
-        mask[r : r + res, r : r + res] = 1
-        for dx in (-1, 0, 1):
-            for dy in (-1, 0, 1):
-                if dx == 0 and dy == 0:
-                    continue
-                nb = grids.get((tx + dx, ty + dy))
-                if nb is None:
-                    continue
-                ys = (
-                    slice(0, r) if dy == 1
-                    else slice(res - r, res) if dy == -1
-                    else slice(0, res)
-                )
-                xs = (
-                    slice(0, r) if dx == 1
-                    else slice(res - r, res) if dx == -1
-                    else slice(0, res)
-                )
-                hy = (
-                    slice(r + res, pad) if dy == 1
-                    else slice(0, r) if dy == -1
-                    else slice(r, r + res)
-                )
-                hx = (
-                    slice(r + res, pad) if dx == 1
-                    else slice(0, r) if dx == -1
-                    else slice(r, r + res)
-                )
-                halo[hy, hx] = nb[ys, xs]
-                mask[hy, hx] = 1
+        halo, mask = _driver_halo(grids, tx, ty, res, r)
         result = (
             finish(halo, mask, (tx, ty)) if pass_key else finish(halo, mask)
         )
@@ -222,7 +226,7 @@ def _halo_apply_driver(
         + [T.StructField(n, t) for n, t in out_fields]
     )
     out_pdf = pd.DataFrame(rows)
-    out = spark.createDataFrame(out_pdf, schema)
+    out = local_relation(spark, out_pdf, schema)
     # generic driver-composition hook: downstream operators that can run
     # their own kernels on an already-collected frame (e.g.
     # flow_accumulation's stage 1) read this (r6)

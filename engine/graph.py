@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .session import truncate_lineage
+from .session import local_relation, truncate_lineage
 
 # diagnostics only: rounds the last connected_components call needed to
 # converge (read by tools/bench_kernels.py part_graph; not part of the API)
@@ -193,8 +193,8 @@ def connected_components(
                 parent = pp
         import pandas as pd
 
-        labels = e.sparkSession.createDataFrame(
-            pd.DataFrame({"id": ids, "comp": ids[parent]}),
+        labels = local_relation(
+            e.sparkSession, pd.DataFrame({"id": ids, "comp": ids[parent]}),
             "id long, comp long",
         )
     else:

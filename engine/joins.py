@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import cells
+from .session import local_relation
 
 
 # ---------------------------------------------------------------------------
@@ -101,17 +102,12 @@ def polygon_cover(
     except Exception:
         rows, n_polys = None, driver_side_limit + 1
     if n_polys <= driver_side_limit:
-        out = []
+        parts, rings = [], ([] if attach_rings else None)
         for row in rows:
             b = row["bbox"]
             rx = np.array([v["lon"] for v in row["ring"]], dtype=np.float64)
             ry = np.array([v["lat"] for v in row["ring"]], dtype=np.float64)
-            ring = (
-                [{"lon": float(a), "lat": float(bb)} for a, bb in zip(rx, ry)]
-                if attach_rings
-                else None
-            )
-            pid, res, cc, full = _cover_one(
+            part = _cover_one(
                 row["poly_id"],
                 b["min"]["lon"], b["min"]["lat"], b["max"]["lon"], b["max"]["lat"],
                 res_min, res_max, max_cells,
@@ -119,24 +115,15 @@ def polygon_cover(
                 ring_ys=ry if classify_interior else None,
                 convex=convex,
             )
-            for c, f in zip(cc.tolist(), full.tolist()):
-                rec = {"poly_id": int(pid), "res": int(res), "cell": int(c),
-                       "full_inside": bool(f)}
-                if attach_rings:
-                    # interior rows never evaluate the ray cast (short-circuit),
-                    # so skip their ring payload — shrinks the broadcast ~8x
-                    rec["ring"] = None if f else ring
-                out.append(rec)
-        schema = "poly_id long, res int, cell long, full_inside boolean"
-        if attach_rings:
-            schema += ", ring array<struct<lon:double,lat:double>>"
-        df = polygons.sparkSession.createDataFrame(out, schema=schema)
-        # the cover's resolution set and size are known right here — pin both
-        # on the frame so pip_join never issues a per-call distinct().collect()
-        # and _materialize_if_large never issues a count() action
-        df._pip_used_res = sorted({r["res"] for r in out}) or [res_min]
-        df._pip_known_rows = len(out)
-        return df
+            parts.append(part)
+            if attach_rings:
+                ring = [
+                    {"lon": float(a), "lat": float(bb)} for a, bb in zip(rx, ry)
+                ]
+                # interior rows never evaluate the ray cast (short-circuit),
+                # so skip their ring payload — shrinks the broadcast ~8x
+                rings.extend(None if f else ring for f in part[3].tolist())
+        return _cover_relation(polygons.sparkSession, parts, res_min, rings)
 
     def gen(batches):
         for pdf in batches:
@@ -164,6 +151,36 @@ def polygon_cover(
     return polygons.select("poly_id", "bbox", "ring").mapInPandas(
         gen, schema="poly_id long, res int, cell long, full_inside boolean"
     )
+
+
+def _cover_relation(spark, parts, res_min: int, rings=None) -> DataFrame:
+    """The driver-built cover as one local relation, assembled as columns
+    from per-polygon (poly_id, res, cells, full_inside) parts; `rings`
+    adds the per-row ring payload. The cover's resolution set and size
+    are known right here — both are pinned on the frame so pip_join never
+    issues a per-call distinct().collect() and _materialize_if_large never
+    issues a count() action."""
+    n = [len(p[2]) for p in parts]
+    cols = {
+        "poly_id": np.repeat(np.array([p[0] for p in parts], np.int64), n),
+        "res": np.repeat(np.array([p[1] for p in parts], np.int32), n),
+        "cell": np.concatenate(
+            [np.zeros(0, np.int64)] + [np.asarray(p[2], np.int64) for p in parts]
+        ),
+        "full_inside": np.concatenate(
+            [np.zeros(0, bool)] + [np.asarray(p[3], bool) for p in parts]
+        ),
+    }
+    schema = "poly_id long, res int, cell long, full_inside boolean"
+    if rings is not None:
+        cols["ring"] = rings
+        schema += ", ring array<struct<lon:double,lat:double>>"
+    df = local_relation(spark, cols, schema)
+    df._pip_used_res = sorted({int(p[1]) for p in parts if len(p[2])}) or [
+        res_min
+    ]
+    df._pip_known_rows = int(sum(n))
+    return df
 
 
 def _cover_one(poly_id, lon0, lat0, lon1, lat1, res_min, res_max, max_cells,
@@ -453,21 +470,15 @@ def multiring_cover(
     if n_polys <= driver_side_limit:
         if rows is None:
             rows = polygons.select("poly_id", "bbox", rings_col).collect()
-        out = []
-        for row in rows:
-            pid, res, cc, full = _multiring_cover_one(
+        parts = [
+            _multiring_cover_one(
                 row["poly_id"], row["bbox"], _np_rings(row[rings_col]),
                 res_min, res_max, max_cells, assume_convex,
             )
-            for c, f in zip(cc.tolist(), full.tolist()):
-                out.append({"poly_id": int(pid), "res": int(res), "cell": int(c),
-                            "full_inside": bool(f)})
-        df = polygons.sparkSession.createDataFrame(
-            out, schema="poly_id long, res int, cell long, full_inside boolean"
-        )
-        df._pip_used_res = sorted({r["res"] for r in out}) or [res_min]
-        df._pip_n_polys = n_polys
-        out_df = _materialize_if_large(df, known_rows=len(out))
+            for row in rows
+        ]
+        df = _cover_relation(polygons.sparkSession, parts, res_min)
+        out_df = _materialize_if_large(df)
         out_df._pip_n_polys = n_polys
         return out_df
 

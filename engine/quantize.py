@@ -40,6 +40,7 @@ from .embedops import (
     _collect_query_rows,
     cosine_double,
 )
+from .session import local_relation
 
 
 def _quantize_np(M: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -183,7 +184,8 @@ def cosine_topk_int8(
             "max_query_rows deliberately, or use lsh/ivf_ann_topk."
         )
     if not q_rows:
-        return queries.sparkSession.createDataFrame(
+        return local_relation(
+            queries.sparkSession,
             [], schema=f"{query_id} long, {corpus_id} long, rank long"
         )
     keep = k * rerank_mult if rerank_corpus is not None else k
@@ -260,8 +262,8 @@ def _exact_rerank(
     the already-collected driver matrix via a broadcast lookup frame (bounded
     by the query cap), exact double cosine, (sim desc, cid asc) tiebreak."""
     spark = rerank_corpus.sparkSession
-    qvec = spark.createDataFrame(
-        [(int(i), [float(x) for x in v]) for i, v in zip(qids, Qf)],
+    qvec = local_relation(
+        spark, [(int(i), [float(x) for x in v]) for i, v in zip(qids, Qf)],
         schema="_qid long, _qv array<double>",
     )
     cvec = rerank_corpus.select(
@@ -342,8 +344,8 @@ def ivf_ann_topk_int8(
         )
     spark = corpus.sparkSession
     if not q_rows:
-        return spark.createDataFrame(
-            [], schema=f"{query_id} long, {corpus_id} long, rank long"
+        return local_relation(
+            spark, [], schema=f"{query_id} long, {corpus_id} long, rank long"
         )
 
     # coarse quantizer: the identical deterministic sample embedops uses
@@ -374,7 +376,8 @@ def ivf_ann_topk_int8(
     sims = (Qf @ cents_mat.T) / (Qfn[:, None] * Cen[None, :])
     order = np.argsort(-sims, axis=1, kind="stable")[:, : min(n_probe, n_centroids)]
     probe_df = F.broadcast(
-        spark.createDataFrame(
+        local_relation(
+            spark,
             [(int(q), int(c)) for q, row in zip(qids, order) for c in row],
             schema="_qid long, centroid_id long",
         )

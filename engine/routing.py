@@ -47,6 +47,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .session import local_relation
+
 # packed label = dist * HOPS_BASE + hops. dist and hops are both
 # non-negative; hops < HOPS_BASE is guaranteed by max_rounds <= HOPS_BASE-1,
 # and dist < 2^63 / HOPS_BASE ~= 8.8e12 is checked against max_dist when
@@ -221,8 +223,8 @@ def shortest_paths(
                 "hops": key % HOPS_BASE,
             }
         )
-        return spark.createDataFrame(
-            out, "source_id long, node long, dist long, hops long"
+        return local_relation(
+            spark, out, "source_id long, node long, dist long, hops long"
         )
     # settled: best packed label per (sid, n) found so far
     settled = s.withColumn("key", F.lit(0).cast("long")).localCheckpoint(
@@ -343,7 +345,8 @@ def point_to_point(
         return _p2p_driver(
             spark, e2, int(source), int(target), max_dist, max_rounds
         )
-    settled = spark.createDataFrame(
+    settled = local_relation(
+        spark,
         [(0, int(source), 0), (1, int(target), 0)], "dir int, n long, key long"
     ).localCheckpoint(eager=False)
     frontier = settled
@@ -423,11 +426,11 @@ def point_to_point(
             "max_rounds or bound the query with max_dist"
         )
     if mu >= INF or (max_dist is not None and mu >= (max_dist + 1) * HOPS_BASE):
-        return spark.createDataFrame(
-            [], "source_id long, node long, dist long, hops long"
+        return local_relation(
+            spark, [], "source_id long, node long, dist long, hops long"
         )
-    return spark.createDataFrame(
-        [(0, int(target), int(mu) // HOPS_BASE, int(mu) % HOPS_BASE)],
+    return local_relation(
+        spark, [(0, int(target), int(mu) // HOPS_BASE, int(mu) % HOPS_BASE)],
         "source_id long, node long, dist long, hops long",
     )
 
@@ -511,11 +514,11 @@ def _p2p_driver(
     if mu >= INF or (
         max_dist is not None and mu >= (max_dist + 1) * HOPS_BASE
     ):
-        return spark.createDataFrame(
-            [], "source_id long, node long, dist long, hops long"
+        return local_relation(
+            spark, [], "source_id long, node long, dist long, hops long"
         )
-    return spark.createDataFrame(
-        [(0, int(target), int(mu) // HOPS_BASE, int(mu) % HOPS_BASE)],
+    return local_relation(
+        spark, [(0, int(target), int(mu) // HOPS_BASE, int(mu) % HOPS_BASE)],
         "source_id long, node long, dist long, hops long",
     )
 

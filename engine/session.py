@@ -91,6 +91,105 @@ def truncate_lineage(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+def local_relation(spark: SparkSession, data, schema) -> DataFrame:
+    """The one way the engine turns driver-side data into a DataFrame: the
+    rows go through a pyarrow.Table, so the result is a LocalTableScan leaf
+    with the same schema whether the session has Arrow conversion on or off.
+    (A Python-list `createDataFrame` is a `Scan ExistingRDD` over a pickled
+    Python RDD: every action over it starts Python workers to run an
+    identity map; a pandas one changes types with the Arrow setting.)
+
+    data: a pyarrow.Table, a pandas DataFrame, a {name: column} dict (any
+    column pyarrow.array takes, or a pyarrow Array for explicit null masks),
+    or a list of rows — tuples/Rows matched by position, or dicts by name;
+    [] is an empty relation.
+    schema: a StructType, a DDL string, or a list of column names (types
+    then inferred by pyarrow: int -> bigint, float -> double, str -> string,
+    lists -> arrays, naive datetime -> timestamp).
+
+    Naive datetimes keep their session-timezone meaning (pyspark localizes
+    naive Arrow timestamps from `spark.sql.session.timeZone`); pandas input
+    keeps pandas null semantics (NaN/None -> null), as pyspark's own Arrow
+    path does."""
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import (
+        StructField, StructType, _parse_datatype_string,
+    )
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    if isinstance(schema, StructType):
+        schema = StructType(
+            [StructField(f.name, _arrow_safe(f.dataType), f.nullable)
+             for f in schema.fields]
+        )
+        # naive timestamps: pyspark then localizes them from the session
+        # timezone instead of reading them as UTC
+        arrow_schema = to_arrow_schema(schema, timestamp_utc=False)
+        names, types = arrow_schema.names, arrow_schema.types
+    else:
+        arrow_schema = None
+        names, types = list(schema), [None] * len(schema)
+    if isinstance(data, pa.Table):
+        cols = data.columns
+    elif isinstance(data, pd.DataFrame):
+        cols = [data.iloc[:, i] for i in range(data.shape[1])]
+    elif isinstance(data, dict):
+        cols = list(data.values())
+    else:
+        rows = list(data)
+        if rows and isinstance(rows[0], dict):
+            cols = [[r.get(n) for r in rows] for n in names]
+        else:
+            cols = [list(c) for c in zip(*rows)] or [[] for _ in names]
+    arrays = [
+        (c if t is None or c.type == t else c.cast(t))
+        if isinstance(c, (pa.Array, pa.ChunkedArray))
+        else pa.array(_arrow_values(c, t), type=t)
+        for c, t in zip(cols, types)
+    ]
+    if arrow_schema is None:
+        table = pa.Table.from_arrays(arrays, names)
+        return spark.createDataFrame(table, names)
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
+
+
+def _arrow_safe(dt):
+    """`dt` with the children of every struct that holds a nested child
+    declared nullable: pyspark's Arrow path rebuilds such a struct with
+    nullable children and then fails to cast it back to non-null ones."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    nested = (ArrayType, MapType, StructType)
+    if isinstance(dt, ArrayType):
+        return ArrayType(_arrow_safe(dt.elementType), dt.containsNull)
+    if isinstance(dt, MapType):
+        return MapType(
+            _arrow_safe(dt.keyType), _arrow_safe(dt.valueType),
+            dt.valueContainsNull,
+        )
+    if isinstance(dt, StructType):
+        rebuilt = any(isinstance(f.dataType, nested) for f in dt.fields)
+        return StructType([
+            StructField(f.name, _arrow_safe(f.dataType), f.nullable or rebuilt)
+            for f in dt.fields
+        ])
+    return dt
+
+
+def _arrow_values(values, typ):
+    """pyarrow takes a map column as lists of (key, value) pairs; rows
+    carry dicts."""
+    import pyarrow as pa
+
+    if typ is not None and pa.types.is_map(typ):
+        return [None if v is None else list(v.items()) for v in values]
+    return values
+
+
 def optimize_parallelism(
     spark: SparkSession, row_count: int, executors: int = 1, cores: int = 32,
     rows_per_partition: int = 1_500_000,

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import cells, image_codec, schema
+from .session import local_relation
 
 SEED = 42
 
@@ -253,7 +254,7 @@ def polygons_df(
         rows.append(
             {"poly_id": i, "ring": ring, "bbox": bbox, "valid_from": t0, "valid_to": t1}
         )
-    return spark.createDataFrame(rows, schema=schema.POLYGONS)
+    return local_relation(spark, rows, schema.POLYGONS)
 
 
 def pack_tile(z: int, x, y):
@@ -293,7 +294,7 @@ def tiles_df(
                         },
                     }
                 )
-    return spark.createDataFrame(rows, schema=schema.TILES)
+    return local_relation(spark, rows, schema.TILES)
 
 
 # ---------------------------------------------------------------------------
@@ -398,4 +399,4 @@ def object_versions_df(spark: SparkSession, n_entities: int = 200) -> DataFrame:
                     )
             if rng.random() < 0.6:
                 changeset = int(rng.integers(1, 10**6))
-    return spark.createDataFrame(rows, schema=schema.OBJECT_VERSIONS)
+    return local_relation(spark, rows, schema.OBJECT_VERSIONS)

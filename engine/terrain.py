@@ -56,7 +56,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .raster import floor_div, pixel_xy, tile_pixel
-from .session import truncate_lineage
+from .session import local_relation, truncate_lineage
 
 # Horn stencils as focal_stencil weight maps ((dx, dy) -> weight, y up).
 HORN_DZDX = {
@@ -713,8 +713,8 @@ def flow_edges(flow: DataFrame, res: int) -> DataFrame:
             "src": _pack_np(gx, gy),
             "dst": pa.array(dst, type=pa.int64(), mask=d8 < 0),
         })
-        return flow.sparkSession.createDataFrame(
-            out,
+        return local_relation(
+            flow.sparkSession, out,
             "gx long, gy long, d8_dir long, d8_key long, src long, dst long",
         )
     gx, gy = pixel_xy(res)
@@ -871,8 +871,8 @@ def catchments(
     sink set this reproduces basins(jump) exactly (asserted in tests)."""
     spark = flow.sparkSession
     if not isinstance(outlets, DataFrame):
-        outlets = spark.createDataFrame(
-            [(int(x), int(y)) for x, y in outlets], "gx long, gy long"
+        outlets = local_relation(
+            spark, [(int(x), int(y)) for x, y in outlets], "gx long, gy long"
         )
     opack = (
         outlets.select(
@@ -969,6 +969,12 @@ def _pack_np(gx, gy) -> np.ndarray:
     return (np.asarray(gx, dtype=np.int64) + _FLOW_OFF) * np.int64(1 << 32) + (
         np.asarray(gy, dtype=np.int64) + _FLOW_OFF
     )
+
+
+def _unpack_np(node) -> tuple[np.ndarray, np.ndarray]:
+    """numpy twin of _unpack."""
+    node = np.asarray(node, dtype=np.int64)
+    return (node >> 32) - _FLOW_OFF, (node & ((1 << 32) - 1)) - _FLOW_OFF
 
 
 def _pack(gx: Column, gy: Column) -> Column:
@@ -1078,19 +1084,15 @@ def flow_accumulation(
     spark = flow.sparkSession
     cols = ["tx", "ty", "d8_dir"] + ([weight_col] if weight_col else [])
     # r6: a flow frame produced by the driver halo path (resolve_flats on a
-    # sub-threshold raster) carries its pandas twin — stage 1 then runs the
-    # SAME kernel directly on it (zero Spark actions) and stage 2 solves on
-    # the driver; stage 3 stays in the returned plan either way
+    # sub-threshold raster) carries its pandas twin — all three stages then
+    # run the SAME kernels directly on it (stage 2 in numpy): zero Spark
+    # actions, and the result is a local relation with no Python exec
     _drv_pdf = getattr(flow, "_driver_pdf", None)
-    flow = flow.select(*cols).persist()
 
     def base_mass(pdf, i):
         if weight_col is None:
             return np.ones(res * res, dtype=np.int64)
         return np.asarray(pdf[weight_col].iloc[i], dtype=np.int64)
-
-    def _finish(inflow):
-        return _flowacc_finish(spark, flow, inflow, res, base_mass)
 
     def stage1(batches):
         for pdf in batches:
@@ -1134,6 +1136,25 @@ def flow_accumulation(
                 )
             yield pd.DataFrame(out)
 
+    def stage3(batches):
+        for pdf in batches:
+            accs = []
+            for i, (dirs, spix, smass) in enumerate(
+                zip(pdf["d8_dir"], pdf["seed_pix"], pdf["seed_mass"])
+            ):
+                d = np.asarray(dirs, dtype=np.int64)
+                tgt, *_ = _tile_flow_arrays(d, res)
+                mass = base_mass(pdf, i).copy()
+                # left-join misses surface as None (or NaN via pandas)
+                if isinstance(spix, (list, np.ndarray)) and len(spix) > 0:
+                    mass[np.asarray(spix, dtype=np.int64)] += np.asarray(
+                        smass, dtype=np.int64
+                    )
+                accs.append(_tile_kahn(tgt, mass).tolist())
+            yield pd.DataFrame(
+                {"tx": pdf["tx"], "ty": pdf["ty"], "acc": accs}
+            )
+
     s1_schema = (
         "tx long, ty long, ex_src array<long>, ex_dst array<long>, "
         "ex_m0 array<long>, rt_entry array<long>, rt_term array<long>, "
@@ -1166,19 +1187,26 @@ def flow_accumulation(
              "m0": _flatd("ex_m0")}
         )
         if len(edges_pdf) <= stage2_driver_max:
-            if len(edges_pdf) == 0:
-                inflow = spark.createDataFrame([], "entry long, mass long")
-            else:
-                routes_pdf = pd.DataFrame(
-                    {"entry": _flatd("rt_entry"), "term": _flatd("rt_term"),
-                     "term_exit": _flatd("rt_exit")}
-                )
-                inflow = spark.createDataFrame(
-                    _stage2_driver(edges_pdf, routes_pdf)
-                )
-            return _finish(inflow)
+            routes_pdf = pd.DataFrame(
+                {"entry": _flatd("rt_entry"), "term": _flatd("rt_term"),
+                 "term_exit": _flatd("rt_exit")}
+            )
+            seeds = _seed_lists(_stage2_driver(edges_pdf, routes_pdf), res)
+            got = [
+                seeds.get((int(x), int(y)), ([], []))
+                for x, y in zip(_drv_pdf["tx"], _drv_pdf["ty"])
+            ]
+            tiles = _drv_pdf[cols].assign(
+                seed_pix=[g[0] for g in got], seed_mass=[g[1] for g in got]
+            )
+            return local_relation(
+                spark, pd.concat(stage3([tiles]), ignore_index=True),
+                "tx long, ty long, acc array<long>",
+            )
         # contracted forest larger than the driver gate (cannot happen for
         # attribute-gated rasters, but stay safe): fall through distributed
+
+    flow = flow.select(*cols).persist()
 
     # lazy truncation: the stage-2 mode probe (edge-count agg) is the
     # materializing action (r6 single-action discipline); the checkpoint
@@ -1230,16 +1258,14 @@ def flow_accumulation(
             {"src": _flat("ex_src"), "dst": _flat("ex_dst"),
              "m0": _flat("ex_m0")}
         )
-        if len(edges_pdf) == 0:
-            inflow = spark.createDataFrame([], "entry long, mass long")
-        else:
-            routes_pdf = pd.DataFrame(
-                {"entry": _flat("rt_entry"), "term": _flat("rt_term"),
-                 "term_exit": _flat("rt_exit")}
-            )
-            inflow = spark.createDataFrame(
-                _stage2_driver(edges_pdf, routes_pdf)
-            )
+        routes_pdf = pd.DataFrame(
+            {"entry": _flat("rt_entry"), "term": _flat("rt_term"),
+             "term_exit": _flat("rt_exit")}
+        )
+        inflow = local_relation(
+            spark, _stage2_driver(edges_pdf, routes_pdf),
+            "entry long, mass long",
+        )
     else:
         # distributed delta-push: one tile-crossing per round. Contracted
         # hop: entry -> its tile's terminal exit -> that exit's edge's
@@ -1291,16 +1317,8 @@ def flow_accumulation(
         )
         for r in rounds:
             r.unpersist()
-    return _finish(inflow)
-
-
-def _flowacc_finish(spark, flow, inflow, res, base_mass):
-    """Shared stage-3 tail of flow_accumulation: unpack the entry inflow
-    to per-tile seed lists and run the second per-tile Kahn pass (one
-    mapInPandas in the RETURNED plan — identical for the driver and
-    distributed stage-1/2 paths)."""
-    import pandas as pd
-
+    # stage 3: entry inflow -> per-tile seed lists, second per-tile Kahn
+    # pass as one mapInPandas in the returned plan
     tx, ty, pix = tile_pixel(res, *_unpack(F.col("entry")))
     seeds = (
         inflow.select(tx.alias("tx"), ty.alias("ty"), pix.alias("pix"), "mass")
@@ -1310,29 +1328,27 @@ def _flowacc_finish(spark, flow, inflow, res, base_mass):
             F.collect_list("mass").alias("seed_mass"),
         )
     )
-
-    def stage3(batches):
-        for pdf in batches:
-            accs = []
-            for i, (dirs, spix, smass) in enumerate(
-                zip(pdf["d8_dir"], pdf["seed_pix"], pdf["seed_mass"])
-            ):
-                d = np.asarray(dirs, dtype=np.int64)
-                tgt, *_ = _tile_flow_arrays(d, res)
-                mass = base_mass(pdf, i).copy()
-                # left-join misses surface as None (or NaN via pandas)
-                if isinstance(spix, (list, np.ndarray)) and len(spix) > 0:
-                    mass[np.asarray(spix, dtype=np.int64)] += np.asarray(
-                        smass, dtype=np.int64
-                    )
-                accs.append(_tile_kahn(tgt, mass).tolist())
-            yield pd.DataFrame(
-                {"tx": pdf["tx"], "ty": pdf["ty"], "acc": accs}
-            )
-
     return flow.join(seeds, ["tx", "ty"], "left").mapInPandas(
         stage3, schema="tx long, ty long, acc array<long>"
     )
+
+
+def _seed_lists(inflow, res: int) -> dict:
+    """Driver twin of flow_accumulation's stage-3 seed aggregation: (entry,
+    mass) inflow -> {(tx, ty): (seed_pix list, seed_mass list)}, with
+    tile_pixel(res, *_unpack(entry)) in numpy."""
+    gx, gy = _unpack_np(inflow["entry"])
+    tx, ty = gx // res, gy // res
+    pix = (gy - ty * res) * res + (gx - tx * res)
+    seeds: dict = {}
+    for key, p, m in zip(
+        zip(tx.tolist(), ty.tolist()), pix.tolist(),
+        inflow["mass"].to_numpy(np.int64).tolist(),
+    ):
+        sp, sm = seeds.setdefault(key, ([], []))
+        sp.append(p)
+        sm.append(m)
+    return seeds
 
 
 def hypsometry(
@@ -1818,8 +1834,8 @@ def cost_distance(
 
     spark = tiles.sparkSession
     if not isinstance(sources, DataFrame):
-        sources = spark.createDataFrame(
-            [(int(x), int(y)) for x, y in sources], "gx long, gy long"
+        sources = local_relation(
+            spark, [(int(x), int(y)) for x, y in sources], "gx long, gy long"
         )
     pack = _pack(F.col("gx"), F.col("gy"))
     src_df = sources.select(
@@ -1870,8 +1886,8 @@ def least_cost_paths(
     questions use cost_distance / cost_corridor instead."""
     spark = tiles.sparkSession
     if not isinstance(dests, DataFrame):
-        dests = spark.createDataFrame(
-            [(int(x), int(y)) for x, y in dests], "gx long, gy long"
+        dests = local_relation(
+            spark, [(int(x), int(y)) for x, y in dests], "gx long, gy long"
         )
     pack = _pack(F.col("gx"), F.col("gy"))
     d = cost_distance(
@@ -2422,48 +2438,13 @@ def _driver_fixpoint(
     (one Arrow fetch + numpy slices instead of a halo shuffle per round)."""
     import pandas as pd
 
-    keys = [(int(t), int(y)) for t, y in zip(pdf["tx"], pdf["ty"])]
-    grids = {
-        k: np.asarray(c, dtype=np.int64).reshape(res, res)
-        for k, c in zip(keys, pdf["counts"])
-    }
+    from engine.focal import _driver_halo, _tile_grids
+
+    keys, grids = _tile_grids(pdf, res)
     for _ in range(max_iters):
         nxt = {}
         for (tx, ty) in keys:
-            halo = np.zeros((res + 2, res + 2), dtype=np.int64)
-            mask = np.zeros((res + 2, res + 2), dtype=np.int64)
-            halo[1 : res + 1, 1 : res + 1] = grids[(tx, ty)]
-            mask[1 : res + 1, 1 : res + 1] = 1
-            for dx in (-1, 0, 1):
-                for dy in (-1, 0, 1):
-                    if dx == 0 and dy == 0:
-                        continue
-                    nb = grids.get((tx + dx, ty + dy))
-                    if nb is None:
-                        continue
-                    # rows/cols of the neighbor adjacent to this tile
-                    ys = (
-                        slice(0, 1) if dy == 1
-                        else slice(res - 1, res) if dy == -1
-                        else slice(0, res)
-                    )
-                    xs = (
-                        slice(0, 1) if dx == 1
-                        else slice(res - 1, res) if dx == -1
-                        else slice(0, res)
-                    )
-                    hy = (
-                        slice(res + 1, res + 2) if dy == 1
-                        else slice(0, 1) if dy == -1
-                        else slice(1, res + 1)
-                    )
-                    hx = (
-                        slice(res + 1, res + 2) if dx == 1
-                        else slice(0, 1) if dx == -1
-                        else slice(1, res + 1)
-                    )
-                    halo[hy, hx] = nb[ys, xs]
-                    mask[hy, hx] = 1
+            halo, mask = _driver_halo(grids, tx, ty, res, 1)
             nxt[(tx, ty)] = np.asarray(
                 finish(halo, mask), dtype=np.int64
             ).reshape(res, res)
@@ -2480,8 +2461,8 @@ def _driver_fixpoint(
             "counts": [grids[k].reshape(-1).tolist() for k in keys],
         }
     )
-    res_df = spark.createDataFrame(
-        out, "tx long, ty long, counts array<long>"
+    res_df = local_relation(
+        spark, out, "tx long, ty long, counts array<long>"
     )
     # downstream one-shot halo passes (e.g. resolve_flats' assign) can run
     # driver-side on the already-collected state (focal._halo_apply_driver)
@@ -3298,8 +3279,8 @@ def _cost_init(
 ) -> DataFrame:
     spark = tiles.sparkSession
     if not isinstance(sources, DataFrame):
-        sources = spark.createDataFrame(
-            [(int(x), int(y)) for x, y in sources], "gx long, gy long"
+        sources = local_relation(
+            spark, [(int(x), int(y)) for x, y in sources], "gx long, gy long"
         )
     tx, ty, pix = tile_pixel(res)
     spt = (
@@ -3528,8 +3509,8 @@ def cost_allocation(
                        "cost_allocation")
     spark = tiles.sparkSession
     if not isinstance(sources, DataFrame):
-        sources = spark.createDataFrame(
-            [(int(x), int(y)) for x, y in sources], "gx long, gy long"
+        sources = local_relation(
+            spark, [(int(x), int(y)) for x, y in sources], "gx long, gy long"
         )
     spack = sources.select(
         _pack(F.col("gx"), F.col("gy")).alias("s_id"),

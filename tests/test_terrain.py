@@ -488,6 +488,27 @@ def test_flow_accumulation_weighted(spark):
             want[cur] += wt[c]
             cur = down[cur]
     assert got == want
+    # the driver twin (a flow frame carrying its collected pandas frame
+    # runs all three stages on the driver) gives the distributed answer,
+    # on a 2x2 tile block so that flow crosses tiles
+    blk = spark.createDataFrame(
+        [(tx, ty, [rng.randint(0, 9) for _ in range(res * res)],
+          [rng.randint(0, 9) for _ in range(res * res)])
+         for tx in (0, 1) for ty in (0, 1)],
+        "tx long, ty long, counts array<long>, wt array<long>",
+    )
+    flow = terrain.d8_flow(blk, res).join(
+        blk.select("tx", "ty", "wt"), ["tx", "ty"]
+    )
+    dist = _collect_acc(
+        terrain.flow_accumulation(flow, res, weight_col="wt"), res
+    )
+    flow._driver_pdf = flow.toPandas()
+    drv = terrain.flow_accumulation(flow, res, weight_col="wt")
+    assert drv._jdf.queryExecution().executedPlan().toString().startswith(
+        "LocalTableScan"
+    )
+    assert _collect_acc(drv, res) == dist
     # ones == unweighted
     ones = df.withColumn("wt", F.expr(f"array_repeat(1L, {res * res})"))
     flow1 = terrain.d8_flow(ones, res).join(

@@ -59,6 +59,8 @@ def test_terrain_node_codec_matches_numpy(spark):
     xs, ys = np.asarray(sorted(pairs)).T
     assert [r.node for r in got] == terrain._pack_np(xs, ys).tolist()
     assert [(r.ux, r.uy) for r in got] == sorted(pairs)
+    nx, ny = terrain._unpack_np([r.node for r in got])
+    assert list(zip(nx.tolist(), ny.tolist())) == sorted(pairs)
 
 
 def test_floor_div_matches_python(spark):

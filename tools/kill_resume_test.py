@@ -62,9 +62,13 @@ def _launch(zp: str, out_dir: str, run_id: str, log_path: str):
         "--cell-splits", str(SPLITS), "--run-id", run_id,
     ]
     logf = open(log_path, "ab")
+    # the driver's temp dirs (its spark_graft_ckpt_* checkpoint dir, cover
+    # parquet) live in WORK: atexit cleanup does not run on SIGKILL
+    tmp = os.path.join(WORK, "tmp")
+    os.makedirs(tmp, exist_ok=True)
     return subprocess.Popen(
         cmd, stdout=logf, stderr=subprocess.STDOUT, cwd=ROOT,
-        start_new_session=True,
+        start_new_session=True, env={**os.environ, "TMPDIR": tmp},
     )
 
 
