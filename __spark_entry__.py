@@ -816,8 +816,8 @@ def _hotspot_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_hotspot_cells(
     spark: SparkSession, sf_dir: str, tiles: DataFrame | None = None
 ) -> DataFrame:
-    """Rasterize -> focal -> Getis-Ord Gi* end to end on the PRODUCTION halo
-    kernel (engine.raster.heatmap_tiles + engine.focal.focal_sum/gi_star):
+    """Rasterize -> focal -> Getis-Ord Gi* end to end on the halo plan
+    (engine.raster.heatmap_tiles + engine.focal.gi_star):
     one row per global pixel of the study area with its count, exact-int64
     3x3 focal sum, and FLOOR-scaled Gi* z (the oracle recomputes the whole
     pipeline with the independent scatter algebra + SQL moments; z is
@@ -831,7 +831,7 @@ def q_hotspot_cells(
     # (q_raster_field passes its own shared local raster instead)
     if tiles is None:
         tiles = _hotspot_tiles(spark, sf_dir).persist()
-    zs = focal.gi_star(tiles, res, radius=1, kernel="halo", keep_fs=True)
+    zs = focal.gi_star(tiles, res, radius=1, keep_fs=True)
     j = tiles.join(zs, ["tx", "ty"])
     ex = j.select(
         "tx", "ty",

@@ -28,9 +28,9 @@ Plan shape at scale: one explode(4) corner scatter + ONE groupBy(block)
 hash agg (map-side combined) assembles corner quads; case index, segment
 table lookup (a literal array-of-arrays, element_at — no join), and the
 crossing arithmetic are whole-stage-codegen Column math. Output cardinality
-is O(boundary length), not O(area). `contour_lines` adds the usual
-alternating min-label CC over the crossing-point graph (engine.graph),
-O(log^2) rounds, lineage-truncated.
+is O(boundary length), not O(area). `contour_lines` adds one linking
+plan over the crossing-point graph: tile-local union-find plus a global
+stitch over boundary chains (engine.graph.tile_local_components).
 
 Level must be >= 0 so the implicit all-zero background is "outside"
 (level < 0 would make the infinite absent region inside and the iso-line
@@ -45,12 +45,8 @@ density/heatmap pipeline publishes (SURVEY.md section 2 additions).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from .session import truncate_lineage
 
 # Edges of a block (bx, by): 0 = bottom (SW-SE), 1 = right (SE-NE),
 # 2 = top (NW-NE), 3 = left (SW-NW). Corner bits of the case index:
@@ -224,215 +220,40 @@ def _point_key(prefix: str) -> Column:
     )
 
 
-def _ring_components(edges: DataFrame, max_iters: int = 40) -> DataFrame:
-    """Connected components SPECIALIZED to the degree<=2 graphs contour
-    linking produces (disjoint paths and cycles) — VERDICT r4 item 6.
-
-    Marching-squares segment orientation is NOT globally consistent (the
-    case table reuses the same edge pair for complementary cases), so the
-    crossing-point graph can't be walked as a successor function directly.
-    The ARC DOUBLE COVER can: for every undirected edge {p, q} make the two
-    arcs p->q and q->p; succ(p->q) = q->r where r is q's OTHER neighbor
-    (terminal self-loop when q has degree 1). On a degree<=2 graph every
-    arc has exactly ONE successor, so the arcs form disjoint functional
-    cycles/paths regardless of segment orientation — a ring of length L
-    becomes two arc-cycles of length L, an open line two arc-paths that
-    traverse it end-to-end in opposite directions.
-
-    Min-label pointer doubling on that functional graph needs ONE self-join
-    per round (lbl' = min(lbl, lbl[jump]); jump' = jump[jump]) instead of
-    the generic CC's large-star/small-star pair with their groupBys, and
-    converges in ceil(log2(2L)) rounds (window doubles one-way along each
-    arc chain; a node's two arcs cover both sides, so the min over them is
-    the component min). Labels equal connected_components' exactly: comp =
-    the minimum node id in the component.
-
-    Returns (id, comp) for every node appearing in edges, self-loop edges
-    included (they label their node a singleton — the generic CC drops
-    them, which would orphan a degenerate zero-length segment).
-    Raises ValueError on a node of degree >= 3 (caller falls back to CC)."""
-    e = (
-        edges.select(F.col("u").cast("long").alias("u"),
-                     F.col("v").cast("long").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    iso = (
-        edges.filter(F.col("u") == F.col("v"))
-        .select(F.col("u").alias("id"))
-        .distinct()
-        # a node with BOTH a self-loop and a real edge must not label twice
-        .join(
-            e.select(F.col("u").alias("id"))
-            .unionByName(e.select(F.col("v").alias("id"))).distinct(),
-            "id",
-            "left_anti",
-        )
-    )
-    und = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    nbrs = und.groupBy("u").agg(
-        F.min("v").alias("n1"),
-        F.max("v").alias("n2"),
-        F.count("*").alias("_deg"),
-    )
-    if nbrs.filter(F.col("_deg") > 2).limit(1).count() > 0:
-        raise ValueError("_ring_components: node with degree >= 3")
-    # arcs (p -> q), succ = q -> (q's other neighbor, else terminal self)
-    qn = nbrs.select(
-        F.col("u").alias("q"), F.col("n1"), F.col("n2"), F.col("_deg")
-    )
-    arcs = und.select(F.col("u").alias("p"), F.col("v").alias("q")).join(
-        qn, "q"
-    )
-    r = F.when(
-        F.col("_deg") < 2, F.lit(None).cast("long")
-    ).otherwise(
-        F.when(F.col("n1") == F.col("p"), F.col("n2")).otherwise(F.col("n1"))
-    )
-    state = arcs.select(
-        F.xxhash64("p", "q").alias("aid"),
-        F.least("p", "q").alias("lbl"),
-        F.coalesce(F.xxhash64("q", r), F.xxhash64("p", "q")).alias("jump"),
-        F.col("p"),
-    )
-
-    # Convergence protocol: the JUMP pointer never stabilizes on a cycle
-    # (2^k mod L oscillates), so the digest covers lbl ONLY — and because
-    # label windows can admit no new minimum for several rounds and then
-    # improve again, a stable lbl digest is a TRIGGER, not a proof: it is
-    # confirmed by the edge-consistency check (lbl equal across every edge
-    # => lbl constant per component => everyone carries the component min,
-    # since the min node's own lbl can never exceed itself). The round cap
-    # ceil(log2(2 * n_arcs)) + 1 is the worst-case window-doubling bound
-    # (one maximal ring), after which consistency must hold.
-    def _digest(df: DataFrame):
-        row = df.select(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.bit_xor(F.xxhash64("aid", "lbl")), F.lit(0)
-            ).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    def _consistent(st: DataFrame) -> bool:
-        nl = st.groupBy(F.col("p").alias("_n")).agg(F.min("lbl").alias("_l"))
-        bad = (
-            e.join(nl.withColumnRenamed("_n", "u").withColumnRenamed("_l", "_lu"), "u")
-            .join(nl.withColumnRenamed("_n", "v").withColumnRenamed("_l", "_lv"), "v")
-            .filter(F.col("_lu") != F.col("_lv"))
-            .limit(1)
-            .count()
-        )
-        return bad == 0
-
-    # r6 round discipline (guide §1/§5): the digest is the round's only
-    # driver action — lineage truncation rides a LAZY localCheckpoint that
-    # the digest job materializes — for small arc sets; large ones keep the
-    # reliable-checkpoint discipline (graph.connected_components rationale)
-    state = state.localCheckpoint(eager=False)
-    n_arcs = state.count()
-    small = n_arcs <= 4_000_000
-    if not small:
-        state = truncate_lineage(state)
-    cap = min(max_iters, max(2, int(math.ceil(math.log2(max(2, 2 * n_arcs)))) + 1))
-    prev = _digest(state)
-    done = n_arcs == 0
-    for _ in range(cap):
-        if done:
-            break
-        look = state.select(
-            F.col("aid").alias("_la"),
-            F.col("lbl").alias("_ll"),
-            F.col("jump").alias("_lj"),
-        )
-        nxt = (
-            state.join(look, state["jump"] == F.col("_la"))
-            .select(
-                "aid",
-                F.least(F.col("lbl"), F.col("_ll")).alias("lbl"),
-                F.col("_lj").alias("jump"),
-                "p",
-            )
-        )
-        nxt = nxt.localCheckpoint(eager=False) if small else truncate_lineage(nxt)
-        cur = _digest(nxt)
-        state = nxt
-        if cur == prev and _consistent(state):
-            done = True
-        prev = cur
-    if not done and not _consistent(state):
-        raise RuntimeError(
-            f"_ring_components: no convergence in {cap} rounds"
-        )
-    comps = state.groupBy(F.col("p").alias("id")).agg(F.min("lbl").alias("comp"))
-    return comps.unionByName(iso.withColumn("comp", F.col("id")))
-
-
-def _tile_components(
-    seg: DataFrame, tile_shift: int = 8, max_iters: int = 30
-) -> DataFrame:
-    """Contour linking components via engine.graph.tile_local_components
-    (tile-local union-find + global stitch over boundary chains — the
-    measured winner of the r5 A/B/C at 4M segments: 3.08x over the generic
-    CC, while the arc-double-cover doubling variant measured 0.88-0.94x;
-    see BENCH/BASELINE.md). seg carries (u, v) endpoint hashes and the
-    a-endpoint anchor (a_ex, a_ey) as the tile key."""
-    from engine.graph import tile_local_components
-
-    return tile_local_components(
-        seg, src="u", dst="v", ax="a_ex", ay="a_ey",
-        tile_shift=tile_shift, max_iters=max_iters,
-    )
-
-
-def contour_lines(segments: DataFrame, method: str = "auto") -> DataFrame:
+def contour_lines(segments: DataFrame) -> DataFrame:
     """Link segments into iso-lines: connected components over the crossing-
     point graph (two segments are linked iff they share an endpoint key —
     exact, because the rational endpoint tuples are canonical across
     blocks). Returns the input plus `line_id`: the component's minimum
     endpoint key string — deterministic and engine-independent.
 
-    Component TOPOLOGY runs on xxhash64 of the point key (engine.graph CC
-    needs int64 nodes; a collision needs ~2^32 distinct crossing points on
-    one iso-level to be likely and would only merge two lines, never drop a
-    segment); the LABEL is an exact min-string agg over the component, so
-    labels are reproducible regardless.
+    Component TOPOLOGY runs on xxhash64 of the point key (the component
+    kernels need int64 nodes; a collision needs ~2^32 distinct crossing
+    points on one iso-level to be likely and would only merge two lines,
+    never drop a segment); the LABEL is an exact min-string agg over the
+    component, so labels are reproducible regardless.
 
-    method (labels identical across all three — component min id — so the
-    choice never changes rings; the r5 A/B/C at 4M segments is in
-    BENCH/BASELINE.md):
-      'tiles' (the 'auto' default) = tile-local union-find + global stitch
-        over boundary chains (_tile_components) — the measured fast path,
-        and valid for any degree;
-      'rings' = the degree<=2 arc-double-cover pointer doubling
-        (_ring_components; kept as the measured-slower alternate — its
-        per-round cost never shrinks);
-      'cc' = the generic alternating-star CC."""
+    Components come from engine.graph.tile_local_components: tile-local
+    union-find + a global stitch over boundary chains, keyed by the
+    a-endpoint anchor (a_ex, a_ey) and valid for any node degree (the r5
+    A/B/C at 4M segments measured it 3.08x faster than the generic CC; see
+    BENCH/BASELINE.md). The references: tests/test_contour.py checks line
+    counts and sizes against the dense numpy marching-squares oracle, and
+    tools/bench_kernels.py's contour part asserts closed-form ring counts
+    and sizes at scale."""
+    from engine.graph import tile_local_components
+
     ak, bk = _point_key("a"), _point_key("b")
     seg = segments.withColumn("_ak", ak).withColumn("_bk", bk)
-    edges = seg.select(
-        F.xxhash64(F.col("_ak")).alias("u"),
-        F.xxhash64(F.col("_bk")).alias("v"),
+    comp = tile_local_components(
+        seg.select(
+            F.xxhash64(F.col("_ak")).alias("u"),
+            F.xxhash64(F.col("_bk")).alias("v"),
+            "a_ex",
+            "a_ey",
+        ),
+        src="u", dst="v", ax="a_ex", ay="a_ey", tile_shift=8,
     )
-    if method not in ("auto", "tiles", "rings", "cc"):
-        raise ValueError(f"unknown method {method!r}")
-    if method in ("auto", "tiles"):
-        comp = _tile_components(
-            seg.select(
-                F.xxhash64(F.col("_ak")).alias("u"),
-                F.xxhash64(F.col("_bk")).alias("v"),
-                "a_ex",
-                "a_ey",
-            )
-        )
-    elif method == "rings":
-        comp = _ring_components(edges)
-    else:
-        from engine.graph import connected_components
-
-        comp = connected_components(edges, src="u", dst="v")
     labels = (
         seg.select(F.col("_ak").alias("k"))
         .unionAll(seg.select(F.col("_bk").alias("k")))

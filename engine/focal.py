@@ -6,30 +6,25 @@ every pixel of every tile, an aggregate over its (2r+1) x (2r+1) pixel
 neighborhood — the focal/convolution primitive behind smoothing, density
 surfaces, terrain derivatives and hotspot screens. The hard part at cluster
 scale is that a pixel's window crosses tile borders, so tiles are not
-independent. Two physical plans, identical exact-integer results:
+independent. Every operator here runs ONE physical plan, the classic
+distributed-raster HALO EXCHANGE: each tile sends only the r-pixel-wide
+border strips its 8 neighbors need (edges r*res values, corners r*r), then
+one groupBy(tile) assembles a (res+2r)^2 padded grid and an integral-image
+pass computes every window sum in O(res^2) regardless of radius. Shuffle
+volume per tile is res^2 + 4*r*res + 4*r^2 — a (1 + 4r/res + ...) factor
+over the raster itself (+26% at res=16 r=1, +3% at res=256 r=1), and the
+per-tile combine is numpy over Arrow batches.
 
-kernel='halo' (production): classic distributed-raster HALO EXCHANGE. Each
-tile sends only the r-pixel-wide border strips its 8 neighbors need (edges
-r*res values, corners r*r), then one groupBy(tile) assembles a
-(res+2r)^2 padded grid and an integral-image pass computes every window sum
-in O(res^2) regardless of radius. Shuffle volume per tile is
-res^2 + 4*r*res + 4*r^2 — a (1 + 4r/res + ...) factor over the raster
-itself (+26% at res=16 r=1, +3% at res=256 r=1), and the per-tile combine
-is numpy over Arrow batches.
-
-kernel='scatter' (twin / small-radius fallback): convolution by scatter at
-the sparse-cell level — every nonzero cell broadcasts its count to the
-(2r+1)^2 windows that see it, one groupBy(cell) sums. Column-only (explode
-over a constant offset sequence), whole-stage codegen, trivially correct —
-but it moves nnz*(2r+1)^2 rows through the shuffle (9x the raster at r=1),
-which is exactly the cost halo exchange avoids. Kept as the oracle twin
-(its algebra transliterates to the DuckDB twin focal_sum_sql) and
-parity-gate for the halo path.
-
-Both paths use ZERO padding outside the union of input tiles (absent
-neighbors contribute nothing) and emit one output row per INPUT tile —
+The plan uses ZERO padding outside the union of input tiles (absent
+neighbors contribute nothing) and emits one output row per INPUT tile —
 focal_sum does not invent tiles beyond the input extent, so output
 cardinality equals input cardinality.
+
+References: the DuckDB twins (focal_sum_sql, focal_stencil_sql,
+morans_i_sql, local_morans_sql, join_counts_sql) compute the same exact
+integers by the scatter algebra — every nonzero cell broadcasts its value
+to the (2r+1)^2 windows that see it, one GROUP BY cell sums — and the
+Python oracles in tests/test_focal.py recompute each window directly.
 
 The reference has no raster operator; this extends the brief's raster x
 vector axis. Reference provenance: nearest analog is the cell-rollup
@@ -39,69 +34,14 @@ neighborhood generalization.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .raster import pixel_xy, tile_pixel
+from .raster import pixel_xy
 from .session import local_relation
-
-
-def _focal_sum_scatter(tiles: DataFrame, res: int, radius: int) -> DataFrame:
-    """Column-only scatter plan: explode nonzero cells to global coords,
-    re-emit each into every window that sees it, sum per cell, re-densify on
-    the input tile set."""
-    r = radius
-    cells = tiles.select(
-        "tx", "ty", F.posexplode("counts").alias("pix", "n")
-    ).filter(F.col("n") != 0)
-    gx, gy = pixel_xy(res)
-    cells = cells.select(gx.alias("gx"), gy.alias("gy"), "n")
-    offs = F.explode(F.sequence(F.lit(-r), F.lit(r)))
-    scattered = (
-        cells.select("gx", "gy", "n", offs.alias("dx"))
-        .select("gx", "gy", "n", "dx", offs.alias("dy"))
-        .groupBy(
-            (F.col("gx") + F.col("dx")).alias("gx"),
-            (F.col("gy") + F.col("dy")).alias("gy"),
-        )
-        .agg(F.sum("n").alias("fs"))
-    )
-    # re-densify per input tile via the shared sorted-struct assembly
-    tx, ty, pix = tile_pixel(res)
-    target = scattered.select(
-        tx.alias("tx"), ty.alias("ty"), pix.alias("pix"), "fs"
-    )
-    return _densify(target, tiles, res)
-
-
-def _densify(target: DataFrame, tiles: DataFrame, res: int) -> DataFrame:
-    """Re-densify sparse (tx, ty, pix, fs) sums onto the INPUT tile set
-    (absent sums are zero; scatter spill outside input tiles is dropped by
-    the join). Completed-pixel left join + sorted-struct fold — O(res^2
-    log res^2) per tile; the old map_from_entries + per-slot element_at
-    idiom is O(res^2 * k) (linear map scans) and was measured catastrophic
-    on dense tiles (see raster.heatmap_tiles and BENCH/BASELINE.md)."""
-    full = (
-        tiles.select("tx", "ty")
-        .select(
-            "tx", "ty",
-            F.explode(F.sequence(F.lit(0), F.lit(res * res - 1))).alias("pix"),
-        )
-        .join(target, ["tx", "ty", "pix"], "left")
-        .select(
-            "tx", "ty", "pix",
-            F.coalesce(F.col("fs"), F.lit(0).cast("long")).alias("fs"),
-        )
-    )
-    dense = F.transform(
-        F.array_sort(F.collect_list(F.struct("pix", "fs"))), lambda s: s["fs"]
-    )
-    return full.groupBy("tx", "ty").agg(dense.alias("focal"))
 
 
 def _strip_exprs(res: int, r: int):
@@ -344,33 +284,19 @@ def _halo_apply(
     return routed.groupBy("tx", "ty").applyInPandas(assemble, schema)
 
 
-def _focal_sum_halo(tiles: DataFrame, res: int, radius: int) -> DataFrame:
-    """Halo plan for focal_sum: integral-image box sums."""
+def focal_sum(tiles: DataFrame, res: int, radius: int = 1) -> DataFrame:
+    """(tx, ty, counts: array<long>[res*res]) -> (tx, ty, focal:
+    array<long>[res*res]) where focal[py*res+px] = sum of counts over the
+    (2*radius+1)^2 global-pixel window centered there, zero-padded outside
+    the input tiles. Exact int64: one border-strip exchange, integral-image
+    box sums; focal_sum_sql is the DuckDB twin. focal_mean = focal /
+    (2r+1)^2 is left to the caller (exactness)."""
+    if not (1 <= radius < res):
+        raise ValueError(f"radius must be in [1, res); got {radius}")
     return _halo_apply(
         tiles, res, radius,
         lambda halo, _mask: _box_sums(halo, res, radius).reshape(-1),
     )
-
-
-def focal_sum(
-    tiles: DataFrame,
-    res: int,
-    radius: int = 1,
-    kernel: str = "halo",
-) -> DataFrame:
-    """(tx, ty, counts: array<long>[res*res]) -> (tx, ty, focal:
-    array<long>[res*res]) where focal[py*res+px] = sum of counts over the
-    (2*radius+1)^2 global-pixel window centered there, zero-padded outside
-    the input tiles. Exact int64; kernel='halo' (border-strip exchange,
-    production) and kernel='scatter' (Column-only twin) agree exactly.
-    focal_mean = focal / (2r+1)^2 is left to the caller (exactness)."""
-    if not (1 <= radius < res):
-        raise ValueError(f"radius must be in [1, res); got {radius}")
-    if kernel == "scatter":
-        return _focal_sum_scatter(tiles, res, radius)
-    if kernel == "halo":
-        return _focal_sum_halo(tiles, res, radius)
-    raise ValueError(f"kernel must be 'halo' or 'scatter', got {kernel!r}")
 
 
 def focal_extremum(
@@ -643,32 +569,21 @@ def _norm_weights(weights) -> dict[tuple[int, int], int]:
     return w
 
 
-def focal_stencil(
-    tiles: DataFrame,
-    res: int,
-    weights,
-    kernel: str = "halo",
-) -> DataFrame:
+def focal_stencil(tiles: DataFrame, res: int, weights) -> DataFrame:
     """Integer-weighted focal CORRELATION over the tile raster: for every
     pixel p, out[p] = sum over (dx, dy) of weights[(dx, dy)] * x[p + (dx,
     dy)], zero-padded outside the input tiles — the generalization of
     focal_sum (all-ones weights) to arbitrary integer kernels: Sobel /
     Prewitt gradients, Laplacians, unsharp masks, asymmetric drift stencils.
     `weights` is a {(dx, dy): int} mapping; radius = max |offset|. Exact
-    int64; kernel='halo' reuses the strip-exchange machinery with a
-    shift-and-accumulate finish (O(res^2 * nnz(weights)) per tile),
-    kernel='scatter' is the Column-only twin (each cell emits weight * value
-    to the pixels whose window sees it) and transliterates to the DuckDB
-    twin focal_stencil_sql."""
+    int64; the strip-exchange machinery with a shift-and-accumulate finish
+    (O(res^2 * nnz(weights)) per tile). The DuckDB twin focal_stencil_sql
+    computes the same integers by scatter (each cell emits weight * value
+    to the pixels whose window sees it)."""
     w = _norm_weights(weights)
     r = max(max(abs(dx), abs(dy)) for dx, dy in w)
     if not (1 <= r < res):
         raise ValueError(f"stencil radius must be in [1, res); got {r}")
-    if kernel == "scatter":
-        return _focal_stencil_scatter(tiles, res, w, r)
-    if kernel != "halo":
-        raise ValueError(f"kernel must be 'halo' or 'scatter', got {kernel!r}")
-
     items = sorted(w.items())
 
     def finish(halo: np.ndarray, _mask: np.ndarray) -> np.ndarray:
@@ -678,43 +593,6 @@ def focal_stencil(
         return out.reshape(-1)
 
     return _halo_apply(tiles, res, r, finish)
-
-
-def _focal_stencil_scatter(
-    tiles: DataFrame, res: int, w: dict, r: int
-) -> DataFrame:
-    """Column-only scatter twin: out[p] = sum w[d] x[p+d] means the cell at
-    g adds w[d] * x[g] to out[g - d] for every weight offset d."""
-    cells = tiles.select(
-        "tx", "ty", F.posexplode("counts").alias("pix", "n")
-    ).filter(F.col("n") != 0)
-    gx, gy = pixel_xy(res)
-    cells = cells.select(gx.alias("gx"), gy.alias("gy"), "n")
-    offs = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(dx).alias("dx"),
-                    F.lit(dy).alias("dy"),
-                    F.lit(wt).cast("long").alias("wt"),
-                )
-                for (dx, dy), wt in sorted(w.items())
-            ]
-        )
-    )
-    scattered = (
-        cells.select("gx", "gy", "n", offs.alias("o"))
-        .groupBy(
-            (F.col("gx") - F.col("o.dx")).alias("gx"),
-            (F.col("gy") - F.col("o.dy")).alias("gy"),
-        )
-        .agg(F.sum(F.col("n") * F.col("o.wt")).alias("fs"))
-    )
-    tx, ty, pix = tile_pixel(res)
-    target = scattered.select(
-        tx.alias("tx"), ty.alias("ty"), pix.alias("pix"), "fs"
-    )
-    return _densify(target, tiles, res)
 
 
 def focal_stencil_sql(tiles_table: str, res: int, weights) -> str:
@@ -763,33 +641,32 @@ def gi_star(
     tiles: DataFrame,
     res: int,
     radius: int = 1,
-    kernel: str = "halo",
     keep_fs: bool = False,
 ) -> DataFrame:
     """Getis-Ord Gi* hotspot z-scores over the tile raster: for every pixel,
     how extreme its (2r+1)^2 window sum is against the global distribution
     of cell values. Binary weights incl. self; the study area is the union
     of input-tile pixels (n = n_tiles * res^2), and windows are truncated at
-    the study-area edge — the per-pixel in-area window size W comes from a
-    second focal pass over the constant-1 indicator raster, so edge pixels
-    get the correct (smaller) expectation instead of a zero-padding bias.
+    the study-area edge — the per-pixel in-area window size W is the window
+    sum of the halo's presence mask, so edge pixels get the correct
+    (smaller) expectation instead of a zero-padding bias.
 
         Gi* = (S_w - mean * W) / (sd * sqrt((n*W - W^2) / (n-1)))
 
     with S_w the focal sum, mean/sd the global population moments. All
     inputs to the formula (S_w, W, n, sum, sum of squares) are exact int64
-    from the two focal passes + one aggregate; only the final z is floating
+    from the halo pass + one aggregate; only the final z is floating
     point. Output (tx, ty, z array<double>[res^2]); z is null where the
     denominator vanishes (constant raster, or W == n); keep_fs=True adds the
-    focal-sum array as `fs`. Cost on the halo kernel: ONE fused halo pass —
-    the in-area window size W comes free from the strip PRESENCE mask
-    (_halo_apply builds it anyway), and z is vectorized numpy inside the
-    same Arrow kernel (r4 A/B: the original two-pass + interpreted zip_with
-    shape measured ~3x slower at 16.8M cells) — plus one moments aggregate.
-    The scatter kernel keeps the two-pass Column formula as the
-    cross-checkable twin; both produce bit-identical doubles (exact int64
-    inputs, matching IEEE expression graphs). The input is consumed twice,
-    so persist `tiles` when it is itself the product of a pipeline."""
+    focal-sum array as `fs`. Cost: ONE fused halo pass — the in-area window
+    size W comes free from the strip PRESENCE mask (_halo_apply builds it
+    anyway), and z is vectorized numpy inside the same Arrow kernel (r4
+    A/B: a two-pass + interpreted zip_with shape measured ~3x slower at
+    16.8M cells) — plus one moments aggregate. The registry's hotspot rows
+    hash-match a DuckDB pipeline built on focal_sum_sql (bit-identical
+    doubles: exact int64 inputs, matching IEEE expression graphs), and
+    tests compare against a Python oracle. The input is consumed twice, so
+    persist `tiles` when it is itself the product of a pipeline."""
     cell_sum = F.aggregate("counts", F.lit(0).cast("long"), lambda a, v: a + v)
     cell_sq = F.aggregate(
         "counts", F.lit(0).cast("long"), lambda a, v: a + v * v
@@ -806,51 +683,26 @@ def gi_star(
     var = g["_sumsq"] / n - mean * mean
     sd = float(np.sqrt(max(var, 0.0)))
     nn = float(n)
+    r = radius
 
-    if kernel == "halo":
-        r = radius
+    def finish(halo: np.ndarray, mask: np.ndarray) -> dict:
+        fs = _box_sums(halo, res, r).reshape(-1)
+        wn = _box_sums(mask, res, r).reshape(-1)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            denom = sd * np.sqrt((nn * wn - wn * wn) / (nn - 1.0))
+            zv = (fs - mean * wn) / denom
+        ok = denom > 0.0
+        zo = zv.astype(object)
+        zo[~ok] = None
+        out = {"z": zo.tolist()}
+        if keep_fs:
+            out["fs"] = fs.tolist()
+        return out
 
-        def finish(halo: np.ndarray, mask: np.ndarray) -> dict:
-            fs = _box_sums(halo, res, r).reshape(-1)
-            wn = _box_sums(mask, res, r).reshape(-1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                denom = sd * np.sqrt((nn * wn - wn * wn) / (nn - 1.0))
-                zv = (fs - mean * wn) / denom
-            ok = denom > 0.0
-            zo = zv.astype(object)
-            zo[~ok] = None
-            out = {"z": zo.tolist()}
-            if keep_fs:
-                out["fs"] = fs.tolist()
-            return out
-
-        fields = ([("fs", T.ArrayType(T.LongType()))] if keep_fs else []) + [
-            ("z", T.ArrayType(T.DoubleType()))
-        ]
-        return _halo_apply(tiles, res, r, finish, fields=fields)
-
-    f = focal_sum(tiles, res, radius=radius, kernel=kernel).withColumnRenamed(
-        "focal", "_fs"
-    )
-    ones = tiles.select(
-        "tx",
-        "ty",
-        F.array_repeat(F.lit(1).cast("long"), res * res).alias("counts"),
-    )
-    w = focal_sum(ones, res, radius=radius, kernel=kernel).withColumnRenamed(
-        "focal", "_wn"
-    )
-
-    def z(fs: Column, wn: Column) -> Column:
-        denom = F.lit(sd) * F.sqrt(
-            (F.lit(nn) * wn - wn * wn) / F.lit(nn - 1.0)
-        )
-        return F.when(denom > 0.0, (fs - F.lit(mean) * wn) / denom)
-
-    out = [F.col("tx"), F.col("ty"), F.zip_with("_fs", "_wn", z).alias("z")]
-    if keep_fs:
-        out.insert(2, F.col("_fs").alias("fs"))
-    return f.join(w, ["tx", "ty"]).select(*out)
+    fields = ([("fs", T.ArrayType(T.LongType()))] if keep_fs else []) + [
+        ("z", T.ArrayType(T.DoubleType()))
+    ]
+    return _halo_apply(tiles, res, r, finish, fields=fields)
 
 
 def hot_cells(
@@ -858,13 +710,12 @@ def hot_cells(
     res: int,
     radius: int = 1,
     z_min: float = 2.576,
-    kernel: str = "halo",
 ) -> DataFrame:
     """Sparse hotspot extraction: explode gi_star and keep global pixels
     with z >= z_min (default: the 99% one-sided normal quantile). Returns
     (gx, gy, z) — the operator a screening pipeline actually materializes,
     bounded by the true hotspot count rather than raster size."""
-    zs = gi_star(tiles, res, radius=radius, kernel=kernel)
+    zs = gi_star(tiles, res, radius=radius)
     gx, gy = pixel_xy(res)
     return (
         zs.select("tx", "ty", F.posexplode("z").alias("pix", "z"))
@@ -873,12 +724,7 @@ def hot_cells(
     )
 
 
-def local_morans(
-    tiles: DataFrame,
-    res: int,
-    radius: int = 1,
-    kernel: str = "halo",
-) -> DataFrame:
+def local_morans(tiles: DataFrame, res: int, radius: int = 1) -> DataFrame:
     """Local Moran's I (Anselin 1995 "LISA") over the tile raster: per
     pixel, how strongly its deviation from the global mean co-varies with
     its neighborhood's, under the same binary (2r+1)^2 window weights
@@ -897,12 +743,12 @@ def local_morans(
 
     Global moments come from one tiny driver-collected aggregate (the
     gi_star discipline); per-pixel work is ONE fused halo pass (numpy in
-    the Arrow kernel) or the scatter focal algebra (kernel='scatter' — the
-    shape local_morans_sql transliterates). S_i and W_i are exact int64 and
-    the doubles follow one fixed expression graph, so Spark, numpy and the
-    DuckDB twin agree bit-for-bit. Returns (tx, ty, local array<double>,
-    quad array<int>); local is null everywhere when the raster is constant
-    (m2 == 0). Reference provenance: no analog; completes the
+    the Arrow kernel). S_i and W_i are exact int64 and the doubles follow
+    one fixed expression graph, so Spark and the DuckDB twin
+    local_morans_sql (the scatter focal algebra) agree bit-for-bit; tests
+    also compare against a Python oracle. Returns (tx, ty, local
+    array<double>, quad array<int>); local is null everywhere when the
+    raster is constant (m2 == 0). Reference provenance: no analog; completes the
     autocorrelation family (gi_star / morans_i / join_counts).
     """
     cell_sum = F.aggregate("counts", F.lit(0).cast("long"), lambda a, v: a + v)
@@ -920,70 +766,31 @@ def local_morans(
     nn = float(n)
     m = g["_sum"] / nn
     m2 = g["_sumsq"] / nn - m * m
+    r = radius
 
-    if kernel == "halo":
-        r = radius
+    def finish(halo: np.ndarray, mask: np.ndarray) -> dict:
+        x = halo[r : r + res, r : r + res].reshape(-1)
+        s = _box_sums(halo, res, r).reshape(-1) - x
+        wi = _box_sums(mask, res, r).reshape(-1) - 1
+        zi = x - m
+        lag = s - m * wi
+        if m2 > 0.0:
+            loc = (zi * lag / m2).astype(object).tolist()
+        else:
+            loc = [None] * (res * res)
+        quad = np.zeros(len(zi), dtype=np.int64)
+        quad[(zi > 0.0) & (lag > 0.0)] = 1
+        quad[(zi < 0.0) & (lag < 0.0)] = 2
+        quad[(zi > 0.0) & (lag < 0.0)] = 3
+        quad[(zi < 0.0) & (lag > 0.0)] = 4
+        return {"local": loc, "quad": quad.astype(int).tolist()}
 
-        def finish(halo: np.ndarray, mask: np.ndarray) -> dict:
-            x = halo[r : r + res, r : r + res].reshape(-1)
-            s = _box_sums(halo, res, r).reshape(-1) - x
-            wi = _box_sums(mask, res, r).reshape(-1) - 1
-            zi = x - m
-            lag = s - m * wi
-            if m2 > 0.0:
-                loc = (zi * lag / m2).astype(object).tolist()
-            else:
-                loc = [None] * (res * res)
-            quad = np.zeros(len(zi), dtype=np.int64)
-            quad[(zi > 0.0) & (lag > 0.0)] = 1
-            quad[(zi < 0.0) & (lag < 0.0)] = 2
-            quad[(zi > 0.0) & (lag < 0.0)] = 3
-            quad[(zi < 0.0) & (lag > 0.0)] = 4
-            return {"local": loc, "quad": quad.astype(int).tolist()}
-
-        return _halo_apply(
-            tiles, res, r, finish,
-            fields=[
-                ("local", T.ArrayType(T.DoubleType())),
-                ("quad", T.ArrayType(T.IntegerType())),
-            ],
-        )
-
-    f = focal_sum(tiles, res, radius=radius, kernel=kernel).withColumnRenamed(
-        "focal", "_fs"
-    )
-    ones = tiles.select(
-        "tx",
-        "ty",
-        F.array_repeat(F.lit(1).cast("long"), res * res).alias("counts"),
-    )
-    w = focal_sum(ones, res, radius=radius, kernel=kernel).withColumnRenamed(
-        "focal", "_wn"
-    )
-    j = tiles.join(f, ["tx", "ty"]).join(w, ["tx", "ty"])
-    idx = F.sequence(F.lit(0), F.lit(res * res - 1))
-
-    def per_pix(i: Column) -> Column:
-        x = F.element_at("counts", i + 1)
-        s = F.element_at("_fs", i + 1) - x
-        wi = F.element_at("_wn", i + 1) - F.lit(1)
-        zi = x - F.lit(m)
-        lag = s - F.lit(m) * wi
-        loc = F.when(F.lit(m2) > 0.0, zi * lag / F.lit(m2))
-        quad = (
-            F.when((zi > 0.0) & (lag > 0.0), 1)
-            .when((zi < 0.0) & (lag < 0.0), 2)
-            .when((zi > 0.0) & (lag < 0.0), 3)
-            .when((zi < 0.0) & (lag > 0.0), 4)
-            .otherwise(0)
-        )
-        return F.struct(loc.alias("local"), quad.alias("quad"))
-
-    pairs = F.transform(idx, per_pix)
-    return j.select(
-        "tx", "ty",
-        F.transform(pairs, lambda p: p["local"]).alias("local"),
-        F.transform(pairs, lambda p: p["quad"]).alias("quad"),
+    return _halo_apply(
+        tiles, res, r, finish,
+        fields=[
+            ("local", T.ArrayType(T.DoubleType())),
+            ("quad", T.ArrayType(T.IntegerType())),
+        ],
     )
 
 
@@ -1037,12 +844,7 @@ def local_morans_sql(
     """
 
 
-def morans_i(
-    tiles: DataFrame,
-    res: int,
-    radius: int = 1,
-    kernel: str = "halo",
-) -> DataFrame:
+def morans_i(tiles: DataFrame, res: int, radius: int = 1) -> DataFrame:
     """Global Moran's I spatial autocorrelation of the tile raster under
     binary (2r+1)^2 window weights EXCLUDING self, study area = the union of
     input-tile pixels, windows truncated at the study-area edge (same
@@ -1052,80 +854,39 @@ def morans_i(
 
     with S_i the window sum over neighbors of i, W_i its in-area neighbor
     count, W = sum W_i, m the global mean. Everything reduces to SEVEN exact
-    int64 aggregates (n, sum x, sum x^2, sum x*S, sum x*W_i, sum S, sum W_i)
-    from two focal passes + one zipped fold, so the final double is
-    bit-stable across engines:
+    int64 aggregates (n, sum x, sum x^2, sum x*S, sum x*W_i, sum S, sum W_i),
+    so the final double is bit-stable across engines:
 
         num = C - m*D - m*E + m*m*G     (C=sum xS, D=sum xW, E=sum S, G=sum W)
         den = B - n*m*m                 (B=sum x^2)
         I   = (n / G) * num / den
 
     Returns one row (n_cells, w_sum, moran_i) — moran_i null on a constant
-    raster (den == 0) or when no pixel has any neighbor (G == 0). Cost on
-    the halo kernel: ONE fused halo pass emitting the seven per-tile partial
-    sums as scalars (numpy inside the Arrow kernel; W from the strip
-    presence mask) + one 7-column aggregate — the two-pass + interpreted-
-    HOF-fold shape is kept on the scatter kernel as the twin (r4 A/B: the
-    fused shape measured ~5x faster at 16.8M cells)."""
-    if kernel == "halo":
-        r = radius
+    raster (den == 0) or when no pixel has any neighbor (G == 0). Cost: ONE
+    fused halo pass emitting the seven per-tile partial sums as scalars
+    (numpy inside the Arrow kernel; W from the strip presence mask) + one
+    7-column aggregate (r4 A/B: ~5x faster at 16.8M cells than two focal
+    passes + an interpreted HOF fold). morans_i_sql (the scatter focal
+    algebra in DuckDB) and the Python oracle in tests are the references."""
+    r = radius
 
-        def finish(halo: np.ndarray, mask: np.ndarray) -> dict:
-            x = halo[r : r + res, r : r + res]
-            s = _box_sums(halo, res, r) - x  # neighbor-only window sums
-            wi = _box_sums(mask, res, r) - 1  # in-area neighbor counts
-            return {
-                "a": int(x.sum()), "b": int((x * x).sum()),
-                "c": int((x * s).sum()), "d": int((x * wi).sum()),
-                "e": int(s.sum()), "g": int(wi.sum()),
-            }
+    def finish(halo: np.ndarray, mask: np.ndarray) -> dict:
+        x = halo[r : r + res, r : r + res]
+        s = _box_sums(halo, res, r) - x  # neighbor-only window sums
+        wi = _box_sums(mask, res, r) - 1  # in-area neighbor counts
+        return {
+            "a": int(x.sum()), "b": int((x * x).sum()),
+            "c": int((x * s).sum()), "d": int((x * wi).sum()),
+            "e": int(s.sum()), "g": int(wi.sum()),
+        }
 
-        g = _halo_apply(
-            tiles, res, r, finish,
-            fields=[(c, T.LongType()) for c in "abcdeg"],
-        ).agg(
-            F.count("*").alias("_tiles"),
-            *[F.sum(c).alias(c) for c in "abcdeg"],
-        )
-    else:
-        f = focal_sum(
-            tiles, res, radius=radius, kernel=kernel
-        ).withColumnRenamed("focal", "_fs")
-        ones = tiles.select(
-            "tx",
-            "ty",
-            F.array_repeat(F.lit(1).cast("long"), res * res).alias("counts"),
-        )
-        w = focal_sum(
-            ones, res, radius=radius, kernel=kernel
-        ).withColumnRenamed("focal", "_wn")
-        j = tiles.join(f, ["tx", "ty"]).join(w, ["tx", "ty"])
-
-        def fold(pair_expr: Column) -> Column:
-            return F.aggregate(
-                pair_expr, F.lit(0).cast("long"), lambda a, v: a + v
-            )
-
-        # neighbor-only sums: S = fs - x, W_i = wn - 1 (self always in-area)
-        x, fs, wn = F.col("counts"), F.col("_fs"), F.col("_wn")
-        s_arr = F.zip_with(fs, x, lambda a, b: a - b)
-        wi_arr = F.transform(wn, lambda v: v - F.lit(1).cast("long"))
-        g = j.select(
-            fold(x).alias("_a"),
-            fold(F.zip_with(x, x, lambda a, b: a * b)).alias("_b"),
-            fold(F.zip_with(x, s_arr, lambda a, b: a * b)).alias("_c"),
-            fold(F.zip_with(x, wi_arr, lambda a, b: a * b)).alias("_d"),
-            fold(s_arr).alias("_e"),
-            fold(wi_arr).alias("_g"),
-        ).agg(
-            F.count("*").alias("_tiles"),
-            F.sum("_a").alias("a"),
-            F.sum("_b").alias("b"),
-            F.sum("_c").alias("c"),
-            F.sum("_d").alias("d"),
-            F.sum("_e").alias("e"),
-            F.sum("_g").alias("g"),
-        )
+    g = _halo_apply(
+        tiles, res, r, finish,
+        fields=[(c, T.LongType()) for c in "abcdeg"],
+    ).agg(
+        F.count("*").alias("_tiles"),
+        *[F.sum(c).alias(c) for c in "abcdeg"],
+    )
     n = (F.col("_tiles") * (res * res)).cast("double")
     m = F.col("a") / n
     num = F.col("c") - m * F.col("d") - m * F.col("e") + m * m * F.col("g")
@@ -1186,7 +947,6 @@ def join_counts(
     res: int,
     radius: int = 1,
     thresh: int = 0,
-    kernel: str = "halo",
 ) -> DataFrame:
     """Join-count statistics (Cliff & Ord 1981 ch.1) — the CATEGORICAL
     companion of morans_i: classify every pixel Black (count > thresh) or
@@ -1222,73 +982,30 @@ def join_counts(
     color or no neighbor pairs).
 
     Cost mirrors morans_i: ONE fused halo pass emitting five per-tile int
-    scalars + one aggregate (kernel='halo', production), or the scatter
-    focal algebra (kernel='scatter', the DuckDB-transliterable twin).
+    scalars + one aggregate. join_counts_sql (the scatter focal algebra in
+    DuckDB) and the Python oracle in tests are the references.
     Reference provenance: no analog (the reference has no raster ops);
     extends the brief's hotspot/screening family alongside gi_star.
     """
-    if kernel == "halo":
-        r = radius
+    r = radius
+    cols = ("nb", "g", "w2", "bb2", "d")
 
-        def finish(halo: np.ndarray, mask: np.ndarray) -> dict:
-            bh = ((halo > thresh) & (mask > 0)).astype(np.int64)
-            b = bh[r : r + res, r : r + res]
-            sb = _box_sums(bh, res, r) - b
-            wi = _box_sums(mask, res, r) - 1
-            return {
-                "nb": int(b.sum()),
-                "g": int(wi.sum()),
-                "w2": int((wi * wi).sum()),
-                "bb2": int((b * sb).sum()),
-                "d": int((b * wi).sum()),
-            }
+    def finish(halo: np.ndarray, mask: np.ndarray) -> dict:
+        bh = ((halo > thresh) & (mask > 0)).astype(np.int64)
+        b = bh[r : r + res, r : r + res]
+        sb = _box_sums(bh, res, r) - b
+        wi = _box_sums(mask, res, r) - 1
+        return {
+            "nb": int(b.sum()),
+            "g": int(wi.sum()),
+            "w2": int((wi * wi).sum()),
+            "bb2": int((b * sb).sum()),
+            "d": int((b * wi).sum()),
+        }
 
-        agg = _halo_apply(
-            tiles, res, r, finish,
-            fields=[(c, T.LongType()) for c in ("nb", "g", "w2", "bb2", "d")],
-        ).agg(
-            F.count("*").alias("_tiles"),
-            *[F.sum(c).alias(c) for c in ("nb", "g", "w2", "bb2", "d")],
-        )
-    else:
-        bins = tiles.select(
-            "tx", "ty",
-            F.transform(
-                "counts", lambda v: (v > F.lit(thresh)).cast("long")
-            ).alias("counts"),
-        )
-        fb = focal_sum(
-            bins, res, radius=radius, kernel=kernel
-        ).withColumnRenamed("focal", "_fb")
-        ones = tiles.select(
-            "tx", "ty",
-            F.array_repeat(F.lit(1).cast("long"), res * res).alias("counts"),
-        )
-        w = focal_sum(
-            ones, res, radius=radius, kernel=kernel
-        ).withColumnRenamed("focal", "_wn")
-        j = bins.join(fb, ["tx", "ty"]).join(w, ["tx", "ty"])
-
-        def fold(arr: Column) -> Column:
-            return F.aggregate(arr, F.lit(0).cast("long"), lambda a, v: a + v)
-
-        x, fbc, wn = F.col("counts"), F.col("_fb"), F.col("_wn")
-        s_arr = F.zip_with(fbc, x, lambda a, b: a - b)
-        wi_arr = F.transform(wn, lambda v: v - F.lit(1).cast("long"))
-        agg = j.select(
-            fold(x).alias("_nb"),
-            fold(wi_arr).alias("_g"),
-            fold(F.zip_with(wi_arr, wi_arr, lambda a, b: a * b)).alias("_w2"),
-            fold(F.zip_with(x, s_arr, lambda a, b: a * b)).alias("_bb2"),
-            fold(F.zip_with(x, wi_arr, lambda a, b: a * b)).alias("_d"),
-        ).agg(
-            F.count("*").alias("_tiles"),
-            F.sum("_nb").alias("nb"),
-            F.sum("_g").alias("g"),
-            F.sum("_w2").alias("w2"),
-            F.sum("_bb2").alias("bb2"),
-            F.sum("_d").alias("d"),
-        )
+    agg = _halo_apply(
+        tiles, res, r, finish, fields=[(c, T.LongType()) for c in cols]
+    ).agg(F.count("*").alias("_tiles"), *[F.sum(c).alias(c) for c in cols])
     n = (F.col("_tiles") * (res * res)).cast("double")
     p = F.col("nb") / n
     q = F.lit(1.0) - p

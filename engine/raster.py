@@ -184,7 +184,6 @@ def kde_tiles(
     x_col: str = "x",
     y_col: str = "y",
     weight_col: str | None = None,
-    stencil_kernel: str = "halo",
 ) -> DataFrame:
     """Kernel density estimation onto the tile grid (the heatmap/KDE layer
     every density map serves): bin the points (heatmap_tiles — ONE map-side
@@ -202,9 +201,7 @@ def kde_tiles(
         points, tile_size, res, x_col=x_col, y_col=y_col,
         weight_col=weight_col,
     ).select("tx", "ty", "counts")
-    sm = focal_stencil(
-        binned, res, kde_weights(radius, kernel), kernel=stencil_kernel
-    )
+    sm = focal_stencil(binned, res, kde_weights(radius, kernel))
     return sm.select("tx", "ty", F.col("focal").alias("counts"))
 
 

@@ -19,11 +19,10 @@ real DEM quantizes to cm/mm fixed-point on ingest). Two layers:
    padding outside the input tile set (edge pixels see 0-elevation
    neighbors — consistent with every focal operator here; mask-aware
    clamping is a finish-kernel swap if a consumer needs gdal-style edges).
-   kernel='scatter' is the Column-only twin: two focal_stencil scatter
-   passes (HORN_DZDX / HORN_DZDY are plain stencil weight maps) joined on
-   the tile key — exact-equal by construction, and it transliterates to
-   DuckDB via focal.focal_stencil_sql (the registry's `raster_field`
-   'ter' rows are hash-checked that way).
+   HORN_DZDX / HORN_DZDY are plain stencil weight maps, so the DuckDB
+   twin is focal.focal_stencil_sql per stencil (the registry's
+   `raster_field` 'ter' rows are hash-checked that way) and the Python
+   oracle in tests/test_terrain.py recomputes the sums directly.
 
 2. `slope_aspect_hillshade` — the float view, pure Column HOFs over the
    integer gradient arrays (no UDF):
@@ -69,25 +68,11 @@ HORN_DZDY = {
 }
 
 
-def terrain_gradients(
-    tiles: DataFrame, res: int, kernel: str = "halo"
-) -> DataFrame:
+def terrain_gradients(tiles: DataFrame, res: int) -> DataFrame:
     """(tx, ty, counts) -> (tx, ty, dzdx8, dzdy8): Horn gradient NUMERATORS
-    per pixel, exact int64 arrays. kernel='halo' fuses both stencils into
-    one strip-exchange pass; kernel='scatter' joins two Column-only
-    focal_stencil passes (the oracle-twin shape)."""
-    from engine.focal import _halo_apply, focal_stencil
-
-    if kernel == "scatter":
-        gx = focal_stencil(tiles, res, HORN_DZDX, kernel="scatter").select(
-            "tx", "ty", F.col("focal").alias("dzdx8")
-        )
-        gy = focal_stencil(tiles, res, HORN_DZDY, kernel="scatter").select(
-            "tx", "ty", F.col("focal").alias("dzdy8")
-        )
-        return gx.join(gy, ["tx", "ty"])
-    if kernel != "halo":
-        raise ValueError(f"kernel must be 'halo' or 'scatter', got {kernel!r}")
+    per pixel, exact int64 arrays, both stencils fused into one
+    strip-exchange pass."""
+    from engine.focal import _halo_apply
 
     r = 1
 
@@ -266,39 +251,25 @@ ZT_STENCILS = {
 }
 
 
-def curvature_numerators(
-    tiles: DataFrame, res: int, kernel: str = "halo"
-) -> DataFrame:
+def curvature_numerators(tiles: DataFrame, res: int) -> DataFrame:
     """(tx, ty, counts) -> (tx, ty, zt_d, zt_e, zt_f, zt_g, zt_h): the five
     Zevenbergen-Thorne quadric-coefficient NUMERATORS per pixel as exact
     int64 arrays — everything the curvature surfaces (profile / plan /
-    general) need, and nothing floats. kernel='halo' fuses all five
-    stencils into ONE strip-exchange pass (terrain_gradients' fusion
-    pattern: shuffle O(perimeter) per tile, numpy slice arithmetic in the
-    Arrow kernel); kernel='scatter' joins five Column-only focal_stencil
-    passes on the tile key — exact-equal by construction and the
-    transliteration path for the DuckDB twin (focal.focal_stencil_sql per
-    stencil, the registry's `raster_field` 'curv' half). Zero padding
-    outside the input tile set, consistent with the whole focal family.
+    general) need, and nothing floats. All five stencils ride ONE
+    strip-exchange pass (terrain_gradients' fusion pattern: shuffle
+    O(perimeter) per tile, numpy slice arithmetic in the Arrow kernel).
+    ZT_STENCILS are plain stencil weight maps, so the DuckDB twin is
+    focal.focal_stencil_sql per stencil (the registry's `raster_field`
+    'curv' half). Zero padding outside the input tile set, consistent
+    with the whole focal family.
 
     Reference provenance: the reference (osm-history-analysis) has no
     raster surface; this completes the terrain-derivative family
     (Horn slope/aspect/hillshade + gdaldem TRI/TPI/roughness + ZT
     curvature) of SURVEY.md's raster additions."""
-    from engine.focal import _halo_apply, focal_stencil
+    from engine.focal import _halo_apply
 
     names = list(ZT_STENCILS)
-    if kernel == "scatter":
-        out = None
-        for name in names:
-            part = focal_stencil(
-                tiles, res, ZT_STENCILS[name], kernel="scatter"
-            ).select("tx", "ty", F.col("focal").alias(name))
-            out = part if out is None else out.join(part, ["tx", "ty"])
-        return out
-    if kernel != "halo":
-        raise ValueError(f"kernel must be 'halo' or 'scatter', got {kernel!r}")
-
     r = 1
 
     def finish(halo: np.ndarray, _mask: np.ndarray) -> dict:
@@ -376,46 +347,17 @@ def curvature_surfaces(
     )
 
 
-def tpi_at(
-    tiles: DataFrame, res: int, radius: int, kernel: str = "halo"
-) -> DataFrame:
+def tpi_at(tiles: DataFrame, res: int, radius: int) -> DataFrame:
     """Multi-radius Topographic Position Index: (tx, ty, tpi_num, tpi_den)
     where per pixel tpi_num = cnt * z - sum(z_n) over the PRESENT cells of
     the (2*radius+1)^2 window excluding the center, tpi_den = cnt — the
     radius-generalized exact-int64 form of surface_products' TPI (identical
-    at radius 1, asserted in tests). kernel='halo': one strip-exchange pass,
-    both window sums via integral images (O(pad^2) for any radius);
-    kernel='scatter': two Column-only focal_sum scatter passes (values +
-    an all-ones presence raster) joined on the tile key — the oracle-twin
-    shape. TPI's scale dependence is the point: small radii see channels
-    and ridgelines, large radii see valleys and massifs; landform_classes
-    combines two radii into the Weiss position classes."""
-    from engine.focal import _box_sums, _halo_apply, focal_sum
-
-    if kernel == "scatter":
-        zs = focal_sum(tiles, res, radius, kernel="scatter").select(
-            "tx", "ty", F.col("focal").alias("_zsum")
-        )
-        ones = tiles.select(
-            "tx", "ty",
-            F.array_repeat(F.lit(1).cast("long"), res * res).alias("counts"),
-        )
-        cs = focal_sum(ones, res, radius, kernel="scatter").select(
-            "tx", "ty", F.col("focal").alias("_csum")
-        )
-        j = tiles.join(zs, ["tx", "ty"]).join(cs, ["tx", "ty"])
-        z3 = F.arrays_zip("counts", "_zsum", "_csum")
-        return j.select(
-            "tx", "ty",
-            F.transform(
-                z3,
-                lambda s: (s["_csum"] - 1) * s["counts"]
-                - (s["_zsum"] - s["counts"]),
-            ).alias("tpi_num"),
-            F.transform(z3, lambda s: s["_csum"] - 1).alias("tpi_den"),
-        )
-    if kernel != "halo":
-        raise ValueError(f"kernel must be 'halo' or 'scatter', got {kernel!r}")
+    at radius 1, asserted in tests). One strip-exchange pass, both window
+    sums via integral images (O(pad^2) for any radius). TPI's scale
+    dependence is the point: small radii see channels and ridgelines,
+    large radii see valleys and massifs; landform_classes combines two
+    radii into the Weiss position classes."""
+    from engine.focal import _box_sums, _halo_apply
 
     def finish(halo: np.ndarray, mask: np.ndarray) -> dict:
         zc = halo[radius : radius + res, radius : radius + res]
@@ -742,53 +684,26 @@ def flow_edges(flow: DataFrame, res: int) -> DataFrame:
     )
 
 
-def basins(
-    flow: DataFrame, res: int, method: str = "cc", max_iters: int = 40
-) -> DataFrame:
+def basins(flow: DataFrame, res: int) -> DataFrame:
     """d8_flow frame -> (gx, gy, basin): drainage basins of the flow pointer
-    forest. Two kernels, identical PARTITION into basins, different label
-    conventions:
+    forest as connected components via engine.graph (alternating star
+    rounds — the registry twin's shape), basin = MINIMUM packed cell id in
+    the component, the engine-wide deterministic CC label contract. For
+    sink-labelled basins (basin = the packed id of the component's flow
+    outlet), call catchments with every sink as an outlet: its pointer
+    doubling gives the same partition (asserted in tests)."""
+    from engine.graph import connected_components
 
-    method='cc' (default; the registry twin's shape): connected components
-    via engine.graph (alternating star rounds), basin = MINIMUM packed cell
-    id in the component — the engine-wide deterministic CC label contract.
-
-    method='jump': pointer jumping (path doubling) — parent <- parent's
-    parent per round, so convergence takes ceil(log2(flow diameter)) rounds
-    instead of the star rounds' slower contraction on long chains (a 4096-
-    diameter drainage network is ~12 jump rounds). Each round is ONE
-    self-equi-join on the parent key + a reliable checkpoint (same lineage
-    discipline as CC). basin = the packed id of the component's SINK (its
-    flow outlet) — hydrologically the more meaningful key; exact-identical
-    basin MEMBERSHIP to method='cc' (asserted in tests), only the label
-    differs. A forest cannot cycle (z strictly decreases along flow), so
-    the iteration always converges; max_iters is a safety rail."""
     ed = flow_edges(flow, res)
-    if method == "cc":
-        from engine.graph import connected_components
-
-        comp = connected_components(
-            ed.filter(F.col("dst").isNotNull()).select("src", "dst"),
-            src="src", dst="dst",
-            nodes=ed.select("src"), id_col="src",
-        )
-        return (
-            ed.select("gx", "gy", "src")
-            .join(comp, ed["src"] == comp["id"])
-            .select("gx", "gy", F.col("comp").alias("basin"))
-        )
-    if method != "jump":
-        raise ValueError(f"method must be 'cc' or 'jump', got {method!r}")
-
-    # parent pointer: sinks point at themselves (fixpoints of the doubling)
-    p = truncate_lineage(
-        ed.select(
-            "src", F.coalesce(F.col("dst"), F.col("src")).alias("parent")
-        )
+    comp = connected_components(
+        ed.filter(F.col("dst").isNotNull()).select("src", "dst"),
+        src="src", dst="dst",
+        nodes=ed.select("src"), id_col="src",
     )
-    p = _jump_fixpoint(p, max_iters, "basins(jump)")
-    return ed.select("gx", "gy", "src").join(p, "src").select(
-        "gx", "gy", F.col("parent").alias("basin")
+    return (
+        ed.select("gx", "gy", "src")
+        .join(comp, ed["src"] == comp["id"])
+        .select("gx", "gy", F.col("comp").alias("basin"))
     )
 
 
@@ -863,12 +778,13 @@ def catchments(
     set is broadcast into both the pointer seed and the terminal filter.
 
     Distributed shape: outlet cells become self-loop roots of the flow
-    pointer forest (their out-edge is cut), then the SAME pointer-doubling
-    fixpoint as basins(method='jump') — ceil(log2(flow diameter)) rounds of
-    one self-equi-join each, lineage truncated per round. Each cell's
-    terminal pointer is then its first downstream outlet (or its natural
-    sink, filtered out by the broadcast semi-join). With outlets = the full
-    sink set this reproduces basins(jump) exactly (asserted in tests)."""
+    pointer forest (their out-edge is cut), then a pointer-doubling
+    fixpoint (_jump_fixpoint) — ceil(log2(flow diameter)) rounds of one
+    self-equi-join each, lineage truncated per round. Each cell's terminal
+    pointer is then its first downstream outlet (or its natural sink,
+    filtered out by the broadcast semi-join). With outlets = the full sink
+    set every cell reports its own sink: the partition basins() gives, with
+    the sink as the label (asserted in tests)."""
     spark = flow.sparkSession
     if not isinstance(outlets, DataFrame):
         outlets = local_relation(
@@ -1548,7 +1464,7 @@ def flow_length(
     self-loop at 0), then per round parent <- parent's parent AND
     d <- d + parent's d (one self-equi-join + reliable checkpoint), so d
     telescopes to the full path length in ceil(log2(longest path)) rounds
-    — the _jump_fixpoint machinery (catchments/basins/cost_allocation)
+    — the _jump_fixpoint machinery (catchments/stream_links/cost_allocation)
     extended with the additive label. Convergence by the same
     order-independent digest, here over (src, parent, d).
     DuckDB twin: flow_length_sql (per-source recursive-CTE walk summing
@@ -3442,8 +3358,8 @@ def cost_allocation(
     Shape: the converged cost_distance state + ONE more halo pass deriving
     each cell's optimal-predecessor pointer (argmin over neighbors of
     dist_n + move cost == dist_c, min packed id on ties; sources self-
-    root), then the shared _jump_fixpoint pointer doubling (catchments /
-    basins machinery) walks every cell to its source in O(log diameter)
+    root), then the shared _jump_fixpoint pointer doubling (the catchments
+    machinery) walks every cell to its source in O(log diameter)
     rounds. Move costs are strictly positive (cost >= 1), so dist strictly
     decreases along pointers — the forest cannot cycle."""
     from engine.focal import _halo_apply

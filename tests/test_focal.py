@@ -1,4 +1,4 @@
-"""engine.focal: halo-exchange vs scatter vs Python + DuckDB oracles."""
+"""engine.focal: the halo-exchange plan vs Python and DuckDB oracles."""
 
 import random
 
@@ -59,26 +59,31 @@ def _collect(df):
     return {(r["tx"], r["ty"]): list(r["focal"]) for r in df.collect()}
 
 
+# Halo exchange is the one focal plan; the "[halo]" case ids name it.
+halo_plan = pytest.mark.parametrize("plan", ["halo"])
+
+
 @pytest.mark.parametrize("radius", [1, 2])
-@pytest.mark.parametrize("kernel", ["halo", "scatter"])
-def test_matches_python_oracle(spark, kernel, radius):
+@halo_plan
+def test_matches_python_oracle(spark, plan, radius):
     rng = random.Random(42 + radius)
     res = 8
     tiles = _rand_tiles(rng, res, 12)
     df = _mk_df(spark, tiles).repartition(5)
-    got = _collect(focal.focal_sum(df, res, radius=radius, kernel=kernel))
+    got = _collect(focal.focal_sum(df, res, radius=radius))
     want = _py_focal(tiles, res, radius)
     assert got == want
 
 
 def test_halo_equals_scatter_bigger_grid(spark):
+    """res 16 over 7 partitions: halo strips route between more tiles than
+    the res-8 cases, still equal to the Python window sums."""
     rng = random.Random(7)
     res = 16
     tiles = _rand_tiles(rng, res, 20, span=6, density=0.5)
     df = _mk_df(spark, tiles).repartition(7)
-    a = _collect(focal.focal_sum(df, res, radius=1, kernel="halo"))
-    b = _collect(focal.focal_sum(df, res, radius=1, kernel="scatter"))
-    assert a == b
+    a = _collect(focal.focal_sum(df, res, radius=1))
+    assert a == _py_focal(tiles, res, 1)
     assert set(a) == set(tiles)
 
 
@@ -88,7 +93,7 @@ def test_isolated_tile_interior_only(spark):
     grid = list(range(16))
     tiles = {(100, -100): grid}
     df = _mk_df(spark, tiles)
-    got = _collect(focal.focal_sum(df, res, radius=r, kernel="halo"))
+    got = _collect(focal.focal_sum(df, res, radius=r))
     assert got == _py_focal(tiles, res, r)
 
 
@@ -99,7 +104,7 @@ def test_sql_twin_matches_spark(spark):
     res = 8
     tiles = _rand_tiles(rng, res, 10)
     df = _mk_df(spark, tiles)
-    got = _collect(focal.focal_sum(df, res, radius=1, kernel="halo"))
+    got = _collect(focal.focal_sum(df, res, radius=1))
     con = duckdb.connect()
     con.execute("CREATE TABLE tiles(tx BIGINT, ty BIGINT, counts BIGINT[])")
     con.executemany(
@@ -140,17 +145,16 @@ def _py_stencil(tiles, res, w):
     return out
 
 
-@pytest.mark.parametrize("kernel", ["halo", "scatter"])
-def test_stencil_matches_python(spark, kernel):
+@halo_plan
+def test_stencil_matches_python(spark, plan):
     # asymmetric kernel with negative weights and radius 2: exercises strip
-    # routing in every direction and the sign algebra of the scatter twin
+    # routing in every direction and the sign algebra of the stencil
     w = {(2, 0): 3, (-1, 1): -2, (0, -2): 5, (0, 0): 1, (1, 1): -7}
     rng = random.Random(13)
     res = 6
     tiles = _rand_tiles(rng, res, 8, span=3, density=0.5)
     got = _collect(
-        focal.focal_stencil(_mk_df(spark, tiles).repartition(3), res, w,
-                            kernel=kernel)
+        focal.focal_stencil(_mk_df(spark, tiles).repartition(3), res, w)
     )
     assert got == _py_stencil(tiles, res, w)
 
@@ -232,15 +236,15 @@ def _py_gi_star(tiles, res, r):
     return out
 
 
-@pytest.mark.parametrize("kernel", ["halo", "scatter"])
-def test_gi_star_matches_python(spark, kernel):
+@halo_plan
+def test_gi_star_matches_python(spark, plan):
     rng = random.Random(17)
     res = 6
     tiles = _rand_tiles(rng, res, 8, span=3, density=0.6)
     df = _mk_df(spark, tiles).repartition(3)
     got = {
         (r["tx"], r["ty"]): list(r["z"])
-        for r in focal.gi_star(df, res, radius=1, kernel=kernel).collect()
+        for r in focal.gi_star(df, res, radius=1).collect()
     }
     want = _py_gi_star(tiles, res, 1)
     assert set(got) == set(want)
@@ -275,13 +279,13 @@ def _py_morans(tiles, res, r):
     return n, g, moran
 
 
-@pytest.mark.parametrize("kernel", ["halo", "scatter"])
-def test_morans_i_matches_python(spark, kernel):
+@halo_plan
+def test_morans_i_matches_python(spark, plan):
     rng = random.Random(23)
     res = 6
     tiles = _rand_tiles(rng, res, 7, span=3, density=0.5)
     (row,) = focal.morans_i(
-        _mk_df(spark, tiles).repartition(3), res, radius=1, kernel=kernel
+        _mk_df(spark, tiles).repartition(3), res, radius=1
     ).collect()
     n, g, moran = _py_morans(tiles, res, 1)
     assert (row["n_cells"], row["w_sum"]) == (n, g)
@@ -350,8 +354,6 @@ def test_validation(spark):
         focal.focal_sum(df, 4, radius=0)
     with pytest.raises(ValueError):
         focal.focal_sum(df, 4, radius=4)
-    with pytest.raises(ValueError):
-        focal.focal_sum(df, 4, kernel="nope")
 
 
 def _py_extremum(tiles, res, r, op, pad):
@@ -574,14 +576,13 @@ def test_join_count_variance_formula_exact_enumeration():
     )
 
 
-@pytest.mark.parametrize("kernel", ["halo", "scatter"])
-def test_join_counts_matches_python(spark, kernel):
+@halo_plan
+def test_join_counts_matches_python(spark, plan):
     rng = random.Random(29)
     res = 6
     tiles = _rand_tiles(rng, res, 7, span=3, density=0.4)
     (row,) = focal.join_counts(
         _mk_df(spark, tiles).repartition(3), res, radius=1, thresh=50,
-        kernel=kernel,
     ).collect()
     n, nb, m, bb, bw, ww, e_bb, e_bw, z_bb, z_bw = _py_join_counts(
         tiles, res, 1, thresh=50
@@ -672,15 +673,15 @@ def _py_local_morans(tiles, res, r):
     return out
 
 
-@pytest.mark.parametrize("kernel", ["halo", "scatter"])
-def test_local_morans_matches_python(spark, kernel):
+@halo_plan
+def test_local_morans_matches_python(spark, plan):
     rng = random.Random(31)
     res = 6
     tiles = _rand_tiles(rng, res, 7, span=3, density=0.5)
     got = {
         (r["tx"], r["ty"]): (list(r["local"]), list(r["quad"]))
         for r in focal.local_morans(
-            _mk_df(spark, tiles).repartition(3), res, radius=1, kernel=kernel
+            _mk_df(spark, tiles).repartition(3), res, radius=1
         ).collect()
     }
     want = _py_local_morans(tiles, res, 1)

@@ -1,4 +1,4 @@
-"""engine.terrain: Horn gradients (halo fused vs scatter twin vs Python
+"""engine.terrain: Horn gradients (the fused halo plan vs the Python
 oracle, exact int64) + slope/aspect/hillshade float view (numpy parity,
 closed forms on ramps and flats)."""
 
@@ -71,25 +71,31 @@ def _collect_grads(df):
     }
 
 
-@pytest.mark.parametrize("kernel", ["halo", "scatter"])
-def test_gradients_match_python_oracle(spark, kernel):
+# Halo exchange is the one terrain-stencil plan; the "[halo]" case ids
+# name it.
+halo_plan = pytest.mark.parametrize("plan", ["halo"])
+
+
+@halo_plan
+def test_gradients_match_python_oracle(spark, plan):
     rng = random.Random(411)
     res = 8
     tiles = _rand_tiles(rng, res, 10)
     df = _mk_df(spark, tiles).repartition(5)
-    got = _collect_grads(terrain.terrain_gradients(df, res, kernel=kernel))
+    got = _collect_grads(terrain.terrain_gradients(df, res))
     want = _py_gradients(tiles, res)
     assert got == want
 
 
 def test_halo_equals_scatter(spark):
+    """res 16 over 7 partitions: the fused halo pass still equals the
+    Python oracle."""
     rng = random.Random(412)
     res = 16
     tiles = _rand_tiles(rng, res, 14, span=5, density=0.4)
     df = _mk_df(spark, tiles).repartition(7)
-    halo = _collect_grads(terrain.terrain_gradients(df, res, kernel="halo"))
-    scat = _collect_grads(terrain.terrain_gradients(df, res, kernel="scatter"))
-    assert halo == scat
+    got = _collect_grads(terrain.terrain_gradients(df, res))
+    assert got == _py_gradients(tiles, res)
 
 
 def test_ramp_closed_form(spark):
@@ -302,37 +308,37 @@ def test_basins_two_valleys(spark):
 
 
 def test_basins_jump_matches_cc_partition(spark):
-    """Pointer-jumping basins produce the IDENTICAL partition into basins
-    as the CC kernel (labels differ by convention: sink id vs min id)."""
+    """basins() partitions the cells exactly as a Python walk of each cell's
+    D8 path to its sink does, labelled by each basin's minimum packed id."""
     rng = random.Random(415)
     res = 8
     tiles = _rand_tiles(rng, res, 6, span=2, density=0.8)
     df = _mk_df(spark, tiles)
     flow = terrain.d8_flow(df, res)
-
-    def parts(method):
-        groups = {}
-        for r in terrain.basins(flow, res, method=method).collect():
-            groups.setdefault(r["basin"], set()).add((r["gx"], r["gy"]))
-        return set(frozenset(g) for g in groups.values())
-
-    assert parts("jump") == parts("cc")
+    groups = {}
+    for r in terrain.basins(flow, res).collect():
+        groups.setdefault(r["basin"], set()).add((r["gx"], r["gy"]))
+    want = {}
+    for c, sink in _py_sinks(_py_down(tiles, res)).items():
+        want.setdefault(sink, set()).add(c)
+    pack = lambda x, y: (x + (1 << 20)) * (1 << 32) + (y + (1 << 20))  # noqa: E731
+    assert groups == {min(pack(*c) for c in g): g for g in want.values()}
 
 
 def test_basins_jump_sink_labels(spark):
-    """Jump labels are the basin's SINK cell: the two-valley tile's rows
-    drain to (3, y) and (4, y)."""
+    """Sink-labelled basins come from catchments with every sink as an
+    outlet: the two-valley tile's rows drain to (3, y) and (4, y)."""
     res = 8
     grid = [5 * abs(2 * (pix % res) - 7) for pix in range(res * res)]
     df = _mk_df(spark, {(0, 0): grid})
-    b = terrain.basins(terrain.d8_flow(df, res), res, method="jump").collect()
-    pack = lambda x, y: (x + (1 << 20)) * (1 << 32) + (y + (1 << 20))  # noqa: E731
-    want = {pack(3, y) for y in range(res)} | {pack(4, y) for y in range(res)}
-    assert {r["basin"] for r in b} == want
-    # every cell's label is its own row's sink column
+    sinks = [(x, y) for x in (3, 4) for y in range(res)]
+    b = terrain.catchments(terrain.d8_flow(df, res), res, sinks).collect()
+    assert len(b) == res * res
+    assert {(r["outlet_gx"], r["outlet_gy"]) for r in b} == set(sinks)
+    # every cell's outlet is its own row's sink column
     for r in b:
         sink_x = 3 if r["gx"] <= 3 else 4
-        assert r["basin"] == pack(sink_x, r["gy"])
+        assert (r["outlet_gx"], r["outlet_gy"]) == (sink_x, r["gy"])
 
 
 def _py_flow_acc(tiles, res):
@@ -530,6 +536,17 @@ def _py_down(tiles, res):
     return down
 
 
+def _py_sinks(down):
+    """{cell: the sink its D8 path ends at} by walking `down`."""
+    out = {}
+    for c in down:
+        cur = c
+        while down[cur] is not None:
+            cur = down[cur]
+        out[c] = cur
+    return out
+
+
 def test_catchments_first_outlet_oracle(spark):
     """Random terrain + random pour points: every cell maps to the FIRST
     outlet on its downstream path (itself if it is an outlet); cells
@@ -576,8 +593,8 @@ def test_catchments_nested_outlets(spark):
 
 
 def test_catchments_all_sinks_reproduce_basins(spark):
-    """Outlets = the full natural-sink set -> identical assignment to
-    basins(method='jump') (whose label IS the packed sink id)."""
+    """Outlets = the full natural-sink set -> every cell reports the sink
+    its D8 path ends at (the Python walk of _py_down)."""
     rng = random.Random(422)
     res = 8
     tiles = _rand_tiles(rng, res, 5, span=2, density=0.8)
@@ -589,12 +606,7 @@ def test_catchments_all_sinks_reproduce_basins(spark):
         for r in terrain.catchments(flow, res, sinks).collect()
     }
     assert set(got) == set(down)  # every cell drains to some sink
-    pack = lambda x, y: (x + (1 << 20)) * (1 << 32) + (y + (1 << 20))  # noqa: E731
-    jump = {
-        (r["gx"], r["gy"]): r["basin"]
-        for r in terrain.basins(flow, res, method="jump").collect()
-    }
-    assert {c: pack(*o) for c, o in got.items()} == jump
+    assert got == _py_sinks(down)
 
 
 def _py_cost_dijkstra(cost, sources, max_cost=None):
@@ -2514,8 +2526,8 @@ def _py_curv(cells):
     return out
 
 
-@pytest.mark.parametrize("kernel", ["halo", "scatter"])
-def test_curvature_numerators_oracle_parity(spark, kernel):
+@halo_plan
+def test_curvature_numerators_oracle_parity(spark, plan):
     rng = random.Random(4500)
     res = 8
     tiles = _rand_tiles(rng, res, 6, span=2, density=0.6)
@@ -2525,7 +2537,7 @@ def test_curvature_numerators_oracle_parity(spark, kernel):
         for i in range(res * res)
     }
     got = _collect_curv(
-        terrain.curvature_numerators(_mk_df(spark, tiles), res, kernel=kernel),
+        terrain.curvature_numerators(_mk_df(spark, tiles), res),
         res,
     )
     assert got == _py_curv(cells)
@@ -2690,13 +2702,13 @@ def _cells_of_tiles(tiles, res):
     }
 
 
-@pytest.mark.parametrize("kernel", ["halo", "scatter"])
-def test_tpi_at_radius2_oracle(spark, kernel):
+@halo_plan
+def test_tpi_at_radius2_oracle(spark, plan):
     rng = random.Random(4600)
     res = 8
     tiles = _rand_tiles(rng, res, 5, span=2, density=0.7)
     got = {}
-    for r in terrain.tpi_at(_mk_df(spark, tiles), res, 2, kernel=kernel).collect():
+    for r in terrain.tpi_at(_mk_df(spark, tiles), res, 2).collect():
         for pix in range(res * res):
             got[(r["tx"] * res + pix % res, r["ty"] * res + pix // res)] = (
                 r["tpi_num"][pix], r["tpi_den"][pix]

@@ -787,8 +787,8 @@ def part_traj() -> None:
 def part_focal() -> None:
     """Focal + pyramid at raster scale, local[32]: 16M points rasterized
     onto a 64x64-tile grid at res=64 (4096 tiles x 4096 px ~= 16.8M cells,
-    ~1 pt/px), then A/B interleaved halo-vs-scatter focal_sum (r=1 and
-    r=2) and a 3-level pyramid_sum. Min-of-2 per config."""
+    ~1 pt/px), then the halo focal_sum (r=1 and r=2) and a 3-level
+    pyramid_sum. Min-of-2 per radius; both runs must give one checksum."""
     import json as _json
 
     from pyspark.sql import functions as F
@@ -806,28 +806,24 @@ def part_focal() -> None:
     n_tiles = tiles.count()
     out["tiles"] = {"n_tiles": n_tiles, "points": n}
 
-    def run(kernel, radius):
+    def run(radius):
         t0 = time.time()
-        got = focal.focal_sum(tiles, 64, radius=radius, kernel=kernel)
+        got = focal.focal_sum(tiles, 64, radius=radius)
         s = got.agg(F.sum(F.aggregate(
             "focal", F.lit(0).cast("long"), lambda a, v: a + v
         )).alias("s")).collect()[0]["s"]
         return time.time() - t0, s
 
     for radius in (1, 2):
-        walls = {"halo": [], "scatter": []}
-        sums = set()
+        walls, sums = [], set()
         for _ in range(2):
-            for kern in ("halo", "scatter"):
-                w, s = run(kern, radius)
-                walls[kern].append(round(w, 2))
-                sums.add(s)
-        assert len(sums) == 1, sums  # exact halo==scatter parity at scale
+            w, s = run(radius)
+            walls.append(round(w, 2))
+            sums.add(s)
+        assert len(sums) == 1, sums  # repeat runs are exact
         out[f"focal_r{radius}"] = {
-            "halo_walls": walls["halo"],
-            "scatter_walls": walls["scatter"],
-            "halo_min": min(walls["halo"]),
-            "scatter_min": min(walls["scatter"]),
+            "halo_walls": walls,
+            "halo_min": min(walls),
             "checksum": next(iter(sums)),
         }
     t0 = time.time()
@@ -855,8 +851,8 @@ def part_focal() -> None:
 
 
 def part_hotspot() -> None:
-    """Focal ANALYTICS at raster scale (halo kernel only — the halo/scatter
-    A/B lives in part_focal): 16M points -> 16.8M-cell raster, then Gi*
+    """Focal ANALYTICS at raster scale (the halo plan; part_focal times
+    focal_sum itself): 16M points -> 16.8M-cell raster, then Gi*
     z-scores, sparse hot-cell extraction, global Moran's I, and a Sobel-x
     stencil. Single clean-window run each; structural asserts on every
     output."""
@@ -878,7 +874,7 @@ def part_hotspot() -> None:
     out["tiles"] = {"n_tiles": n_tiles, "points": n}
 
     t0 = time.time()
-    zs = focal.gi_star(tiles, 64, radius=1, kernel="halo")
+    zs = focal.gi_star(tiles, 64, radius=1)
     stats = zs.select(F.explode("z").alias("z")).agg(
         F.count("*").alias("cells"),
         F.sum((F.col("z") >= 2.576).cast("long")).alias("hot"),
@@ -906,7 +902,7 @@ def part_hotspot() -> None:
     sobel_x = {(-1, -1): -1, (1, -1): 1, (-1, 0): -2, (1, 0): 2,
                (-1, 1): -1, (1, 1): 1}
     t0 = time.time()
-    g = focal.focal_stencil(tiles, 64, sobel_x, kernel="halo")
+    g = focal.focal_stencil(tiles, 64, sobel_x)
     tot = g.agg(F.sum(F.aggregate(
         "focal", F.lit(0).cast("long"), lambda a, v: a + v
     )).alias("s")).collect()[0]["s"]
@@ -1771,44 +1767,29 @@ def part_contour() -> None:
         "wall_s": round(wall_seg, 2),
         "cells_per_sec": round(n / wall_seg),
     }
-    # A/B: generic CC vs the r5 arc-double-cover pointer doubling (rings),
-    # identical-ring proof = equal xor-digest over every (line_id, segment)
-    # row of both outputs, plus the closed-form ring count/size asserts.
-    digests = {}
-    for method in ("cc", "rings", "tiles"):
-        t0 = time.time()
-        lines = contour_lines(segs, method=method)
-        row = lines.agg(
-            F.coalesce(
-                F.bit_xor(
-                    F.xxhash64(
-                        "line_id", "bx", "by", "ea", "eb",
-                        "a_ex", "a_ey", "a_horiz", "a_num", "a_den",
-                        "b_ex", "b_ey", "b_horiz", "b_num", "b_den",
-                    )
-                ),
-                F.lit(0),
-            ).alias("dig"),
-            F.count("*").alias("nseg"),
-            F.countDistinct("line_id").alias("lines"),
-        ).collect()[0]
-        wall_ln = time.time() - t0
-        assert row["lines"] == k_rects, (method, row["lines"])
-        assert row["nseg"] == agg["segs"], (method, row["nseg"])
-        digests[method] = row["dig"]
-        out[f"lines_{method}"] = {
-            "lines": row["lines"],
-            "wall_s": round(wall_ln, 2),
-            "segments_per_sec": round(agg["segs"] / wall_ln),
-        }
-    assert digests["cc"] == digests["rings"] == digests["tiles"], digests
-    out["rings_identical"] = True
-    out["rings_speedup"] = round(
-        out["lines_cc"]["wall_s"] / out["lines_rings"]["wall_s"], 2
+    # closed form: one line per rectangle, every line exactly 4w segments
+    t0 = time.time()
+    row = (
+        contour_lines(segs)
+        .groupBy("line_id")
+        .agg(F.count("*").alias("n"))
+        .agg(
+            F.count("*").alias("lines"),
+            F.sum("n").alias("nseg"),
+            F.min("n").alias("mn"),
+            F.max("n").alias("mx"),
+        )
+        .collect()[0]
     )
-    out["tiles_speedup"] = round(
-        out["lines_cc"]["wall_s"] / out["lines_tiles"]["wall_s"], 2
-    )
+    wall_ln = time.time() - t0
+    assert row["lines"] == k_rects, row["lines"]
+    assert row["nseg"] == agg["segs"], row["nseg"]
+    assert row["mn"] == row["mx"] == 4 * w, (row["mn"], row["mx"])
+    out["lines"] = {
+        "lines": row["lines"],
+        "wall_s": round(wall_ln, 2),
+        "segments_per_sec": round(agg["segs"] / wall_ln),
+    }
     segs.unpersist()
     spark.stop()
     print(_json.dumps(out))
@@ -1934,12 +1915,12 @@ def part_terrain() -> None:
             else:
                 from engine.focal import focal_stencil
 
-                g = focal_stencil(
-                    tiles, res, terrain.HORN_DZDX, kernel="halo"
-                ).select("tx", "ty", F.col("focal").alias("dzdx8")).join(
-                    focal_stencil(
-                        tiles, res, terrain.HORN_DZDY, kernel="halo"
-                    ).select("tx", "ty", F.col("focal").alias("dzdy8")),
+                g = focal_stencil(tiles, res, terrain.HORN_DZDX).select(
+                    "tx", "ty", F.col("focal").alias("dzdx8")
+                ).join(
+                    focal_stencil(tiles, res, terrain.HORN_DZDY).select(
+                        "tx", "ty", F.col("focal").alias("dzdy8")
+                    ),
                     ["tx", "ty"],
                 )
             agg = cells(g).agg(
@@ -2014,24 +1995,21 @@ def part_terrain() -> None:
         "wall_s": round(wall_d8, 2),
         "cells_per_sec": round(w * w / wall_d8),
     }
-    # both basin kernels against the same closed form — the giant basin's
-    # sink IS the global min (0,0), so cc's min-id label == jump's sink id
-    for method in ("jump", "cc"):
-        t0 = time.time()
-        b = terrain.basins(flow, res, method=method)
-        bagg = b.agg(
-            F.count("*").alias("cells"),
-            F.countDistinct("basin").alias("basins"),
-            F.min("basin").alias("label"),
-        ).collect()[0]
-        wall_b = time.time() - t0
-        assert bagg["cells"] == w * w
-        assert bagg["basins"] == 1, bagg["basins"]
-        assert bagg["label"] == (1 << 20) * (1 << 32) + (1 << 20)  # pack(0,0)
-        out[f"basins_giant_{method}"] = {
-            "wall_s": round(wall_b, 2), "nodes": w * w,
-            "cells_per_sec": round(w * w / wall_b),
-        }
+    # the giant basin's min-id label is its sink (0,0), the global min
+    t0 = time.time()
+    bagg = terrain.basins(flow, res).agg(
+        F.count("*").alias("cells"),
+        F.countDistinct("basin").alias("basins"),
+        F.min("basin").alias("label"),
+    ).collect()[0]
+    wall_b = time.time() - t0
+    assert bagg["cells"] == w * w
+    assert bagg["basins"] == 1, bagg["basins"]
+    assert bagg["label"] == (1 << 20) * (1 << 32) + (1 << 20)  # pack(0,0)
+    out["basins_giant"] = {
+        "wall_s": round(wall_b, 2), "nodes": w * w,
+        "cells_per_sec": round(w * w / wall_b),
+    }
     tiles.unpersist()
     spark.stop()
     print(_json.dumps(out))

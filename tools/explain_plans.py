@@ -270,7 +270,7 @@ def main() -> int:
     from engine import focal as focalmod
 
     tiles16 = raster.heatmap_tiles(pts, tile_size=8.0, res=16)
-    fo = focalmod.focal_sum(tiles16, 16, radius=1, kernel="halo")
+    fo = focalmod.focal_sum(tiles16, 16, radius=1)
     p = formatted(fo)
     print("\n## focal sum (halo exchange)")
     if args.full:
