@@ -902,10 +902,11 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag='d8' — engine.terrain.d8_flow + basins over the same raster: per
     pixel (a=gx, b=gy, c=d8_dir, d=d8_key, e=basin) — steepest-descent
     direction (exact 2*drop^2 rational-slope key, presence-masked edges,
-    compass-priority ties) AND the basin label (min packed cell id of the
-    flow forest's component, engine.graph CC). The twin replays the argmax
-    as a max-over-packed-key group and the basins via the recursive-CTE CC
-    walk — the whole hydrology pipeline is hash-checked.
+    compass-priority ties) AND the basin label (engine.terrain.basins: min
+    packed cell id of the flow forest's component, engine.graph CC). The
+    twin replays the argmax as a max-over-packed-key group and the basins
+    via the recursive-CTE CC walk — the whole hydrology pipeline is
+    hash-checked.
     tag='vis' — engine.terrain.viewshed over the same raster, counts read
     as elevations: per pixel (a=gx, b=gy, c=vis, d=-1, e=-1) — how many of
     the {_VIS_N_OBS} busiest pixels (z DESC, gx, gy tie-break — a
@@ -1017,61 +1018,56 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
     lateral dirs-x-steps sample join with the argmax selected by NOT
     EXISTS cross-multiplication. The sky-view-factor float layer is
     pytest-pinned (tests/test_terrain.py horizon block)."""
-    from engine import terrain
-    from engine.graph import connected_components
+    from concurrent.futures import ThreadPoolExecutor
+
+    import numpy as np
+
+    from engine import focal, terrain
 
     res = _HOTSPOT_RES
     gx, gy = raster.pixel_xy(res)
+
+    def _pixel_half(tag, frame, arrays, c, d=-1, e=-1, where=None):
+        """One row per pixel of a tile frame: posexplode its `arrays`
+        (zipped when there are several: value fields read as "v.<name>",
+        else the value is "v"), keep the rows `where` holds, and project
+        (tag, a=gx, b=gy, c, d, e). c/d/e: a column name, an int literal
+        or a Column; each becomes bigint."""
+        px = frame.select("tx", "ty", F.posexplode(
+            F.arrays_zip(*arrays) if len(arrays) > 1 else arrays[0]
+        ).alias("pix", "v"))
+        if where is not None:
+            px = px.filter(where)
+        return px.select(
+            F.lit(tag).alias("tag"), gx.alias("a"), gy.alias("b"),
+            *[
+                (F.col(x) if isinstance(x, str)
+                 else F.lit(x) if isinstance(x, int) else x)
+                .cast("long").alias(n)
+                for n, x in zip("cde", (c, d, e))
+            ],
+        )
+
     # ONE raster build feeds every half, taken with ONE Arrow collect of
     # the (tiny, registry-fixed 512-px) raster: the halves plan over a
-    # local leaf, and its pandas twin lets every one-shot halo pass over
-    # tiles_r run driver-side with identical output
-    # (focal._halo_apply_driver — r6)
+    # local leaf, so every one-shot halo pass over it runs driver-side with
+    # identical output (focal._halo_apply_driver — r6)
     _tiles_tbl = _hotspot_tiles(spark, sf_dir).toArrow()
     tiles_r = local_relation(spark, _tiles_tbl, _tiles_tbl.column_names)
-    tiles_r._halo_driver_pdf = _tiles_tbl.to_pandas()
-    grads = terrain.terrain_gradients(tiles_r, res)
-    ed = terrain.flow_edges(terrain.d8_flow(tiles_r, res), res)
-    # the CC loop (iterative, driver actions) overlaps the terrain fixpoint
-    # chains further down; its future is resolved after they launch
-    from concurrent.futures import ThreadPoolExecutor
-
-    _cc_pool = ThreadPoolExecutor(1)
-    _comp_fut = _cc_pool.submit(
-        connected_components,
-        ed.filter(F.col("dst").isNotNull()).select("src", "dst"),
-        src="src", dst="dst", nodes=ed.select("src"), id_col="src",
+    # the EDT sources: the same raster with counts under _EDT_MIN_Z zeroed,
+    # one more local leaf, so the radius-6 EDT halo pass is driver-side too
+    src_tiles = local_relation(
+        spark,
+        {
+            "tx": _tiles_tbl["tx"], "ty": _tiles_tbl["ty"],
+            "counts": [
+                np.where(c >= _EDT_MIN_Z, c, 0)
+                for c in _tiles_tbl["counts"].to_numpy(zero_copy_only=False)
+            ],
+        },
+        "tx long, ty long, counts array<long>",
     )
-    ter = (
-        grads.select(
-            "tx", "ty",
-            F.posexplode(F.arrays_zip("dzdx8", "dzdy8")).alias("pix", "g"),
-        )
-        .filter((F.col("g.dzdx8") != 0) | (F.col("g.dzdy8") != 0))
-        .select(
-            F.lit("ter").alias("tag"),
-            gx.alias("a"), gy.alias("b"),
-            F.col("g.dzdx8").alias("c"),
-            F.col("g.dzdy8").alias("d"),
-            F.lit(0).cast("long").alias("e"),
-        )
-    )
-    hot = q_hotspot_cells(spark, sf_dir, tiles=tiles_r).select(
-        F.lit("hot").alias("tag"),
-        F.col("gx").alias("a"),
-        F.col("gy").alias("b"),
-        F.col("n").alias("c"),
-        F.col("fs").alias("d"),
-        F.col("z_e6").alias("e"),
-    )
-    pyr = q_tile_pyramid(spark, sf_dir, tiles=tiles_r).select(
-        F.lit("pyr").alias("tag"),
-        F.col("level").alias("a"),
-        F.col("gx").alias("b"),
-        F.col("gy").alias("c"),
-        F.col("n").alias("d"),
-        F.lit(-1).cast("long").alias("e"),
-    )
+    flow = terrain.d8_flow(tiles_r, res)
     obs_df = (
         tiles_r.select("tx", "ty", F.posexplode("counts").alias("pix", "z"))
         .select(
@@ -1082,13 +1078,6 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_VIS_N_OBS)
         .select("gx", "gy")
     )
-    # r6: kick the iterative chains off NOW, before the main thread builds
-    # the dozen non-iterative half plans (pure Catalyst work) — their driver
-    # actions interleave with plan construction instead of running after it.
-    # cost needs only the all-ones rect + obs_df; fill -> flats ->
-    # {strahler || flowacc} is its own chain; CC was submitted above.
-    # Results are deterministic regardless of interleaving (every op is a
-    # fixpoint / exact solve on its own input).
     fullt = local_relation(
         spark, [(tx, ty) for tx in range(-2, 2) for ty in range(-1, 1)],
         "tx long, ty long",
@@ -1097,330 +1086,228 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tx", "ty",
         F.array_repeat(F.lit(1).cast("long"), res * res).alias("counts"),
     )
-    _iter_pool = ThreadPoolExecutor(2)
-    _cost_fut = _iter_pool.submit(
-        terrain.cost_surface, ones_cost, res, obs_df, 8
-    )
 
     def _hydro_chain():
         filled = terrain.fill_depressions(tiles_r, res)
         flats = terrain.resolve_flats(filled, res)
-        with ThreadPoolExecutor(1) as _ex2:
-            _st_fut = _ex2.submit(terrain.strahler_order, flats, res)
-            acc = terrain.flow_accumulation(flats, res)
-            st = _st_fut.result()
-        return filled, flats, st, acc
-
-    _hydro_fut = _iter_pool.submit(_hydro_chain)
-    vis = (
-        terrain.viewshed(
-            tiles_r, res, obs_df,
-            radius=_VIS_RADIUS, observer_height=_VIS_HEIGHT,
+        return (
+            filled, flats, terrain.strahler_order(flats, res),
+            terrain.flow_accumulation(flats, res),
         )
-        .select("tx", "ty", F.posexplode("vis").alias("pix", "v"))
-        .select(
-            F.lit("vis").alias("tag"),
-            gx.alias("a"), gy.alias("b"),
-            F.col("v").cast("long").alias("c"),
-            F.lit(-1).cast("long").alias("d"),
+
+    # r6: the iterative operators (driver actions per round) run on the
+    # pool — basins' CC, cost's halo Dijkstra and the fill -> flats ->
+    # strahler -> flowacc chain — while the main thread builds the
+    # one-shot half plans (pure Catalyst work), so their driver actions
+    # interleave with plan construction instead of running after it.
+    # Results are deterministic regardless of interleaving (every op is a
+    # fixpoint / exact solve on its own input).
+    with ThreadPoolExecutor(3) as pool:
+        bas_fut = pool.submit(terrain.basins, flow, res)
+        cost_fut = pool.submit(terrain.cost_surface, ones_cost, res, obs_df, 8)
+        hydro_fut = pool.submit(_hydro_chain)
+        ter = _pixel_half(
+            "ter", terrain.terrain_gradients(tiles_r, res),
+            ["dzdx8", "dzdy8"], "v.dzdx8", "v.dzdy8", 0,
+            where=(F.col("v.dzdx8") != 0) | (F.col("v.dzdy8") != 0),
+        )
+        hot = q_hotspot_cells(spark, sf_dir, tiles=tiles_r).select(
+            F.lit("hot").alias("tag"),
+            F.col("gx").alias("a"),
+            F.col("gy").alias("b"),
+            F.col("n").alias("c"),
+            F.col("fs").alias("d"),
+            F.col("z_e6").alias("e"),
+        )
+        pyr = q_tile_pyramid(spark, sf_dir, tiles=tiles_r).select(
+            F.lit("pyr").alias("tag"),
+            F.col("level").alias("a"),
+            F.col("gx").alias("b"),
+            F.col("gy").alias("c"),
+            F.col("n").alias("d"),
             F.lit(-1).cast("long").alias("e"),
         )
-    )
-    src_tiles = tiles_r.select(
-        "tx", "ty",
-        F.transform(
-            "counts",
-            lambda c: F.when(c >= _EDT_MIN_Z, c)
-            .otherwise(F.lit(0)).cast("long"),
-        ).alias("counts"),
-    )
-    # same threshold mask applied to the collected frame so the radius-6
-    # EDT halo pass rides the driver path too (exact integer compare —
-    # identical values either way)
-    import numpy as _np
-    import pandas as _pd
-
-    _tp = tiles_r._halo_driver_pdf
-    src_tiles._halo_driver_pdf = _pd.DataFrame({
-        "tx": _tp["tx"], "ty": _tp["ty"],
-        "counts": [
-            _np.where(
-                _np.asarray(c, dtype=_np.int64) >= _EDT_MIN_Z,
-                _np.asarray(c, dtype=_np.int64), 0
-            ).tolist()
-            for c in _tp["counts"]
-        ],
-    })
-    edt = (
-        terrain.distance_transform(
-            src_tiles, res, radius=_VIS_RADIUS, allocate=True
+        vis = _pixel_half(
+            "vis",
+            terrain.viewshed(
+                tiles_r, res, obs_df,
+                radius=_VIS_RADIUS, observer_height=_VIS_HEIGHT,
+            ),
+            ["vis"], "v",
         )
-        .select(
-            "tx", "ty",
-            F.posexplode(F.arrays_zip("dist2", "alloc")).alias("pix", "v"),
+        edt = _pixel_half(
+            "edt",
+            terrain.distance_transform(
+                src_tiles, res, radius=_VIS_RADIUS, allocate=True
+            ),
+            ["dist2", "alloc"], "v.dist2", "v.alloc",
         )
-        .select(
-            F.lit("edt").alias("tag"),
-            gx.alias("a"), gy.alias("b"),
-            F.col("v.dist2").cast("long").alias("c"),
-            F.col("v.alloc").cast("long").alias("d"),
-            F.lit(-1).cast("long").alias("e"),
-        )
-    )
-    from pyspark.sql import Window as _W
-
-    pitch = _HOTSPOT_TILE / res
-    bbase = (
-        tiles_r.select("tx", "ty", F.posexplode("counts").alias("pix", "z"))
-        .select(
-            gx.alias("gx"), gy.alias("gy"),
-            F.col("z").cast("long").alias("z"),
-        )
-        .orderBy(F.col("z").desc(), "gx", "gy")
-        .limit(_BURN_N)
-    )
-    bobs = bbase.withColumn(
-        "i0",
-        F.row_number().over(
-            _W.orderBy(F.col("z").desc(), "gx", "gy")
-        ) - 1,
-    )
-    cx = (F.col("gx") + F.lit(0.5)) * F.lit(pitch)
-    cy = (F.col("gy") + F.lit(0.5)) * F.lit(pitch)
-    r_out = (F.lit(3) + F.lit(2) * F.col("i0")).cast("double") * F.lit(pitch)
-    r_hole = F.lit(1.5 * pitch)
-
-    def _diamond(rad):
-        def pt(x, y):
-            return F.struct(x.alias("x"), y.alias("y"))
-
-        return F.array(
-            pt(cx + rad, cy), pt(cx, cy + rad),
-            pt(cx - rad, cy), pt(cx, cy - rad),
-        )
-
-    brings = F.when(
-        F.col("i0") == 0, F.array(_diamond(r_out), _diamond(r_hole))
-    ).otherwise(F.array(_diamond(r_out)))
-    bpolys = bobs.select(
-        F.col("i0").cast("long").alias("poly_id"),
-        brings.alias("rings"),
-        (F.lit(100) + F.col("i0")).cast("long").alias("v"),
-        F.col("i0").cast("long").alias("pri"),
-    )
-    burn = raster.rasterize_polygons(
-        bpolys, _HOTSPOT_TILE, res, rings_col="rings",
-        value_col="v", priority_col="pri",
-    ).select(
-        F.lit("burn").alias("tag"),
-        F.col("gx").alias("a"),
-        F.col("gy").alias("b"),
-        F.col("value").alias("c"),
-        F.col("poly_id").alias("d"),
-        F.lit(-1).cast("long").alias("e"),
-    )
-    from engine import focal as _focal
-
-    mi = _focal.morans_i(tiles_r, res, radius=1)
-    jc = _focal.join_counts(tiles_r, res, radius=1, thresh=0)
-    stat = (
-        mi.select(
-            F.lit("stat").alias("tag"),
-            F.lit(0).cast("long").alias("a"),
-            F.col("n_cells").alias("b"),
-            F.col("w_sum").alias("c"),
-            F.floor(F.col("moran_i") * F.lit(1000000000.0))
-            .cast("long").alias("d"),
-            F.lit(-1).cast("long").alias("e"),
-        )
-        .unionByName(
-            jc.select(
-                F.lit("stat").alias("tag"),
-                F.lit(1).cast("long").alias("a"),
-                F.col("n_black").alias("b"),
-                F.col("joins").alias("c"),
-                F.col("bb").alias("d"),
-                F.col("bw").alias("e"),
+        pitch = _HOTSPOT_TILE / res
+        bbase = (
+            tiles_r.select(
+                "tx", "ty", F.posexplode("counts").alias("pix", "z")
             )
+            .select(
+                gx.alias("gx"), gy.alias("gy"),
+                F.col("z").cast("long").alias("z"),
+            )
+            .orderBy(F.col("z").desc(), "gx", "gy")
+            .limit(_BURN_N)
         )
-        .unionByName(
-            jc.select(
+        bobs = bbase.withColumn(
+            "i0",
+            F.row_number().over(
+                Window.orderBy(F.col("z").desc(), "gx", "gy")
+            ) - 1,
+        )
+        cx = (F.col("gx") + F.lit(0.5)) * F.lit(pitch)
+        cy = (F.col("gy") + F.lit(0.5)) * F.lit(pitch)
+        r_out = (
+            (F.lit(3) + F.lit(2) * F.col("i0")).cast("double") * F.lit(pitch)
+        )
+        r_hole = F.lit(1.5 * pitch)
+
+        def _diamond(rad):
+            def pt(x, y):
+                return F.struct(x.alias("x"), y.alias("y"))
+
+            return F.array(
+                pt(cx + rad, cy), pt(cx, cy + rad),
+                pt(cx - rad, cy), pt(cx, cy - rad),
+            )
+
+        brings = F.when(
+            F.col("i0") == 0, F.array(_diamond(r_out), _diamond(r_hole))
+        ).otherwise(F.array(_diamond(r_out)))
+        bpolys = bobs.select(
+            F.col("i0").cast("long").alias("poly_id"),
+            brings.alias("rings"),
+            (F.lit(100) + F.col("i0")).cast("long").alias("v"),
+            F.col("i0").cast("long").alias("pri"),
+        )
+        burn = raster.rasterize_polygons(
+            bpolys, _HOTSPOT_TILE, res, rings_col="rings",
+            value_col="v", priority_col="pri",
+        ).select(
+            F.lit("burn").alias("tag"),
+            F.col("gx").alias("a"),
+            F.col("gy").alias("b"),
+            F.col("value").alias("c"),
+            F.col("poly_id").alias("d"),
+            F.lit(-1).cast("long").alias("e"),
+        )
+        mi = focal.morans_i(tiles_r, res, radius=1)
+        jc = focal.join_counts(tiles_r, res, radius=1, thresh=0)
+        stat = (
+            mi.select(
                 F.lit("stat").alias("tag"),
-                F.lit(2).cast("long").alias("a"),
-                F.col("ww").alias("b"),
-                F.floor(F.col("z_bb") * F.lit(1000000.0))
-                .cast("long").alias("c"),
-                F.floor(F.col("z_bw") * F.lit(1000000.0))
+                F.lit(0).cast("long").alias("a"),
+                F.col("n_cells").alias("b"),
+                F.col("w_sum").alias("c"),
+                F.floor(F.col("moran_i") * F.lit(1000000000.0))
                 .cast("long").alias("d"),
                 F.lit(-1).cast("long").alias("e"),
             )
-        )
-    )
-    lisa = (
-        _focal.local_morans(tiles_r, res, radius=1)
-        .select(
-            "tx", "ty",
-            F.posexplode(F.arrays_zip("local", "quad")).alias("pix", "v"),
-        )
-        .select(
-            F.lit("lisa").alias("tag"),
-            gx.alias("a"), gy.alias("b"),
-            F.floor(F.col("v.local") * F.lit(1000000000.0))
-            .cast("long").alias("c"),
-            F.col("v.quad").cast("long").alias("d"),
-            F.lit(-1).cast("long").alias("e"),
-        )
-    )
-    curv = (
-        terrain.curvature_numerators(tiles_r, res)
-        .select(
-            "tx", "ty",
-            F.posexplode(
-                F.arrays_zip("zt_d", "zt_e", "zt_f")
-            ).alias("pix", "v"),
-        )
-        .filter(
-            (F.col("v.zt_d") != 0) | (F.col("v.zt_e") != 0)
-            | (F.col("v.zt_f") != 0)
-        )
-        .select(
-            F.lit("curv").alias("tag"),
-            gx.alias("a"), gy.alias("b"),
-            F.col("v.zt_d").cast("long").alias("c"),
-            F.col("v.zt_e").cast("long").alias("d"),
-            F.col("v.zt_f").cast("long").alias("e"),
-        )
-    )
-    lf = (
-        terrain.landform_classes(
-            tiles_r, res, r_small=1, r_large=2,
-            thresh_small_e3=500, thresh_large_e3=700, flat_num2=1000,
-        )
-        .select("tx", "ty", F.posexplode("landform").alias("pix", "v"))
-        .select(
-            F.lit("lf").alias("tag"),
-            gx.alias("a"), gy.alias("b"),
-            F.col("v").cast("long").alias("c"),
-            F.lit(-1).cast("long").alias("d"),
-            F.lit(-1).cast("long").alias("e"),
-        )
-    )
-    _hz16 = [c for i in range(8) for c in (f"h{i}_num", f"h{i}_den")]
-    hor = (
-        terrain.horizon_angles(tiles_r, res, _VIS_RADIUS)
-        .select(
-            "tx", "ty",
-            F.posexplode(F.arrays_zip(*_hz16)).alias("pix", "v"),
-        )
-        .select(
-            gx.alias("a"), gy.alias("b"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).cast("long").alias("dir"),
-                            F.col(f"v.h{i}_num").cast("long").alias("num"),
-                            F.col(f"v.h{i}_den").cast("long").alias("den"),
-                        )
-                        for i in range(8)
-                    ]
+            .unionByName(
+                jc.select(
+                    F.lit("stat").alias("tag"),
+                    F.lit(1).cast("long").alias("a"),
+                    F.col("n_black").alias("b"),
+                    F.col("joins").alias("c"),
+                    F.col("bb").alias("d"),
+                    F.col("bw").alias("e"),
                 )
-            ).alias("d"),
+            )
+            .unionByName(
+                jc.select(
+                    F.lit("stat").alias("tag"),
+                    F.lit(2).cast("long").alias("a"),
+                    F.col("ww").alias("b"),
+                    F.floor(F.col("z_bb") * F.lit(1000000.0))
+                    .cast("long").alias("c"),
+                    F.floor(F.col("z_bw") * F.lit(1000000.0))
+                    .cast("long").alias("d"),
+                    F.lit(-1).cast("long").alias("e"),
+                )
+            )
         )
-        .select(
-            F.lit("hor").alias("tag"), "a", "b",
-            F.col("d.dir").alias("c"),
-            F.col("d.num").alias("d"),
-            F.col("d.den").alias("e"),
+        lisa = _pixel_half(
+            "lisa", focal.local_morans(tiles_r, res, radius=1),
+            ["local", "quad"],
+            F.floor(F.col("v.local") * F.lit(1000000000.0)), "v.quad",
         )
-    )
-    gdal = (
-        terrain.surface_products(tiles_r, res)
-        .select(
-            "tx", "ty",
-            F.posexplode(
-                F.arrays_zip("tri", "tpi_num", "tpi_den", "rough")
-            ).alias("pix", "v"),
+        curv = _pixel_half(
+            "curv", terrain.curvature_numerators(tiles_r, res),
+            ["zt_d", "zt_e", "zt_f"], "v.zt_d", "v.zt_e", "v.zt_f",
+            where=(F.col("v.zt_d") != 0) | (F.col("v.zt_e") != 0)
+            | (F.col("v.zt_f") != 0),
         )
-        .select(
-            F.lit("gdal").alias("tag"),
-            gx.alias("a"), gy.alias("b"),
-            F.col("v.tri").cast("long").alias("c"),
-            (F.col("v.tpi_num") * 16 + F.col("v.tpi_den"))
-            .cast("long").alias("d"),
-            F.col("v.rough").cast("long").alias("e"),
+        lf = _pixel_half(
+            "lf",
+            terrain.landform_classes(
+                tiles_r, res, r_small=1, r_large=2,
+                thresh_small_e3=500, thresh_large_e3=700, flat_num2=1000,
+            ),
+            ["landform"], "v",
         )
-    )
-    # join the chains launched right after obs_df above
-    filled_r, flats_r, st_r, acc_r = _hydro_fut.result()
-    cost_r = _cost_fut.result()
-    _iter_pool.shutdown()
-    comp = _comp_fut.result()
-    _cc_pool.shutdown()
+        _hz16 = [c for i in range(8) for c in (f"h{i}_num", f"h{i}_den")]
+        hor = (
+            terrain.horizon_angles(tiles_r, res, _VIS_RADIUS)
+            .select(
+                "tx", "ty",
+                F.posexplode(F.arrays_zip(*_hz16)).alias("pix", "v"),
+            )
+            .select(
+                gx.alias("a"), gy.alias("b"),
+                F.explode(
+                    F.array(
+                        *[
+                            F.struct(
+                                F.lit(i).cast("long").alias("dir"),
+                                F.col(f"v.h{i}_num").cast("long").alias("num"),
+                                F.col(f"v.h{i}_den").cast("long").alias("den"),
+                            )
+                            for i in range(8)
+                        ]
+                    )
+                ).alias("d"),
+            )
+            .select(
+                F.lit("hor").alias("tag"), "a", "b",
+                F.col("d.dir").alias("c"),
+                F.col("d.num").alias("d"),
+                F.col("d.den").alias("e"),
+            )
+        )
+        gdal = _pixel_half(
+            "gdal", terrain.surface_products(tiles_r, res),
+            ["tri", "tpi_num", "tpi_den", "rough"], "v.tri",
+            F.col("v.tpi_num") * 16 + F.col("v.tpi_den"), "v.rough",
+        )
+    # the d8 half: the flow edges with their basin labels, joined per pixel
     d8 = (
-        ed.join(comp, ed["src"] == comp["id"])
+        terrain.flow_edges(flow, res)
+        .join(bas_fut.result(), ["gx", "gy"])
         .select(
             F.lit("d8").alias("tag"),
             F.col("gx").alias("a"),
             F.col("gy").alias("b"),
             F.col("d8_dir").alias("c"),
             F.col("d8_key").alias("d"),
-            F.col("comp").alias("e"),
+            F.col("basin").alias("e"),
         )
     )
-    fla = (
-        flats_r
-        .select(
-            "tx", "ty",
-            F.posexplode(
-                F.arrays_zip("d8_dir", "d8_key", "flat_d")
-            ).alias("pix", "v"),
-        )
-        .select(
-            F.lit("flats").alias("tag"),
-            gx.alias("a"), gy.alias("b"),
-            F.col("v.d8_dir").cast("long").alias("c"),
-            F.col("v.d8_key").cast("long").alias("d"),
-            F.col("v.flat_d").cast("long").alias("e"),
-        )
+    filled_r, flats_r, st_r, acc_r = hydro_fut.result()
+    fla = _pixel_half(
+        "flats", flats_r, ["d8_dir", "d8_key", "flat_d"],
+        "v.d8_dir", "v.d8_key", "v.flat_d",
     )
-    fil = (
-        filled_r
-        .join(tiles_r, ["tx", "ty"])
-        .select(
-            "tx", "ty",
-            F.posexplode(F.arrays_zip("filled", "counts")).alias("pix", "v"),
-        )
-        .select(
-            F.lit("fill").alias("tag"),
-            gx.alias("a"), gy.alias("b"),
-            F.col("v.filled").cast("long").alias("c"),
-            (F.col("v.filled") - F.col("v.counts")).cast("long").alias("d"),
-            F.lit(-1).cast("long").alias("e"),
-        )
+    fil = _pixel_half(
+        "fill", filled_r.join(tiles_r, ["tx", "ty"]), ["filled", "counts"],
+        "v.filled", F.col("v.filled") - F.col("v.counts"),
     )
-    stro = (
-        st_r
-        .select("tx", "ty", F.posexplode("strahler").alias("pix", "v"))
-        .select(
-            F.lit("strahler").alias("tag"),
-            gx.alias("a"), gy.alias("b"),
-            F.col("v").cast("long").alias("c"),
-            F.lit(-1).cast("long").alias("d"),
-            F.lit(-1).cast("long").alias("e"),
-        )
-    )
-    facc = (
-        acc_r
-        .select("tx", "ty", F.posexplode("acc").alias("pix", "v"))
-        .select(
-            F.lit("flowacc").alias("tag"),
-            gx.alias("a"), gy.alias("b"),
-            F.col("v").cast("long").alias("c"),
-            F.lit(-1).cast("long").alias("d"),
-            F.lit(-1).cast("long").alias("e"),
-        )
-    )
+    stro = _pixel_half("strahler", st_r, ["strahler"], "v")
+    facc = _pixel_half("flowacc", acc_r, ["acc"], "v")
     # cost half: uniform-cost (all-ones) raster over the EXPLICIT full world
     # rectangle (tx -2..1, ty -1..0 at the 90-degree tile grid — anchors span
     # lon [-180,180) x lat [-90,90), so every data pixel is inside), sources
@@ -1431,17 +1318,7 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both move multipliers, seam exchange, stationarity fast path — bit for
     # bit; barrier/unreachable semantics stay python-oracle-pinned in
     # tests/test_terrain.py.
-    cost = (
-        cost_r
-        .select("tx", "ty", F.posexplode("cost_dist").alias("pix", "v"))
-        .select(
-            F.lit("cost").alias("tag"),
-            gx.alias("a"), gy.alias("b"),
-            F.col("v").cast("long").alias("c"),
-            F.lit(-1).cast("long").alias("d"),
-            F.lit(-1).cast("long").alias("e"),
-        )
-    )
+    cost = _pixel_half("cost", cost_fut.result(), ["cost_dist"], "v")
     return (
         hot.unionByName(pyr).unionByName(ter).unionByName(d8)
         .unionByName(vis).unionByName(edt).unionByName(burn)

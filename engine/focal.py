@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .raster import pixel_xy
-from .session import local_relation
+from .session import local_relation, local_table
 
 
 def _strip_exprs(res: int, r: int):
@@ -141,9 +141,9 @@ def _halo_apply_driver(
     same zero-padded (res+2r)^2 halo + presence mask per tile, assembled
     with numpy slices from the neighbor grids instead of a strip shuffle,
     and the same `finish` kernel — output rows and schema identical. Used
-    when the caller attaches a pandas frame of (tx, ty, counts) as
-    `df._halo_driver_pdf` (the cover `_pip_used_res` attribute idiom); the
-    distributed path keeps parity coverage in tests/test_terrain.py."""
+    when the input is a local relation: `pdf` is its (tx, ty, counts)
+    table; the distributed path keeps parity coverage in
+    tests/test_terrain.py."""
     keys, grids = _tile_grids(pdf, res)
     out_fields = (
         [("focal", T.ArrayType(T.LongType()))] if fields is None else fields
@@ -165,13 +165,7 @@ def _halo_apply_driver(
         [T.StructField("tx", T.LongType()), T.StructField("ty", T.LongType())]
         + [T.StructField(n, t) for n, t in out_fields]
     )
-    out_pdf = pd.DataFrame(rows)
-    out = local_relation(spark, out_pdf, schema)
-    # generic driver-composition hook: downstream operators that can run
-    # their own kernels on an already-collected frame (e.g.
-    # flow_accumulation's stage 1) read this (r6)
-    out._driver_pdf = out_pdf
-    return out
+    return local_relation(spark, pd.DataFrame(rows), schema)
 
 
 def _halo_apply(
@@ -193,13 +187,14 @@ def _halo_apply(
     argument (kernels that need the tile's GLOBAL position, e.g. viewshed
     locating broadcast observers in patch coordinates).
 
-    r6: a caller that has already collected a small raster can attach the
-    pandas frame as `tiles._halo_driver_pdf`; the whole exchange+kernel
-    then runs driver-side with identical output (see _halo_apply_driver)."""
-    drv = getattr(tiles, "_halo_driver_pdf", None)
+    r6: when `tiles` is a local relation (its rows already on the
+    driver), the whole exchange+kernel runs driver-side with identical
+    output (see _halo_apply_driver)."""
+    drv = local_table(tiles)
     if drv is not None and r <= res:
         return _halo_apply_driver(
-            tiles.sparkSession, drv, res, r, finish, fields, pass_key
+            tiles.sparkSession, drv.to_pandas(), res, r, finish, fields,
+            pass_key,
         )
     strips = _strip_exprs(res, r)
     contrib = F.array(

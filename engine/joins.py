@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import cells
-from .session import local_relation
+from .session import local_relation, local_table
 
 
 # ---------------------------------------------------------------------------
@@ -156,10 +156,10 @@ def polygon_cover(
 def _cover_relation(spark, parts, res_min: int, rings=None) -> DataFrame:
     """The driver-built cover as one local relation, assembled as columns
     from per-polygon (poly_id, res, cells, full_inside) parts; `rings`
-    adds the per-row ring payload. The cover's resolution set and size
-    are known right here — both are pinned on the frame so pip_join never
-    issues a per-call distinct().collect() and _materialize_if_large never
-    issues a count() action."""
+    adds the per-row ring payload. The cover's resolution set is known
+    right here and pinned on the frame, so pip_join never issues a per-call
+    distinct().collect(); its size is the local table's row count, so
+    _materialize_if_large never issues a count() action."""
     n = [len(p[2]) for p in parts]
     cols = {
         "poly_id": np.repeat(np.array([p[0] for p in parts], np.int64), n),
@@ -179,7 +179,6 @@ def _cover_relation(spark, parts, res_min: int, rings=None) -> DataFrame:
     df._pip_used_res = sorted({int(p[1]) for p in parts if len(p[2])}) or [
         res_min
     ]
-    df._pip_known_rows = int(sum(n))
     return df
 
 
@@ -300,7 +299,6 @@ def cleanup_cover_dirs() -> int:
 
 def _materialize_if_large(
     cover: DataFrame, threshold: int = 20000, force: bool = False,
-    known_rows: int | None = None,
 ) -> DataFrame:
     """A driver-built cover is a LocalRelation: it gets re-serialized by the
     single-threaded driver into every job that uses it (measured ~10s of serial
@@ -319,15 +317,14 @@ def _materialize_if_large(
     global _COVER_ATEXIT_REGISTERED
 
     used_res = getattr(cover, "_pip_used_res", None)
-    if known_rows is None:
-        known_rows = getattr(cover, "_pip_known_rows", None)
+    table = local_table(cover)
     if not force:
-        # driver-built covers pass their row count (they just built the rows
-        # in python) — the under-threshold decision then costs ZERO Spark
+        # a driver-built cover is a local relation whose table gives the
+        # row count — the under-threshold decision then costs ZERO Spark
         # actions instead of a plan-toString + count per pip call (~0.5s of
         # serial driver latency per join on this host)
-        if known_rows is not None:
-            if known_rows <= threshold:
+        if table is not None:
+            if table.num_rows <= threshold:
                 return cover
         else:
             plan = cover._jdf.queryExecution().logical().toString()

@@ -110,7 +110,7 @@ def local_relation(spark: SparkSession, data, schema) -> DataFrame:
     Naive datetimes keep their session-timezone meaning (pyspark localizes
     naive Arrow timestamps from `spark.sql.session.timeZone`); pandas input
     keeps pandas null semantics (NaN/None -> null), as pyspark's own Arrow
-    path does."""
+    path does. The frame keeps its table (`local_table`)."""
     import pandas as pd
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -152,9 +152,19 @@ def local_relation(spark: SparkSession, data, schema) -> DataFrame:
     ]
     if arrow_schema is None:
         table = pa.Table.from_arrays(arrays, names)
-        return spark.createDataFrame(table, names)
-    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
-    return spark.createDataFrame(table, schema)
+        df = spark.createDataFrame(table, names)
+    else:
+        table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+        df = spark.createDataFrame(table, schema)
+    df._local_table = table
+    return df
+
+
+def local_table(df: DataFrame):
+    """The pyarrow.Table a `local_relation` frame was built from, or None
+    for any other frame (a frame derived from it included): the one way a
+    driver fast path finds rows the driver already holds."""
+    return getattr(df, "_local_table", None)
 
 
 def _arrow_safe(dt):

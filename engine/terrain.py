@@ -55,7 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .raster import floor_div, pixel_xy, tile_pixel
-from .session import local_relation, truncate_lineage
+from .session import local_relation, local_table, truncate_lineage
 
 # Horn stencils as focal_stencil weight maps ((dx, dy) -> weight, y up).
 HORN_DZDX = {
@@ -621,14 +621,15 @@ def flow_edges(flow: DataFrame, res: int) -> DataFrame:
     gy+2^20 — keeps ids positive for tile coords within +-2^20); dst is
     null for sinks.
 
-    r6: a flow frame carrying its collected pandas twin (_driver_pdf, set
-    by the driver halo path) derives the edge frame in numpy — the same
+    r6: a flow frame that is a local relation (the driver halo path
+    returns one) derives the edge frame in numpy from its table — the same
     explode/offset/pack integer math — and returns it as a local relation
     (parity pinned in tests/test_terrain.py)."""
-    drv = getattr(flow, "_driver_pdf", None)
+    drv = local_table(flow)
     if drv is not None:
         import pyarrow as pa
 
+        drv = drv.to_pandas()
         offs = np.asarray(_D8_OFFSETS, dtype=np.int64)
         gxs, gys, dirs, keys = [], [], [], []
         for tx, ty, dd, kk in zip(
@@ -999,11 +1000,12 @@ def flow_accumulation(
 
     spark = flow.sparkSession
     cols = ["tx", "ty", "d8_dir"] + ([weight_col] if weight_col else [])
-    # r6: a flow frame produced by the driver halo path (resolve_flats on a
-    # sub-threshold raster) carries its pandas twin — all three stages then
-    # run the SAME kernels directly on it (stage 2 in numpy): zero Spark
-    # actions, and the result is a local relation with no Python exec
-    _drv_pdf = getattr(flow, "_driver_pdf", None)
+    # r6: a flow frame that is a local relation (resolve_flats on a
+    # sub-threshold raster returns one) — all three stages then run the
+    # SAME kernels on its table (stage 2 in numpy): zero Spark actions,
+    # and the result is a local relation with no Python exec
+    _drv_tbl = local_table(flow)
+    _drv_pdf = None if _drv_tbl is None else _drv_tbl.to_pandas()
 
     def base_mass(pdf, i):
         if weight_col is None:
@@ -1120,7 +1122,7 @@ def flow_accumulation(
                 "tx long, ty long, acc array<long>",
             )
         # contracted forest larger than the driver gate (cannot happen for
-        # attribute-gated rasters, but stay safe): fall through distributed
+        # driver-solved rasters, but stay safe): fall through distributed
 
     flow = flow.select(*cols).persist()
 
@@ -2377,13 +2379,9 @@ def _driver_fixpoint(
             "counts": [grids[k].reshape(-1).tolist() for k in keys],
         }
     )
-    res_df = local_relation(
-        spark, out, "tx long, ty long, counts array<long>"
-    )
-    # downstream one-shot halo passes (e.g. resolve_flats' assign) can run
-    # driver-side on the already-collected state (focal._halo_apply_driver)
-    res_df._halo_driver_pdf = out
-    return res_df
+    # a local relation: downstream one-shot halo passes (e.g. resolve_flats'
+    # assign) run driver-side on it (focal._halo_apply_driver)
+    return local_relation(spark, out, "tx long, ty long, counts array<long>")
 
 
 def fill_depressions(

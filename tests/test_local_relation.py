@@ -1,7 +1,9 @@
 """engine.session.local_relation: every driver-built relation is an Arrow-
 built LocalTableScan with the same schema and rows whether the session has
-Arrow conversion on or off; the queries built on such relations run no
-Python exec; and no engine code builds a relation any other way."""
+Arrow conversion on or off, and keeps the table it was built from
+(`local_table`, which driver fast paths read); the queries built on such
+relations run no Python exec; and no engine code builds a relation any
+other way."""
 
 import ast
 import calendar
@@ -16,8 +18,8 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
-from engine import joins, synth
-from engine.session import local_relation
+from engine import joins, synth, terrain
+from engine.session import local_relation, local_table
 from tests.conftest import spark  # noqa: F401
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
@@ -68,6 +70,39 @@ def test_local_table_scan_leaf(sess):
     assert not PYTHON_EXEC.search(_plan(df))
 
 
+def test_table_carrier_holds_rows_and_schema(sess):
+    rows = [(1, "a", [1, 2]), (2, None, [])]
+    df = local_relation(sess, rows, "id long, s string, xs array<long>")
+    tbl = local_table(df)
+    assert tbl.column_names == ["id", "s", "xs"]
+    assert [str(t) for t in tbl.schema.types] == [
+        "int64", "string", "list<element: int64>"
+    ]
+    assert tbl.to_pylist() == [dict(zip(tbl.column_names, r)) for r in rows]
+    assert [tuple(r) for r in df.collect()] == rows
+
+
+def test_derived_frame_has_no_table_carrier(sess):
+    df = local_relation(sess, [(1, 10), (2, 20)], "k long, v long")
+    other = local_relation(sess, [(1, "x")], "k long, w string")
+    assert local_table(df.select("k")) is None
+    assert local_table(df.filter(F.col("v") > 10)) is None
+    assert local_table(df.join(other, "k")) is None
+    assert local_table(sess.range(3)) is None
+
+
+def test_local_input_takes_driver_halo_path(sess):
+    res = 4
+    rows = [(tx, 0, [(tx * 7 + i) % 5 for i in range(res * res)])
+            for tx in range(2)]
+    schema = "tx long, ty long, counts array<long>"
+    drv = terrain.terrain_gradients(local_relation(sess, rows, schema), res)
+    dist = terrain.terrain_gradients(sess.createDataFrame(rows, schema), res)
+    assert _plan(drv).startswith("LocalTableScan")
+    assert not _plan(dist).startswith("LocalTableScan")
+    assert sorted(drv.collect()) == sorted(dist.collect())
+
+
 def test_int64_nulls_kept(sess):
     big = (1 << 62) + 1  # above 2^53: must not pass through a double
     mask = [False, True, False]
@@ -111,7 +146,7 @@ def test_nested_struct_and_array_columns(sess):
     cover = joins.polygon_cover(polys, attach_rings=True)
     assert _plan(cover).startswith("LocalTableScan")
     rows = cover.collect()
-    assert len(rows) == cover._pip_known_rows > 0
+    assert len(rows) == local_table(cover).num_rows > 0
     assert sorted({r["res"] for r in rows}) == cover._pip_used_res
     rings = {r["poly_id"]: r["ring"] for r in polys.collect()}
     for r in rows:

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from engine import terrain
+from engine.session import local_relation
 from tests.conftest import spark  # noqa: F401
 
 
@@ -494,8 +495,8 @@ def test_flow_accumulation_weighted(spark):
             want[cur] += wt[c]
             cur = down[cur]
     assert got == want
-    # the driver twin (a flow frame carrying its collected pandas frame
-    # runs all three stages on the driver) gives the distributed answer,
+    # the driver twin (a flow frame that is a local relation runs all
+    # three stages on the driver) gives the distributed answer,
     # on a 2x2 tile block so that flow crosses tiles
     blk = spark.createDataFrame(
         [(tx, ty, [rng.randint(0, 9) for _ in range(res * res)],
@@ -509,7 +510,7 @@ def test_flow_accumulation_weighted(spark):
     dist = _collect_acc(
         terrain.flow_accumulation(flow, res, weight_col="wt"), res
     )
-    flow._driver_pdf = flow.toPandas()
+    flow = local_relation(spark, flow.toArrow(), flow.schema)
     drv = terrain.flow_accumulation(flow, res, weight_col="wt")
     assert drv._jdf.queryExecution().executedPlan().toString().startswith(
         "LocalTableScan"
@@ -3203,7 +3204,7 @@ def test_halo_fixpoint_driver_vs_distributed(spark, monkeypatch):
 
 
 def test_halo_apply_driver_parity(spark):
-    """r6: focal._halo_apply with an attached `_halo_driver_pdf` must emit
+    """r6: focal._halo_apply over a local relation must emit
     the exact rows of the distributed strip-shuffle path for every one-shot
     halo consumer shape: r=1 multi-field (gradients), r>1 single-field
     (tpi), pass_key (viewshed), and the radius-R EDT."""
@@ -3243,10 +3244,7 @@ def test_halo_apply_driver_parity(spark):
         ]
 
     dist = run(tiles)
-    import pandas as pd
-
-    tiles._halo_driver_pdf = tiles.toPandas()
-    drv = run(tiles)
+    drv = run(local_relation(spark, tiles.toArrow(), tiles.schema))
     assert drv == dist
 
 
@@ -3272,7 +3270,6 @@ def test_flow_edges_driver_path_arrow_off(spark):
         return sorted(tuple(r) for r in out.collect())
 
     dist = edges(tiles)
-    tiles._halo_driver_pdf = tiles.toPandas()
-    drv = edges(tiles)
+    drv = edges(local_relation(bare, tiles.toArrow(), tiles.schema))
     assert drv == dist
     assert any(r[5] is None for r in drv)  # sinks
