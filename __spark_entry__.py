@@ -24,24 +24,12 @@ from pyspark.sql import functions as F
 
 from engine import cells, joins, raster, synth
 from engine.session import local_relation
+from engine.temporal import epoch_us
 
 
 # ---------------------------------------------------------------------------
 # helpers
 # ---------------------------------------------------------------------------
-
-def _ensure_utc(spark: SparkSession) -> None:
-    """The driver calls queries() with ITS OWN session; epoch-micros comparisons
-    against DuckDB (naive-UTC) are only exact when the NTZ->TZ cast happens in
-    UTC. Force it (harmless if already UTC)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-
-def _epoch_us(col):
-    """Epoch microseconds from TIMESTAMP or TIMESTAMP_NTZ (requires session tz
-    UTC — see _ensure_utc; the NTZ -> TZ cast is then identity on the wall-clock
-    value)."""
-    return F.unix_micros(col.cast("timestamp"))
 
 def _docs_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> (doc_id, phash, lon, lat, x, y) via the deterministic pseudo-phash
@@ -157,7 +145,7 @@ def q_trip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hy = textops.cross_hash(F.concat(eid, F.lit("y")), "md5")
     pts = ev.select(
         F.col("user_id").cast("long").alias("user_id"),
-        _epoch_us(F.col("ts")).alias("ts_us"),
+        epoch_us(ev, "ts").alias("ts_us"),
         (F.pmod(hx, F.lit(360000)) / F.lit(1000.0) - F.lit(180.0)).alias("lon"),
         (F.pmod(hy, F.lit(170000)) / F.lit(1000.0) - F.lit(85.0)).alias("lat"),
     )
@@ -218,7 +206,6 @@ def q_anchor_bbox(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8-style partial+final hash aggregation (TPC-H Q1 shape). Money sums as int64
     cents (cross-engine exact)."""
-    _ensure_utc(spark)
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
@@ -259,7 +246,6 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_consecutive_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4 — consecutive-version diff via lag() (RefUtils.scala:11-42 rebuilt as a
     window): per user, emit transition rows where event_type changed."""
-    _ensure_utc(spark)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     d = ev.withColumn("prev_type", F.lag("event_type").over(w))
@@ -267,7 +253,7 @@ def q_consecutive_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("prev_type").isNotNull() & (F.col("prev_type") != F.col("event_type"))
     ).select(
         F.col("user_id").cast("long").alias("user_id"),
-        _epoch_us(F.col("ts")).alias("ts_us"),
+        epoch_us(d, "ts").alias("ts_us"),
         "prev_type",
         "event_type",
     )
@@ -300,22 +286,20 @@ def q_change_taxonomy(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_coalesce_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8 — coalesce fact rows per (entity, kind) with count/sum/extent — the rebuild
     of coalesceChanges (ChangeUtils.scala:93-104) keyed on the real pair (Q3 fix)."""
-    _ensure_utc(spark)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return ev.groupBy(
         F.col("user_id").cast("long").alias("user_id"), F.col("event_type")
     ).agg(
         F.count("*").alias("cnt"),
         F.sum(F.floor(F.col("value") * 100).cast("long")).alias("sum_value_cents"),
-        _epoch_us(F.min("ts")).alias("min_ts_us"),
-        _epoch_us(F.max("ts")).alias("max_ts_us"),
+        F.min(epoch_us(ev, "ts")).alias("min_ts_us"),
+        F.max(epoch_us(ev, "ts")).alias("max_ts_us"),
     )
 
 
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 — as-of assignment via union+window (engine.joins.asof_join): each 'click'
     event gets the latest 'login' event timestamp <= its own, per user."""
-    _ensure_utc(spark)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     left = ev.filter(F.col("event_type") == "click").select(
         F.col("event_id").cast("long").alias("event_id"),
@@ -332,7 +316,7 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_payload=["login_event_id"],
     )
     return out.select(
-        "event_id", "user_id", _epoch_us(F.col("ts")).alias("ts_us"), "login_event_id"
+        "event_id", "user_id", epoch_us(out, "ts").alias("ts_us"), "login_event_id"
     )
 
 
@@ -377,7 +361,7 @@ def q_colocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     hy = textops.cross_hash(F.concat(eid, F.lit("y")), "md5")
     fixes = ev.select(
         F.col("user_id").cast("long").alias("entity_id"),
-        _epoch_us(F.col("ts")).alias("ts_us"),
+        epoch_us(ev, "ts").alias("ts_us"),
         (F.pmod(hx, F.lit(100000)) / F.lit(1000.0)).alias("x"),
         (F.pmod(hy, F.lit(60000)) / F.lit(1000.0)).alias("y"),
     )
@@ -1284,10 +1268,9 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["tri", "tpi_num", "tpi_den", "rough"], "v.tri",
             F.col("v.tpi_num") * 16 + F.col("v.tpi_den"), "v.rough",
         )
-    # the d8 half: the flow edges with their basin labels, joined per pixel
+    # the d8 half: each pixel's flow direction with its basin label
     d8 = (
-        terrain.flow_edges(flow, res)
-        .join(bas_fut.result(), ["gx", "gy"])
+        bas_fut.result()
         .select(
             F.lit("d8").alias("tag"),
             F.col("gx").alias("a"),
@@ -1373,7 +1356,7 @@ def q_snap_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     hy = textops.cross_hash(F.concat(eid, F.lit("y")), "md5")
     fixes = ev.select(
         F.col("user_id").cast("long").alias("user_id"),
-        _epoch_us(F.col("ts")).alias("ts_us"),
+        epoch_us(ev, "ts").alias("ts_us"),
         (F.pmod(hx, F.lit(100000)) / F.lit(1000.0)).alias("x"),
         (F.pmod(hy, F.lit(60000)) / F.lit(1000.0)).alias("y"),
     )
@@ -1417,7 +1400,7 @@ def q_emerging_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
     hx = textops.cross_hash(eid, "md5")
     hy = textops.cross_hash(F.concat(eid, F.lit("y")), "md5")
     pts = ev.select(
-        _epoch_us(F.col("ts")).alias("ts_us"),
+        epoch_us(ev, "ts").alias("ts_us"),
         (F.pmod(hx, F.lit(100000)) / F.lit(1000.0)).alias("x"),
         (F.pmod(hy, F.lit(60000)) / F.lit(1000.0)).alias("y"),
     )
@@ -2440,7 +2423,6 @@ def q_change_firstorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline's first stage, ChangeUtils.scala:21-55) over the Column-math
     lineitem history — scalar projection (maps/bboxes stay internal) so the
     full 10-type emitter logic is value-checked against the DuckDB twin."""
-    _ensure_utc(spark)
     from engine import diff
 
     out = diff.first_order_changes(_lineitem_history(spark, sf_dir))
@@ -2448,7 +2430,7 @@ def q_change_firstorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("featureID").cast("long").alias("featureID"),
         F.col("changeType").cast("long").alias("changeType"),
         F.col("count").cast("long").alias("cnt"),
-        _epoch_us(F.col("timestamp")).alias("ts_us"),
+        epoch_us(out, "timestamp").alias("ts_us"),
         F.col("changeset").cast("long").alias("changeset"),
         "save",
         "propagate",
@@ -2459,7 +2441,6 @@ def q_change_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8 hash-checked on the real pipeline operator: changes_to_save ->
     engine.coalesce.coalesce_changes (ChangeUtils.scala:93-104) over the same
     derived history."""
-    _ensure_utc(spark)
     from engine import coalesce, diff
 
     fo = diff.changes_to_save(
@@ -2470,7 +2451,7 @@ def q_change_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("featureID").cast("long").alias("featureID"),
         F.col("changeType").cast("long").alias("changeType"),
         F.col("count").cast("long").alias("cnt"),
-        _epoch_us(F.col("timestamp")).alias("ts_us"),
+        epoch_us(co, "timestamp").alias("ts_us"),
         F.col("changeset").cast("long").alias("changeset"),
         F.col("depth").cast("long").alias("depth"),
     )
@@ -2486,7 +2467,6 @@ def q_change_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop_rootless=False (the documented improvement mode): top-level ways and
     relations keep geometry-only tree entries, so changes propagating INTO
     them are assigned and saved rather than silently dropped."""
-    _ensure_utc(spark)
     from engine import propagate
 
     out = propagate.propagate_changes(
@@ -2497,7 +2477,7 @@ def q_change_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("featureID").cast("long").alias("featureID"),
         F.col("changeType").cast("long").alias("changeType"),
         F.col("count").cast("long").alias("cnt"),
-        _epoch_us(F.col("timestamp")).alias("ts_us"),
+        epoch_us(out, "timestamp").alias("ts_us"),
         F.col("changeset").cast("long").alias("changeset"),
         F.col("depth").cast("long").alias("depth"),
     )
@@ -2820,7 +2800,6 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 interval variant (engine.joins.interval_join): assign each lineitem to
     the year bucket containing its shipdate (literal broadcast dim + range
     predicate)."""
-    _ensure_utc(spark)
     import datetime as dt
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
@@ -3271,7 +3250,6 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (engine.temporal.sessionize): 30-minute gap rule
     over the events stream, one output row per (user, session) with bounds +
     event count — lag + cumulative-sum window math, one shuffle on user_id."""
-    _ensure_utc(spark)
     from engine import temporal
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -3282,8 +3260,8 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("session_idx").cast("long").alias("session_idx"),
     ).agg(
         F.count("*").alias("n_events"),
-        _epoch_us(F.min("ts")).alias("start_us"),
-        _epoch_us(F.max("ts")).alias("end_us"),
+        F.min(epoch_us(s, "ts")).alias("start_us"),
+        F.max(epoch_us(s, "ts")).alias("end_us"),
     )
 
 
@@ -3291,9 +3269,8 @@ def q_window_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE-frame window (trailing 1 hour per user): int64-cents running sum —
     the time-windowed rollup shape (range frames, not row frames; peers at the
     same timestamp are included identically in both engines)."""
-    _ensure_utc(spark)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    us = epoch_us(ev, "ts")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts_us")
@@ -3504,34 +3481,26 @@ def q_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_dist/min_w + 1 = 13). Labels are packed (dist, hops) BIGINT minima,
     so dist AND the fewest-hops tie-break are engine-exact; the oracle is
     the unrolled-relaxation CTE twin (14 rounds >= the 13-round bound)."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from engine import routing
 
     sources = local_relation(
         spark, [(0, 7), (1, 42)], ["source_id", "node"]
     )
-    # r6: the two halves are independent iterative loops whose wall is
-    # driver-action rounds, not compute — run them from concurrent driver
-    # threads so the scheduler interleaves their (tiny) per-round jobs
-    # (guide §2.6; the q_raster_field chain-overlap discipline)
-    with ThreadPoolExecutor(1) as _ex:
-        _multi_fut = _ex.submit(
-            lambda: routing.shortest_paths(
-                _route_edges(spark, sf_dir), sources,
-                max_dist=_ROUTE_MAX_DIST, max_rounds=16,
-            )
-        )
-        # r5 half: single-pair BIDIRECTIONAL search (engine.routing.
-        # point_to_point) on the same graph, 7 -> 42 — the oracle is the same
-        # unrolled-relaxation twin filtered to the target node, so the
-        # meet-in-the-middle machinery is hash-checked against plain
-        # relaxation
-        p2p = routing.point_to_point(
-            _route_edges(spark, sf_dir), 7, 42,
-            max_dist=_ROUTE_MAX_DIST, max_rounds=16,
-        ).withColumn("tag", F.lit("p2p"))
-        multi = _multi_fut.result().withColumn("tag", F.lit("multi"))
+    # the graph (one row per order, at most _ROUTE_NODES nodes) is fetched
+    # once and both halves read it as a local relation: each solves on the
+    # driver without a size-gate job (session.driver_table)
+    edges_tbl = _route_edges(spark, sf_dir).toArrow()
+    edges = local_relation(spark, edges_tbl, edges_tbl.column_names)
+    multi = routing.shortest_paths(
+        edges, sources, max_dist=_ROUTE_MAX_DIST, max_rounds=16,
+    ).withColumn("tag", F.lit("multi"))
+    # r5 half: single-pair BIDIRECTIONAL search (engine.routing.
+    # point_to_point) on the same graph, 7 -> 42 — the oracle is the same
+    # unrolled-relaxation twin filtered to the target node, so the
+    # meet-in-the-middle machinery is hash-checked against plain relaxation
+    p2p = routing.point_to_point(
+        edges, 7, 42, max_dist=_ROUTE_MAX_DIST, max_rounds=16,
+    ).withColumn("tag", F.lit("p2p"))
     return multi.unionByName(p2p)
 
 
@@ -3664,7 +3633,7 @@ def _event_fixes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select(
         F.col("user_id").cast("long").alias("entity_id"),
         (
-            (_epoch_us(F.col("ts")) / 1_000_000).cast("long") * F.lit(1048576)
+            (epoch_us(ev, "ts") / 1_000_000).cast("long") * F.lit(1048576)
             + F.col("event_id").cast("long")
         ).alias("ts_us"),
         (F.pmod(hx, F.lit(100000)) / F.lit(1000.0)).alias("x"),

@@ -25,14 +25,34 @@ min-id label is engine-independent.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .session import local_relation, truncate_lineage
+from .session import driver_table, local_relation, truncate_lineage
 
 # diagnostics only: rounds the last connected_components call needed to
 # converge (read by tools/bench_kernels.py part_graph; not part of the API)
 LAST_ROUNDS = 0
+
+# r6 round discipline (guide §1/§5): ONE driver action per round. The
+# digest job materializes a LAZY localCheckpoint of the round's edge frame
+# when the graph is small (the common registry/bench case), so a round
+# costs one job instead of three sequential driver latencies
+# (reliable-checkpoint compute + file-write recompute + digest). Above
+# _SMALL_EDGES rows the eager reliable checkpoint stays — that is the
+# documented 56M-edge OOM fix (deserialized localCheckpoint blocks stacking
+# across rounds on an 8g heap).
+_SMALL_EDGES = 4_000_000
+# bounded-side driver fast path (the flow_accumulation stage2='driver' /
+# knn broadcast-short-circuit discipline): an edge set at or under this
+# many rows is an O(MB) Arrow fetch — one vectorized numpy hook-and-compress
+# union-find on the driver replaces the whole star-round loop (each round =
+# a full Spark job; at bench scale the rounds were pure driver-latency).
+# Labels are identical by construction: comp = min node id of the component.
+_DRIVER_EDGES = 1_000_000
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -139,63 +159,39 @@ def connected_components(
     (worst-case need is ~log^2 of the largest component size; 30 covers any
     practical graph)."""
 
-    # r6 round discipline (guide §1/§5): ONE driver action per round. The
-    # digest job materializes a LAZY localCheckpoint of the round's edge
-    # frame when the graph is small (the common registry/bench case), so a
-    # round costs one job instead of three sequential driver latencies
-    # (reliable-checkpoint compute + file-write recompute + digest). Above
-    # _SMALL_EDGES rows the eager reliable checkpoint stays — that is the
-    # documented 56M-edge OOM fix (deserialized localCheckpoint blocks
-    # stacking across rounds on an 8g heap).
-    _SMALL_EDGES = 4_000_000
-    # bounded-side driver fast path (the flow_accumulation stage2='driver' /
-    # knn broadcast-short-circuit discipline): a canonical edge set at or
-    # under this many rows is an O(MB) Arrow fetch — one vectorized numpy
-    # hook-and-compress union-find on the driver replaces the whole star-
-    # round loop (each round = a full Spark job; at bench scale the rounds
-    # were pure driver-latency). Labels are identical by construction:
-    # comp = min node id of the component.
-    _DRIVER_EDGES = 1_000_000
+    global LAST_ROUNDS
+    tbl = driver_table(edges, _DRIVER_EDGES)
+    if tbl is not None and {src, dst} <= set(tbl.column_names):
+        # the rows are on the driver already: _canonical's null-endpoint and
+        # self-loop filter in numpy (duplicates cannot change the labels)
+        u, v = (
+            pc.cast(tbl.column(c), pa.int64(), safe=False) for c in (src, dst)
+        )
+        ok = pc.and_(pc.and_(pc.is_valid(u), pc.is_valid(v)), pc.not_equal(u, v))
+        LAST_ROUNDS = 0
+        labels = _driver_labels(
+            edges.sparkSession,
+            pc.filter(u, ok).to_numpy(), pc.filter(v, ok).to_numpy(),
+        )
+        return _with_isolated(labels, nodes, id_col)
     e = _canonical(
         edges.select(
             F.col(src).cast("long").alias("u"),
             F.col(dst).cast("long").alias("v"),
         )
     ).localCheckpoint(eager=False)
-    global LAST_ROUNDS
     # gate on the digest count, then fetch from the digest-materialized
-    # checkpoint (two clean jobs — a limit(N+1) probe was A/B-measured
-    # SLOWER: CollectLimit's incremental partition scaling runs several
-    # sub-jobs when the limit exceeds the row count)
+    # checkpoint: a frame Spark must compute never pays a limit probe
+    # (session.driver_table)
     prev = _digest(e)
     small = prev[0] <= _SMALL_EDGES
     if prev[0] <= _DRIVER_EDGES:
-        import numpy as np
-
         LAST_ROUNDS = 0
         pdf = e.toPandas()
-        u = pdf["u"].to_numpy(dtype=np.int64)
-        v = pdf["v"].to_numpy(dtype=np.int64)
-        ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
-        a, b = inv[: len(u)], inv[len(u):]
-        parent = np.arange(len(ids), dtype=np.int64)
-        while True:
-            pa, pb = parent[a], parent[b]
-            if np.array_equal(pa, pb):
-                break
-            hi = np.maximum(pa, pb)
-            lo = np.minimum(pa, pb)
-            np.minimum.at(parent, hi, lo)
-            while True:
-                pp = parent[parent]
-                if np.array_equal(pp, parent):
-                    break
-                parent = pp
-        import pandas as pd
-
-        labels = local_relation(
-            e.sparkSession, pd.DataFrame({"id": ids, "comp": ids[parent]}),
-            "id long, comp long",
+        labels = _driver_labels(
+            e.sparkSession,
+            pdf["u"].to_numpy(dtype=np.int64),
+            pdf["v"].to_numpy(dtype=np.int64),
         )
     else:
         if not small:
@@ -229,13 +225,45 @@ def connected_components(
             "comp", F.col("id")
         )
         labels = non_roots.unionByName(roots)
-    if nodes is not None:
-        all_nodes = nodes.select(F.col(id_col).cast("long").alias("id")).distinct()
-        isolated = all_nodes.join(labels.select("id"), "id", "left_anti").withColumn(
-            "comp", F.col("id")
-        )
-        labels = labels.unionByName(isolated)
-    return labels
+    return _with_isolated(labels, nodes, id_col)
+
+
+def _driver_labels(spark, u: np.ndarray, v: np.ndarray) -> DataFrame:
+    """(id, comp) of the graph with edges (u, v) by one vectorized numpy
+    hook-and-compress union-find: comp = min node id of the component,
+    the label the star rounds converge to."""
+    ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = inv[: len(u)], inv[len(u):]
+    parent = np.arange(len(ids), dtype=np.int64)
+    while True:
+        pa_, pb = parent[a], parent[b]
+        if np.array_equal(pa_, pb):
+            break
+        hi = np.maximum(pa_, pb)
+        lo = np.minimum(pa_, pb)
+        np.minimum.at(parent, hi, lo)
+        while True:
+            pp = parent[parent]
+            if np.array_equal(pp, parent):
+                break
+            parent = pp
+    return local_relation(
+        spark, {"id": ids, "comp": ids[parent]}, "id long, comp long"
+    )
+
+
+def _with_isolated(
+    labels: DataFrame, nodes: DataFrame | None, id_col: str
+) -> DataFrame:
+    """labels plus every node of `nodes` without an edge, as its own
+    singleton component."""
+    if nodes is None:
+        return labels
+    all_nodes = nodes.select(F.col(id_col).cast("long").alias("id")).distinct()
+    isolated = all_nodes.join(labels.select("id"), "id", "left_anti").withColumn(
+        "comp", F.col("id")
+    )
+    return labels.unionByName(isolated)
 
 
 def tile_local_components(

@@ -44,10 +44,12 @@ trajectory/network axis.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .session import local_relation
+from .session import driver_table, local_relation
 
 # packed label = dist * HOPS_BASE + hops. dist and hops are both
 # non-negative; hops < HOPS_BASE is guaranteed by max_rounds <= HOPS_BASE-1,
@@ -126,6 +128,33 @@ def _prep_edges(
     return e.groupBy("u", "v").agg(F.min("w").alias("w"))
 
 
+def _int64_columns(tbl, names) -> list:
+    """`names` of a pyarrow.Table cast to int64 like Spark's cast("long"),
+    rows with a null in any of them dropped: numpy arrays."""
+    cols = [pc.cast(tbl.column(c), pa.int64(), safe=False) for c in names]
+    t = pa.table(dict(zip(map(str, range(len(cols))), cols))).drop_null()
+    return [c.to_numpy() for c in t.columns]
+
+
+def _prep_np(tbl, src: str, dst: str, w: str, directed: bool,
+             check_negative: bool, op: str):
+    """_prep_edges over rows the driver holds: (u, v, w) numpy arrays,
+    symmetrized unless directed, the cheapest of parallel edges kept; the
+    same negative-weight ValueError. Rows with a null field are dropped."""
+    if check_negative and pc.any(
+        pc.less(pc.cast(tbl.column(w), pa.int64(), safe=False), 0)
+    ).as_py():
+        raise ValueError(f"{op} requires non-negative weights")
+    u, v, wt = _int64_columns(tbl, (src, dst, w))
+    if not directed:
+        u, v, wt = np.concatenate([u, v]), np.concatenate([v, u]), np.tile(wt, 2)
+    order = np.lexsort((wt, v, u))
+    u, v, wt = u[order], v[order], wt[order]
+    first = np.ones(len(u), dtype=bool)
+    first[1:] = (u[1:] != u[:-1]) | (v[1:] != v[:-1])
+    return u[first], v[first], wt[first]
+
+
 def shortest_paths(
     edges: DataFrame,
     sources: DataFrame,
@@ -165,6 +194,24 @@ def shortest_paths(
         raise ValueError(f"max_rounds must be < {HOPS_BASE}")
     if max_dist is not None and max_dist >= (1 << 62) // HOPS_BASE:
         raise ValueError("max_dist too large for exact packed labels")
+    global LAST_ROUNDS
+    spark = edges.sparkSession
+    tbl = driver_table(edges, DRIVER_EDGES)
+    if tbl is not None and {src, dst, w} <= set(tbl.column_names):
+        eu, ev, ew = _prep_np(
+            tbl, src, dst, w, directed, check_negative, "shortest_paths"
+        )
+        if len(eu) <= DRIVER_EDGES:
+            stbl = driver_table(sources, DRIVER_EDGES)
+            if stbl is None or not {source_id, node} <= set(stbl.column_names):
+                stbl = sources.select(
+                    F.col(source_id).alias(source_id), F.col(node).alias(node)
+                ).toArrow()
+            sid, sn = _int64_columns(stbl, (source_id, node))
+            out, LAST_ROUNDS = _sp_driver(
+                spark, eu, ev, ew, sid, sn, max_dist, max_rounds
+            )
+            return out
     # r6 round discipline (guide §1/§5): lineage is still truncated per
     # round, but every localCheckpoint is LAZY — the per-round empty-frontier
     # count is the round's ONLY driver action and materializes both the
@@ -189,43 +236,14 @@ def shortest_paths(
         F.col(node).cast("long").alias("n"),
     ).distinct()
 
-    global LAST_ROUNDS
     if stats["n"] <= DRIVER_EDGES:
-        spark = edges.sparkSession
-        import pandas as pd
-
-        pdf = e.toPandas()  # reads the agg-materialized checkpoint
-        srows = s.collect()
-        eu_ids = pdf["u"].to_numpy(dtype=np.int64)
-        ev_ids = pdf["v"].to_numpy(dtype=np.int64)
-        ew = pdf["w"].to_numpy(dtype=np.int64)
-        sids = sorted({int(r["sid"]) for r in srows})
-        sidx = {x: i for i, x in enumerate(sids)}
-        src_nodes = np.asarray([int(r["n"]) for r in srows], dtype=np.int64)
-        nodes = np.unique(np.concatenate([eu_ids, ev_ids, src_nodes]))
-        eu = np.searchsorted(nodes, eu_ids)
-        ev = np.searchsorted(nodes, ev_ids)
-        INF = 1 << 62
-        labels = np.full((len(sids), len(nodes)), INF, dtype=np.int64)
-        for r in srows:
-            labels[sidx[int(r["sid"])], int(np.searchsorted(nodes, r["n"]))] = 0
-        labels, LAST_ROUNDS = _np_frontier_bf(
-            eu, ev, ew * HOPS_BASE + 1, labels, max_dist, max_rounds,
-            "shortest_paths",
+        # reads the agg-materialized checkpoint
+        eu, ev, ew = _int64_columns(e.toArrow(), ("u", "v", "w"))
+        sid, sn = _int64_columns(s.toArrow(), ("sid", "n"))
+        out, LAST_ROUNDS = _sp_driver(
+            spark, eu, ev, ew, sid, sn, max_dist, max_rounds
         )
-        si, ni = np.nonzero(labels < INF)
-        key = labels[si, ni]
-        out = pd.DataFrame(
-            {
-                "source_id": np.asarray(sids, dtype=np.int64)[si],
-                "node": nodes[ni],
-                "dist": key >> 20,
-                "hops": key % HOPS_BASE,
-            }
-        )
-        return local_relation(
-            spark, out, "source_id long, node long, dist long, hops long"
-        )
+        return out
     # settled: best packed label per (sid, n) found so far
     settled = s.withColumn("key", F.lit(0).cast("long")).localCheckpoint(
         eager=False
@@ -279,6 +297,32 @@ def shortest_paths(
     )
 
 
+def _sp_driver(
+    spark, eu_ids, ev_ids, ew, sid, sn, max_dist: int | None, max_rounds: int
+):
+    """shortest_paths below DRIVER_EDGES: the numpy frontier replay over
+    prepared edges (eu_ids, ev_ids, ew) from sources (sid, sn). Returns
+    (the label relation, rounds)."""
+    sids = np.unique(sid)
+    nodes = np.unique(np.concatenate([eu_ids, ev_ids, sn]))
+    INF = 1 << 62
+    labels = np.full((len(sids), len(nodes)), INF, dtype=np.int64)
+    labels[np.searchsorted(sids, sid), np.searchsorted(nodes, sn)] = 0
+    labels, rounds = _np_frontier_bf(
+        np.searchsorted(nodes, eu_ids), np.searchsorted(nodes, ev_ids),
+        ew * HOPS_BASE + 1, labels, max_dist, max_rounds, "shortest_paths",
+    )
+    si, ni = np.nonzero(labels < INF)
+    key = labels[si, ni]
+    out = {
+        "source_id": sids[si], "node": nodes[ni],
+        "dist": key >> 20, "hops": key % HOPS_BASE,
+    }
+    return local_relation(
+        spark, out, "source_id long, node long, dist long, hops long"
+    ), rounds
+
+
 def point_to_point(
     edges: DataFrame,
     source: int,
@@ -321,6 +365,17 @@ def point_to_point(
     if max_dist is not None and max_dist >= (1 << 62) // HOPS_BASE:
         raise ValueError("max_dist too large for exact packed labels")
     spark = edges.sparkSession
+    tbl = driver_table(edges, DRIVER_EDGES)
+    if tbl is not None and {src, dst, w} <= set(tbl.column_names):
+        eu, ev, ew = _prep_np(
+            tbl, src, dst, w, directed, check_negative, "point_to_point"
+        )
+        # the gate counts the direction-tagged frame: two rows per edge
+        if 2 * len(eu) <= DRIVER_EDGES:
+            return _p2p_driver(
+                spark, eu, ev, ew, int(source), int(target), max_dist,
+                max_rounds,
+            )
     e = _prep_edges(edges, src, dst, w, directed)
     # direction-tagged edge frame: dir=0 walks forward edges, dir=1 reversed
     e2 = (
@@ -342,8 +397,12 @@ def point_to_point(
     if check_negative and stats["neg"]:
         raise ValueError("point_to_point requires non-negative weights")
     if stats["n"] <= DRIVER_EDGES:
+        # reads the agg-materialized checkpoint
+        eu, ev, ew = _int64_columns(
+            e2.filter(F.col("dir") == 0).toArrow(), ("u", "v", "w")
+        )
         return _p2p_driver(
-            spark, e2, int(source), int(target), max_dist, max_rounds
+            spark, eu, ev, ew, int(source), int(target), max_dist, max_rounds
         )
     settled = local_relation(
         spark,
@@ -436,23 +495,22 @@ def point_to_point(
 
 
 def _p2p_driver(
-    spark, e2: DataFrame, source: int, target: int,
+    spark, u, v, w, source: int, target: int,
     max_dist: int | None, max_rounds: int,
 ) -> DataFrame:
     """Exact numpy replay of point_to_point's bidirectional loop for
-    DRIVER_EDGES-gated graphs: the same direction-tagged relaxation, the
-    same per-round candidate cap min(mu, max_dist), the same mu fold from
-    newly-improved labels against the other side's updated settled set, and
-    the same two termination tests — so mu, the round count and the error
-    contract match the distributed loop exactly."""
-    import pandas as pd
-
+    DRIVER_EDGES-gated graphs over prepared edges (u, v, w): the same
+    direction-tagged relaxation, the same per-round candidate cap
+    min(mu, max_dist), the same mu fold from newly-improved labels against
+    the other side's updated settled set, and the same two termination
+    tests — so mu, the round count and the error contract match the
+    distributed loop exactly."""
     global LAST_ROUNDS
-    pdf = e2.toPandas()  # reads the agg-materialized checkpoint
-    eu_ids = pdf["u"].to_numpy(dtype=np.int64)
-    ev_ids = pdf["v"].to_numpy(dtype=np.int64)
-    wpack = pdf["w"].to_numpy(dtype=np.int64) * HOPS_BASE + 1
-    edir = pdf["dir"].to_numpy(dtype=np.int64)
+    # dir=0 walks forward edges, dir=1 reversed
+    eu_ids = np.concatenate([u, v])
+    ev_ids = np.concatenate([v, u])
+    wpack = np.tile(w, 2) * HOPS_BASE + 1
+    edir = np.repeat(np.asarray([0, 1], dtype=np.int64), len(u))
     nodes = np.unique(
         np.concatenate(
             [eu_ids, ev_ids, np.asarray([source, target], dtype=np.int64)]

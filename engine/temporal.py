@@ -32,10 +32,25 @@ input-order-dependent fold (RefUtils.scala:94-99).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampNTZType
 
 from . import cells, diff
+
+
+def epoch_us(df: DataFrame, name: str) -> Column:
+    """Epoch microseconds of the timestamp column `name` of `df`, the same
+    in every session timezone: a TIMESTAMP_NTZ value is read as a UTC wall
+    clock (the DuckDB oracle's naive timestamps), a TIMESTAMP is an instant
+    already. (Casting NTZ to TIMESTAMP would read it in the session zone.)"""
+    if isinstance(df.schema[name].dataType, TimestampNTZType):
+        return F.timestamp_diff(
+            "MICROSECOND", F.expr("TIMESTAMP_NTZ'1970-01-01 00:00:00'"),
+            F.col(name),
+        )
+    return F.unix_micros(F.col(name))
+
 
 REF_ADD = 0
 REF_DELETE = 1
@@ -214,10 +229,10 @@ def sessionize(
     order_cols = [F.col(ts)] + ([F.col(order_tiebreak)] if order_tiebreak else [])
     w = Window.partitionBy(key).orderBy(*order_cols)
     gap_us = gap_minutes * 60 * 1_000_000
-    prev = F.lag(F.unix_micros(F.col(ts).cast("timestamp"))).over(w)
+    us = epoch_us(df, ts)
+    prev = F.lag(us).over(w)
     is_start = F.when(
-        prev.isNull()
-        | ((F.unix_micros(F.col(ts).cast("timestamp")) - prev) > gap_us),
+        prev.isNull() | ((us - prev) > gap_us),
         1,
     ).otherwise(0)
     return df.withColumn("is_session_start", is_start).withColumn(

@@ -55,7 +55,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .raster import floor_div, pixel_xy, tile_pixel
-from .session import local_relation, local_table, truncate_lineage
+from .session import (
+    driver_table, local_relation, local_table, truncate_lineage,
+)
 
 # Horn stencils as focal_stencil weight maps ((dx, dy) -> weight, y up).
 HORN_DZDX = {
@@ -686,8 +688,9 @@ def flow_edges(flow: DataFrame, res: int) -> DataFrame:
 
 
 def basins(flow: DataFrame, res: int) -> DataFrame:
-    """d8_flow frame -> (gx, gy, basin): drainage basins of the flow pointer
-    forest as connected components via engine.graph (alternating star
+    """d8_flow frame -> (gx, gy, d8_dir, d8_key, basin): each pixel's flow
+    direction (as flow_edges gives it) and its drainage basin, a connected
+    component of the flow pointer forest via engine.graph (alternating star
     rounds — the registry twin's shape), basin = MINIMUM packed cell id in
     the component, the engine-wide deterministic CC label contract. For
     sink-labelled basins (basin = the packed id of the component's flow
@@ -702,9 +705,8 @@ def basins(flow: DataFrame, res: int) -> DataFrame:
         nodes=ed.select("src"), id_col="src",
     )
     return (
-        ed.select("gx", "gy", "src")
-        .join(comp, ed["src"] == comp["id"])
-        .select("gx", "gy", F.col("comp").alias("basin"))
+        ed.join(comp, ed["src"] == comp["id"])
+        .select("gx", "gy", "d8_dir", "d8_key", F.col("comp").alias("basin"))
     )
 
 
@@ -2022,13 +2024,16 @@ def viewshed(
         raise ValueError(f"observer_height out of range: {observer_height}")
     spark = tiles.sparkSession
     if isinstance(observers, DataFrame):
-        n = observers.limit(max_observers + 1).count()
-        if n > max_observers:
+        tbl = observers.limit(max_observers + 1).toArrow()
+        if tbl.num_rows > max_observers:
             raise ValueError(
                 f"observers exceed max_observers={max_observers}: the "
                 "observer set is the broadcast-bounded side by contract"
             )
-        obs = [(int(r[0]), int(r[1])) for r in observers.collect()]
+        obs = [
+            (int(x), int(y))
+            for x, y in zip(*(c.to_pylist() for c in tbl.columns[:2]))
+        ]
     else:
         obs = [(int(x), int(y)) for x, y in observers]
     R = int(radius)
@@ -2306,11 +2311,15 @@ def _halo_fixpoint(
         ).collect()[0]
         return (row["n"], row["h"])
 
-    state = init.localCheckpoint(eager=False)
+    tbl = driver_table(init, _DRIVER_SOLVE_CELLS // (res * res))
+    if tbl is not None:
+        return _driver_fixpoint(
+            init.sparkSession, tbl.to_pandas(), res, finish, max_iters, op
+        )
     # gate on the digest count, then fetch from the digest-materialized
-    # checkpoint (a limit-probe variant was A/B-measured slower —
-    # CollectLimit's incremental scaling runs several sub-jobs when the
-    # limit exceeds the row count)
+    # checkpoint: a state Spark must compute never pays a limit probe
+    # (session.driver_table)
+    state = init.localCheckpoint(eager=False)
     prev = _digest(state)
     if prev[0] * res * res <= _DRIVER_SOLVE_CELLS:
         return _driver_fixpoint(

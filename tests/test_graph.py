@@ -87,6 +87,68 @@ def test_duplicate_and_reversed_edges(spark):
     assert out[3] == 3 and out[0] == 0
 
 
+@pytest.mark.parametrize("local", [False, True])
+def test_driver_vs_distributed_parity(spark, monkeypatch, local):
+    """The numpy union-find below graph._DRIVER_EDGES gives the star rounds'
+    labels: self-loops, duplicate and reversed edges, null endpoints and
+    isolated `nodes=` included. A local-relation input reaches it through
+    session.driver_table, a createDataFrame input through the digest gate."""
+    from engine.session import local_relation
+
+    make = (
+        (lambda rows, schema: local_relation(spark, rows, schema)) if local
+        else spark.createDataFrame
+    )
+    rng = random.Random(21)
+    rows = [(rng.randrange(40), rng.randrange(40)) for _ in range(50)]
+    rows += [(5, 5), (41, 41), (1, 2), (2, 1), (1, 2), (None, 3), (4, None),
+             (None, None)]
+    edges = make(rows, "u long, v long")
+    nodes = make([(i,) for i in range(50)], "nid long")
+
+    def run():
+        out = graph.connected_components(edges, nodes=nodes, id_col="nid")
+        return {r["id"]: r["comp"] for r in out.collect()}, graph.LAST_ROUNDS
+
+    drv, drv_rounds = run()
+    monkeypatch.setattr(graph, "_DRIVER_EDGES", 0)
+    dist, dist_rounds = run()
+    assert drv == dist
+    assert drv_rounds == 0 < dist_rounds
+    real = [(u, v) for u, v in rows if u is not None and v is not None]
+    assert drv == _bfs_components(50, real)
+
+
+def test_local_edges_run_no_gate_job(spark):
+    """Edges the driver holds skip the checkpoint + digest jobs: the call
+    plans no Spark job at all."""
+    from engine.session import local_relation
+
+    sc = spark.sparkContext
+    edges = local_relation(spark, [(1, 2), (2, 3), (7, 8)], "u long, v long")
+    sc.setJobGroup("cc-local-edges", "connected_components on local edges")
+    try:
+        out = graph.connected_components(edges)
+        jobs = sc.statusTracker().getJobIdsForGroup("cc-local-edges")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    assert sorted(map(tuple, out.collect())) == [
+        (1, 1), (2, 1), (3, 1), (7, 7), (8, 7)
+    ]
+
+
+def test_column_names_resolve_as_spark_resolves_them(spark):
+    """Edge columns named in another case than the frame's (Spark resolves
+    them case-insensitively) still label the graph: the driver-held rows
+    are then read through the distributed gate."""
+    from engine.session import local_relation
+
+    edges = local_relation(spark, [(1, 2), (3, 2)], "u long, v long")
+    out = graph.connected_components(edges, src="U", dst="V")
+    assert sorted(map(tuple, out.collect())) == [(1, 1), (2, 1), (3, 1)]
+
+
 def test_dedup_survivors(spark):
     df = spark.createDataFrame(
         [(i, f"text-{i}") for i in range(8)], ["doc_id", "text"]

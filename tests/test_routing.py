@@ -147,6 +147,18 @@ def test_negative_weight_rejected(spark):
         _run(spark, [(0, 1, -2)], [(0, 0)])
 
 
+def test_negative_weight_rejected_local_relation(spark):
+    """The driver-held edge path raises the same error for both operators."""
+    from engine.session import local_relation
+
+    e = local_relation(spark, [(0, 1, 4), (1, 2, -2)], "src long, dst long, w long")
+    s = local_relation(spark, [(0, 0)], ["source_id", "node"])
+    with pytest.raises(ValueError, match="non-negative"):
+        routing.shortest_paths(e, s)
+    with pytest.raises(ValueError, match="non-negative"):
+        routing.point_to_point(e, 0, 2)
+
+
 def test_hops_tiebreak(spark):
     # two paths of equal dist 6: 0->3 direct (1 hop) vs 0->1->2->3 (3 hops);
     # the label must prefer the 1-hop path
@@ -286,22 +298,41 @@ def test_driver_vs_distributed_parity(spark, monkeypatch):
     """r6: the numpy frontier replay (DRIVER_EDGES fast path) must match the
     distributed loop row for row — dist, hops AND the diagnostic round
     count — for multi-source, capped, and bidirectional point-to-point."""
+    _driver_parity(spark, monkeypatch, local=False, directed=False)
+
+
+def test_driver_vs_distributed_parity_local_relation(spark, monkeypatch):
+    """The same parity over local-relation edges and sources, which reach
+    the driver replay through session.driver_table (numpy preparation, no
+    gate job); undirected and directed, with parallel edges."""
+    for directed in (False, True):
+        _driver_parity(spark, monkeypatch, local=True, directed=directed)
+
+
+def _driver_parity(spark, monkeypatch, local: bool, directed: bool):
     import random as _r
 
+    from engine.session import local_relation
+
+    make = (
+        (lambda rows, schema: local_relation(spark, rows, schema)) if local
+        else spark.createDataFrame
+    )
     rng = _r.Random(9)
     rows = [
         (rng.randint(0, 60), rng.randint(0, 60), rng.randint(1, 9))
         for _ in range(300)
     ]
-    edges = spark.createDataFrame(rows, "src long, dst long, w long")
-    sources = spark.createDataFrame([(0, 3), (1, 17)], ["source_id", "node"])
+    edges = make(rows, "src long, dst long, w long")
+    sources = make([(0, 3), (1, 17)], ["source_id", "node"])
 
     def run_all():
         d = sorted(
             map(
                 tuple,
                 routing.shortest_paths(
-                    edges, sources, max_dist=25, max_rounds=32
+                    edges, sources, directed=directed, max_dist=25,
+                    max_rounds=32,
                 ).collect(),
             )
         )
@@ -310,7 +341,8 @@ def test_driver_vs_distributed_parity(spark, monkeypatch):
             map(
                 tuple,
                 routing.point_to_point(
-                    edges, 3, 49, max_dist=200, max_rounds=64
+                    edges, 3, 49, directed=directed, max_dist=200,
+                    max_rounds=64,
                 ).collect(),
             )
         )
@@ -318,6 +350,7 @@ def test_driver_vs_distributed_parity(spark, monkeypatch):
         return d, r1, p, r2
 
     fast = run_all()
-    monkeypatch.setattr(routing, "DRIVER_EDGES", 0)
-    dist = run_all()
+    with monkeypatch.context() as m:
+        m.setattr(routing, "DRIVER_EDGES", 0)
+        dist = run_all()
     assert fast == dist

@@ -3163,6 +3163,19 @@ def test_halo_fixpoint_driver_vs_distributed(spark, monkeypatch):
     schedule) — checked here for fill + flats + strahler + cost on a
     multi-tile fixture with absent tiles, so the distributed path keeps
     dedicated coverage now that small rasters default to the driver path."""
+    _halo_fixpoint_parity(spark, monkeypatch, local=False)
+
+
+def test_halo_fixpoint_driver_vs_distributed_local_relation(
+    spark, monkeypatch
+):
+    """The same parity over a local-relation raster: the driver side then
+    reads its rows through session.driver_table (no gate job), the
+    distributed side runs the digest gate on the same frames."""
+    _halo_fixpoint_parity(spark, monkeypatch, local=True)
+
+
+def _halo_fixpoint_parity(spark, monkeypatch, local: bool):
     import random as _r
 
     res = 8
@@ -3170,7 +3183,11 @@ def test_halo_fixpoint_driver_vs_distributed(spark, monkeypatch):
     rows = []
     for tx, ty in [(-1, 0), (0, 0), (1, 0), (0, -1), (2, 1)]:  # L-shape + hole
         rows.append((tx, ty, [rng.randint(0, 9) for _ in range(res * res)]))
-    tiles = spark.createDataFrame(rows, "tx long, ty long, counts array<long>")
+    schema = "tx long, ty long, counts array<long>"
+    tiles = (
+        local_relation(spark, rows, schema) if local
+        else spark.createDataFrame(rows, schema)
+    )
 
     def run_all():
         filled = terrain.fill_depressions(tiles, res)

@@ -5,11 +5,17 @@ matching oracle_sql() in DuckDB over the same parquet, canonicalize (columns sor
 by name, rows sorted by all columns, values stringified), and compare row count +
 schema + value hash.
 
-Usage: python tools/check_oracle.py [--sf SF_DIR] [--bare-session] [names...]
+Usage: python tools/check_oracle.py [--sf SF_DIR]
+           [--bare-session | --plain-session [--tz ZONE]] [names...]
 
 --bare-session turns Arrow conversion off (spark.sql.execution.arrow.pyspark.
 enabled=false, a plain SparkSession's default; get_spark turns it on), so every
 relation the engine builds on the driver is checked without Arrow too.
+--plain-session skips get_spark: a SparkSession.builder.master("local[4]")
+session with only spark.sql.session.timeZone set (--tz, default
+America/New_York), so Arrow is off, no checkpoint dir is set and every other
+conf is Spark's default — the session an outside caller brings. A query that
+changes the session's conf fails.
 
 Per-half attribution for tagged-union mega-queries (raster_field & co):
   python tools/check_oracle.py raster_field --half hor   # just that half
@@ -71,6 +77,11 @@ def main() -> int:
                          "per half) for queries with a `tag` column")
     ap.add_argument("--bare-session", action="store_true",
                     help="build the session with Arrow conversion off")
+    ap.add_argument("--plain-session", action="store_true",
+                    help="a plain local[4] session with only the timezone "
+                         "set, not get_spark")
+    ap.add_argument("--tz", default="America/New_York",
+                    help="the --plain-session timezone")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
     # pandas-UDF workers import `engine` as well: give them the repo root
@@ -82,12 +93,21 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from engine.session import get_spark
 
-    conf = (
-        {"spark.sql.execution.arrow.pyspark.enabled": "false"}
-        if args.bare_session else None
-    )
-    spark = get_spark("oracle-check", cores=8, shuffle_partitions=8,
-                      driver_mem="16g", extra_conf=conf)
+    if args.plain_session:
+        from pyspark.sql import SparkSession
+
+        spark = (
+            SparkSession.builder.master("local[4]")
+            .config("spark.sql.session.timeZone", args.tz)
+            .getOrCreate()
+        )
+    else:
+        conf = (
+            {"spark.sql.execution.arrow.pyspark.enabled": "false"}
+            if args.bare_session else None
+        )
+        spark = get_spark("oracle-check", cores=8, shuffle_partitions=8,
+                          driver_mem="16g", extra_conf=conf)
     con = duckdb.connect()
     for t in TABLES:
         p = f"{args.sf}/{t}.parquet"
@@ -116,6 +136,7 @@ def main() -> int:
 
     for name in names:
         t0 = time.time()
+        conf_before = spark.conf.getAll
         try:
             q = qs[name](spark, args.sf)
             if args.half is not None:
@@ -131,6 +152,15 @@ def main() -> int:
             continue
         finally:
             spark.catalog.clearCache()  # queries may persist intermediates
+        conf_after = spark.conf.getAll
+        changed = sorted(
+            k for k in set(conf_before) | set(conf_after)
+            if conf_before.get(k) != conf_after.get(k)
+        )
+        if changed:
+            print(f"FAIL  {name}: changed the session conf: {changed}")
+            failures.append(name)
+            continue
         if name not in oracles:
             print(f"SKIP  {name}: no oracle (rows-only: {len(sdf)} rows, "
                   f"{time.time()-t0:.1f}s)")
