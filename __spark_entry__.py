@@ -797,27 +797,20 @@ def _hotspot_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_hotspot_cells(
-    spark: SparkSession, sf_dir: str, tiles: DataFrame | None = None
-) -> DataFrame:
+def q_hotspot_cells(tiles: DataFrame) -> DataFrame:
     """Rasterize -> focal -> Getis-Ord Gi* end to end on the halo plan
-    (engine.raster.heatmap_tiles + engine.focal.gi_star):
-    one row per global pixel of the study area with its count, exact-int64
-    3x3 focal sum, and FLOOR-scaled Gi* z (the oracle recomputes the whole
-    pipeline with the independent scatter algebra + SQL moments; z is
-    bit-stable because every input to the formula is exact int64 and the
-    double expression graphs match op for op)."""
+    (engine.focal.gi_star over the engine.raster.heatmap_tiles raster
+    `tiles`): one row per global pixel of the study area with its count,
+    exact-int64 3x3 focal sum, and FLOOR-scaled Gi* z (the oracle
+    recomputes the whole pipeline with the independent scatter algebra +
+    SQL moments; z is bit-stable because every input to the formula is
+    exact int64 and the double expression graphs match op for op)."""
     from engine import focal
 
     res = _HOTSPOT_RES
     gx, gy = raster.pixel_xy(res)
-    # persisted: the raster feeds gi_star's three consumers + the join below
-    # (q_raster_field passes its own shared local raster instead)
-    if tiles is None:
-        tiles = _hotspot_tiles(spark, sf_dir).persist()
     zs = focal.gi_star(tiles, res, radius=1, keep_fs=True)
-    j = tiles.join(zs, ["tx", "ty"])
-    ex = j.select(
+    ex = zs.select(
         "tx", "ty",
         F.posexplode(F.arrays_zip("counts", "fs", "z")).alias("pix", "v"),
     )
@@ -829,21 +822,17 @@ def q_hotspot_cells(
     )
 
 
-def q_tile_pyramid(
-    spark: SparkSession, sf_dir: str, tiles: DataFrame | None = None
-) -> DataFrame:
+def q_tile_pyramid(tiles: DataFrame) -> DataFrame:
     """Tile-pyramid rollup (engine.pyramid.pyramid_sum): levels 1..2 of 2x2
-    count-grid aggregation over the heatmap raster, exploded to nonzero
-    level-k global pixels (level, gx, gy, n); level 0 is the base raster
-    itself. The oracle aggregates every level STRAIGHT from base pixels with
-    floor-shifted coordinates — an independent derivation of the iterated
-    2x2 rollup."""
+    count-grid aggregation over the heatmap raster `tiles`, exploded to
+    nonzero level-k global pixels (level, gx, gy, n); level 0 is the base
+    raster itself. The oracle aggregates every level STRAIGHT from base
+    pixels with floor-shifted coordinates — an independent derivation of
+    the iterated 2x2 rollup."""
     from engine import pyramid
 
     res = _HOTSPOT_RES
     gx, gy = raster.pixel_xy(res)
-    if tiles is None:
-        tiles = _hotspot_tiles(spark, sf_dir)
     base = tiles.select(
         F.lit(0).cast("long").alias("level"), "tx", "ty", "counts"
     )
@@ -1005,6 +994,7 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     import numpy as np
+    import pyarrow.compute as pc
 
     from engine import focal, terrain
 
@@ -1052,16 +1042,17 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tx long, ty long, counts array<long>",
     )
     flow = terrain.d8_flow(tiles_r, res)
-    obs_df = (
-        tiles_r.select("tx", "ty", F.posexplode("counts").alias("pix", "z"))
-        .select(
-            gx.alias("gx"), gy.alias("gy"),
-            F.col("z").cast("long").alias("z"),
-        )
-        .orderBy(F.col("z").desc(), "gx", "gy")
-        .limit(_VIS_N_OBS)
-        .select("gx", "gy")
-    )
+    # the busiest pixels, ranked once on the driver (z DESC, then gx, then
+    # gy): the viewshed observers, the cost sources and the burn centres
+    pix = np.tile(np.arange(res * res), _tiles_tbl.num_rows)
+    z = pc.list_flatten(_tiles_tbl["counts"]).to_numpy()
+    bx = np.repeat(_tiles_tbl["tx"].to_numpy(), res * res) * res + pix % res
+    by = np.repeat(_tiles_tbl["ty"].to_numpy(), res * res) * res + pix // res
+    busiest = [
+        (int(bx[i]), int(by[i]))
+        for i in np.lexsort((by, bx, -z))[: max(_VIS_N_OBS, _BURN_N)]
+    ]
+    obs = busiest[:_VIS_N_OBS]
     fullt = local_relation(
         spark, [(tx, ty) for tx in range(-2, 2) for ty in range(-1, 1)],
         "tx long, ty long",
@@ -1080,22 +1071,30 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # r6: the iterative operators (driver actions per round) run on the
-    # pool — basins' CC, cost's halo Dijkstra and the fill -> flats ->
-    # strahler -> flowacc chain — while the main thread builds the
-    # one-shot half plans (pure Catalyst work), so their driver actions
-    # interleave with plan construction instead of running after it.
-    # Results are deterministic regardless of interleaving (every op is a
-    # fixpoint / exact solve on its own input).
-    with ThreadPoolExecutor(3) as pool:
-        bas_fut = pool.submit(terrain.basins, flow, res)
-        cost_fut = pool.submit(terrain.cost_surface, ones_cost, res, obs_df, 8)
+    # pool — cost's halo Dijkstra and the fill -> flats -> strahler ->
+    # flowacc chain — while the main thread builds the one-shot half plans
+    # (pure Catalyst work), so their driver actions interleave with plan
+    # construction instead of running after it. Results are deterministic
+    # regardless of interleaving (every op is a fixpoint / exact solve on
+    # its own input).
+    with ThreadPoolExecutor(2) as pool:
+        cost_fut = pool.submit(terrain.cost_surface, ones_cost, res, obs, 8)
         hydro_fut = pool.submit(_hydro_chain)
+        # the d8 half: each pixel's flow direction with its basin label
+        d8 = terrain.basins(flow, res).select(
+            F.lit("d8").alias("tag"),
+            F.col("gx").alias("a"),
+            F.col("gy").alias("b"),
+            F.col("d8_dir").alias("c"),
+            F.col("d8_key").alias("d"),
+            F.col("basin").alias("e"),
+        )
         ter = _pixel_half(
             "ter", terrain.terrain_gradients(tiles_r, res),
             ["dzdx8", "dzdy8"], "v.dzdx8", "v.dzdy8", 0,
             where=(F.col("v.dzdx8") != 0) | (F.col("v.dzdy8") != 0),
         )
-        hot = q_hotspot_cells(spark, sf_dir, tiles=tiles_r).select(
+        hot = q_hotspot_cells(tiles_r).select(
             F.lit("hot").alias("tag"),
             F.col("gx").alias("a"),
             F.col("gy").alias("b"),
@@ -1103,7 +1102,7 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("fs").alias("d"),
             F.col("z_e6").alias("e"),
         )
-        pyr = q_tile_pyramid(spark, sf_dir, tiles=tiles_r).select(
+        pyr = q_tile_pyramid(tiles_r).select(
             F.lit("pyr").alias("tag"),
             F.col("level").alias("a"),
             F.col("gx").alias("b"),
@@ -1114,7 +1113,7 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
         vis = _pixel_half(
             "vis",
             terrain.viewshed(
-                tiles_r, res, obs_df,
+                tiles_r, res, obs,
                 radius=_VIS_RADIUS, observer_height=_VIS_HEIGHT,
             ),
             ["vis"], "v",
@@ -1127,22 +1126,10 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["dist2", "alloc"], "v.dist2", "v.alloc",
         )
         pitch = _HOTSPOT_TILE / res
-        bbase = (
-            tiles_r.select(
-                "tx", "ty", F.posexplode("counts").alias("pix", "z")
-            )
-            .select(
-                gx.alias("gx"), gy.alias("gy"),
-                F.col("z").cast("long").alias("z"),
-            )
-            .orderBy(F.col("z").desc(), "gx", "gy")
-            .limit(_BURN_N)
-        )
-        bobs = bbase.withColumn(
-            "i0",
-            F.row_number().over(
-                Window.orderBy(F.col("z").desc(), "gx", "gy")
-            ) - 1,
+        bobs = local_relation(
+            spark,
+            [(x, y, i) for i, (x, y) in enumerate(busiest[:_BURN_N])],
+            "gx long, gy long, i0 long",
         )
         cx = (F.col("gx") + F.lit(0.5)) * F.lit(pitch)
         cy = (F.col("gy") + F.lit(0.5)) * F.lit(pitch)
@@ -1268,26 +1255,13 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["tri", "tpi_num", "tpi_den", "rough"], "v.tri",
             F.col("v.tpi_num") * 16 + F.col("v.tpi_den"), "v.rough",
         )
-    # the d8 half: each pixel's flow direction with its basin label
-    d8 = (
-        bas_fut.result()
-        .select(
-            F.lit("d8").alias("tag"),
-            F.col("gx").alias("a"),
-            F.col("gy").alias("b"),
-            F.col("d8_dir").alias("c"),
-            F.col("d8_key").alias("d"),
-            F.col("basin").alias("e"),
-        )
-    )
     filled_r, flats_r, st_r, acc_r = hydro_fut.result()
     fla = _pixel_half(
         "flats", flats_r, ["d8_dir", "d8_key", "flat_d"],
         "v.d8_dir", "v.d8_key", "v.flat_d",
     )
     fil = _pixel_half(
-        "fill", filled_r.join(tiles_r, ["tx", "ty"]), ["filled", "counts"],
-        "v.filled", F.col("v.filled") - F.col("v.counts"),
+        "fill", filled_r, ["filled", "depth"], "v.filled", "v.depth"
     )
     stro = _pixel_half("strahler", st_r, ["strahler"], "v")
     facc = _pixel_half("flowacc", acc_r, ["acc"], "v")

@@ -168,6 +168,57 @@ def _halo_apply_driver(
     return local_relation(spark, pd.DataFrame(rows), schema)
 
 
+def _exact_sum(x: np.ndarray, p: int, name: str) -> int:
+    """sum(x ** p) of an int64 array in Python ints (no wrap); raises where
+    the ANSI Spark sum overflows."""
+    from pyspark.errors import ArithmeticException
+
+    total = int((x.astype(object) ** p).sum())
+    if not np.iinfo(np.int64).min <= total <= np.iinfo(np.int64).max:
+        raise ArithmeticException(
+            message=f"[ARITHMETIC_OVERFLOW] long overflow in the {name} total"
+        )
+    return total
+
+
+def _tile_totals(df: DataFrame, sums: dict) -> DataFrame:
+    """Totals over a tile frame, one row (_tiles, <name>...): the row count
+    and, per name, the sum over rows of column sums[name][0] raised to the
+    power sums[name][1] (1 or 2) — over the elements of an array column.
+    An empty frame gives _tiles 0 and null sums. Exact int64: the
+    distributed aggregate raises on overflow under ANSI Spark. Over a local
+    relation the sums run on the driver with no Spark job, raise on the
+    same overflow, and come back as a one-row local relation, so the double
+    expressions a caller puts over the totals fold into that relation."""
+    tbl = local_table(df)
+    if tbl is None:
+        def expr(col, p):
+            term = (lambda v: v) if p == 1 else (lambda v: v * v)
+            if isinstance(df.schema[col].dataType, T.ArrayType):
+                return F.aggregate(
+                    col, F.lit(0).cast("long"), lambda a, v: a + term(v)
+                )
+            return term(F.col(col))
+
+        return df.agg(
+            F.count("*").alias("_tiles"),
+            *[F.sum(expr(c, p)).alias(n) for n, (c, p) in sums.items()],
+        )
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    row = {"_tiles": [tbl.num_rows]}
+    for name, (col, p) in sums.items():
+        v = tbl.column(col)
+        if pa.types.is_list(v.type):
+            v = pc.list_flatten(v)
+        x = v.to_numpy().astype(np.int64)
+        row[name] = [_exact_sum(x, p, name) if tbl.num_rows else None]
+    return local_relation(
+        df.sparkSession, row, ", ".join(f"{n} long" for n in row)
+    )
+
+
 def _halo_apply(
     tiles: DataFrame, res: int, r: int, finish, fields=None,
     pass_key: bool = False,
@@ -650,26 +701,23 @@ def gi_star(
 
     with S_w the focal sum, mean/sd the global population moments. All
     inputs to the formula (S_w, W, n, sum, sum of squares) are exact int64
-    from the halo pass + one aggregate; only the final z is floating
-    point. Output (tx, ty, z array<double>[res^2]); z is null where the
-    denominator vanishes (constant raster, or W == n); keep_fs=True adds the
-    focal-sum array as `fs`. Cost: ONE fused halo pass — the in-area window
-    size W comes free from the strip PRESENCE mask (_halo_apply builds it
-    anyway), and z is vectorized numpy inside the same Arrow kernel (r4
-    A/B: a two-pass + interpreted zip_with shape measured ~3x slower at
-    16.8M cells) — plus one moments aggregate. The registry's hotspot rows
+    from the halo pass + the moments totals (_tile_totals); only the final
+    z is floating point. Output (tx, ty, z array<double>[res^2]); z is null
+    where the denominator vanishes (constant raster, or W == n);
+    keep_fs=True adds the centre `counts` (as the halo kernel holds them)
+    and the focal-sum array `fs`, so a caller needs no join back to the
+    input. Cost: ONE fused halo pass — the in-area window size W comes free
+    from the strip PRESENCE mask (_halo_apply builds it anyway), and z is
+    vectorized numpy inside the same Arrow kernel (r4 A/B: a two-pass +
+    interpreted zip_with shape measured ~3x slower at 16.8M cells) — plus
+    the moments totals: one aggregate, or a driver sum over a local
+    relation. The registry's hotspot rows
     hash-match a DuckDB pipeline built on focal_sum_sql (bit-identical
     doubles: exact int64 inputs, matching IEEE expression graphs), and
     tests compare against a Python oracle. The input is consumed twice, so
     persist `tiles` when it is itself the product of a pipeline."""
-    cell_sum = F.aggregate("counts", F.lit(0).cast("long"), lambda a, v: a + v)
-    cell_sq = F.aggregate(
-        "counts", F.lit(0).cast("long"), lambda a, v: a + v * v
-    )
-    g = tiles.agg(
-        F.count("*").alias("_tiles"),
-        F.sum(cell_sum).alias("_sum"),
-        F.sum(cell_sq).alias("_sumsq"),
+    g = _tile_totals(
+        tiles, {"_sum": ("counts", 1), "_sumsq": ("counts", 2)}
     ).collect()[0]
     n = g["_tiles"] * res * res
     if n < 2:
@@ -691,12 +739,15 @@ def gi_star(
         zo[~ok] = None
         out = {"z": zo.tolist()}
         if keep_fs:
+            out["counts"] = halo[r : r + res, r : r + res].reshape(-1).tolist()
             out["fs"] = fs.tolist()
         return out
 
-    fields = ([("fs", T.ArrayType(T.LongType()))] if keep_fs else []) + [
-        ("z", T.ArrayType(T.DoubleType()))
-    ]
+    fields = (
+        [("counts", T.ArrayType(T.LongType())),
+         ("fs", T.ArrayType(T.LongType()))]
+        if keep_fs else []
+    ) + [("z", T.ArrayType(T.DoubleType()))]
     return _halo_apply(tiles, res, r, finish, fields=fields)
 
 
@@ -736,24 +787,18 @@ def local_morans(tiles: DataFrame, res: int, radius: int = 1) -> DataFrame:
     (cold cluster), 3=HL (hot outlier in cold field), 4=LH, 0=on-mean /
     isolated (z_i == 0, lag == 0, or W_i == 0).
 
-    Global moments come from one tiny driver-collected aggregate (the
-    gi_star discipline); per-pixel work is ONE fused halo pass (numpy in
-    the Arrow kernel). S_i and W_i are exact int64 and the doubles follow
-    one fixed expression graph, so Spark and the DuckDB twin
-    local_morans_sql (the scatter focal algebra) agree bit-for-bit; tests
-    also compare against a Python oracle. Returns (tx, ty, local
+    Global moments come from the tile totals gi_star uses (_tile_totals:
+    one aggregate, or a driver sum over a local relation); per-pixel work
+    is ONE fused halo pass (numpy in the Arrow kernel). S_i and W_i are
+    exact int64 and the doubles follow one fixed expression graph, so Spark
+    and the DuckDB twin local_morans_sql (the scatter focal algebra) agree
+    bit-for-bit; tests also compare against a Python oracle. Returns (tx, ty, local
     array<double>, quad array<int>); local is null everywhere when the
     raster is constant (m2 == 0). Reference provenance: no analog; completes the
     autocorrelation family (gi_star / morans_i / join_counts).
     """
-    cell_sum = F.aggregate("counts", F.lit(0).cast("long"), lambda a, v: a + v)
-    cell_sq = F.aggregate(
-        "counts", F.lit(0).cast("long"), lambda a, v: a + v * v
-    )
-    g = tiles.agg(
-        F.count("*").alias("_tiles"),
-        F.sum(cell_sum).alias("_sum"),
-        F.sum(cell_sq).alias("_sumsq"),
+    g = _tile_totals(
+        tiles, {"_sum": ("counts", 1), "_sumsq": ("counts", 2)}
     ).collect()[0]
     n = g["_tiles"] * res * res
     if n < 1:
@@ -859,10 +904,13 @@ def morans_i(tiles: DataFrame, res: int, radius: int = 1) -> DataFrame:
     Returns one row (n_cells, w_sum, moran_i) — moran_i null on a constant
     raster (den == 0) or when no pixel has any neighbor (G == 0). Cost: ONE
     fused halo pass emitting the seven per-tile partial sums as scalars
-    (numpy inside the Arrow kernel; W from the strip presence mask) + one
-    7-column aggregate (r4 A/B: ~5x faster at 16.8M cells than two focal
-    passes + an interpreted HOF fold). morans_i_sql (the scatter focal
-    algebra in DuckDB) and the Python oracle in tests are the references."""
+    (numpy inside the Arrow kernel; W from the strip presence mask) + the
+    7-column totals (_tile_totals: one aggregate, or over a local relation
+    a driver sum into a one-row local relation that the final double
+    expressions fold into) (r4 A/B: ~5x faster at 16.8M cells than two
+    focal passes + an interpreted HOF fold). morans_i_sql (the scatter
+    focal algebra in DuckDB) and the Python oracle in tests are the
+    references."""
     r = radius
 
     def finish(halo: np.ndarray, mask: np.ndarray) -> dict:
@@ -875,12 +923,12 @@ def morans_i(tiles: DataFrame, res: int, radius: int = 1) -> DataFrame:
             "e": int(s.sum()), "g": int(wi.sum()),
         }
 
-    g = _halo_apply(
-        tiles, res, r, finish,
-        fields=[(c, T.LongType()) for c in "abcdeg"],
-    ).agg(
-        F.count("*").alias("_tiles"),
-        *[F.sum(c).alias(c) for c in "abcdeg"],
+    g = _tile_totals(
+        _halo_apply(
+            tiles, res, r, finish,
+            fields=[(c, T.LongType()) for c in "abcdeg"],
+        ),
+        {c: (c, 1) for c in "abcdeg"},
     )
     n = (F.col("_tiles") * (res * res)).cast("double")
     m = F.col("a") / n
@@ -977,7 +1025,8 @@ def join_counts(
     color or no neighbor pairs).
 
     Cost mirrors morans_i: ONE fused halo pass emitting five per-tile int
-    scalars + one aggregate. join_counts_sql (the scatter focal algebra in
+    scalars + the same totals (_tile_totals: one aggregate, or a driver sum
+    over a local relation). join_counts_sql (the scatter focal algebra in
     DuckDB) and the Python oracle in tests are the references.
     Reference provenance: no analog (the reference has no raster ops);
     extends the brief's hotspot/screening family alongside gi_star.
@@ -998,9 +1047,12 @@ def join_counts(
             "d": int((b * wi).sum()),
         }
 
-    agg = _halo_apply(
-        tiles, res, r, finish, fields=[(c, T.LongType()) for c in cols]
-    ).agg(F.count("*").alias("_tiles"), *[F.sum(c).alias(c) for c in cols])
+    agg = _tile_totals(
+        _halo_apply(
+            tiles, res, r, finish, fields=[(c, T.LongType()) for c in cols]
+        ),
+        {c: (c, 1) for c in cols},
+    )
     n = (F.col("_tiles") * (res * res)).cast("double")
     p = F.col("nb") / n
     q = F.lit(1.0) - p

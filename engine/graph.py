@@ -229,9 +229,21 @@ def connected_components(
 
 
 def _driver_labels(spark, u: np.ndarray, v: np.ndarray) -> DataFrame:
-    """(id, comp) of the graph with edges (u, v) by one vectorized numpy
-    hook-and-compress union-find: comp = min node id of the component,
-    the label the star rounds converge to."""
+    """(id, comp) of the graph with edges (u, v) as a local relation (see
+    _union_find)."""
+    ids, comp = _union_find(u, v)
+    return local_relation(
+        spark, {"id": ids, "comp": comp}, "id long, comp long"
+    )
+
+
+def _union_find(
+    u: np.ndarray, v: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, comp) of the graph with edges (u, v) by one vectorized numpy
+    hook-and-compress union-find: ids = the sorted distinct endpoints,
+    comp = min node id of each one's component, the label the star rounds
+    converge to."""
     ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
     a, b = inv[: len(u)], inv[len(u):]
     parent = np.arange(len(ids), dtype=np.int64)
@@ -247,9 +259,7 @@ def _driver_labels(spark, u: np.ndarray, v: np.ndarray) -> DataFrame:
             if np.array_equal(pp, parent):
                 break
             parent = pp
-    return local_relation(
-        spark, {"id": ids, "comp": ids[parent]}, "id long, comp long"
-    )
+    return ids, ids[parent]
 
 
 def _with_isolated(

@@ -54,7 +54,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .raster import floor_div, pixel_xy, tile_pixel
+from .raster import pixel_xy, tile_pixel
 from .session import (
     driver_table, local_relation, local_table, truncate_lineage,
 )
@@ -70,31 +70,42 @@ HORN_DZDY = {
 }
 
 
+def _inner_halo(halo: np.ndarray, res: int, r: int, k: int) -> np.ndarray:
+    """The radius-k halo inside a radius-r one (k <= r): the same tile with
+    only its k nearest rings of neighbor cells."""
+    return halo[r - k : r + k + res, r - k : r + k + res]
+
+
+def _np_horn(halo: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray]:
+    """Horn numerators (dzdx8, dzdy8) as res x res grids from a radius-1
+    halo: the kernel of terrain_gradients."""
+    # halo rows are y (gy up), cols are x; slice offsets mirror
+    # focal_stencil's halo[r+dy : r+dy+res, r+dx : r+dx+res] reads
+    def sh(dx: int, dy: int) -> np.ndarray:
+        return halo[1 + dy : 1 + dy + res, 1 + dx : 1 + dx + res]
+
+    east = sh(1, -1) + 2 * sh(1, 0) + sh(1, 1)
+    west = sh(-1, -1) + 2 * sh(-1, 0) + sh(-1, 1)
+    north = sh(-1, 1) + 2 * sh(0, 1) + sh(1, 1)
+    south = sh(-1, -1) + 2 * sh(0, -1) + sh(1, -1)
+    return east - west, north - south
+
+
 def terrain_gradients(tiles: DataFrame, res: int) -> DataFrame:
     """(tx, ty, counts) -> (tx, ty, dzdx8, dzdy8): Horn gradient NUMERATORS
     per pixel, exact int64 arrays, both stencils fused into one
     strip-exchange pass."""
     from engine.focal import _halo_apply
 
-    r = 1
-
     def finish(halo: np.ndarray, _mask: np.ndarray) -> dict:
-        # halo rows are y (gy up), cols are x; slice offsets mirror
-        # focal_stencil's halo[r+dy : r+dy+res, r+dx : r+dx+res] reads
-        def sh(dx: int, dy: int) -> np.ndarray:
-            return halo[r + dy : r + dy + res, r + dx : r + dx + res]
-
-        east = sh(1, -1) + 2 * sh(1, 0) + sh(1, 1)
-        west = sh(-1, -1) + 2 * sh(-1, 0) + sh(-1, 1)
-        north = sh(-1, 1) + 2 * sh(0, 1) + sh(1, 1)
-        south = sh(-1, -1) + 2 * sh(0, -1) + sh(1, -1)
+        dzdx8, dzdy8 = _np_horn(halo, res)
         return {
-            "dzdx8": (east - west).reshape(-1).tolist(),
-            "dzdy8": (north - south).reshape(-1).tolist(),
+            "dzdx8": dzdx8.reshape(-1).tolist(),
+            "dzdy8": dzdy8.reshape(-1).tolist(),
         }
 
     return _halo_apply(
-        tiles, res, r, finish,
+        tiles, res, 1, finish,
         fields=[
             ("dzdx8", T.ArrayType(T.LongType())),
             ("dzdy8", T.ArrayType(T.LongType())),
@@ -349,6 +360,19 @@ def curvature_surfaces(
     )
 
 
+def _np_tpi(
+    halo: np.ndarray, mask: np.ndarray, res: int, radius: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """(tpi_num, tpi_den) as res x res grids from a radius-`radius` halo
+    and its presence mask: the kernel of tpi_at."""
+    from engine.focal import _box_sums
+
+    zc = halo[radius : radius + res, radius : radius + res]
+    zsum = _box_sums(halo, res, radius) - zc
+    cnt = _box_sums(mask, res, radius) - 1
+    return cnt * zc - zsum, cnt
+
+
 def tpi_at(tiles: DataFrame, res: int, radius: int) -> DataFrame:
     """Multi-radius Topographic Position Index: (tx, ty, tpi_num, tpi_den)
     where per pixel tpi_num = cnt * z - sum(z_n) over the PRESENT cells of
@@ -359,14 +383,12 @@ def tpi_at(tiles: DataFrame, res: int, radius: int) -> DataFrame:
     dependence is the point: small radii see channels and ridgelines,
     large radii see valleys and massifs; landform_classes combines two
     radii into the Weiss position classes."""
-    from engine.focal import _box_sums, _halo_apply
+    from engine.focal import _halo_apply
 
     def finish(halo: np.ndarray, mask: np.ndarray) -> dict:
-        zc = halo[radius : radius + res, radius : radius + res]
-        zsum = _box_sums(halo, res, radius) - zc
-        cnt = _box_sums(mask, res, radius) - 1
+        num, cnt = _np_tpi(halo, mask, res, radius)
         return {
-            "tpi_num": (cnt * zc - zsum).reshape(-1).tolist(),
+            "tpi_num": num.reshape(-1).tolist(),
             "tpi_den": cnt.reshape(-1).tolist(),
         }
 
@@ -405,55 +427,50 @@ def landform_classes(
     Weiss standardizes TPI to SD units and cuts at +-1 SD; the exact-engine
     form takes the cut points as INTEGER e3-scaled mean-TPI thresholds (the
     caller computes +-1 SD once if they want the classic calibration) so the
-    classification is bit-deterministic and SQL-twin-able. Three halo passes
-    (two TPI radii + the Horn gradients) joined on the tile key; per-pixel
+    classification is bit-deterministic and SQL-twin-able. ONE halo pass
+    at r_large: its kernel slices the radius-r_small and radius-1 halos out
+    of the padded one, runs the tpi_at kernel at both radii and the
+    terrain_gradients kernel, and applies the decision table in numpy —
+    the same integers as the three separate passes, with no join. Per-pixel
     output (tx, ty, landform: array<long> 1..10)."""
+    from engine.focal import _halo_apply
+
     if r_small >= r_large:
         raise ValueError(
             f"need r_small < r_large, got {r_small} >= {r_large}"
         )
-    small = tpi_at(tiles, res, r_small).select(
-        "tx", "ty",
-        F.col("tpi_num").alias("sn"), F.col("tpi_den").alias("sd"),
-    )
-    large = tpi_at(tiles, res, r_large).select(
-        "tx", "ty",
-        F.col("tpi_num").alias("ln"), F.col("tpi_den").alias("ld"),
-    )
-    grads = terrain_gradients(tiles, res)
-    j = small.join(large, ["tx", "ty"]).join(grads, ["tx", "ty"])
 
-    def cls(s):
-        ts = floor_div(F.lit(1000) * s["sn"], s["sd"])
-        tl = floor_div(F.lit(1000) * s["ln"], s["ld"])
-        lo_s = ts <= -thresh_small_e3
-        hi_s = ts >= thresh_small_e3
-        lo_l = tl <= -thresh_large_e3
-        hi_l = tl >= thresh_large_e3
+    def finish(halo: np.ndarray, mask: np.ndarray) -> dict:
+        # keeps 1000 * tpi_num and the squared Horn numerators in int64
+        if np.abs(halo).max(initial=0) >= (1 << 28):
+            raise ValueError(
+                "landform_classes: |elevation| must be < 2^28 for exact "
+                "int64 arithmetic"
+            )
+        sn, sd = _np_tpi(
+            _inner_halo(halo, res, r_large, r_small),
+            _inner_halo(mask, res, r_large, r_small), res, r_small,
+        )
+        ln, ld = _np_tpi(halo, mask, res, r_large)
+        dzdx8, dzdy8 = _np_horn(_inner_halo(halo, res, r_large, 1), res)
+        with np.errstate(divide="raise"):
+            ts = np.floor_divide(1000 * sn, sd)
+            tl = np.floor_divide(1000 * ln, ld)
+        lo_s, hi_s = ts <= -thresh_small_e3, ts >= thresh_small_e3
+        lo_l, hi_l = tl <= -thresh_large_e3, tl >= thresh_large_e3
         mid_l = ~lo_l & ~hi_l
-        flat = (
-            s["dzdx8"] * s["dzdx8"] + s["dzdy8"] * s["dzdy8"]
-            <= F.lit(flat_num2)
+        flat = dzdx8 * dzdx8 + dzdy8 * dzdy8 <= flat_num2
+        cls = np.select(
+            [lo_s & lo_l, lo_s & mid_l, lo_s, hi_s & lo_l, hi_s & mid_l,
+             hi_s, lo_l, hi_l, flat],
+            [1, 2, 3, 8, 9, 10, 4, 7, 5],
+            6,
         )
-        return (
-            F.when(lo_s & lo_l, 1)
-            .when(lo_s & mid_l, 2)
-            .when(lo_s, 3)
-            .when(hi_s & lo_l, 8)
-            .when(hi_s & mid_l, 9)
-            .when(hi_s, 10)
-            .when(lo_l, 4)
-            .when(hi_l, 7)
-            .when(flat, 5)
-            .otherwise(6)
-            .cast("long")
-        )
+        return {"landform": cls.reshape(-1).tolist()}
 
-    return j.select(
-        "tx", "ty",
-        F.transform(
-            F.arrays_zip("sn", "sd", "ln", "ld", "dzdx8", "dzdy8"), cls
-        ).alias("landform"),
+    return _halo_apply(
+        tiles, res, r_large, finish,
+        fields=[("landform", T.ArrayType(T.LongType()))],
     )
 
 
@@ -695,10 +712,38 @@ def basins(flow: DataFrame, res: int) -> DataFrame:
     the component, the engine-wide deterministic CC label contract. For
     sink-labelled basins (basin = the packed id of the component's flow
     outlet), call catchments with every sink as an outlet: its pointer
-    doubling gives the same partition (asserted in tests)."""
-    from engine.graph import connected_components
+    doubling gives the same partition (asserted in tests).
+
+    Over a local flow frame (the driver halo path returns one) the labels
+    come from flow_edges' table on the driver: engine.graph's union-find
+    (the one connected_components' driver branch runs) over the non-sink
+    edges, each cell's label looked up by src, and cells on no edge
+    (isolated sinks) labelled by their own id — one local relation, no
+    join. Any other flow frame takes the distributed CC and one join."""
+    from engine.graph import _union_find, connected_components
 
     ed = flow_edges(flow, res)
+    tbl = local_table(ed)
+    if tbl is not None:
+        src = tbl.column("src").to_numpy()
+        dst = tbl.column("dst")
+        ids, comp = _union_find(
+            src[dst.is_valid().to_numpy()], dst.drop_null().to_numpy()
+        )
+        basin = src.copy()
+        if len(ids):
+            at = np.minimum(np.searchsorted(ids, src), len(ids) - 1)
+            hit = ids[at] == src
+            basin[hit] = comp[at[hit]]
+        return local_relation(
+            flow.sparkSession,
+            {
+                "gx": tbl.column("gx"), "gy": tbl.column("gy"),
+                "d8_dir": tbl.column("d8_dir"),
+                "d8_key": tbl.column("d8_key"), "basin": basin,
+            },
+            "gx long, gy long, d8_dir long, d8_key long, basin long",
+        )
     comp = connected_components(
         ed.filter(F.col("dst").isNotNull()).select("src", "dst"),
         src="src", dst="dst",
@@ -2401,15 +2446,17 @@ def fill_depressions(
 ) -> DataFrame:
     """DEM depression filling (ESRI Fill / GRASS r.fill.dir / priority-flood
     semantics): (tx, ty, counts) with counts read as int64 elevations ->
-    (tx, ty, filled: array<long>) where filled[p] is the elevation of the
-    hydrologically conditioned surface — the unique minimum surface W with
-    W >= z everywhere and no interior depression: every cell has a
-    non-ascending path (8- or 4-connected) off the raster (the tile-union
-    boundary drains freely). Equivalently W(c) = min over escape paths of
-    max(z along the path) — the (min, max)-semiring shortest path that the
-    sequential priority-flood computes. Flats are preserved (no epsilon
-    gradient is imposed); downstream d8_flow reports them as dir = -1
-    exactly as for natural plateaus.
+    (tx, ty, filled: array<long>, depth: array<long>) where filled[p] is
+    the elevation of the hydrologically conditioned surface — the unique
+    minimum surface W with W >= z everywhere and no interior depression:
+    every cell has a non-ascending path (8- or 4-connected) off the raster
+    (the tile-union boundary drains freely). Equivalently W(c) = min over
+    escape paths of max(z along the path) — the (min, max)-semiring
+    shortest path that the sequential priority-flood computes. depth[p] =
+    W - z, the fill depth, read from the same packed state (no join back
+    to the input). Flats are preserved (no epsilon gradient is imposed);
+    downstream d8_flow reports them as dir = -1 exactly as for natural
+    plateaus.
 
     Distributed shape (the classic 'hard to parallelize' DEM operator,
     recast on the engine's halo machinery): block-Jacobi from above.
@@ -2494,6 +2541,12 @@ def fill_depressions(
             "counts",
             lambda p: (F.shiftright(p, 31) - F.lit(_FILL_SHIFT)).cast("long"),
         ).alias("filled"),
+        F.transform(
+            "counts",
+            lambda p: (
+                F.shiftright(p, 31) - p.bitwiseAND(F.lit(_FILL_MASK))
+            ).cast("long"),
+        ).alias("depth"),
     )
 
 

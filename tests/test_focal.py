@@ -5,6 +5,7 @@ import random
 import pytest
 
 from engine import focal
+from engine.session import local_relation, local_table
 from tests.conftest import spark  # noqa: F401
 
 
@@ -55,12 +56,38 @@ def _mk_df(spark, tiles):
     )
 
 
+def _mk_local(spark, tiles):
+    """The same raster as a local relation: the driver halo pass and the
+    driver totals take it."""
+    return local_relation(
+        spark, [(tx, ty, grid) for (tx, ty), grid in tiles.items()],
+        "tx long, ty long, counts array<long>",
+    )
+
+
+def _inputs(spark, tiles):
+    """The raster as each input kind: a createDataFrame frame (distributed
+    halo exchange and aggregate) and a local relation (driver path)."""
+    return [_mk_df(spark, tiles), _mk_local(spark, tiles)]
+
+
 def _collect(df):
     return {(r["tx"], r["ty"]): list(r["focal"]) for r in df.collect()}
 
 
 # Halo exchange is the one focal plan; the "[halo]" case ids name it.
 halo_plan = pytest.mark.parametrize("plan", ["halo"])
+# the statistics take a second path over a local relation: "[driver]"
+input_plan = pytest.mark.parametrize("plan", ["halo", "driver"])
+
+
+def _plan_input(spark, tiles, plan):
+    """plan "halo": a createDataFrame input over 3 partitions (distributed
+    halo exchange); "driver": a local relation (driver halo pass and
+    driver totals)."""
+    if plan == "halo":
+        return _mk_df(spark, tiles).repartition(3)
+    return _mk_local(spark, tiles)
 
 
 @pytest.mark.parametrize("radius", [1, 2])
@@ -236,24 +263,28 @@ def _py_gi_star(tiles, res, r):
     return out
 
 
-@halo_plan
+@input_plan
 def test_gi_star_matches_python(spark, plan):
     rng = random.Random(17)
     res = 6
     tiles = _rand_tiles(rng, res, 8, span=3, density=0.6)
-    df = _mk_df(spark, tiles).repartition(3)
+    df = _plan_input(spark, tiles, plan)
     got = {
         (r["tx"], r["ty"]): list(r["z"])
         for r in focal.gi_star(df, res, radius=1).collect()
     }
     want = _py_gi_star(tiles, res, 1)
     assert set(got) == set(want)
+    # bit-exact doubles: the same expression graph over exact int64 inputs
     for k in want:
-        for a, b in zip(got[k], want[k]):
-            if b is None:
-                assert a is None
-            else:
-                assert a == pytest.approx(b, rel=1e-12), k
+        assert got[k] == want[k], k
+    # keep_fs adds the centre counts and the focal sums
+    fs = _py_focal(tiles, res, 1)
+    kept = focal.gi_star(df, res, radius=1, keep_fs=True).collect()
+    assert {
+        (r["tx"], r["ty"]): (list(r["counts"]), list(r["fs"]), list(r["z"]))
+        for r in kept
+    } == {k: (tiles[k], fs[k], want[k]) for k in tiles}
 
 
 def _py_morans(tiles, res, r):
@@ -279,17 +310,17 @@ def _py_morans(tiles, res, r):
     return n, g, moran
 
 
-@halo_plan
+@input_plan
 def test_morans_i_matches_python(spark, plan):
     rng = random.Random(23)
     res = 6
     tiles = _rand_tiles(rng, res, 7, span=3, density=0.5)
     (row,) = focal.morans_i(
-        _mk_df(spark, tiles).repartition(3), res, radius=1
+        _plan_input(spark, tiles, plan), res, radius=1
     ).collect()
     n, g, moran = _py_morans(tiles, res, 1)
     assert (row["n_cells"], row["w_sum"]) == (n, g)
-    assert row["moran_i"] == pytest.approx(moran, rel=1e-12)
+    assert row["moran_i"] == moran
 
 
 def test_morans_i_duckdb_twin_exact(spark):
@@ -298,7 +329,6 @@ def test_morans_i_duckdb_twin_exact(spark):
     rng = random.Random(41)
     res = 8
     tiles = _rand_tiles(rng, res, 9)
-    (got,) = focal.morans_i(_mk_df(spark, tiles), res, radius=2).collect()
     con = duckdb.connect()
     con.execute("CREATE TABLE tiles(tx BIGINT, ty BIGINT, counts BIGINT[])")
     con.executemany(
@@ -306,8 +336,11 @@ def test_morans_i_duckdb_twin_exact(spark):
         [(tx, ty, grid) for (tx, ty), grid in tiles.items()],
     )
     (want,) = con.execute(focal.morans_i_sql("tiles", res, 2)).fetchall()
-    # bit-exact double: the hash-stability claim, not an approx comparison
-    assert (got["n_cells"], got["w_sum"], got["moran_i"]) == want
+    for df in _inputs(spark, tiles):
+        (got,) = focal.morans_i(df, res, radius=2).collect()
+        # bit-exact double: the hash-stability claim, not an approx
+        # comparison
+        assert (got["n_cells"], got["w_sum"], got["moran_i"]) == want
 
 
 def test_morans_i_sign_and_edge_cases(spark):
@@ -576,25 +609,16 @@ def test_join_count_variance_formula_exact_enumeration():
     )
 
 
-@halo_plan
+@input_plan
 def test_join_counts_matches_python(spark, plan):
     rng = random.Random(29)
     res = 6
     tiles = _rand_tiles(rng, res, 7, span=3, density=0.4)
     (row,) = focal.join_counts(
-        _mk_df(spark, tiles).repartition(3), res, radius=1, thresh=50,
+        _plan_input(spark, tiles, plan), res, radius=1, thresh=50,
     ).collect()
-    n, nb, m, bb, bw, ww, e_bb, e_bw, z_bb, z_bw = _py_join_counts(
-        tiles, res, 1, thresh=50
-    )
-    assert (
-        row["n_cells"], row["n_black"], row["joins"],
-        row["bb"], row["bw"], row["ww"],
-    ) == (n, nb, m, bb, bw, ww)
-    assert row["e_bb"] == pytest.approx(e_bb, rel=1e-12)
-    assert row["e_bw"] == pytest.approx(e_bw, rel=1e-12)
-    assert row["z_bb"] == pytest.approx(z_bb, rel=1e-12)
-    assert row["z_bw"] == pytest.approx(z_bw, rel=1e-12)
+    # bit-exact doubles: the same expression graph over exact int64 inputs
+    assert tuple(row) == _py_join_counts(tiles, res, 1, thresh=50)
 
 
 def test_join_counts_duckdb_twin_exact(spark):
@@ -603,9 +627,6 @@ def test_join_counts_duckdb_twin_exact(spark):
     rng = random.Random(47)
     res = 8
     tiles = _rand_tiles(rng, res, 9)
-    (got,) = focal.join_counts(
-        _mk_df(spark, tiles), res, radius=2, thresh=30
-    ).collect()
     con = duckdb.connect()
     con.execute("CREATE TABLE tiles(tx BIGINT, ty BIGINT, counts BIGINT[])")
     con.executemany(
@@ -615,8 +636,10 @@ def test_join_counts_duckdb_twin_exact(spark):
     (want,) = con.execute(
         focal.join_counts_sql("tiles", res, 2, thresh=30)
     ).fetchall()
-    # bit-exact doubles: the hash-stability claim, not approx
-    assert tuple(got) == want
+    for df in _inputs(spark, tiles):
+        (got,) = focal.join_counts(df, res, radius=2, thresh=30).collect()
+        # bit-exact doubles: the hash-stability claim, not approx
+        assert tuple(got) == want
 
 
 def test_join_counts_sign_and_edges(spark):
@@ -635,6 +658,39 @@ def test_join_counts_sign_and_edges(spark):
     (r3,) = focal.join_counts(_mk_df(spark, flat), res).collect()
     assert r3["z_bb"] is None and r3["z_bw"] is None
     assert (r3["bb"], r3["bw"], r3["ww"]) == (r3["joins"], 0, 0)
+
+
+def test_tile_totals_empty_and_overflow(spark):
+    """The totals behind gi_star / local_morans / morans_i / join_counts:
+    an empty input gives count 0 and null sums, and an int64 overflow
+    raises, on the aggregate and on the driver path alike."""
+    from pyspark.errors import ArithmeticException
+
+    schema = "tx long, ty long, counts array<long>"
+    sums = {"s": ("counts", 1), "q": ("counts", 2)}
+    empty = [
+        spark.createDataFrame([], schema), local_relation(spark, [], schema)
+    ]
+    for df in empty:
+        assert [tuple(r) for r in focal._tile_totals(df, sums).collect()] == [
+            (0, None, None)
+        ]
+    # the driver path answers with a local relation (no Spark job)
+    assert local_table(focal._tile_totals(empty[1], sums)) is not None
+    # each tile's sum fits, the total does not; a square does not fit
+    wide = {(0, 0): [1 << 61, 1 << 61, 0, 0], (1, 0): [1 << 61, 1 << 61, 0, 0]}
+    tall = {(0, 0): [1 << 32, 0, 0, 0]}
+    for tiles, spec in ((wide, {"s": ("counts", 1)}),
+                        (tall, {"q": ("counts", 2)})):
+        for df in _inputs(spark, tiles):
+            with pytest.raises(ArithmeticException):
+                focal._tile_totals(df, spec).collect()
+    # in range, both paths give the exact totals
+    ok = {(0, 0): [3, -4, 0, 5], (2, 1): [1 << 30, 0, 0, -1]}
+    for df in _inputs(spark, ok):
+        assert tuple(focal._tile_totals(df, sums).collect()[0]) == (
+            2, 3 + (1 << 30), 51 + (1 << 60)
+        )
 
 
 # ---------------------------------------------------------------- local moran
@@ -673,7 +729,7 @@ def _py_local_morans(tiles, res, r):
     return out
 
 
-@halo_plan
+@input_plan
 def test_local_morans_matches_python(spark, plan):
     rng = random.Random(31)
     res = 6
@@ -681,20 +737,11 @@ def test_local_morans_matches_python(spark, plan):
     got = {
         (r["tx"], r["ty"]): (list(r["local"]), list(r["quad"]))
         for r in focal.local_morans(
-            _mk_df(spark, tiles).repartition(3), res, radius=1
+            _plan_input(spark, tiles, plan), res, radius=1
         ).collect()
     }
-    want = _py_local_morans(tiles, res, 1)
-    assert set(got) == set(want)
-    for k in want:
-        gl, gq = got[k]
-        wl, wq = want[k]
-        assert gq == wq, k
-        for gv, wv in zip(gl, wl):
-            if wv is None:
-                assert gv is None
-            else:
-                assert gv == pytest.approx(wv, rel=1e-12), k
+    # bit-exact doubles and identical quadrants
+    assert got == _py_local_morans(tiles, res, 1)
 
 
 def test_local_morans_duckdb_twin_exact(spark):
@@ -703,10 +750,6 @@ def test_local_morans_duckdb_twin_exact(spark):
     rng = random.Random(53)
     res = 8
     tiles = _rand_tiles(rng, res, 9)
-    got = {}
-    for r in focal.local_morans(_mk_df(spark, tiles), res, radius=2).collect():
-        for i, (lv, qv) in enumerate(zip(r["local"], r["quad"])):
-            got[(r["tx"] * res + i % res, r["ty"] * res + i // res)] = (lv, qv)
     con = duckdb.connect()
     con.execute("CREATE TABLE tiles(tx BIGINT, ty BIGINT, counts BIGINT[])")
     con.executemany(
@@ -719,8 +762,15 @@ def test_local_morans_duckdb_twin_exact(spark):
             focal.local_morans_sql("tiles", res, 2)
         ).fetchall()
     }
-    # bit-exact doubles + identical quadrants
-    assert got == want
+    for df in _inputs(spark, tiles):
+        got = {}
+        for r in focal.local_morans(df, res, radius=2).collect():
+            for i, (lv, qv) in enumerate(zip(r["local"], r["quad"])):
+                got[(r["tx"] * res + i % res, r["ty"] * res + i // res)] = (
+                    lv, qv,
+                )
+        # bit-exact doubles + identical quadrants
+        assert got == want
 
 
 def test_local_morans_additivity_and_quadrants(spark):

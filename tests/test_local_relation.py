@@ -199,6 +199,22 @@ def test_query_plans_run_no_python(sess, name):
     assert not PYTHON_EXEC.search(plan), PYTHON_EXEC.findall(plan)
 
 
+def test_raster_field_plan_has_no_join_or_global_exchange(sess):
+    """Every raster_field half that computes on the driver hands Spark a
+    local relation, not a join, aggregate, window or ranking over local
+    leaves: after the collect, the executed plan holds no join, broadcast,
+    window, top-k or single-partition exchange."""
+    df = entry_mod.queries()["raster_field"](sess, SF)
+    assert len(df.collect()) > 0
+    plan = _plan(df)
+    found = re.findall(
+        r"\w*Join\b|CartesianProduct|BroadcastExchange|\bWindow\b"
+        r"|TakeOrderedAndProject|SinglePartition",
+        plan,
+    )
+    assert found == [], sorted(set(found))
+
+
 def test_no_create_dataframe_outside_local_relation():
     files = sorted((ROOT / "engine").glob("*.py"))
     files += sorted((ROOT / "jobs").glob("*.py"))

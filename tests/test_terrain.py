@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from engine import terrain
-from engine.session import local_relation
+from engine.session import local_relation, local_table
 from tests.conftest import spark  # noqa: F401
 
 
@@ -33,6 +33,18 @@ def _mk_df(spark, tiles):
         [(tx, ty, grid) for (tx, ty), grid in tiles.items()],
         "tx long, ty long, counts array<long>",
     )
+
+
+def _inputs(spark, tiles):
+    """The raster as each input kind: a createDataFrame frame (distributed
+    plan) and a local relation (driver path)."""
+    return [
+        _mk_df(spark, tiles),
+        local_relation(
+            spark, [(tx, ty, grid) for (tx, ty), grid in tiles.items()],
+            "tx long, ty long, counts array<long>",
+        ),
+    ]
 
 
 def _py_gradients(tiles, res):
@@ -291,21 +303,21 @@ def test_basins_two_valleys(spark):
     column, 5-7 flow W toward x=4; rows never link (flat in y), so each row
     splits into exactly 2 basins of 4 cells -> 16 basins, labels = the
     packed ids of the (0, y) / (4, y) cells (min id in each chain)."""
-    res = 8
-    grid = [5 * abs(2 * (pix % res) - 7) for pix in range(res * res)]
-    df = _mk_df(spark, {(0, 0): grid})
-    flow = terrain.d8_flow(df, res)
-    b = terrain.basins(flow, res).collect()
-    assert len(b) == res * res
     from collections import Counter
 
-    sizes = Counter(r["basin"] for r in b)
-    assert len(sizes) == 16 and set(sizes.values()) == {4}
+    res = 8
+    grid = [5 * abs(2 * (pix % res) - 7) for pix in range(res * res)]
     pack = lambda x, y: (x + (1 << 20)) * (1 << 32) + (y + (1 << 20))  # noqa: E731
     want_labels = {pack(0, y) for y in range(res)} | {
         pack(4, y) for y in range(res)
     }
-    assert set(sizes) == want_labels
+    for df in _inputs(spark, {(0, 0): grid}):
+        flow = terrain.d8_flow(df, res)
+        b = terrain.basins(flow, res).collect()
+        assert len(b) == res * res
+        sizes = Counter(r["basin"] for r in b)
+        assert len(sizes) == 16 and set(sizes.values()) == {4}
+        assert set(sizes) == want_labels
 
 
 def test_basins_jump_matches_cc_partition(spark):
@@ -314,16 +326,21 @@ def test_basins_jump_matches_cc_partition(spark):
     rng = random.Random(415)
     res = 8
     tiles = _rand_tiles(rng, res, 6, span=2, density=0.8)
-    df = _mk_df(spark, tiles)
-    flow = terrain.d8_flow(df, res)
-    groups = {}
-    for r in terrain.basins(flow, res).collect():
-        groups.setdefault(r["basin"], set()).add((r["gx"], r["gy"]))
     want = {}
     for c, sink in _py_sinks(_py_down(tiles, res)).items():
         want.setdefault(sink, set()).add(c)
     pack = lambda x, y: (x + (1 << 20)) * (1 << 32) + (y + (1 << 20))  # noqa: E731
-    assert groups == {min(pack(*c) for c in g): g for g in want.values()}
+    rows = []
+    for df in _inputs(spark, tiles):
+        flow = terrain.d8_flow(df, res)
+        got = terrain.basins(flow, res).collect()
+        groups = {}
+        for r in got:
+            groups.setdefault(r["basin"], set()).add((r["gx"], r["gy"]))
+        assert groups == {min(pack(*c) for c in g): g for g in want.values()}
+        rows.append(sorted(map(tuple, got)))
+    # both paths: the same rows, flow direction and key included
+    assert rows[0] == rows[1]
 
 
 def test_basins_jump_sink_labels(spark):
@@ -1210,6 +1227,22 @@ def test_fill_matches_python_oracle(spark, conn):
         for p, z in enumerate(g)
     }
     assert any(want[k] > cells[k] for k in cells)
+
+
+def test_fill_depth_is_filled_minus_z(spark, monkeypatch):
+    """fill_depressions' depth column is W - z per pixel, from the driver
+    replay over a local relation and from the distributed rounds (driver
+    solve gate at 0) over a createDataFrame input."""
+    rng = random.Random(4103)
+    tiles = _bowl_tiles(8, rng)
+    for df in reversed(_inputs(spark, tiles)):
+        if local_table(df) is None:
+            monkeypatch.setattr(terrain, "_DRIVER_SOLVE_CELLS", 0)
+        out = terrain.fill_depressions(df, 8).collect()
+        for r in out:
+            z = tiles[(r["tx"], r["ty"])]
+            assert list(r["depth"]) == [w - v for w, v in zip(r["filled"], z)]
+        assert any(d > 0 for r in out for d in r["depth"])
 
 
 def test_fill_random_scatter_tiles(spark):
@@ -2776,21 +2809,23 @@ def test_landform_classes_oracle_and_twin(spark):
     tiles = _rand_tiles(rng, res, 5, span=2, density=0.7)
     args = dict(r_small=1, r_large=2, thresh_small_e3=500,
                 thresh_large_e3=700, flat_num2=1000)
-    got = {}
-    out = terrain.landform_classes(
-        _mk_df(spark, tiles), res,
-        args["r_small"], args["r_large"],
-        args["thresh_small_e3"], args["thresh_large_e3"], args["flat_num2"],
-    ).collect()
-    for r in out:
-        for pix in range(res * res):
-            got[(r["tx"] * res + pix % res, r["ty"] * res + pix // res)] = \
-                r["landform"][pix]
     want = _py_landform(
         _cells_of_tiles(tiles, res), args["r_small"], args["r_large"],
         args["thresh_small_e3"], args["thresh_large_e3"], args["flat_num2"],
     )
-    assert got == want
+    for df in _inputs(spark, tiles):
+        got = {}
+        out = terrain.landform_classes(
+            df, res,
+            args["r_small"], args["r_large"],
+            args["thresh_small_e3"], args["thresh_large_e3"],
+            args["flat_num2"],
+        ).collect()
+        for r in out:
+            for pix in range(res * res):
+                got[(r["tx"] * res + pix % res, r["ty"] * res + pix // res)] = \
+                    r["landform"][pix]
+        assert got == want
     con = duckdb.connect()
     con.execute("CREATE TABLE tiles (tx BIGINT, ty BIGINT, counts BIGINT[])")
     for (tx, ty), g in tiles.items():
@@ -2842,6 +2877,11 @@ def test_landform_valley_ridge_closed_form(spark):
             assert c == 5, (gx, gy)
     with pytest.raises(ValueError):
         terrain.landform_classes(_mk_df(spark, flat), res, 2, 2)
+    # elevations past the exact int64 domain are refused, not wrapped
+    with pytest.raises(ValueError, match="2\\^28"):
+        terrain.landform_classes(
+            _inputs(spark, {(0, 0): [1 << 28] * (res * res)})[1], res, 1, 2
+        )
 
 
 # ---------------------------------------------------------------------------

@@ -15,7 +15,10 @@ relation the engine builds on the driver is checked without Arrow too.
 session with only spark.sql.session.timeZone set (--tz, default
 America/New_York), so Arrow is off, no checkpoint dir is set and every other
 conf is Spark's default — the session an outside caller brings. A query that
-changes the session's conf fails.
+changes the session's conf fails. Every mode also sets
+spark.ui.showConsoleProgress=false, so the console progress bars do not
+share lines with the verdict lines (a saved log keeps one line per query);
+that is a display setting and changes no result.
 
 Per-half attribution for tagged-union mega-queries (raster_field & co):
   python tools/check_oracle.py raster_field --half hor   # just that half
@@ -79,7 +82,9 @@ def main() -> int:
                     help="build the session with Arrow conversion off")
     ap.add_argument("--plain-session", action="store_true",
                     help="a plain local[4] session with only the timezone "
-                         "set, not get_spark")
+                         "(and the display setting "
+                         "spark.ui.showConsoleProgress=false) set, not "
+                         "get_spark")
     ap.add_argument("--tz", default="America/New_York",
                     help="the --plain-session timezone")
     ap.add_argument("names", nargs="*")
@@ -99,13 +104,13 @@ def main() -> int:
         spark = (
             SparkSession.builder.master("local[4]")
             .config("spark.sql.session.timeZone", args.tz)
+            .config("spark.ui.showConsoleProgress", "false")
             .getOrCreate()
         )
     else:
-        conf = (
-            {"spark.sql.execution.arrow.pyspark.enabled": "false"}
-            if args.bare_session else None
-        )
+        conf = {"spark.ui.showConsoleProgress": "false"}
+        if args.bare_session:
+            conf["spark.sql.execution.arrow.pyspark.enabled"] = "false"
         spark = get_spark("oracle-check", cores=8, shuffle_partitions=8,
                           driver_mem="16g", extra_conf=conf)
     con = duckdb.connect()
