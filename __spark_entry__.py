@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from engine import cells, joins, raster, synth
-from engine.session import local_relation
+from engine.session import local_relation, local_table
 from engine.temporal import epoch_us
 
 
@@ -788,7 +788,7 @@ _BURN_N = 3
 
 
 def _hotspot_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared raster input for hotspot_cells / tile_pyramid: document anchor
+    """Shared raster input for raster_field / contours: document anchor
     points binned onto a 90-degree tile grid at res=8 (engine.raster.
     heatmap_tiles — half-open cells, dense int64 counts per nonempty tile)."""
     pts = _docs_points(spark, sf_dir)
@@ -797,55 +797,91 @@ def _hotspot_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_hotspot_cells(tiles: DataFrame) -> DataFrame:
-    """Rasterize -> focal -> Getis-Ord Gi* end to end on the halo plan
-    (engine.focal.gi_star over the engine.raster.heatmap_tiles raster
-    `tiles`): one row per global pixel of the study area with its count,
-    exact-int64 3x3 focal sum, and FLOOR-scaled Gi* z (the oracle
-    recomputes the whole pipeline with the independent scatter algebra +
-    SQL moments; z is bit-stable because every input to the formula is
-    exact int64 and the double expression graphs match op for op)."""
-    from engine import focal
+def _arrow(df: DataFrame):
+    """The rows of `df` as a pyarrow.Table: a local relation's own table
+    (session.local_table, no Spark job), else one toArrow() fetch."""
+    tbl = local_table(df)
+    return df.toArrow() if tbl is None else tbl
 
-    res = _HOTSPOT_RES
-    gx, gy = raster.pixel_xy(res)
-    zs = focal.gi_star(tiles, res, radius=1, keep_fs=True)
-    ex = zs.select(
-        "tx", "ty",
-        F.posexplode(F.arrays_zip("counts", "fs", "z")).alias("pix", "v"),
-    )
-    return ex.select(
-        gx.alias("gx"), gy.alias("gy"),
-        F.col("v.counts").cast("long").alias("n"),
-        F.col("v.fs").cast("long").alias("fs"),
-        F.floor(F.col("v.z") * 1000000.0).cast("long").alias("z_e6"),
+
+# raster_field's row shape: every half projects its rows onto these
+_FIELD_COLS = ("a", "b", "c", "d", "e")
+
+
+def _field_rows(tag: str, cols):
+    """A pyarrow table (tag, a, b, c, d, e) of raster_field rows from five
+    int64 columns."""
+    import pyarrow as pa
+
+    n = len(cols[0])
+    return pa.Table.from_arrays(
+        [pa.array([tag] * n, pa.string()), *cols], ("tag", *_FIELD_COLS)
     )
 
 
-def q_tile_pyramid(tiles: DataFrame) -> DataFrame:
-    """Tile-pyramid rollup (engine.pyramid.pyramid_sum): levels 1..2 of 2x2
-    count-grid aggregation over the heatmap raster `tiles`, exploded to
-    nonzero level-k global pixels (level, gx, gy, n); level 0 is the base
-    raster itself. The oracle aggregates every level STRAIGHT from base
-    pixels with floor-shifted coordinates — an independent derivation of
-    the iterated 2x2 rollup."""
-    from engine import pyramid
+def _tile_rows(tag: str, tbl, res: int, c, d=-1, e=-1, where=None,
+               a="gx", b="gy"):
+    """raster_field rows from a tile table (tx, ty, <array columns>): one
+    row per pixel, the arrays flattened in pixel order beside the pixel's
+    global gx, gy (raster.pixel_xy_np), the rows `where` holds kept, as a
+    pyarrow table (tag, a, b, c, d, e).
 
-    res = _HOTSPOT_RES
-    gx, gy = raster.pixel_xy(res)
-    base = tiles.select(
-        F.lit(0).cast("long").alias("level"), "tx", "ty", "counts"
+    a..e and where are each a field name ("gx", "gy" or an array column),
+    an int literal, or a callable over the {name: flattened array} fields
+    written with pyarrow.compute. a..e come back int64 (a cast that would
+    lose a value raises) with nulls kept; where keeps the rows where it is
+    true (null drops, as a SQL filter does)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = tbl.num_rows * res * res
+    gx, gy = raster.pixel_xy_np(
+        tbl["tx"].to_numpy(), tbl["ty"].to_numpy(), res
     )
-    lv = pyramid.pyramid_sum(tiles, res, levels=2).select(
-        F.col("level").cast("long").alias("level"), "tx", "ty", "counts"
-    )
-    ex = base.unionByName(lv).select(
-        "level", "tx", "ty", F.posexplode("counts").alias("pix", "n")
-    ).filter(F.col("n") != 0)
-    return ex.select(
-        "level",
-        gx.alias("gx"), gy.alias("gy"),
-        F.col("n").cast("long").alias("n"),
+    fields = {"gx": pa.array(gx), "gy": pa.array(gy)}
+    for name in tbl.column_names:
+        if pa.types.is_list(tbl.schema.field(name).type):
+            flat = pc.list_flatten(tbl[name]).combine_chunks()
+            if len(flat) != n:
+                raise ValueError(
+                    f"{tag}: column {name} holds {len(flat)} values, not "
+                    f"{res * res} per tile"
+                )
+            fields[name] = flat
+
+    def value(x):
+        if isinstance(x, int):
+            return pa.array(np.full(n, x, dtype=np.int64))
+        v = fields[x] if isinstance(x, str) else x(fields)
+        return v.cast(pa.int64())
+
+    out = _field_rows(tag, [value(x) for x in (a, b, c, d, e)])
+    if where is not None:
+        out = out.filter(fields[where] if isinstance(where, str)
+                         else where(fields))
+    return out
+
+
+def _floor_scaled(name: str, scale: float):
+    """A _tile_rows callable: floor(<name> * scale) as int64 — the Column
+    expression F.floor(x * scale).cast("long") with the same IEEE double
+    multiply. A NaN, infinite or out-of-int64 value raises (Spark's floor
+    would saturate it); a null stays null."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    return lambda f: pc.floor(pc.multiply(f[name], scale)).cast(pa.int64())
+
+
+def _any_nonzero(*names: str):
+    """A _tile_rows `where`: some of the named fields is nonzero."""
+    from functools import reduce
+
+    import pyarrow.compute as pc
+
+    return lambda f: reduce(
+        pc.or_kleene, [pc.not_equal(f[n], 0) for n in names]
     )
 
 
@@ -860,13 +896,28 @@ _SNAP_GAP_MIN = 240.0
 
 
 def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raster-field family, tagged union (merged this session to free a slot
-    for `contours` at the 50-row cap — both halves are the previously-green
-    rows verbatim, same consolidation pattern as knn / geom_line):
+    """Raster-field family, tagged union (merged to free a registry slot
+    for `contours` at the 50-row cap, the consolidation pattern of knn /
+    geom_line). Every half reads ONE raster: document anchor points binned
+    by engine.raster.heatmap_tiles (_hotspot_tiles), fetched once to the
+    driver as a local relation. Each half whose operator computes on the
+    driver is turned into rows (_tile_rows) as a pyarrow table, and all of
+    those tables reach Spark as ONE local relation; only `burn` and `stat`
+    stay Spark frames in the union.
 
-    tag='hot' — q_hotspot_cells: (a=gx, b=gy, c=n, d=fs, e=z_e6; z_e6 stays
-    nullable where the Gi* denominator is 0, exactly as before).
-    tag='pyr' — q_tile_pyramid: (a=level, b=gx, c=gy, d=n, e=-1).
+    tag='hot' — rasterize -> focal -> Getis-Ord Gi* (engine.focal.gi_star):
+    per global pixel (a=gx, b=gy, c=n count, d=fs exact-int64 3x3 focal
+    sum, e=z_e6 = floor(z*1e6)); z_e6 stays null where the Gi* denominator
+    is 0. The oracle recomputes the whole pipeline with the independent
+    scatter algebra + SQL moments; z is bit-stable because every input to
+    the formula is exact int64 and the double expression graphs match op
+    for op.
+    tag='pyr' — tile-pyramid rollup (engine.pyramid.pyramid_sum): levels
+    1..2 of 2x2 count-grid aggregation, plus level 0 (the base raster
+    itself), per nonzero level-k global pixel (a=level, b=gx, c=gy, d=n,
+    e=-1). The oracle aggregates every level STRAIGHT from base pixels with
+    floor-shifted coordinates — an independent derivation of the iterated
+    2x2 rollup.
     tag='ter' — engine.terrain.terrain_gradients (Horn slope/aspect core)
     over the same raster, counts read as elevations: per nonflat pixel
     (a=gx, b=gy, c=dzdx8, d=dzdy8, e=0) — the gradient NUMERATORS are exact
@@ -994,38 +1045,18 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     import numpy as np
+    import pyarrow as pa
     import pyarrow.compute as pc
 
-    from engine import focal, terrain
+    from engine import focal, pyramid, terrain
 
     res = _HOTSPOT_RES
-    gx, gy = raster.pixel_xy(res)
-
-    def _pixel_half(tag, frame, arrays, c, d=-1, e=-1, where=None):
-        """One row per pixel of a tile frame: posexplode its `arrays`
-        (zipped when there are several: value fields read as "v.<name>",
-        else the value is "v"), keep the rows `where` holds, and project
-        (tag, a=gx, b=gy, c, d, e). c/d/e: a column name, an int literal
-        or a Column; each becomes bigint."""
-        px = frame.select("tx", "ty", F.posexplode(
-            F.arrays_zip(*arrays) if len(arrays) > 1 else arrays[0]
-        ).alias("pix", "v"))
-        if where is not None:
-            px = px.filter(where)
-        return px.select(
-            F.lit(tag).alias("tag"), gx.alias("a"), gy.alias("b"),
-            *[
-                (F.col(x) if isinstance(x, str)
-                 else F.lit(x) if isinstance(x, int) else x)
-                .cast("long").alias(n)
-                for n, x in zip("cde", (c, d, e))
-            ],
-        )
 
     # ONE raster build feeds every half, taken with ONE Arrow collect of
-    # the (tiny, registry-fixed 512-px) raster: the halves plan over a
-    # local leaf, so every one-shot halo pass over it runs driver-side with
-    # identical output (focal._halo_apply_driver — r6)
+    # the (tiny, registry-fixed 512-px) raster: every operator over this
+    # local leaf computes on the driver and hands back a local relation, so
+    # each such half is built here as a pyarrow table and all of them reach
+    # Spark as ONE local relation (only burn and stat stay Spark frames)
     _tiles_tbl = _hotspot_tiles(spark, sf_dir).toArrow()
     tiles_r = local_relation(spark, _tiles_tbl, _tiles_tbl.column_names)
     # the EDT sources: the same raster with counts under _EDT_MIN_Z zeroed,
@@ -1044,10 +1075,10 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
     flow = terrain.d8_flow(tiles_r, res)
     # the busiest pixels, ranked once on the driver (z DESC, then gx, then
     # gy): the viewshed observers, the cost sources and the burn centres
-    pix = np.tile(np.arange(res * res), _tiles_tbl.num_rows)
     z = pc.list_flatten(_tiles_tbl["counts"]).to_numpy()
-    bx = np.repeat(_tiles_tbl["tx"].to_numpy(), res * res) * res + pix % res
-    by = np.repeat(_tiles_tbl["ty"].to_numpy(), res * res) * res + pix // res
+    bx, by = raster.pixel_xy_np(
+        _tiles_tbl["tx"].to_numpy(), _tiles_tbl["ty"].to_numpy(), res
+    )
     busiest = [
         (int(bx[i]), int(by[i]))
         for i in np.lexsort((by, bx, -z))[: max(_VIS_N_OBS, _BURN_N)]
@@ -1065,66 +1096,106 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _hydro_chain():
         filled = terrain.fill_depressions(tiles_r, res)
         flats = terrain.resolve_flats(filled, res)
-        return (
-            filled, flats, terrain.strahler_order(flats, res),
-            terrain.flow_accumulation(flats, res),
-        )
+        return [
+            _arrow(x) for x in (
+                filled, flats, terrain.strahler_order(flats, res),
+                terrain.flow_accumulation(flats, res),
+            )
+        ]
 
     # r6: the iterative operators (driver actions per round) run on the
     # pool — cost's halo Dijkstra and the fill -> flats -> strahler ->
-    # flowacc chain — while the main thread builds the one-shot half plans
-    # (pure Catalyst work), so their driver actions interleave with plan
-    # construction instead of running after it. Results are deterministic
+    # flowacc chain, each ending with the fetch of its rows (fill, strahler
+    # and cost are decoding selects over a local state, so that fetch is a
+    # Spark job) — while the main thread builds the other halves, so their
+    # jobs overlap the main thread's work. Results are deterministic
     # regardless of interleaving (every op is a fixpoint / exact solve on
     # its own input).
     with ThreadPoolExecutor(2) as pool:
-        cost_fut = pool.submit(terrain.cost_surface, ones_cost, res, obs, 8)
+        cost_fut = pool.submit(
+            lambda: _arrow(terrain.cost_surface(ones_cost, res, obs, 8))
+        )
         hydro_fut = pool.submit(_hydro_chain)
         # the d8 half: each pixel's flow direction with its basin label
-        d8 = terrain.basins(flow, res).select(
-            F.lit("d8").alias("tag"),
-            F.col("gx").alias("a"),
-            F.col("gy").alias("b"),
-            F.col("d8_dir").alias("c"),
-            F.col("d8_key").alias("d"),
-            F.col("basin").alias("e"),
-        )
-        ter = _pixel_half(
-            "ter", terrain.terrain_gradients(tiles_r, res),
-            ["dzdx8", "dzdy8"], "v.dzdx8", "v.dzdy8", 0,
-            where=(F.col("v.dzdx8") != 0) | (F.col("v.dzdy8") != 0),
-        )
-        hot = q_hotspot_cells(tiles_r).select(
-            F.lit("hot").alias("tag"),
-            F.col("gx").alias("a"),
-            F.col("gy").alias("b"),
-            F.col("n").alias("c"),
-            F.col("fs").alias("d"),
-            F.col("z_e6").alias("e"),
-        )
-        pyr = q_tile_pyramid(tiles_r).select(
-            F.lit("pyr").alias("tag"),
-            F.col("level").alias("a"),
-            F.col("gx").alias("b"),
-            F.col("gy").alias("c"),
-            F.col("n").alias("d"),
-            F.lit(-1).cast("long").alias("e"),
-        )
-        vis = _pixel_half(
-            "vis",
-            terrain.viewshed(
-                tiles_r, res, obs,
-                radius=_VIS_RADIUS, observer_height=_VIS_HEIGHT,
+        d8t = _arrow(terrain.basins(flow, res))
+        halves = [
+            _field_rows("d8", [
+                d8t[n].cast(pa.int64())
+                for n in ("gx", "gy", "d8_dir", "d8_key", "basin")
+            ]),
+            _tile_rows(
+                "ter", _arrow(terrain.terrain_gradients(tiles_r, res)), res,
+                "dzdx8", "dzdy8", 0, where=_any_nonzero("dzdx8", "dzdy8"),
             ),
-            ["vis"], "v",
-        )
-        edt = _pixel_half(
-            "edt",
-            terrain.distance_transform(
-                src_tiles, res, radius=_VIS_RADIUS, allocate=True
+            _tile_rows(
+                "hot",
+                _arrow(focal.gi_star(tiles_r, res, radius=1, keep_fs=True)),
+                res, "counts", "fs", _floor_scaled("z", 1e6),
             ),
-            ["dist2", "alloc"], "v.dist2", "v.alloc",
-        )
+        ]
+        # pyr: the base raster as level 0, then pyramid levels 1..2
+        lv = _arrow(pyramid.pyramid_sum(tiles_r, res, levels=2))
+        halves += [
+            _tile_rows(
+                "pyr", t, res, "gy", "counts", a=k, b="gx",
+                where=_any_nonzero("counts"),
+            )
+            for k, t in [(0, _tiles_tbl)] + [
+                (k, lv.filter(pc.equal(lv["level"], k))) for k in (1, 2)
+            ]
+        ]
+        halves += [
+            _tile_rows(
+                "vis",
+                _arrow(terrain.viewshed(
+                    tiles_r, res, obs,
+                    radius=_VIS_RADIUS, observer_height=_VIS_HEIGHT,
+                )),
+                res, "vis",
+            ),
+            _tile_rows(
+                "edt",
+                _arrow(terrain.distance_transform(
+                    src_tiles, res, radius=_VIS_RADIUS, allocate=True
+                )),
+                res, "dist2", "alloc",
+            ),
+            _tile_rows(
+                "lisa", _arrow(focal.local_morans(tiles_r, res, radius=1)),
+                res, _floor_scaled("local", 1e9), "quad",
+            ),
+            _tile_rows(
+                "curv", _arrow(terrain.curvature_numerators(tiles_r, res)),
+                res, "zt_d", "zt_e", "zt_f",
+                where=_any_nonzero("zt_d", "zt_e", "zt_f"),
+            ),
+            _tile_rows(
+                "lf",
+                _arrow(terrain.landform_classes(
+                    tiles_r, res, r_small=1, r_large=2,
+                    thresh_small_e3=500, thresh_large_e3=700,
+                    flat_num2=1000,
+                )),
+                res, "landform",
+            ),
+            _tile_rows(
+                "gdal", _arrow(terrain.surface_products(tiles_r, res)), res,
+                "tri",
+                lambda f: pc.add_checked(
+                    pc.multiply_checked(f["tpi_num"], 16), f["tpi_den"]
+                ),
+                "rough",
+            ),
+        ]
+        # hor: one row per pixel and compass direction i (c=i, d=num, e=den)
+        hz = _arrow(terrain.horizon_angles(tiles_r, res, _VIS_RADIUS))
+        halves += [
+            _tile_rows(
+                "hor", hz.select(["tx", "ty", f"h{i}_num", f"h{i}_den"]),
+                res, i, f"h{i}_num", f"h{i}_den",
+            )
+            for i in range(8)
+        ]
         pitch = _HOTSPOT_TILE / res
         bobs = local_relation(
             spark,
@@ -1202,88 +1273,30 @@ def q_raster_field(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
         )
-        lisa = _pixel_half(
-            "lisa", focal.local_morans(tiles_r, res, radius=1),
-            ["local", "quad"],
-            F.floor(F.col("v.local") * F.lit(1000000000.0)), "v.quad",
-        )
-        curv = _pixel_half(
-            "curv", terrain.curvature_numerators(tiles_r, res),
-            ["zt_d", "zt_e", "zt_f"], "v.zt_d", "v.zt_e", "v.zt_f",
-            where=(F.col("v.zt_d") != 0) | (F.col("v.zt_e") != 0)
-            | (F.col("v.zt_f") != 0),
-        )
-        lf = _pixel_half(
-            "lf",
-            terrain.landform_classes(
-                tiles_r, res, r_small=1, r_large=2,
-                thresh_small_e3=500, thresh_large_e3=700, flat_num2=1000,
-            ),
-            ["landform"], "v",
-        )
-        _hz16 = [c for i in range(8) for c in (f"h{i}_num", f"h{i}_den")]
-        hor = (
-            terrain.horizon_angles(tiles_r, res, _VIS_RADIUS)
-            .select(
-                "tx", "ty",
-                F.posexplode(F.arrays_zip(*_hz16)).alias("pix", "v"),
-            )
-            .select(
-                gx.alias("a"), gy.alias("b"),
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(i).cast("long").alias("dir"),
-                                F.col(f"v.h{i}_num").cast("long").alias("num"),
-                                F.col(f"v.h{i}_den").cast("long").alias("den"),
-                            )
-                            for i in range(8)
-                        ]
-                    )
-                ).alias("d"),
-            )
-            .select(
-                F.lit("hor").alias("tag"), "a", "b",
-                F.col("d.dir").alias("c"),
-                F.col("d.num").alias("d"),
-                F.col("d.den").alias("e"),
-            )
-        )
-        gdal = _pixel_half(
-            "gdal", terrain.surface_products(tiles_r, res),
-            ["tri", "tpi_num", "tpi_den", "rough"], "v.tri",
-            F.col("v.tpi_num") * 16 + F.col("v.tpi_den"), "v.rough",
-        )
-    filled_r, flats_r, st_r, acc_r = hydro_fut.result()
-    fla = _pixel_half(
-        "flats", flats_r, ["d8_dir", "d8_key", "flat_d"],
-        "v.d8_dir", "v.d8_key", "v.flat_d",
+    fil_t, fla_t, st_t, acc_t = hydro_fut.result()
+    halves += [
+        _tile_rows("fill", fil_t, res, "filled", "depth"),
+        _tile_rows("flats", fla_t, res, "d8_dir", "d8_key", "flat_d"),
+        _tile_rows("strahler", st_t, res, "strahler"),
+        _tile_rows("flowacc", acc_t, res, "acc"),
+        # cost half: uniform-cost (all-ones) raster over the EXPLICIT full
+        # world rectangle (tx -2..1, ty -1..0 at the 90-degree tile grid —
+        # anchors span lon [-180,180) x lat [-90,90), so every data pixel is
+        # inside), sources = the 3 busiest pixels (the viewshed observer
+        # discipline). On a barrier-free full rectangle the octile metric
+        # has an exact closed form (14*min(|dx|,|dy|) + 10*(max-min) per
+        # source, min over sources), so the twin checks the PRODUCTION
+        # multi-tile halo Dijkstra — multi-source min, both move
+        # multipliers, seam exchange, stationarity fast path — bit for bit;
+        # barrier/unreachable semantics stay python-oracle-pinned in
+        # tests/test_terrain.py.
+        _tile_rows("cost", cost_fut.result(), res, "cost_dist"),
+    ]
+    local = local_relation(
+        spark, pa.concat_tables(halves),
+        "tag string, " + ", ".join(f"{n} long" for n in _FIELD_COLS),
     )
-    fil = _pixel_half(
-        "fill", filled_r, ["filled", "depth"], "v.filled", "v.depth"
-    )
-    stro = _pixel_half("strahler", st_r, ["strahler"], "v")
-    facc = _pixel_half("flowacc", acc_r, ["acc"], "v")
-    # cost half: uniform-cost (all-ones) raster over the EXPLICIT full world
-    # rectangle (tx -2..1, ty -1..0 at the 90-degree tile grid — anchors span
-    # lon [-180,180) x lat [-90,90), so every data pixel is inside), sources
-    # = the 3 busiest pixels (the viewshed observer discipline). On a
-    # barrier-free full rectangle the octile metric has an exact closed form
-    # (14*min(|dx|,|dy|) + 10*(max-min) per source, min over sources), so the
-    # twin checks the PRODUCTION multi-tile halo Dijkstra — multi-source min,
-    # both move multipliers, seam exchange, stationarity fast path — bit for
-    # bit; barrier/unreachable semantics stay python-oracle-pinned in
-    # tests/test_terrain.py.
-    cost = _pixel_half("cost", cost_fut.result(), ["cost_dist"], "v")
-    return (
-        hot.unionByName(pyr).unionByName(ter).unionByName(d8)
-        .unionByName(vis).unionByName(edt).unionByName(burn)
-        .unionByName(stat).unionByName(lisa).unionByName(fil)
-        .unionByName(fla).unionByName(stro).unionByName(facc)
-        .unionByName(cost).unionByName(gdal).unionByName(curv)
-        .unionByName(hor).unionByName(lf)
-    )
+    return local.unionByName(burn).unionByName(stat)
 
 
 _CONTOUR_LEVEL = 1
@@ -1543,11 +1556,11 @@ def _hotspot_tiles_cte() -> str:
 
 
 def hotspot_cells_sql() -> str:
-    """DuckDB twin of q_hotspot_cells: heatmap raster + the INDEPENDENT
-    scatter focal algebra (engine.focal.focal_sum_sql, twice — values and
-    the constant-1 window-size raster) + SQL-computed global moments; the
-    Gi* double expression mirrors engine.focal.gi_star op for op (all
-    inputs exact int64, so the z bits match)."""
+    """DuckDB twin of raster_field's 'hot' half: heatmap raster + the
+    INDEPENDENT scatter focal algebra (engine.focal.focal_sum_sql, twice —
+    values and the constant-1 window-size raster) + SQL-computed global
+    moments; the Gi* double expression mirrors engine.focal.gi_star op for
+    op (all inputs exact int64, so the z bits match)."""
     from engine import focal
 
     res = _HOTSPOT_RES
@@ -1601,9 +1614,9 @@ def hotspot_cells_sql() -> str:
 
 
 def tile_pyramid_sql() -> str:
-    """DuckDB twin of q_tile_pyramid, derived independently: every level k
-    aggregates straight from base-level global pixels with floor-shifted
-    coordinates, never via iterated 2x2 rollups."""
+    """DuckDB twin of raster_field's 'pyr' half, derived independently:
+    every level k aggregates straight from base-level global pixels with
+    floor-shifted coordinates, never via iterated 2x2 rollups."""
     res = _HOTSPOT_RES
     per = []
     for k in (1, 2):

@@ -5,15 +5,18 @@ level-(L-1) parents, four children per parent, each parent pixel covering a
 2x2 child-pixel block. Two operators:
 
 pyramid_sum — count-grid pyramid over heatmap tiles (engine/raster.py
-shape: tx, ty, counts array<long>[res^2]). Pure Column algebra, exact
-int64: stage 1 (no shuffle) folds each child's 2x2 pixel blocks into a
-quadrant block of res^2/4 sums; stage 2 (ONE shuffle per level, groupBy
-parent) stitches <= 4 quadrant blocks into the parent grid with a map
-lookup. Shuffle volume halves every level (4 tiles -> 1, block payload
+shape: tx, ty, counts array<long>[res^2]), exact int64. Distributed, it is
+Column algebra: stage 1 (no shuffle) folds each child's 2x2 pixel blocks
+into a quadrant block of res^2/4 sums; stage 2 (ONE shuffle per level,
+groupBy parent) stitches <= 4 quadrant blocks into the parent grid with a
+map lookup. Shuffle volume halves every level (4 tiles -> 1, block payload
 res^2/4 each), so the whole pyramid costs ~2/3 of one extra pass over the
 base level — the geometric-series bound that makes pyramids cheap at 100 TB.
-Missing children contribute zeros (sparse rasters stay sparse: a parent
-exists iff some child exists). DuckDB twin pyramid_sum_sql computes every
+Over a local relation (session.local_table: rows the driver already holds)
+the same levels are numpy reshapes and sums on the driver, returned as one
+local relation with the same schema and no Spark job. Missing children
+contribute zeros (sparse rasters stay sparse: a parent exists iff some
+child exists). DuckDB twin pyramid_sum_sql computes every
 level straight from base-level global cells (gx >> k) — an independent
 derivation, not a transliteration, so parity is a real two-implementation
 check. Mass conservation (sum over any level == sum over base) is asserted
@@ -38,6 +41,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .session import local_relation, local_table
 
 
 def _quadrant_block(counts: Column, res: int) -> Column:
@@ -91,15 +96,125 @@ def _rollup_once(tiles: DataFrame, res: int, block_fn=None) -> DataFrame:
     return blocks.groupBy("tx", "ty").agg(dense.alias("counts"))
 
 
+# pyramid_sum's output schema, the same on both branches
+_SUM_SCHEMA = T.StructType([
+    T.StructField("level", T.IntegerType(), False),
+    T.StructField("tx", T.LongType()),
+    T.StructField("ty", T.LongType()),
+    T.StructField("counts", T.ArrayType(T.LongType(), False), False),
+])
+
+
+def _driver_grids(tbl, res: int):
+    """(tx, ty, counts as an (n, res^2) matrix), all int64, of a local
+    raster table; None when a key, a grid or a count is null, a grid is not
+    res^2 int64 values, or a tile repeats (the distributed plan gives such
+    rows its own meaning)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    counts = tbl["counts"]
+    if (
+        tbl["tx"].null_count or tbl["ty"].null_count or counts.null_count
+        or not pa.types.is_int64(counts.type.value_type)
+    ):
+        return None
+    if not pc.all(pc.equal(pc.list_value_length(counts), res * res)).as_py():
+        return None
+    flat = pc.list_flatten(counts)
+    if flat.null_count:
+        return None
+    tx = tbl["tx"].to_numpy().astype(np.int64)
+    ty = tbl["ty"].to_numpy().astype(np.int64)
+    if len(np.unique(np.stack([tx, ty], axis=1), axis=0)) != len(tx):
+        return None
+    return tx, ty, flat.to_numpy().reshape(len(tx), res * res)
+
+
+def _checked_add(x: np.ndarray, y: np.ndarray) -> np.ndarray:
+    """x + y in int64, raising where ANSI Spark's long + overflows (numpy
+    wraps: an overflow is a sum whose sign differs from both operands')."""
+    s = x + y
+    if ((x ^ s) & (y ^ s) < 0).any():
+        from pyspark.errors import ArithmeticException
+
+        raise ArithmeticException(
+            message="[ARITHMETIC_OVERFLOW] long overflow in a pyramid_sum "
+            "2x2 block sum"
+        )
+    return s
+
+
+def _rollup_driver(tx, ty, grids, res: int):
+    """_rollup_once on the driver: each child's 2x2 block sums (added in
+    the Column plan's order: top-left, top-right, bottom-left,
+    bottom-right) placed into quadrant (ty & 1, tx & 1) of parent
+    (tx >> 1, ty >> 1), zeros where a child is missing."""
+    half = res // 2
+    b = grids.reshape(-1, half, 2, half, 2)
+    block = _checked_add(
+        _checked_add(
+            _checked_add(b[:, :, 0, :, 0], b[:, :, 0, :, 1]),
+            b[:, :, 1, :, 0],
+        ),
+        b[:, :, 1, :, 1],
+    )
+    keys, inv = np.unique(
+        np.stack([tx >> 1, ty >> 1], axis=1), axis=0, return_inverse=True
+    )
+    inv = inv.ravel()
+    out = np.zeros((len(keys), res, res), dtype=np.int64)
+    for qy in (0, 1):
+        for qx in (0, 1):
+            m = ((ty & 1) == qy) & ((tx & 1) == qx)
+            out[
+                inv[m], qy * half:(qy + 1) * half, qx * half:(qx + 1) * half
+            ] = block[m]
+    return keys[:, 0], keys[:, 1], out.reshape(len(keys), res * res)
+
+
+def _pyramid_sum_driver(spark, grids, res: int, levels: int) -> DataFrame:
+    """Every level of pyramid_sum from driver-held grids, as one local
+    relation with the distributed branch's schema."""
+    import pyarrow as pa
+
+    out = []
+    for lvl in range(1, levels + 1):
+        grids = _rollup_driver(*grids, res)
+        out.append((np.full(len(grids[0]), lvl, dtype=np.int32), *grids))
+    level, tx, ty, counts = (np.concatenate(c) for c in zip(*out))
+    return local_relation(
+        spark,
+        {
+            "level": level, "tx": tx, "ty": ty,
+            "counts": pa.ListArray.from_arrays(
+                np.arange(len(counts) + 1, dtype=np.int32) * (res * res),
+                counts.ravel(),
+            ),
+        },
+        _SUM_SCHEMA,
+    )
+
+
 def pyramid_sum(tiles: DataFrame, res: int, levels: int = 1) -> DataFrame:
     """(tx, ty, counts array<long>[res^2]) at the base level -> all rollup
     levels 1..levels as (level, tx, ty, counts), each level's tile (tx, ty)
     aggregating the 2x2 children (2tx..2tx+1, 2ty..2ty+1) of the level
-    below, parent pixel = exact int64 sum of its 2x2 child-pixel block."""
+    below, parent pixel = exact int64 sum of its 2x2 child-pixel block.
+
+    Over a local relation (its rows already on the driver) every level is
+    computed in numpy and returned as one local relation with the same
+    schema, raising pyspark's ArithmeticException where ANSI Spark's block
+    sum overflows; any other input gets the distributed plan (one shuffle
+    per level)."""
     if res < 2 or res % 2:
         raise ValueError(f"res must be even and >= 2, got {res}")
     if levels < 1:
         raise ValueError("levels must be >= 1")
+    tbl = local_table(tiles)
+    grids = None if tbl is None else _driver_grids(tbl, res)
+    if grids is not None:
+        return _pyramid_sum_driver(tiles.sparkSession, grids, res, levels)
     out = None
     cur = tiles.select("tx", "ty", "counts")
     for lvl in range(1, levels + 1):

@@ -45,6 +45,21 @@ def pixel_xy(res: int) -> tuple[Column, Column]:
     )
 
 
+def pixel_xy_np(tx, ty, res: int):
+    """numpy twin of pixel_xy for whole tiles: int64 tile keys tx, ty (one
+    per tile) -> int64 (gx, gy) of every pixel of every tile, tile by tile
+    in pix order (the order of the tiles' flattened res^2 arrays)."""
+    import numpy as np
+
+    pix = np.arange(res * res, dtype=np.int64)
+    tx = np.asarray(tx, dtype=np.int64)[:, None]
+    ty = np.asarray(ty, dtype=np.int64)[:, None]
+    return (
+        (tx * res + pix % res).ravel(),
+        (ty * res + pix // res).ravel(),
+    )
+
+
 def tile_pixel(
     res: int, gx: Column | str = "gx", gy: Column | str = "gy"
 ) -> tuple[Column, Column, Column]:

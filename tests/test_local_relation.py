@@ -215,6 +215,30 @@ def test_raster_field_plan_has_no_join_or_global_exchange(sess):
     assert found == [], sorted(set(found))
 
 
+def test_raster_field_driver_halves_are_one_local_relation(sess):
+    """The halves whose rows the driver computes reach Spark as one local
+    relation, not as a per-half pixel explode over a local leaf or an
+    aggregate: after the collect, the final plan holds no hash aggregate,
+    no posexplode Generate directly over a LocalTableScan, and at most one
+    shuffle Exchange (burn's rasterize aggregate)."""
+    df = entry_mod.queries()["raster_field"](sess, SF)
+    assert len(df.collect()) > 0
+    plan = _plan(df)
+    final = plan.split("== Initial Plan ==")[0]
+    lines = final.splitlines()
+    assert re.findall(r"\w*HashAggregate\b", final) == []
+    over_local = [
+        line.strip() for line, child in zip(lines, lines[1:])
+        if "Generate posexplode" in line and "LocalTableScan" in child
+    ]
+    assert over_local == []
+    shuffles = [
+        line for line in lines
+        if re.match(r"[\s:+\-|]*(\*\(\d+\)\s*)?(Reused)?Exchange\b", line)
+    ]
+    assert len(shuffles) <= 1, shuffles
+
+
 def test_no_create_dataframe_outside_local_relation():
     files = sorted((ROOT / "engine").glob("*.py"))
     files += sorted((ROOT / "jobs").glob("*.py"))

@@ -6,7 +6,13 @@ import numpy as np
 import pytest
 
 from engine import pyramid
+from engine.session import local_relation
 from tests.conftest import spark  # noqa: F401
+
+# pyramid_sum's two branches: a createDataFrame input takes the distributed
+# plan, a local relation (rows on the driver) the numpy one; the sum tests
+# run both in their body, so their ids stay as they were
+KINDS = ["frame", "local"]
 
 
 # ---------------------------------------------------------------------------
@@ -41,14 +47,18 @@ def _rand_tiles(rng, res, n_tiles, span=5):
     }
 
 
-def _mk_df(spark, tiles):
-    return spark.createDataFrame(
+def _mk_df(spark, tiles, kind="frame"):
+    make = spark.createDataFrame if kind == "frame" else (
+        lambda rows, schema: local_relation(spark, rows, schema)
+    )
+    return make(
         [(tx, ty, grid) for (tx, ty), grid in tiles.items()],
         "tx long, ty long, counts array<long>",
     )
 
 
 def _collect(df):
+    assert df.schema == pyramid._SUM_SCHEMA
     return {
         (r["level"], r["tx"], r["ty"]): list(r["counts"]) for r in df.collect()
     }
@@ -58,17 +68,20 @@ def test_sum_matches_python_oracle_two_levels(spark):
     rng = random.Random(21)
     res = 8
     tiles = _rand_tiles(rng, res, 14)
-    df = _mk_df(spark, tiles).repartition(5)
-    got = _collect(pyramid.pyramid_sum(df, res, levels=2))
     l1 = _py_rollup(tiles, res)
     l2 = _py_rollup(l1, res)
     want = {(1, *k): v for k, v in l1.items()}
     want |= {(2, *k): v for k, v in l2.items()}
-    assert got == want
-    # mass conservation per level
     base = sum(sum(g) for g in tiles.values())
-    for lvl, group in ((1, l1), (2, l2)):
-        assert sum(sum(got[(lvl, *k)]) for k in group) == base
+    for kind in KINDS:
+        df = _mk_df(spark, tiles, kind)
+        if kind == "frame":
+            df = df.repartition(5)
+        got = _collect(pyramid.pyramid_sum(df, res, levels=2))
+        assert got == want, kind
+        # mass conservation per level
+        for lvl, group in ((1, l1), (2, l2)):
+            assert sum(sum(got[(lvl, *k)]) for k in group) == base
 
 
 def test_sum_negative_coords_seamless(spark):
@@ -82,11 +95,12 @@ def test_sum_negative_coords_seamless(spark):
         (-2, -1): [3] * 16,
         (-1, -1): [4] * 16,
     }
-    df = _mk_df(spark, tiles)
-    got = _collect(pyramid.pyramid_sum(df, res, levels=1))
-    assert set(got) == {(1, -1, -1)}
     want = _py_rollup(tiles, res)
-    assert got[(1, -1, -1)] == want[(-1, -1)]
+    for kind in KINDS:
+        df = _mk_df(spark, tiles, kind)
+        got = _collect(pyramid.pyramid_sum(df, res, levels=1))
+        assert set(got) == {(1, -1, -1)}, kind
+        assert got[(1, -1, -1)] == want[(-1, -1)], kind
 
 
 def test_sum_sql_twin(spark):
@@ -95,8 +109,6 @@ def test_sum_sql_twin(spark):
     rng = random.Random(5)
     res = 8
     tiles = _rand_tiles(rng, res, 12)
-    df = _mk_df(spark, tiles)
-    got = _collect(pyramid.pyramid_sum(df, res, levels=3))
     con = duckdb.connect()
     con.execute("CREATE TABLE tiles(tx BIGINT, ty BIGINT, counts BIGINT[])")
     con.executemany(
@@ -109,7 +121,53 @@ def test_sum_sql_twin(spark):
             pyramid.pyramid_sum_sql("tiles", res, 3)
         ).fetchall()
     }
-    assert got == want
+    for kind in KINDS:
+        got = _collect(
+            pyramid.pyramid_sum(_mk_df(spark, tiles, kind), res, levels=3)
+        )
+        assert got == want, kind
+
+
+def test_sum_overflow_raises_on_both_paths(spark):
+    from pyspark.errors import ArithmeticException
+
+    big = (1 << 62) - 1
+    res = 4
+    # pixel 1's block (0, 1, 4, 5) overflows only at its fourth addend; the
+    # sibling tile sums to exactly 2^63 - 1 with no overflowing partial sum
+    grid = [0] * 16
+    grid[0] = grid[1] = big
+    grid[4] = grid[5] = 1
+    ok = [0] * 16
+    ok[0], ok[1], ok[4] = big, big, 1
+    for kind in KINDS:
+        fine = _collect(pyramid.pyramid_sum(
+            _mk_df(spark, {(1, 0): ok}, kind), res
+        ))
+        assert fine[(1, 0, 0)][2] == (1 << 63) - 1
+        with pytest.raises(ArithmeticException):
+            pyramid.pyramid_sum(
+                _mk_df(spark, {(0, 0): grid, (1, 0): ok}, kind), res
+            ).collect()
+
+
+def test_sum_malformed_local_input_matches_distributed(spark):
+    # a null count (its block sums to null, the parent pixel reads 0) and
+    # a null grid (no children: an all-zero parent): the driver branch
+    # leaves such tables to the distributed plan, so both give the same
+    grid = list(range(16))
+    grid[5] = None
+    rows = [(0, 0, grid), (2, 0, None), (1, 1, [1] * 16)]
+    schema = "tx long, ty long, counts array<long>"
+    got = [
+        _collect(pyramid.pyramid_sum(make(rows, schema), 4))
+        for make in (
+            spark.createDataFrame,
+            lambda r, sch: local_relation(spark, r, sch),
+        )
+    ]
+    assert got[0] == got[1]
+    assert got[0][(1, 0, 0)][0] == 0
 
 
 def test_sum_validation(spark):

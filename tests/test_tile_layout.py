@@ -8,7 +8,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from engine import terrain
-from engine.raster import floor_div, pixel_xy, tile_pixel
+from engine.raster import floor_div, pixel_xy, pixel_xy_np, tile_pixel
 from tests.conftest import spark  # noqa: F401
 
 
@@ -45,6 +45,23 @@ def test_pixel_xy_tile_pixel_roundtrip(spark):
         assert r.gx == r.tx * r.res + r.pix % r.res
         assert r.gy == r.ty * r.res + r.pix // r.res
         assert (r.tx2, r.ty2, r.pix2) == (r.tx, r.ty, r.pix)
+    # the numpy twin over whole tiles (negative ones too), in pix order
+    keys = [(-3, -2), (-1, 0), (0, 5), (2, -1)]
+    for res in (1, 8, 16):
+        gx, gy = pixel_xy(res)
+        want = (
+            spark.createDataFrame(
+                [(tx, ty, p) for tx, ty in keys for p in range(res * res)],
+                "tx long, ty long, pix int",
+            )
+            .select(gx.alias("gx"), gy.alias("gy"))
+            .collect()
+        )
+        got = pixel_xy_np([k[0] for k in keys], [k[1] for k in keys], res)
+        assert [a.dtype for a in got] == [np.int64, np.int64]
+        assert list(zip(got[0].tolist(), got[1].tolist())) == [
+            (r.gx, r.gy) for r in want
+        ]
 
 
 def test_terrain_node_codec_matches_numpy(spark):
